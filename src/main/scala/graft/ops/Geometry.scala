@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
+import scala.jdk.CollectionConverters._
 
 /** Geometric operators from the reference, Spark-first.
   *
@@ -17,20 +18,28 @@ import graft.core.Tables
   *    `G016HW2.java:114-220`.
   *
   * Architecture differences (scale-first, NOT a port):
-  *  - The exact all-pairs neighbor count is a *grid-bucketed equi-join*:
-  *    each point is exploded to its 3×3 neighbor cells (cell width = D) and
-  *    joined on the cell key — a shuffle hash join that scales to a 1000-
-  *    executor cluster, instead of the reference's driver nested loop. The
-  *    prune is exact: dist <= D ⟹ per-axis diff <= D ⟹ Chebyshev cell
-  *    distance <= 1.
-  *  - The N3/N7 neighborhood sums are a 7×7-offset explode + equi-join +
-  *    conditional aggregation, not a collected driver map: the non-empty
-  *    cell table is small for dense data, but a 100 TB sparse dataset can
-  *    have billions of non-empty cells — the join formulation survives that;
-  *    a `collect()` does not.
+  *  - The exact all-pairs neighbor count takes a driver path while the
+  *    data allows it: the reference's N3/N7 bound (`G019HW1.java:209-261`)
+  *    settles every Λ-cell with N3 > M as inliers with no pairwise work,
+  *    one collect brings back the points of the remaining cells' 7×7
+  *    neighborhoods, and the driver counts them with the join's own
+  *    distance expression. When the cell table or those points exceed
+  *    `driverCellLimit`, it falls back to a *grid-bucketed equi-join*:
+  *    each candidate is exploded to its 3×3 neighbor cells (cell width =
+  *    D) and joined on the cell key — a shuffle hash join that scales to a
+  *    1000-executor cluster, instead of the reference's driver nested
+  *    loop. The prune is exact: dist <= D ⟹ per-axis diff <= D ⟹
+  *    Chebyshev cell distance <= 1.
+  *  - The N3/N7 neighborhood sums are likewise a driver hash-map pass over
+  *    a collected histogram of at most `driverCellLimit` cells, with a
+  *    7×7-offset explode + equi-join + conditional aggregation as the
+  *    twin for larger tables: the non-empty cell table is small for dense
+  *    data, but a 100 TB sparse dataset can have billions of non-empty
+  *    cells — the join formulation survives that; a `collect()` does not.
   *  - MRFFT keeps the reference's 3-round shape (it is optimal): R1
-  *    per-partition FFT coreset via mapPartitions, R2 driver FFT on ≤ K·L
-  *    points, R3 broadcast centers + max-reduce of min distances.
+  *    per-partition FFT coreset, R2 driver FFT on ≤ K·L points, R3
+  *    broadcast centers + max-reduce of min distances. R1 and R3 share one
+  *    cached primitive (xs, ys) array pair per partition.
   */
 object Geometry {
 
@@ -40,8 +49,10 @@ object Geometry {
     * SURVEY §7.4 risk 1: a plain int cast truncates toward 0 and breaks on
     * negative coordinates). */
   def withCells(pts: DataFrame, cell: Double): DataFrame =
-    pts.withColumn("ci", floor(col("x") / cell).cast(LongType))
-       .withColumn("cj", floor(col("y") / cell).cast(LongType))
+    pts.withColumn("ci", cellIndex(col("x"), cell))
+       .withColumn("cj", cellIndex(col("y"), cell))
+
+  private def cellIndex(c: Column, cell: Double): Column = floor(c / cell).cast(LongType)
 
   /** Non-empty cell histogram (reference Step A, `G019HW1.java:183-189`):
     * one partial+final hash aggregation, no shuffle beyond the groupBy. */
@@ -79,15 +90,12 @@ object Geometry {
         sum(col("src_sz")).as("n7"))
   }
 
-  /** Driver-side N3/N7 for small cell tables (the reference's Step B shape,
-    * `G019HW1.java:209-261`, which the assignment explicitly allows: "the
-    * total number of non-empty cells is small … can be downloaded in a
-    * local data structure"). A hash-map pass over ≤ `driverCellLimit` cells
-    * beats two shuffle rounds at small scale; [[cellNeighborhoods]] is the
-    * equi-join twin that survives billions of non-empty cells. Both are
-    * oracle-verified to produce identical tables. */
-  /** Hash-map N3/N7 pass over a collected cell histogram (shared by the
-    * driver twins below). */
+  /** Hash-map N3/N7 pass over a collected cell histogram: the reference's
+    * Step B shape, which the assignment explicitly allows ("the total
+    * number of non-empty cells is small … can be downloaded in a local
+    * data structure"). [[cellNeighborhoods]] is the equi-join twin that
+    * survives billions of non-empty cells; both are oracle-verified to
+    * produce identical tables. */
   private def n3n7Local(local: Array[((Long, Long), Long)]): Array[(Long, Long, Long, Long, Long)] = {
     val byCell = local.toMap
     local.map { case ((ci, cj), sz) =>
@@ -108,61 +116,140 @@ object Geometry {
     }
   }
 
-  def cellNeighborhoodsDriver(cells: DataFrame): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val local = cells.select(col("ci"), col("cj"), col("sz")).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
-    spark.createDataset(n3n7Local(local).toSeq).toDF("ci", "cj", "sz", "n3", "n7")
+  /** The Λ-cell histogram of `pts` with its (ci, cj, sz, n3, n7) sums,
+    * computed on the driver — or None when the table holds more than
+    * `driverCellLimit` cells. ONE collect of at most limit+1 rows both
+    * fetches the histogram and decides whether it fits the driver, so no
+    * job is spent on path selection alone. */
+  private def localNeighborhoods(pts: DataFrame, lambda: Double,
+                                 driverCellLimit: Int): Option[Array[(Long, Long, Long, Long, Long)]] = {
+    val local = cellHistogram(pts, lambda).limit(driverCellLimit + 1).collect()
+    if (local.length > driverCellLimit) None
+    else Some(n3n7Local(local.map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))))
   }
 
   /** MRApproxOutliers (reference Q2): returns one row per class:
     * sure (N7 <= M), uncertain (N3 <= M < N7), inlier.
     *
-    * Job shape: exactly ONE Spark job on the small path — the cell
-    * histogram is collected with a limit of driverCellLimit+1 rows, so the
-    * same action both fetches the histogram AND detects whether it fits the
-    * driver (>limit rows returned ⇒ fall back to the distributed
-    * neighborhood equi-join). The previous shape spent a dedicated
-    * cells.count() job purely on path selection, which dominated the
-    * reference workload (960 ms baseline). The N3/N7 sums and the class
-    * roll-up then run in-driver over ≤ limit cells — the assignment-
-    * sanctioned small-table pass (`G019HW1.java:209-261`) — and the result
-    * is a 3-row local DataFrame. */
+    * Job shape: ONE collect on the small path ([[localNeighborhoods]]); the
+    * class roll-up then runs in-driver over ≤ limit cells and the result is
+    * a 3-row local DataFrame. Larger cell tables take the distributed
+    * neighborhood equi-join. */
   def approxOutliers(pts: DataFrame, d: Double, m: Long,
                      driverCellLimit: Int = 200000): DataFrame = {
     val spark = pts.sparkSession
     import spark.implicits._
     val lambda = d / (2.0 * math.sqrt(2.0))
-    val cells = cellHistogram(pts, lambda)
-    val local = cells.select(col("ci"), col("cj"), col("sz"))
-      .limit(driverCellLimit + 1).collect()
-    if (local.length <= driverCellLimit) {
-      val nb = n3n7Local(local.map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))))
-      val agg = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-      nb.foreach { case (_, _, sz, n3, n7) =>
-        val cls = if (n7 <= m) "sure" else if (n3 <= m) "uncertain" else "inlier"
-        val (p, c) = agg.getOrElse(cls, (0L, 0L))
-        agg.update(cls, (p + sz, c + 1L))
-      }
-      val rows = agg.toSeq.map { case (cls, (p, c)) => (cls, p, c) }
-      spark.createDataset(rows).toDF("cls", "n_points", "n_cells")
-    } else {
-      val cached = cells.cache()
-      try {
-        cellNeighborhoods(cached).select(
-            when(col("n7") <= m, lit("sure"))
-              .when(col("n3") <= m, lit("uncertain"))
-              .otherwise(lit("inlier")).as("cls"),
-            col("sz"))
-          .groupBy(col("cls"))
-          .agg(sum(col("sz")).cast(LongType).as("n_points"), count(lit(1)).as("n_cells"))
-          .localCheckpoint() // materialize while cached, then release
-      } finally cached.unpersist()
+    localNeighborhoods(pts, lambda, driverCellLimit) match {
+      case Some(nb) =>
+        val agg = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
+        nb.foreach { case (_, _, sz, n3, n7) =>
+          val cls = if (n7 <= m) "sure" else if (n3 <= m) "uncertain" else "inlier"
+          val (p, c) = agg.getOrElse(cls, (0L, 0L))
+          agg.update(cls, (p + sz, c + 1L))
+        }
+        val rows = agg.toSeq.map { case (cls, (p, c)) => (cls, p, c) }
+        spark.createDataset(rows).toDF("cls", "n_points", "n_cells")
+      case None =>
+        val cached = cellHistogram(pts, lambda).cache()
+        try {
+          cellNeighborhoods(cached).select(
+              when(col("n7") <= m, lit("sure"))
+                .when(col("n3") <= m, lit("uncertain"))
+                .otherwise(lit("inlier")).as("cls"),
+              col("sz"))
+            .groupBy(col("cls"))
+            .agg(sum(col("sz")).cast(LongType).as("n_points"), count(lit(1)).as("n_cells"))
+            .localCheckpoint() // materialize while cached, then release
+        } finally cached.unpersist()
     }
   }
 
-  /** Exact (M,D)-outliers as a *pruned* grid-bucketed equi-join.
+  /** Exact (M,D)-outliers: |B(p,D)| (self included) for every point with
+    * at most M neighbors. Input needs a unique `id` column plus x, y;
+    * output is (qid: the id's type, n_neighbors), golden-verified on
+    * TestN15, uber-10k, uber-100k.
+    *
+    * Small path (x, y doubles; at most `driverCellLimit` non-empty Λ-cells,
+    * Λ = D/(2√2)): the reference's N3 bound (`G019HW1.java:209-261`)
+    * decides most points with no pairwise work — every point of a Λ-cell
+    * whose 3×3 block holds N3 > M points has all of them within D (per-axis
+    * diff < 2Λ ⇒ dist < 2√2·Λ = D; GeometrySpec pins the tight corner
+    * case in floating point), so it is an inlier. Only cells with
+    * N3 ≤ M stay candidates; a neighbor within D of a candidate lies in
+    * its 7×7 Λ-block (D/Λ = 2.83 < 3). One collect brings back the points
+    * of those blocks (cells computed by Spark, filtered through a
+    * broadcast cell set; the histogram bounds the count before the job
+    * runs), and the driver counts each candidate's neighbors with the
+    * fallback join's own cell condition and distance expression, so both
+    * paths return the same rows. The result is a local DataFrame: three
+    * jobs in all under AQE (histogram shuffle, its collect, the point
+    * collect).
+    *
+    * Fallback (the histogram or the candidate points exceed
+    * `driverCellLimit`, or non-double coordinates): a *pruned*
+    * grid-bucketed equi-join, see [[exactJoin]].
+    */
+  def exactOutliers(pts: DataFrame, d: Double, m: Long,
+                    driverCellLimit: Int = 200000): DataFrame = {
+    val lambda = d / (2.0 * math.sqrt(2.0))
+    val doubles = Seq("x", "y").forall(c => pts.schema(c).dataType == DoubleType)
+    val local = if (!doubles) None else
+      localNeighborhoods(pts, lambda, driverCellLimit)
+        .flatMap(nb => exactLocal(pts, d, m, lambda, nb, driverCellLimit))
+    local.getOrElse(exactJoin(pts, d, m))
+  }
+
+  /** The driver half of [[exactOutliers]]' small path, given the Λ-cell
+    * neighborhood sums; None when the candidates' 7×7 blocks hold more
+    * than `pointLimit` points. */
+  private def exactLocal(pts: DataFrame, d: Double, m: Long, lambda: Double,
+                         nb: Array[(Long, Long, Long, Long, Long)],
+                         pointLimit: Int): Option[DataFrame] = {
+    val spark = pts.sparkSession
+    val idField = pts.schema("id")
+    val schema = StructType(Seq(
+      StructField("qid", idField.dataType, idField.nullable, idField.metadata),
+      StructField("n_neighbors", LongType, nullable = false)))
+    val sizes = nb.iterator.map { case (ci, cj, sz, _, _) => (ci, cj) -> sz }.toMap
+    val candidates = nb.iterator.collect { case (ci, cj, _, n3, _) if n3 <= m => (ci, cj) }.toSet
+    val needed = for ((ci, cj) <- candidates; a <- -3 to 3; b <- -3 to 3
+                      if sizes.contains((ci + a, cj + b))) yield (ci + a, cj + b)
+    if (needed.iterator.map(sizes).sum > pointLimit) return None
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    if (candidates.nonEmpty) {
+      val bc = spark.sparkContext.broadcast(needed)
+      val inNeeded = udf((ci: Long, cj: Long) => bc.value.contains((ci, cj)))
+      val rows = try {
+        pts.select(col("id"), col("x"), col("y"),
+            cellIndex(col("x"), lambda).as("ci"), cellIndex(col("y"), lambda).as("cj"),
+            cellIndex(col("x"), d).as("di"), cellIndex(col("y"), d).as("dj"))
+          .filter(inNeeded(col("ci"), col("cj")))
+          .collect()
+      } finally bc.destroy()
+      val xs = rows.map(_.getDouble(1)); val ys = rows.map(_.getDouble(2))
+      val di = rows.map(_.getLong(5)); val dj = rows.map(_.getLong(6))
+      val byCell = rows.indices.groupBy(i => (rows(i).getLong(3), rows(i).getLong(4)))
+      val dd = d * d
+      for (i <- rows.indices) {
+        val (ci, cj) = (rows(i).getLong(3), rows(i).getLong(4))
+        if (candidates.contains((ci, cj))) {
+          var n = 0L
+          for (a <- -3 to 3; b <- -3 to 3; j <- byCell.getOrElse((ci + a, cj + b), Nil)) {
+            // the fallback join's pair condition: D-cells within Chebyshev
+            // distance 1, then the same double expression, same operand order
+            if (math.abs(di(j) - di(i)) <= 1 && math.abs(dj(j) - dj(i)) <= 1 &&
+                (xs(i) - xs(j)) * (xs(i) - xs(j)) + (ys(i) - ys(j)) * (ys(i) - ys(j)) <= dd) n += 1
+          }
+          if (n <= m) out += Row(rows(i).get(0), n)
+        }
+      }
+    }
+    Some(spark.createDataFrame(out.asJava, schema))
+  }
+
+  /** Exact (M,D)-outliers as a *pruned* grid-bucketed equi-join — the
+    * distributed fallback of [[exactOutliers]].
     *
     * Insight (shared with the reference's dense-cell short-circuit,
     * `G016HW2.java:256-260`, applied here to make the EXACT path scale):
@@ -179,12 +266,8 @@ object Geometry {
     * set via a 3×3 neighbor-cell equi-join at cell width D (dist ≤ D ⇒
     * Chebyshev cell distance ≤ 1 — no cartesian product, shuffle/broadcast
     * hash join on the cell key).
-    *
-    * Input needs a unique `id` column plus x, y. Output: outlier rows
-    * (id as qid) with |B(p,D)| (self included), identical to the unpruned
-    * formulation — golden-verified on TestN15, uber-10k, uber-100k.
     */
-  def exactOutliers(pts0: DataFrame, d: Double, m: Long): DataFrame = {
+  private def exactJoin(pts0: DataFrame, d: Double, m: Long): DataFrame = {
     // the point set is consumed three times (Λ-cell histogram, candidate
     // semi-join side, probe side): persist so the upstream is evaluated
     // once, not three times. An INTERNAL projection is persisted, never
@@ -303,19 +386,26 @@ object Geometry {
     * Returns (radius, centers). */
   def mrFFT(pts: DataFrame, k: Int, l: Int, deterministic: Boolean = true): (Double, Array[(Double, Double)]) = {
     val spark = pts.sparkSession
-    import spark.implicits._
-    // persist across R1/R3 (both rounds scan every point): one source scan
-    // + one repartition shuffle total instead of two of each; DISK spill
-    // keeps this safe when the point set exceeds executor storage.
     // Deterministic path partitions by HASH of id, not by range: range
     // partitioning samples its boundaries with a seed derived from the
     // RDD id, so partition MEMBERSHIP would depend on execution history
     // (how many RDDs the session created before this one) — hash
     // membership is a pure function of (id, L), reproducible anywhere.
-    val typed = (if (deterministic) pts.repartition(l, col("id")) else pts.repartition(l))
+    val rows = (if (deterministic) pts.repartition(l, col("id")) else pts.repartition(l))
       .select(col("x").cast(DoubleType), col("y").cast(DoubleType))
-      .as[(Double, Double)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // R1 and R3 both scan every point: persist ONE primitive (xs, ys) array
+    // pair per partition, built by R1's job straight from the shuffled
+    // rows, so neither round pays a row decode or a separate cache build;
+    // DISK spill keeps this safe when the point set exceeds executor storage
+    val parts = rows.queryExecution.toRdd.mapPartitions { it =>
+      val xb = new scala.collection.mutable.ArrayBuilder.ofDouble
+      val yb = new scala.collection.mutable.ArrayBuilder.ofDouble
+      it.foreach { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(1), "mrFFT: null coordinate")
+        xb += r.getDouble(0); yb += r.getDouble(1)
+      }
+      Iterator.single((xb.result(), yb.result()))
+    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // R1: per-partition coreset (executors), ≤ K points each, via the
       // primitive-array kernel. On the deterministic path the kernel runs
@@ -324,11 +414,7 @@ object Geometry {
       // run, and canonical seeding/tie-breaks make arrival order
       // irrelevant — same result as sorting first, without the sort.
       val det = deterministic
-      val coreset = typed.mapPartitions { it =>
-        val xb = new scala.collection.mutable.ArrayBuilder.ofDouble
-        val yb = new scala.collection.mutable.ArrayBuilder.ofDouble
-        it.foreach { p => xb += p._1; yb += p._2 }
-        val xs = xb.result(); val ys = yb.result()
+      val coreset = parts.flatMap { case (xs, ys) =>
         if (xs.isEmpty) Iterator.empty
         else fftIndices(xs, ys, k, canonical = det).iterator.map(i => (xs(i), ys(i)))
       }.collect()
@@ -338,24 +424,26 @@ object Geometry {
       // a pointer chase per center per point — n·k of them), per-point min
       // dist², max-reduce, single sqrt
       val bc = spark.sparkContext.broadcast((centers.map(_._1), centers.map(_._2)))
-      val maxMinD2 = typed.mapPartitions { it =>
+      val maxMinD2 = parts.map { case (xs, ys) =>
         val (cxs, cys) = bc.value
         var m = 0.0
-        it.foreach { case (x, y) =>
+        var p = 0
+        while (p < xs.length) {
           var best = Double.MaxValue
           var i = 0
           while (i < cxs.length) {
-            val dx = x - cxs(i); val dy = y - cys(i)
+            val dx = xs(p) - cxs(i); val dy = ys(p) - cys(i)
             val d2 = dx * dx + dy * dy
             if (d2 < best) best = d2
             i += 1
           }
           if (best > m) m = best
+          p += 1
         }
-        Iterator.single(m)
+        m
       }.reduce(math.max)
       (math.sqrt(maxMinD2), centers)
-    } finally typed.unpersist()
+    } finally parts.unpersist()
   }
 
   // --------------------------------------------------- queries for the gate
@@ -368,16 +456,16 @@ object Geometry {
       (col("l_quantity") * 100.0).as("y"))
 
   /** Smaller point set (customer) for the exact-outlier oracle join. */
-  private def customerPoints(s: SparkSession, dir: String): DataFrame =
+  private[graft] def customerPoints(s: SparkSession, dir: String): DataFrame =
     Tables.customer(s, dir).select(
       col("c_custkey").as("id"),
       col("c_acctbal").as("x"),
       (col("c_custkey") % 100).cast(DoubleType).as("y"))
 
-  private val D1 = 500.0       // cell width for the histogram/approx queries
-  private val D2 = 60.0        // exact-outlier radius on customer points
+  private val D1 = 500.0             // cell width for the histogram/approx queries
+  private[graft] val D2 = 60.0        // exact-outlier radius on customer points
   private val M1 = 40L
-  private val M2 = 6L
+  private[graft] val M2 = 6L
 
   def qCellHistogram(s: SparkSession, dir: String): DataFrame =
     cellHistogram(lineitemPoints(s, dir), D1 / (2.0 * math.sqrt(2.0)))

@@ -52,6 +52,117 @@ class GeometrySpec extends SparkSpec {
     assert(exact.subsetOf(candidateIds))
   }
 
+  /** Seeded inputs for the exact-outlier path equivalence: dense clusters
+    * (pruned by N3 > M), negative coordinates, duplicate coordinates,
+    * points on the extreme corners of diagonal Λ-cells (the tight case of
+    * the N3 bound: per-axis diff just under 2Λ, distance just under D),
+    * neighbors three Λ-cells apart,
+    * pairs at exactly distance D, and uncertain cells (N3 ≤ M < N7) beside
+    * a dense blob. Returns (id, x, y) with unique ids. */
+  private def edgeCasePoints(seed: Int, d: Double, m: Int): Seq[(Long, Double, Double)] = {
+    val rng = new scala.util.Random(seed)
+    val lambda = d / (2.0 * math.sqrt(2.0))
+    def cell(v: Double): Long = math.floor(v / lambda).toLong
+    // smallest / largest double in Λ-cell k, as Spark's floor(v / Λ) assigns it
+    def lo(k: Long): Double = {
+      var v = k * lambda
+      while (cell(v) >= k) v = Math.nextDown(v)
+      while (cell(v) < k) v = Math.nextUp(v)
+      v
+    }
+    def hi(k: Long): Double = {
+      var v = (k + 1) * lambda
+      while (cell(v) > k) v = Math.nextDown(v)
+      while (cell(Math.nextUp(v)) <= k) v = Math.nextUp(v)
+      v
+    }
+    val pts = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
+    // clusters, one of them at negative coordinates
+    for ((cx, cy) <- Seq((5.0, 5.0), (-7.0, -3.0), (12.0, -9.0)); _ <- 0 until 400)
+      pts += ((cx + rng.nextGaussian() * d / 2, cy + rng.nextGaussian() * d / 2))
+    // corner pairs: p alone in its cell, M duplicates at the far corner of
+    // the diagonal neighbor ⇒ N3 = M + 1, decided by the bound alone
+    for (_ <- 0 until 6) {
+      val (k, l) = (rng.nextInt(2000).toLong - 1000 + 5000, rng.nextInt(2000).toLong - 1000 - 5000)
+      pts += ((lo(k), lo(l)))
+      for (_ <- 0 until m) pts += ((hi(k + 1), hi(l + 1)))
+    }
+    // the same with M - 1 duplicates: N3 = M, a candidate counted exactly
+    for (_ <- 0 until 6) {
+      val (k, l) = (rng.nextInt(2000).toLong + 9000, rng.nextInt(2000).toLong - 1000)
+      pts += ((lo(k), hi(l)))
+      for (_ <- 0 until m - 1) pts += ((hi(k + 1), lo(l - 1)))
+    }
+    // a candidate whose only neighbors sit three Λ-cells away on an axis
+    // (2Λ < diff < D), M + 1 duplicates in a cell the prune settles: only
+    // the candidate's 7×7 block reaches them
+    for (_ <- 0 until 6) {
+      val (k, l) = (rng.nextInt(2000).toLong - 12000, rng.nextInt(2000).toLong + 3000)
+      pts += ((hi(k), lo(l)))
+      for (_ <- 0 to m) pts += ((lo(k + 3), lo(l)))
+      pts += ((hi(k), hi(l + 6)))
+      for (_ <- 0 to m) pts += ((lo(k + 3), lo(l + 8)))
+    }
+    // pairs and chains at exactly distance D (exactly representable sums)
+    for (i <- 0 until 8) {
+      val (x, y) = (-40.0 - 4.0 * i, 30.0 + 4.0 * i)
+      pts += ((x, y)); pts += ((x + d, y)); pts += ((x, y - d)); pts += ((x + d, y - d))
+    }
+    // uncertain cells: a few points 1.5-2.5Λ beside a tight blob of 20M
+    // (the blobs also put more candidate-block points than cells on the
+    // driver, so a limit of the cell count trips the point bound)
+    for (i <- 0 until 5) {
+      val (bx, by) = (60.0 + 3.0 * i, -60.0 - 3.0 * i)
+      for (_ <- 0 until 20 * m) pts += ((bx + rng.nextDouble() * lambda * 0.5, by + rng.nextDouble() * lambda * 0.5))
+      for (_ <- 0 until 1 + rng.nextInt(2))
+        pts += ((bx + lambda * (1.5 + rng.nextDouble()), by + lambda * (1.5 + rng.nextDouble())))
+    }
+    // scattered singletons, some on negative coordinates
+    for (_ <- 0 until 150) pts += ((rng.nextDouble() * 200 - 100, rng.nextDouble() * 200 - 100))
+    rng.shuffle(pts.toSeq).zipWithIndex.map { case ((x, y), i) => (i.toLong * 7 + 3, x, y) }
+  }
+
+  test("exactOutliers: the N3-pruned driver path equals the distributed fallback") {
+    import spark.implicits._
+    val d = 0.5; val m = 10
+    def isLocal(df: org.apache.spark.sql.DataFrame): Boolean = {
+      val p = df.queryExecution.executedPlan.toString
+      p.contains("LocalTableScan") && !p.contains("Join")
+    }
+    def ids(df: org.apache.spark.sql.DataFrame): Set[(Any, Long)] =
+      df.collect().map(r => (r.get(0), r.getLong(1))).toSet
+    for (seed <- Seq(1, 2, 3)) {
+      val pts = edgeCasePoints(seed, d, m).toDF("id", "x", "y").cache()
+      // the same points with an int id: qid must keep the input's id type
+      val intIds = pts.select(col("id").cast("int").as("id"), col("x"), col("y")).cache()
+      try {
+        val lambda = d / (2.0 * math.sqrt(2.0))
+        val nCells = Geometry.cellHistogram(pts, lambda).count().toInt
+        for (in <- Seq(pts, intIds); mm <- Seq(m.toLong, -1L)) {
+          val small = Geometry.exactOutliers(in, d, mm)
+          // cell bound tripped (histogram above the limit), then the point
+          // bound tripped (histogram fits, the candidates' blocks do not;
+          // with M = -1 there are no candidates, so no points to bound)
+          val byCells = Geometry.exactOutliers(in, d, mm, driverCellLimit = 1)
+          val byPoints = Geometry.exactOutliers(in, d, mm, driverCellLimit = nCells)
+          assert(isLocal(small), s"seed $seed: small path not taken")
+          assert(!isLocal(byCells), s"seed $seed: cell bound did not trip")
+          assert(isLocal(byPoints) == (mm < 0), s"seed $seed m $mm: point bound")
+          val expected = ids(byCells)
+          if (mm >= 0) assert(expected.size > 50, s"seed $seed: too few outliers to compare")
+          else assert(expected.isEmpty)
+          assert(ids(small) == expected, s"seed $seed m $mm: pruned path differs")
+          assert(ids(byPoints) == expected)
+          assert(small.schema == byCells.schema, s"${small.schema} vs ${byCells.schema}")
+          assert(small.schema("qid").dataType == in.schema("id").dataType)
+        }
+        // float coordinates keep the join's float arithmetic: no driver path
+        val floats = pts.select(col("id"), col("x").cast("float").as("x"), col("y").cast("float").as("y"))
+        assert(!isLocal(Geometry.exactOutliers(floats, d, m)))
+      } finally { pts.unpersist(); intIds.unpersist(); graft.core.InternalCaches.release(spark) }
+    }
+  }
+
   test("uber-10k golden: 236 exact / 165 sure / 195 uncertain (published reference output)") {
     // anchors from Homework_1/Data/Example/output_uber10k_0.02_10_5_2.pdf;
     // the uber-100k twin (673/435/658) is asserted inside Bench so the

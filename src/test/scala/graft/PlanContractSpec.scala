@@ -16,17 +16,88 @@ class PlanContractSpec extends SparkSpec {
   private val pairwiseOps = Seq(
     "q34_ngram_jaccard", "q35_minhash_lsh", "q36_simhash_pairs",
     "q43_ann_lsh", "q58_dedup_components", "q121_containment",
-    "q75_range_join", "q24_exact_outliers", "q22_cell_neighborhood",
+    "q75_range_join", "q22_cell_neighborhood",
     "q56_asof_join", "q66_pipeline_summary")
+
+  /** q24's distributed fallback: a driver cell limit of 0 forces it (at
+    * this scale q24 itself takes the driver path, a bare LocalTableScan). */
+  private def q24Fallback: String = {
+    import graft.ops.Geometry
+    Geometry.exactOutliers(Geometry.customerPoints(spark, sfDir), Geometry.D2, Geometry.M2,
+      driverCellLimit = 0).queryExecution.executedPlan.toString
+  }
 
   test("pairwise operators never plan a nested loop or cartesian product") {
     try {
-      for (q <- pairwiseOps) {
-        val p = plan(q)
+      for ((q, p) <- pairwiseOps.map(q => q -> plan(q)) :+ ("q24 fallback" -> q24Fallback)) {
         assert(!p.contains("BroadcastNestedLoop") && !p.contains("CartesianProduct"),
           s"$q planned a nested loop:\n$p")
       }
     } finally graft.core.InternalCaches.release(spark)
+  }
+
+  /** Spark jobs started while `body` runs, counted by a SparkListener on a
+    * local-property tag. A marker job submitted afterwards travels the
+    * same listener queue, so once it is seen every earlier job start is. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.contract.tag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(`tag`) => jobs.add(e.jobId)
+          case Some(t) if t == s"$tag-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    def tagged(t: String)(f: => Unit): Unit = {
+      sc.setLocalProperty(key, t)
+      try f finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged(tag)(body)
+      tagged(s"$tag-marker")(sc.parallelize(Seq(1), 1).count())
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener queue did not drain")
+      jobs.size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("HW1/HW2 point ops: bounded job counts on the driver paths") {
+    // eager-path operators hide their distributed work behind a bare
+    // LocalTableScan, so the job count is the contract: the exact outliers
+    // run the histogram (shuffle + collect) and ONE candidate-point
+    // collect; MRFFT runs the repartition, R1 and R3 over one cached array
+    // pair per partition; the approximate outliers run the histogram only
+    import graft.ops.Geometry
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    val centres = Seq((0.0, 0.0), (10.0, 0.0), (0.0, 10.0))
+    val clustered = Seq.tabulate(6000) { i =>
+      val (cx, cy) = centres(i % 3)
+      (i.toLong, cx + rng.nextGaussian() * 0.3, cy + rng.nextGaussian() * 0.3)
+    }
+    val planted = Seq.tabulate(20)(i => (6000L + i, 40.0 + 5.0 * i, -40.0))
+    val pts = (clustered ++ planted).toDF("id", "x", "y").cache()
+    try {
+      pts.count()
+      val radius = Geometry.mrFFT(pts, k = 30, l = 4)._1
+      var exact: org.apache.spark.sql.DataFrame = null
+      val exactJobs = jobsOf { exact = Geometry.exactOutliers(pts, radius, 10) }
+      val p = exact.queryExecution.executedPlan.toString
+      assert(p.contains("LocalTableScan") && !p.contains("Exchange"),
+        s"exact outliers left the driver path:\n$p")
+      assert(planted.map(_._1).toSet.subsetOf(exact.collect().map(_.getLong(0)).toSet))
+      assert(exactJobs <= 3, s"exactOutliers ran $exactJobs jobs")
+      val fftJobs = jobsOf(Geometry.mrFFT(pts, k = 30, l = 4))
+      assert(fftJobs <= 3, s"mrFFT ran $fftJobs jobs")
+      val approxJobs = jobsOf(Geometry.approxOutliers(pts, radius, 10).collect())
+      assert(approxJobs <= 2, s"approxOutliers ran $approxJobs jobs")
+    } finally { pts.unpersist(); graft.core.InternalCaches.release(spark) }
   }
 
   test("q41: the only nested loop is the block-pair table, bounded by block count") {
