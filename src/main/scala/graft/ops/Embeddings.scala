@@ -815,7 +815,7 @@ object Embeddings {
         e.join(hub.withColumnRenamed("vec_id", "hv").hint("shuffle_hash"),
           col("src") === col("hv"))
           .groupBy(col("dst")).agg(sum(col("h")).as("ar")))
-        .localCheckpoint(sys.props.get("graft.ckpt.eager").contains("true"))
+        .localCheckpoint(false)
       val am = maxUnits(ar, "ar")
       auth = ar.select(col("dst").as("vec_id"),
         expr(s"(ar * $scale) div ${am}L").as("a"))
@@ -823,7 +823,7 @@ object Embeddings {
         .join(auth.withColumnRenamed("vec_id", "av").hint("shuffle_hash"),
           col("dst") === col("av"))
         .groupBy(col("src")).agg(sum(col("a")).as("hr"))
-        .localCheckpoint(sys.props.get("graft.ckpt.eager").contains("true"))
+        .localCheckpoint(false)
       val hm = maxUnits(hr, "hr")
       hub = hr.select(col("src").as("vec_id"),
         expr(s"(hr * $scale) div ${hm}L").as("h"))

@@ -1543,7 +1543,14 @@ object Text {
     * selections plus a doc-co-keyed equi-join; a hot token inflates its
     * own posting rows only (they spread as rows, never one giant
     * array). The adjacency count is a codegen'd array intersect on the
-    * two bounded position lists. */
+    * two bounded position lists.
+    *
+    * EAGER contract: the probed phrase table is collected when the
+    * operator is CALLED — one corpus bigram aggregation runs even if the
+    * returned frame is never executed (plan dumps pay it too) — because
+    * the probed tokens prune the index build. That index is therefore a
+    * per-call persist of the probed tokens' postings, not the full
+    * [[invertedIndex]] other consumers could share. */
   def phraseSearch(docs: DataFrame, topP: Int = 3): DataFrame = {
     val sess = docs.sparkSession
     import sess.implicits._
@@ -2551,11 +2558,10 @@ object Text {
 
   /** Full BPE tokenizer training (Sennrich et al., ACL 2016) — the
     * count → argmax → merge loop q109 counts one iteration of, run to
-    * `nMerges` merges. The scale contract: ONE corpus scan builds the
-    * word-frequency table, which is vocab-bounded — every iteration after
-    * runs on that bounded cached frame (a pair-count aggregation plus a
-    * 1-row argmax action, both constant-sized in corpus terms), so
-    * training cost is O(corpus) + nMerges·O(vocab) no matter the corpus.
+    * `nMerges` merges: [[mergeLoop]] scored by raw pair count, so ties
+    * break by (count desc, left asc, right asc). One corpus scan builds
+    * the vocab-bounded word table and every merge after it runs on that
+    * table, so training cost is O(corpus) + nMerges·O(vocab).
     *
     * Words are carried as a delimiter-anchored symbol string — `" a  b "`
     * (double-space between symbols, single-space borders) — so a merge is
@@ -2566,104 +2572,138 @@ object Text {
     * contain spaces). That exact replace runs identically in any engine
     * with sequential-leftmost replace semantics, which is what lets the
     * DuckDB oracle unroll the training loop as materialized per-iteration
-    * CTE stages (the q25 Gonzalez-unroll precedent). Ties break by
-    * (count desc, left asc, right asc). Symbols are arbitrary Unicode
-    * (code-point units, the q37 recipe): the initial character split is
-    * Spark's code-point `substring`, and the merge pattern/replacement
-    * travel as `lit()` columns — never through a SQL string literal — so
-    * backslashes and multi-byte symbols round-trip exactly (the q123
-    * gate hash-matches a non-ASCII corpus against DuckDB, whose `s[i:i]`
-    * slicing is code-point-based for precomposed characters; combining
-    * sequences are out of contract on both sides).
+    * CTE stages (the q25 Gonzalez-unroll precedent). Symbols are
+    * arbitrary Unicode (code-point units, the q37 recipe): the initial
+    * character split is Spark's code-point `substring`, and the merge
+    * pattern/replacement travel as `lit()` columns — never through a SQL
+    * string literal — so backslashes and multi-byte symbols round-trip
+    * exactly (the q123 gate hash-matches a non-ASCII corpus against
+    * DuckDB, whose `s[i:i]` slicing is code-point-based for precomposed
+    * characters; combining sequences are out of contract on both sides).
     *
     * EAGER contract (the covarianceReport exception, same reason): each
     * merge choice is DATA the next iteration's plan is built from, so
-    * the loop runs per-iteration argmax actions at call time and the
+    * the loop runs per-iteration count actions at call time and the
     * returned merge table is a driver-local frame — callers pay training
     * cost on call, not on first consume. */
   def bpeTrain(docs: DataFrame, nMerges: Int = 8): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    bpeLoop(docs, nMerges)._1.toDF("merge_rank", "lhs", "rhs", "merged", "cnt")
+    mergeLoop(docs, nMerges)(pairCount)._1
+      .map { case (rank, a, b, merged, cnt, _) => (rank, a, b, merged, cnt) }
+      .toDF("merge_rank", "lhs", "rhs", "merged", "cnt")
   }
 
-  /** The final word table of the training loop — one row per distinct
-    * word, `s` holding its learned segmentation in the anchored string
-    * form. This IS the segmented corpus (weighted by `freq`). */
-  private def bpeTrainSegmented(docs: DataFrame, nMerges: Int): DataFrame =
-    bpeLoop(docs, nMerges)._2
+  /** BPE's merge score: the pair's corpus-weighted count. */
+  private val pairCount: (Long, Long, Long) => Long = (cnt, _, _) => cnt
 
-  private def bpeLoop(docs: DataFrame, nMerges: Int)
-      : (Seq[(Long, String, String, String, Long)], DataFrame) = {
+  /** The corpus word table in the anchored symbol form: one row per
+    * distinct (`keys`, w) with its occurrence count `freq` and `s`, w's
+    * code points joined as `" a  b  c "`. The table is vocab-bounded, so
+    * carrying it at corpus shuffle parallelism would make every merge pay
+    * (partitions × stages) of pure task overhead — it is coalesced to a
+    * small constant (no shuffle; a 1M-word vocab in 4 partitions is still
+    * ~250k short rows each). */
+  private def anchoredWords(docs: DataFrame, keys: Column*): DataFrame =
+    withTokens(docs).select(keys :+ explode(col("t")).as("w"): _*)
+      .groupBy(keys :+ col("w"): _*).agg(count(lit(1)).cast(LongType).as("freq"))
+      .withColumn("s", concat(lit(" "),
+        expr("array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '  ')"),
+        lit(" ")))
+      .coalesce(4)
+
+  /** One merge on an anchored symbol string: `" a  b "` → `" ab "`, the
+    * pattern and replacement riding lit() columns (backslash- and
+    * multi-byte-safe, q123). */
+  private def mergeSymbols(s: Column, a: String, b: String): Column =
+    replace(s, lit(s" $a  $b "), lit(s" ${a + b} "))
+
+  /** The merge kernel behind [[bpeTrain]], [[bpeSegmentCounts]] and
+    * [[wordpieceTrain]], which differ only in `score(cnt(ab), cnt(a),
+    * cnt(b))`. ONE corpus scan builds the persisted [[anchoredWords]]
+    * table; each merge then runs ONE count action — a fused tier-tagged
+    * aggregation yielding every symbol's count (tier 1) and every
+    * adjacent pair's count (tier 2), collected to the driver. The collect
+    * is bounded independently of the corpus: symbols ≤ charset + nMerges
+    * (each merge adds at most one) and pairs ≤ symbols². The driver picks
+    * the merge by (score desc, lhs asc, rhs asc), strings in UTF-8 byte
+    * order ([[utf8Lt]], the engine's STRING order), and applies it as
+    * ONE [[mergeSymbols]] replace followed by a LAZY localCheckpoint.
+    * Lazy because the checkpoint still cuts lineage at call time (plan
+    * depth stays 1 at any merge count and no replace chain re-executes),
+    * while the next merge's count job materializes it in the same pass:
+    * one word-table pass per merge instead of an extra eager job. An
+    * executor loss mid-training fails the job (local checkpoints are not
+    * replicated); training re-runs from the corpus.
+    *
+    * Returns (rank, lhs, rhs, merged, cnt, score) per merge — fewer than
+    * `nMerges` rows once no adjacent pair is left — and the final word
+    * table (freq, s), which IS the segmented corpus. */
+  private def mergeLoop(docs: DataFrame, nMerges: Int)(score: (Long, Long, Long) => Long)
+      : (Seq[(Long, String, String, String, Long, Long)], DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    // the word table is vocab-bounded, so carrying it at corpus shuffle
-    // parallelism makes every merge iteration pay (partitions × stages)
-    // of pure task overhead — coalesce to a small constant (no shuffle;
-    // a 1M-word vocab in 4 partitions is still ~250k short rows each)
-    val words = graft.core.InternalCaches.persist(
-      withTokens(docs).select(explode(col("t")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("freq"))
-        .withColumn("s", concat(lit(" "),
-          expr("array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '  ')"),
-          lit(" ")))
-        .coalesce(4))
-    var cur = words.select(col("freq"), col("s"))
-    // Lineage discipline (round 12, job count round 17): each merge
-    // localCheckpoints the word table, truncating lineage to a depth-1
-    // LogicalRDD at plan-build time — per-merge cost is flat BY
-    // CONSTRUCTION out to production merge counts (the bpe_train_1m_256
-    // anchor measures it): no replace chain ever re-executes (the r11
-    // persist-based scheme unpersisted the parent before the lazily
-    // persisted child ran, silently replaying the whole chain each
-    // iteration — note that failure mode was PERSIST lifecycle, not
-    // checkpoint laziness), and no plan or cache-entry chain accumulates
-    // (a chain of nested InMemoryRelations blew up AQE's plan-string
-    // rendering at depth ~24). Round 17 made the checkpoint LAZY: the
-    // next iteration's argmax job materializes it in the same pass, so
-    // each merge costs ONE vocab-table pass, not an eager
-    // materialization job plus the argmax. Superseded checkpoint blocks
-    // are reclaimed by the ContextCleaner once unreferenced; `words`
-    // stays registered for the batch-boundary release. Cluster caveat,
-    // by design: localCheckpoint
-    // trades fault-tolerance for speed — an executor loss mid-training
-    // fails the job (acceptable: training re-runs from the corpus, which
-    // IS the reliable input); a deployment that can't re-run swaps in
-    // reliable checkpointing, same loop.
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
+    var cur = graft.core.InternalCaches.persist(anchoredWords(docs))
+      .select(col("freq"), col("s"))
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long, Long)]
     var exhausted = false
     for (it <- 1 to nMerges if !exhausted) {
-      val top = cur
+      val counts = cur
         .select(col("freq"), expr("split(trim(s), '  ')").as("sy"))
-        .filter(size(col("sy")) >= 2)
         .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(sy) - 1), i -> " +
-            "struct(element_at(sy, i) AS a, element_at(sy, i + 1) AS b))")).as("p"))
-        .groupBy(col("p.a"), col("p.b")).agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
+          """concat(
+               transform(sy, x -> struct(1 AS tier, x AS a, CAST(NULL AS STRING) AS b)),
+               CASE WHEN size(sy) >= 2 THEN
+                 transform(sequence(1, size(sy) - 1), i ->
+                   struct(2 AS tier, element_at(sy, i) AS a, element_at(sy, i + 1) AS b))
+               ELSE CAST(array() AS ARRAY<STRUCT<tier: INT, a: STRING, b: STRING>>) END)"""))
+          .as("g"))
+        .groupBy(col("g.tier").as("tier"), col("g.a").as("a"), col("g.b").as("b"))
+        .agg(sum(col("freq")).cast(LongType).as("c"))
+        .collect()
+      val uni = counts.filter(_.getInt(0) == 1)
+        .map(r => r.getString(1) -> r.getLong(3)).toMap
+      val pairs = counts.filter(_.getInt(0) == 2).map { r =>
+        val (a, b, cnt) = (r.getString(1), r.getString(2), r.getLong(3))
+        (a, b, cnt, score(cnt, uni(a), uni(b)))
+      }
+      if (pairs.isEmpty) exhausted = true
       else {
-        val (a, b, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((it.toLong, a, b, a + b, cnt))
-        // the pattern/replacement travel as lit() columns, never through a
-        // SQL string literal — backslash- and multi-byte-safe (q123)
-        // LAZY checkpoint (round 17, the HITS half-step recipe): the NEXT
-        // iteration's argmax job is the first action over this frame, so
-        // it materializes the checkpoint as a side effect — the eager
-        // variant ran a dedicated O(vocab) materialization job first,
-        // doubling per-merge passes (2 -> 1 vocab-table passes/merge; at
-        // the 1M 4k-merge anchor that is 4096 fewer jobs). Lineage is
-        // still cut at call time (a lazy checkpoint returns a LogicalRDD
-        // immediately), so plan depth stays 1 by construction.
-        cur = cur.withColumn("s",
-            replace(col("s"), lit(s" $a  $b "), lit(s" ${a + b} ")))
-          .localCheckpoint(sys.props.get("graft.ckpt.eager").contains("true"))
+        val (a, b, cnt, sc) = pairs.reduce { (x, y) =>
+          if (y._4 > x._4 || (y._4 == x._4 &&
+              (utf8Lt(y._1, x._1) || (y._1 == x._1 && utf8Lt(y._2, x._2))))) y else x
+        }
+        merges += ((it.toLong, a, b, a + b, cnt, sc))
+        cur = cur.withColumn("s", mergeSymbols(col("s"), a, b)).localCheckpoint(false)
       }
     }
-    // the final table materializes with its first consumer
-    // (bpeSegmentCounts / the caller's collect); its blocks free with
-    // the frame (ContextCleaner), not via the cache registry
     (merges.toSeq, cur)
+  }
+
+  /** Top-K symbols of an anchored word table by corpus-weighted count,
+    * (cnt desc, symbol asc) ties — a bounded heap over a vocab-bounded
+    * aggregation. */
+  private def symbolHistogram(words: DataFrame, topK: Int): DataFrame =
+    words.select(col("freq"), explode(expr("split(trim(s), '  ')")).as("sym"))
+      .filter(col("sym") =!= "")
+      .groupBy(col("sym")).agg(sum(col("freq")).cast(LongType).as("cnt"))
+      .orderBy(col("cnt").desc, col("sym").asc)
+      .limit(topK)
+
+  /** The frozen merge chain over an anchored word table, shared by
+    * [[bpeApplyMerges]] and [[tokenizerFertility]]: nested [[mergeSymbols]]
+    * replaces in rank order, one projection per `chunkEvery` merges. Past
+    * one chunk every boundary is a LAZY localCheckpoint: it cuts the plan
+    * at once (expression depth per codegen'd projection stays ≤
+    * chunkEvery), while the whole chain still runs inside the consumer's
+    * one job. */
+  private def replayMerges(words: DataFrame, merges: Seq[(String, String)],
+                           chunkEvery: Int): DataFrame = {
+    require(chunkEvery >= 1, s"chunkEvery must be >= 1, got $chunkEvery")
+    merges.grouped(chunkEvery).foldLeft(words) { (cur, chunk) =>
+      val next = cur.withColumn("s",
+        chunk.foldLeft(col("s")) { case (acc, (a, b)) => mergeSymbols(acc, a, b) })
+      if (merges.length > chunkEvery) next.localCheckpoint(false) else next
+    }
   }
 
   def qBpeTrain(s: SparkSession, dir: String): DataFrame =
@@ -2679,17 +2719,10 @@ object Text {
     * one more vocab-bounded aggregation; corpus-frequency weighting
     * comes from the word-frequency table, never a corpus re-scan.
     * Top-K is a bounded heap with (cnt desc, symbol asc) ties.
-    * Inherits [[bpeTrain]]'s EAGER contract — the merge loop runs at
+    * Inherits [[bpeTrain]]'s EAGER contract — [[mergeLoop]] runs at
     * call time; only the final histogram aggregation stays lazy. */
-  def bpeSegmentCounts(docs: DataFrame, nMerges: Int = 8, topK: Int = 20): DataFrame = {
-    val segmented = bpeTrainSegmented(docs, nMerges)
-    segmented
-      .select(col("freq"), explode(expr("split(trim(s), '  ')")).as("sym"))
-      .filter(col("sym") =!= "")
-      .groupBy(col("sym")).agg(sum(col("freq")).cast(LongType).as("cnt"))
-      .orderBy(col("cnt").desc, col("sym").asc)
-      .limit(topK)
-  }
+  def bpeSegmentCounts(docs: DataFrame, nMerges: Int = 8, topK: Int = 20): DataFrame =
+    symbolHistogram(mergeLoop(docs, nMerges)(pairCount)._2, topK)
 
   def qBpeApply(s: SparkSession, dir: String): DataFrame =
     bpeSegmentCounts(Tables.documents(s, dir))
@@ -2706,41 +2739,15 @@ object Text {
     * word table (built in one scan, vocab-bounded, constant-partition) —
     * a single job regardless of merge count, with the per-word top-level
     * loop entirely inside codegen'd string ops. Production merge counts
-    * (30k+) chunk the chain every `chunkEvery` replaces with an eager
-    * localCheckpoint — the q118 lineage-cut recipe — bounding expression
-    * depth while keeping jobs at merges/chunkEvery, not merges. Patterns
-    * ride lit() columns (byte-safe, q123's contract). Output is the
-    * applied-vocabulary histogram (top-K symbols by corpus-weighted
-    * count), the same report shape as [[bpeSegmentCounts]]. */
+    * (30k+) chunk the chain every `chunkEvery` replaces ([[replayMerges]]),
+    * bounding expression depth. Output is the applied-vocabulary
+    * histogram (top-K symbols by corpus-weighted count), the same report
+    * as [[bpeSegmentCounts]]. */
   def bpeApplyMerges(docs: DataFrame, merges: Seq[(String, String)],
-                     topK: Int = 20, chunkEvery: Int = 64): DataFrame = {
-    require(chunkEvery >= 1, s"chunkEvery must be >= 1, got $chunkEvery")
-    val words = withTokens(docs).select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("freq"))
-      .withColumn("s", concat(lit(" "),
-        expr("array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '  ')"),
-        lit(" ")))
-      .coalesce(4)
-    var cur = words.select(col("freq"), col("s"))
-    merges.grouped(chunkEvery).foreach { chunk =>
-      val chained = chunk.foldLeft(col("s")) { case (acc, (a, b)) =>
-        replace(acc, lit(s" $a  $b "), lit(s" ${a + b} "))
-      }
-      cur = cur.withColumn("s", chained)
-      // LAZY (round 17): each chunk boundary still cuts the SQL plan (a
-      // lazy checkpoint is a LogicalRDD immediately, so expression depth
-      // per codegen'd projection stays <= chunkEvery replaces), but the
-      // chain now materializes inside the ONE consumer job instead of one
-      // eager job per chunk — merges/chunkEvery fewer jobs, same blocks.
-      if (merges.length > chunkEvery) cur = cur.localCheckpoint(false)
-    }
-    cur
-      .select(col("freq"), explode(expr("split(trim(s), '  ')")).as("sym"))
-      .filter(col("sym") =!= "")
-      .groupBy(col("sym")).agg(sum(col("freq")).cast(LongType).as("cnt"))
-      .orderBy(col("cnt").desc, col("sym").asc)
-      .limit(topK)
-  }
+                     topK: Int = 20, chunkEvery: Int = 64): DataFrame =
+    symbolHistogram(
+      replayMerges(anchoredWords(docs).select(col("freq"), col("s")), merges, chunkEvery),
+      topK)
 
   /** q124 — the full deployed-tokenizer lifecycle over a train/apply
     * corpus split: train merges on the doc_id-even half, segment the
@@ -2784,32 +2791,14 @@ object Text {
     * Scale shape: the merge table is an nMerges-row collect (the q124
     * limit-gated contract); the eval corpus is scanned ONCE into a
     * (source × vocab)-bounded word table; the whole frozen chain is the
-    * q124 single nested-replace projection (chunked localCheckpoints past
-    * `chunkEvery`); the rollup is a bounded-frame aggregation keyed by
-    * source. All sums are exact integers; each ratio is ONE pinned double
+    * q124 frozen replay ([[replayMerges]]); the rollup is a bounded-frame
+    * aggregation keyed by source. All sums are exact integers; each ratio is ONE pinned double
     * division, rounded to 6 for the report. */
   def tokenizerFertility(train: DataFrame, eval: DataFrame, nMerges: Int = 8,
                          chunkEvery: Int = 64): DataFrame = {
-    require(chunkEvery >= 1, s"chunkEvery must be >= 1, got $chunkEvery")
     val merges = bpeTrain(train, nMerges).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    var cur = withTokens(eval)
-      .select(col("source"), explode(col("t")).as("w"))
-      .groupBy(col("source"), col("w"))
-      .agg(count(lit(1)).cast(LongType).as("freq"))
-      .withColumn("s", concat(lit(" "),
-        expr("array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '  ')"),
-        lit(" ")))
-      .coalesce(4)
-    merges.grouped(chunkEvery).foreach { chunk =>
-      val chained = chunk.foldLeft(col("s")) { case (acc, (a, b)) =>
-        replace(acc, lit(s" $a  $b "), lit(s" ${a + b} "))
-      }
-      cur = cur.withColumn("s", chained)
-      // LAZY chunk boundaries — see bpeApplyMerges (round 17)
-      if (merges.length > chunkEvery) cur = cur.localCheckpoint(false)
-    }
-    cur
+    replayMerges(anchoredWords(eval, col("source")), merges, chunkEvery)
       .withColumn("k",
         size(expr("filter(split(trim(s), '  '), x -> x <> '')")).cast(LongType))
       .groupBy(col("source"))
@@ -4550,94 +4539,26 @@ object Text {
     * plants exactly that corpus and asserts the two trainers diverge.
     *
     * Score pinning: the score is compared as the exact scaled integer
-    * floor(cnt(ab)·10¹⁸ / (cnt(a)·cnt(b))) computed in DECIMAL(38,0)
-    * (DuckDB: HUGEINT) — cnt(ab) ≤ cnt(a), cnt(b), so the quotient is
-    * ≤ 10¹⁸ (fits BIGINT) and both engines truncate the same rational at
+    * floor(cnt(ab)·10¹⁸ / (cnt(a)·cnt(b))) computed exactly in BigInt
+    * (the DuckDB oracle: HUGEINT) — cnt(ab) ≤ cnt(a), cnt(b), so the
+    * quotient is ≤ 10¹⁸ (fits BIGINT) and both engines truncate the same rational at
     * the same fixed precision: no float enters the argmax. Ties break
     * (score desc, lhs asc, rhs asc). Unigram counts are the
     * corpus-weighted symbol occurrences of the CURRENT segmentation —
     * single-symbol words included (they hold probability mass even though
     * they contribute no pairs).
     *
-    * Scale contract = [[bpeTrain]]'s verbatim: ONE corpus scan builds the
-    * vocab-bounded word table; each iteration is a pair-count aggregation
-    * + a symbol-count aggregation (both vocab-bounded) + a 1-row argmax
-    * action + ONE anchored string replace, eagerly localCheckpointed (the
-    * q118 lineage-cut recipe), so training is O(corpus) + nMerges·O(vocab)
-    * at any corpus size (the wordpiece_train_1m anchor measures the
-    * flatness). EAGER contract and anchored-string merge mechanics are
-    * [[bpeTrain]]'s too — see its scaladoc; the apply half of the
-    * lifecycle is the frozen-table replace chain [[bpeApplyMerges]]
-    * already deployed and gated by q124. */
+    * Training is [[mergeLoop]] with this score, so scale shape, the
+    * EAGER contract and the anchored-string merge mechanics are
+    * [[bpeTrain]]'s; the apply half of the lifecycle is the frozen-table
+    * replay [[bpeApplyMerges]] already deployed and gated by q124. */
   def wordpieceTrain(docs: DataFrame, nMerges: Int = 8): DataFrame = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = graft.core.InternalCaches.persist(
-      withTokens(docs).select(explode(col("t")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("freq"))
-        .withColumn("s", concat(lit(" "),
-          expr("array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '  ')"),
-          lit(" ")))
-        .coalesce(4))
-    var cur = words.select(col("freq"), col("s"))
-    val merges =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long, Long)]
-    var exhausted = false
-    // DRIVER-side argmax (round 20, guide §1.2 step 1): both per-merge
-    // count tables are BOUNDED by construction — symbols ≤ charset +
-    // nMerges, adjacent pairs ≤ symbols² — i.e. the same bounded-collect
-    // class as this loop's own 1-row argmax. One fused tier-tagged
-    // explode collects BOTH tables in ONE distributed job per merge; the
-    // likelihood score and tie-break run on the collected rows with the
-    // exact engine arithmetic (BigInt ≡ DECIMAL(38,0) integral div;
-    // UTF-8 byte order ≡ STRING asc). The old shape ran THREE full
-    // split passes of the word table per merge (the pair aggregation
-    // plus the two uni broadcast builds riding the argmax job). Steady
-    // 2.00 → 0.98 s at sf0.1; merge table bit-identical (OptLab
-    // fingerprint + oracle hash at sf0.001/0.01). A distributed
-    // checkpoint-the-counts variant was built and REJECTED: the
-    // per-merge checkpoint + join + broadcast jobs cost more than the
-    // saved scans (lab: 2.9 s vs base 2.2 in the same window).
     val e18 = BigInt("1000000000000000000")
-    for (it <- 1 to nMerges if !exhausted) {
-      val counts = cur
-        .select(col("freq"), expr("split(trim(s), '  ')").as("sy"))
-        .select(col("freq"), explode(expr(
-          """concat(
-               transform(sy, x -> struct(1 AS tier, x AS a, CAST(NULL AS STRING) AS b)),
-               CASE WHEN size(sy) >= 2 THEN
-                 transform(sequence(1, size(sy) - 1), i ->
-                   struct(2 AS tier, element_at(sy, i) AS a, element_at(sy, i + 1) AS b))
-               ELSE CAST(array() AS ARRAY<STRUCT<tier: INT, a: STRING, b: STRING>>) END)"""))
-          .as("g"))
-        .groupBy(col("g.tier").as("tier"), col("g.a").as("a"), col("g.b").as("b"))
-        .agg(sum(col("freq")).cast(LongType).as("c"))
-        .collect()
-      val uni = counts.filter(_.getInt(0) == 1)
-        .map(r => r.getString(1) -> r.getLong(3)).toMap
-      val pairs = counts.filter(_.getInt(0) == 2)
-      if (pairs.isEmpty) exhausted = true
-      else {
-        var ba: String = null; var bb: String = null
-        var bc = 0L; var bs = 0L
-        for (r <- pairs) {
-          val (a, b, cnt) = (r.getString(1), r.getString(2), r.getLong(3))
-          val s18 = ((BigInt(cnt) * e18) / (BigInt(uni(a)) * BigInt(uni(b)))).toLong
-          if (ba == null || s18 > bs ||
-              (s18 == bs && (utf8Lt(a, ba) || (a == ba && utf8Lt(b, bb))))) {
-            ba = a; bb = b; bc = cnt; bs = s18
-          }
-        }
-        merges += ((it.toLong, ba, bb, ba + bb, bc, bs))
-        // LAZY — the next iteration's count job materializes it (round
-        // 17, see bpeTrain): one vocab-table pass per merge
-        cur = cur.withColumn("s",
-            replace(col("s"), lit(s" $ba  $bb "), lit(s" ${ba + bb} ")))
-          .localCheckpoint(false)
-      }
-    }
-    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "cnt", "score18")
+    mergeLoop(docs, nMerges) { (cnt, ua, ub) =>
+      ((BigInt(cnt) * e18) / (BigInt(ua) * BigInt(ub))).toLong
+    }._1.toDF("merge_rank", "lhs", "rhs", "merged", "cnt", "score18")
   }
 
   def qWordpieceTrain(s: SparkSession, dir: String): DataFrame =
@@ -4792,9 +4713,14 @@ object Text {
     val tm = masses.agg(sum(col(massCol)).cast(LongType).as("tm"))
     masses.crossJoin(broadcast(tm)).select(col("p"),
       length(col("p")).cast(LongType).as("l"),
-      expr(s"CAST(round(round(ln(CAST($massCol AS DOUBLE) / CAST(tm AS DOUBLE)), 9)" +
-        " * 1e9) AS BIGINT)").as("lp9"))
+      lp9Expr(massCol, "tm").as("lp9"))
   }
+
+  /** The engine-side lp9 of integer columns `mass` and `tm`; [[lp9Of]] is
+    * its driver-side twin. */
+  private[graft] def lp9Expr(mass: String, tm: String): Column =
+    expr(s"CAST(round(round(ln(CAST($mass AS DOUBLE) / CAST($tm AS DOUBLE)), 9)" +
+      " * 1e9) AS BIGINT)")
 
   def unigramViterbi(docs: DataFrame, maxPieceLen: Int = 4,
                      maxWordLen: Int = 16, thrDiv: Long = 30L,
@@ -4865,11 +4791,14 @@ object Text {
     BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** lp9 = CAST(round(round(ln(mass/tm), 9) * 1e9) AS BIGINT) — the
-    * [[pieceLogProbs]] pinning evaluated driver-side: java.lang.Math.log
-    * IS the engine's ln on this JVM, the two rounds are [[roundDouble]],
-    * and the final cast truncates an integral double exactly. */
-  private def lp9Of(mass: Long, tm: Long): Long =
-    roundDouble(roundDouble(math.log(mass.toDouble / tm.toDouble), 9) * 1e9, 0).toLong
+    * [[lp9Expr]] pinning evaluated driver-side: Spark's `ln` (the `Log`
+    * expression) runs StrictMath.log in both its interpreted and codegen
+    * paths, and java.lang.Math.log may differ from it by an ulp — enough
+    * to flip a HALF_UP boundary of round(x, 9). The two rounds are
+    * [[roundDouble]], and the final cast truncates an integral double
+    * exactly. TextSpec asserts bit equality with [[lp9Expr]]. */
+  private[graft] def lp9Of(mass: Long, tm: Long): Long =
+    roundDouble(roundDouble(StrictMath.log(mass.toDouble / tm.toDouble), 9) * 1e9, 0).toLong
 
   /** UNSIGNED-UTF-8-byte string order — the engine's STRING comparison
     * (UTF8String binary order = code-point order), NOT java's UTF-16
@@ -4903,12 +4832,19 @@ object Text {
     * the engine ops bit-for-bit ([[lp9Of]], [[utf8Lt]]; code-point
     * lengths, not UTF-16 units). Gate evidence: OptLab fingerprints and
     * oracle hashes identical at sf0.001/0.01/0.1 and sf1.
-    * Returns the final (piece, mass) model rows. */
-  private def unigramMassesDriver(words: DataFrame, maxPieceLen: Int,
+    * The training corpus is the (w, cnt) table of `docs`' words of
+    * length 1..maxWordLen: the over-long tail (q140's [UNK] words)
+    * contributes neither seed mass nor counts. Returns the final
+    * (piece, mass) model rows. */
+  private def unigramMassesDriver(docs: DataFrame, maxPieceLen: Int,
                                   thrDiv: Long, nIters: Int,
                                   vocabV: Int, maxWordLen: Int): Seq[(String, Long)] = {
-    val spark = words.sparkSession
+    val spark = docs.sparkSession
     import spark.implicits._
+    val words = graft.core.InternalCaches.persist(
+      withTokens(docs).select(explode(col("t")).as("w"))
+        .filter(length(col("w")).between(1, maxWordLen))
+        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("cnt")))
     var masses: Seq[(String, Long)] = seedPieces(words, maxPieceLen, thrDiv)
       .select(col("p"), col("freq")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -4941,13 +4877,7 @@ object Text {
       s"bad params ($maxPieceLen, $maxWordLen, $thrDiv, $nIters, $vocabV)")
     val spark = docs.sparkSession
     import spark.implicits._
-    // Training corpus = words of length 1..maxWordLen: the over-long tail
-    // (q140's [UNK] words) contributes neither seed mass nor counts.
-    val words = graft.core.InternalCaches.persist(
-      withTokens(docs).select(explode(col("t")).as("w"))
-        .filter(length(col("w")).between(1, maxWordLen))
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("cnt")))
-    val masses = unigramMassesDriver(words, maxPieceLen, thrDiv, nIters,
+    val masses = unigramMassesDriver(docs, maxPieceLen, thrDiv, nIters,
       vocabV, maxWordLen)
     val tm = masses.map(_._2).sum
     masses.map { case (p, m) =>
@@ -4981,11 +4911,7 @@ object Text {
     // Frozen model straight from the driver-side EM ([[unigramMassesDriver]],
     // round 20): the trained map feeds the eval DP as a local 1-row frame —
     // no per-model aggregation or checkpoint jobs on the apply side.
-    val trainWords = graft.core.InternalCaches.persist(
-      withTokens(train).select(explode(col("t")).as("w"))
-        .filter(length(col("w")).between(1, maxWordLen))
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("cnt")))
-    val masses = unigramMassesDriver(trainWords, maxPieceLen, thrDiv, nIters,
+    val masses = unigramMassesDriver(train, maxPieceLen, thrDiv, nIters,
       vocabV, maxWordLen)
     val tm = masses.map(_._2).sum
     val vm = masses.map { case (p, m) => p -> lp9Of(m, tm) }.toMap

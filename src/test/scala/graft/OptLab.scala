@@ -198,63 +198,6 @@ object OptLab {
     }
 
     // ---------------------------------------------------------------
-    // q187 candidate: one scan of the segmentation table per merge —
-    // the unigram (tier 1) and adjacent-pair (tier 2) counts fuse into
-    // a single explode + aggregation over a checkpointed tiny count
-    // table; the argmax joins then read the checkpoint, not two more
-    // full split passes of the word table.
-    // ---------------------------------------------------------------
-    def q187FusedOn(docs: DataFrame, nMerges: Int): DataFrame = {
-      import spark.implicits._
-      val words = graft.core.InternalCaches.persist(
-        graft.ops.Text.withTokens(docs).select(explode(col("t")).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("freq"))
-          .withColumn("s", concat(lit(" "),
-            expr("array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '  ')"),
-            lit(" ")))
-          .coalesce(4))
-      var cur = words.select(col("freq"), col("s"))
-      val merges =
-        scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long, Long)]
-      var exhausted = false
-      for (it <- 1 to nMerges if !exhausted) {
-        val counts = cur
-          .select(col("freq"), expr("split(trim(s), '  ')").as("sy"))
-          .select(col("freq"), explode(expr(
-            """concat(
-                 transform(sy, x -> struct(1 AS tier, x AS a, CAST(NULL AS STRING) AS b)),
-                 CASE WHEN size(sy) >= 2 THEN
-                   transform(sequence(1, size(sy) - 1), i ->
-                     struct(2 AS tier, element_at(sy, i) AS a, element_at(sy, i + 1) AS b))
-                 ELSE CAST(array() AS ARRAY<STRUCT<tier: INT, a: STRING, b: STRING>>) END)"""))
-            .as("g"))
-          .groupBy(col("g.tier").as("tier"), col("g.a").as("a"), col("g.b").as("b"))
-          .agg(sum(col("freq")).cast(LongType).as("c"))
-          .localCheckpoint(false)
-        val uni = counts.filter(col("tier") === 1).select(col("a").as("sym"), col("c"))
-        val top = counts.filter(col("tier") === 2)
-          .select(col("a"), col("b"), col("c").as("cnt"))
-          .join(broadcast(uni.select(col("sym").as("a"), col("c").as("ca"))), Seq("a"))
-          .join(broadcast(uni.select(col("sym").as("b"), col("c").as("cb"))), Seq("b"))
-          .withColumn("score18", expr(
-            "(CAST(cnt AS DECIMAL(38,0)) * 1000000000000000000L) div " +
-              "(CAST(ca AS DECIMAL(38,0)) * CAST(cb AS DECIMAL(38,0)))"))
-          .orderBy(col("score18").desc, col("a").asc, col("b").asc)
-          .limit(1).collect()
-        if (top.isEmpty) exhausted = true
-        else {
-          val (a, b) = (top(0).getAs[String]("a"), top(0).getAs[String]("b"))
-          merges += ((it.toLong, a, b, a + b,
-            top(0).getAs[Long]("cnt"), top(0).getAs[Long]("score18")))
-          cur = cur.withColumn("s",
-              replace(col("s"), lit(s" $a  $b "), lit(s" ${a + b} ")))
-            .localCheckpoint(false)
-        }
-      }
-      merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "cnt", "score18")
-    }
-
-    // ---------------------------------------------------------------
     // q133 / q121 experiment: hash-repartition the capped shingle frame
     // by h BEFORE the persist feeding the pair self-join, so both join
     // sides read one co-partitioned cache instead of re-exchanging.
@@ -292,79 +235,7 @@ object OptLab {
         .filter(col("max_span_tokens") >= minSpanTokens)
     }
 
-    // ---------------------------------------------------------------
-    // q187 candidate 2: both per-merge count tables are BOUNDED
-    // (symbols ≤ charset + nMerges, pairs ≤ symbols²), so collect the
-    // fused tier counts and run the likelihood argmax driver-side —
-    // ONE distributed job per merge instead of three scans + joins.
-    // ---------------------------------------------------------------
-    def q187Driver(docs: DataFrame, nMerges: Int): DataFrame = {
-      import spark.implicits._
-      def utf8Lt(a: String, b: String): Boolean = {
-        val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val n = math.min(x.length, y.length)
-        var i = 0
-        while (i < n) {
-          val c = (x(i) & 0xff) - (y(i) & 0xff)
-          if (c != 0) return c < 0
-          i += 1
-        }
-        x.length < y.length
-      }
-      val words = graft.core.InternalCaches.persist(
-        graft.ops.Text.withTokens(docs).select(explode(col("t")).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("freq"))
-          .withColumn("s", concat(lit(" "),
-            expr("array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '  ')"),
-            lit(" ")))
-          .coalesce(4))
-      var cur = words.select(col("freq"), col("s"))
-      val merges =
-        scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long, Long)]
-      var exhausted = false
-      val e18 = BigInt("1000000000000000000")
-      for (it <- 1 to nMerges if !exhausted) {
-        val counts = cur
-          .select(col("freq"), expr("split(trim(s), '  ')").as("sy"))
-          .select(col("freq"), explode(expr(
-            """concat(
-                 transform(sy, x -> struct(1 AS tier, x AS a, CAST(NULL AS STRING) AS b)),
-                 CASE WHEN size(sy) >= 2 THEN
-                   transform(sequence(1, size(sy) - 1), i ->
-                     struct(2 AS tier, element_at(sy, i) AS a, element_at(sy, i + 1) AS b))
-                 ELSE CAST(array() AS ARRAY<STRUCT<tier: INT, a: STRING, b: STRING>>) END)"""))
-            .as("g"))
-          .groupBy(col("g.tier").as("tier"), col("g.a").as("a"), col("g.b").as("b"))
-          .agg(sum(col("freq")).cast(LongType).as("c"))
-          .collect()
-        val uni = counts.filter(_.getInt(0) == 1)
-          .map(r => r.getString(1) -> r.getLong(3)).toMap
-        val pairs = counts.filter(_.getInt(0) == 2)
-        if (pairs.isEmpty) exhausted = true
-        else {
-          var ba: String = null; var bb: String = null
-          var bc = 0L; var bs = 0L
-          for (r <- pairs) {
-            val (a, b, cnt) = (r.getString(1), r.getString(2), r.getLong(3))
-            val s18 = ((BigInt(cnt) * e18) / (BigInt(uni(a)) * BigInt(uni(b)))).toLong
-            if (ba == null || s18 > bs ||
-                (s18 == bs && (utf8Lt(a, ba) || (a == ba && utf8Lt(b, bb))))) {
-              ba = a; bb = b; bc = cnt; bs = s18
-            }
-          }
-          merges += ((it.toLong, ba, bb, ba + bb, bc, bs))
-          cur = cur.withColumn("s",
-              replace(col("s"), lit(s" $ba  $bb "), lit(s" ${ba + bb} ")))
-            .localCheckpoint(false)
-        }
-      }
-      merges.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "cnt", "score18")
-    }
-
     val variants: Map[String, () => DataFrame] = Map(
-      "q187_driver" -> (() => q187Driver(
-        graft.core.Tables.documents(spark, dir), 8)),
       "q188_base" -> (() => SparkEntry.queries("q188_wordpiece_inference")(spark, dir)),
       "q122_base" -> (() => SparkEntry.queries("q122_trigram_score")(spark, dir)),
       "q122_fused" -> (() => q122Fused()),
@@ -373,8 +244,6 @@ object OptLab {
       "q145_base" -> (() => SparkEntry.queries("q145_phrase_search")(spark, dir)),
       "q145_pruned" -> (() => q145Pruned()),
       "q187_base" -> (() => SparkEntry.queries("q187_wordpiece_train")(spark, dir)),
-      "q187_fused" -> (() => q187FusedOn(
-        graft.core.Tables.documents(spark, dir), 8)),
       "q133_base" -> (() => SparkEntry.queries("q133_duplicated_spans")(spark, dir)),
       "q133_reparth" -> (() => q133Reparth()),
       "q91_new" -> (() => SparkEntry.queries("q91_grouping_sets")(spark, dir)),

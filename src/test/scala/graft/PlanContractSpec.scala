@@ -100,6 +100,28 @@ class PlanContractSpec extends SparkSpec {
     } finally { pts.unpersist(); graft.core.InternalCaches.release(spark) }
   }
 
+  test("tokenizer trainers: bounded job counts over eight merges") {
+    // the trainers return driver-local merge tables, so the job count is
+    // the contract: one bounded count collect per merge (its shuffle stage
+    // and its result, two jobs under AQE) over the lazily checkpointed
+    // word table — measured 18 for BPE and 16 for WordPiece. An eager
+    // checkpoint or a second per-merge count adds eight.
+    import graft.ops.Text
+    import spark.implicits._
+    val words = Seq("low", "lower", "lowest", "newer", "newest", "wider", "widest")
+    val docs = Seq.tabulate(30)(i => (i.toLong, words.drop(i % 4).mkString(" ")))
+      .toDF("doc_id", "text")
+    try {
+      var bpe = 0
+      val bound = 18
+      val bpeJobs = jobsOf { bpe = Text.bpeTrain(docs, nMerges = 8).collect().length }
+      assert(bpe == 8 && bpeJobs <= bound, s"bpeTrain ran $bpeJobs jobs for $bpe merges")
+      var wp = 0
+      val wpJobs = jobsOf { wp = Text.wordpieceTrain(docs, nMerges = 8).collect().length }
+      assert(wp == 8 && wpJobs <= bound, s"wordpieceTrain ran $wpJobs jobs for $wp merges")
+    } finally graft.core.InternalCaches.release(spark)
+  }
+
   test("q41: the only nested loop is the block-pair table, bounded by block count") {
     // the block outer product deliberately cross-joins two Range(0, nBlocks)
     // frames to build the bi <= bj block-pair table — nBlocks² rows (single

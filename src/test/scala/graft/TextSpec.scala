@@ -1195,6 +1195,54 @@ class TextSpec extends SparkSpec {
     val bsGot = Text.bpeTrain(bs, nMerges = 1).collect()
       .map(r => (r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq
     assert(bsGot == Seq(("\\", "b", "\\b", 2L)))
+    // the driver-side argmax breaks a planted tie in UTF-8 byte order:
+    // 'ｱ' (U+FF71, EF BD B1) sorts before '😀' (U+1F600, F0 9F 98 80),
+    // while java's UTF-16 compareTo puts the emoji's surrogate (D83D)
+    // first. Both pairs count 2 over symbols counting 2, so the tie holds
+    // for the count and the likelihood score alike.
+    val tie = Seq("😀y ｱx 😀y ｱx").toDF("text")
+    val want = Seq((1L, "ｱ", "x", "ｱx", 2L), (2L, "😀", "y", "😀y", 2L))
+    for (train <- Seq(Text.bpeTrain _, Text.wordpieceTrain _)) {
+      val tieGot = train(tie, 2).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq
+      assert(tieGot == want, s"tie broken in UTF-16 order: $tieGot")
+    }
+  }
+
+  test("lp9Of: the driver-side lp9 is bit-identical to the engine's lp9 expression") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val rng = new scala.util.Random(4871)
+    def draw(): (Long, Long) = {
+      val tm = 1L + (rng.nextLong() & ((1L << (1 + rng.nextInt(40))) - 1))
+      (1L + java.lang.Math.floorMod(rng.nextLong(), tm), tm)
+    }
+    val seeded = Seq.fill(2000)(draw())
+    // small masses, including mass == tm (lp9 = 0)
+    val small = (for (tm <- 1L to 12L; m <- 1L to tm) yield (m, tm)) ++
+      Seq((1L, 1L << 40), (1L, Long.MaxValue), (2L, 3L << 50))
+    // the pairs whose ln lands nearest a HALF_UP boundary of round(x, 9)
+    def halfDist(p: (Long, Long)): BigDecimal = {
+      val d = BigDecimal(StrictMath.log(p._1.toDouble / p._2.toDouble)).abs * BigDecimal(1e9)
+      ((d - d.setScale(0, BigDecimal.RoundingMode.FLOOR)) - BigDecimal(0.5)).abs
+    }
+    val nearHalf = Seq.fill(200000)(draw()).sortBy(halfDist).take(50)
+    // java.lang.Math.log differs from StrictMath.log by an ulp on these
+    // (HotSpot's intrinsic), enough to flip the rounded lp9
+    val ulpFlips = Seq((5141L, 14505L), (10439L, 18043L), (3163L, 20539L),
+      (1549L, 21652L), (973L, 21676L), (1124L, 21691L))
+    val pairs = (seeded ++ small ++ nearHalf ++ ulpFlips).distinct
+    // a local frame evaluates the expression interpreted (folded into the
+    // local relation), an RDD-backed one through generated code
+    val local = pairs.toDF("mass", "tm")
+    val rdd = spark.sparkContext.parallelize(pairs, 4).toDF("mass", "tm")
+    for (df <- Seq(local, rdd)) {
+      val got = df.select(col("mass"), col("tm"), Text.lp9Expr("mass", "tm")).collect()
+      val bad = got.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .filter { case (m, tm, lp9) => lp9 != Text.lp9Of(m, tm) }
+      assert(got.length == pairs.length)
+      assert(bad.length == 0, s"pairs differ, e.g. ${bad.take(5).toSeq}")
+    }
   }
 
   test("temperatureMix: an all-zero-token corpus weights and allocates zero") {
