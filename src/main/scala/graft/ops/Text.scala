@@ -976,13 +976,8 @@ object Text {
     * corpus is never re-scanned; the vocab²-bounded count table joins its
     * own rollup by broadcast. */
   def bigramModel(docs: DataFrame): DataFrame = {
-    val pairs = withTokens(docs).filter(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(2, size(t)), i -> " +
-          "struct(element_at(t, i - 1) AS w1, element_at(t, i) AS w2))")).as("bg"))
-      .select(col("bg.w1"), col("bg.w2"))
     val nBi = graft.core.InternalCaches.persist(
-      pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n12")))
+      ngrams(withTokens(docs), 2).groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n12")))
     val nUni = nBi.groupBy(col("w1")).agg(sum(col("n12")).cast(LongType).as("n1"))
     nBi.join(broadcast(nUni), "w1")
       .select(col("w1"), col("w2"), col("n12"), col("n1"),
@@ -1010,11 +1005,7 @@ object Text {
       toks.select(explode(col("t")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c")))
     val total = uni.agg(sum(col("c")).cast(LongType).as("n"))
-    val pairs = toks.filter(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(2, size(t)), i -> " +
-          "struct(element_at(t, i - 1) AS w1, element_at(t, i) AS w2))")).as("bg"))
-      .select(col("bg.w1"), col("bg.w2"))
+    val pairs = ngrams(toks, 2)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
       .filter(col("c12") > lit(delta))
     pairs
@@ -1554,9 +1545,6 @@ object Text {
   def phraseSearch(docs: DataFrame, topP: Int = 3): DataFrame = {
     val sess = docs.sparkSession
     import sess.implicits._
-    val bigramExpr = expr(
-      "transform(sequence(2, size(t)), i -> " +
-        "struct(element_at(t, i - 1) AS w1, element_at(t, i) AS w2))")
     // Serve-path pruning (round 20, guide §6 "predicate pushdown must
     // reach the scan" + the q68 IVF bucket-pruned-serve precedent): the
     // probed phrases are known before the index is consulted, so the
@@ -1569,9 +1557,7 @@ object Text {
     // old form ran its corpus aggregation under each of the two
     // broadcasts. Output depends only on the probed postings, so results
     // are identical (OptLab fingerprint + oracle hash-matched).
-    val phraseRows = withTokens(docs).filter(size(col("t")) >= 2)
-      .select(explode(bigramExpr).as("bg"))
-      .select(col("bg.w1"), col("bg.w2"))
+    val phraseRows = ngrams(withTokens(docs), 2)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("w1").asc, col("w2").asc)
       .limit(topP)
@@ -1625,13 +1611,8 @@ object Text {
       withTokens(docs).select(col("doc_id"), explode(col("t")).as("word")))
     val counts = toks.groupBy(col("word")).agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt")).cast(LongType).as("total"))
-    toks.join(counts, "word")
-      .crossJoin(broadcast(total))
-      .withColumn("lp", round(log(col("cnt").cast(DoubleType) / col("total")), 9))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast(LongType).as("n_tok"),
-        round(sum(col("lp").cast(DecimalType(28, 12))).cast(DoubleType) /
-          count(lit(1)), 6).as("avg_logprob"))
+    perDocMeanLp(toks.join(counts, "word").crossJoin(broadcast(total)),
+      col("cnt").cast(DoubleType) / col("total"), "n_tok", "avg_logprob")
   }
 
   def qUnigramLogProb(s: SparkSession, dir: String): DataFrame =
@@ -3255,9 +3236,16 @@ object Text {
     * are derived with the same deterministic transform in both engines
     * (the q128 derivation precedent). */
   def qHeapsLaw(s: SparkSession, dir: String): DataFrame =
-    heapsLaw(withTokens(Tables.documents(s, dir)).withColumn("t", expr(
+    heapsLaw(shingleStream(Tables.documents(s, dir)))
+
+  /** The q148 positional 3-gram shingle stream: `t` becomes the array of
+    * space-joined token triples starting at 1..size(t) − 2 (one short
+    * shingle for a doc under three tokens). The q148/q158/q159/q160 gates
+    * run over it, and the oracle derives it the same way. */
+  private def shingleStream(docs: DataFrame): DataFrame =
+    withTokens(docs).withColumn("t", expr(
       "transform(sequence(1, greatest(size(t) - 2, 1)), " +
-        "i -> concat_ws(' ', slice(t, i, 3)))")))
+        "i -> concat_ws(' ', slice(t, i, 3)))"))
 
   private[graft] def bleuDerivedPairs(docs: DataFrame): DataFrame =
     // Empty token arrays guard the derivation range: sequence(1, 0)
@@ -3328,6 +3316,94 @@ object Text {
     rougeL(bleuDerivedPairs(
       Tables.documents(s, dir).filter(expr("doc_id % 10 = 0"))))
 
+  /** Contiguous n-grams of the token array `t`: one row per position i in
+    * [n, size(t)] carrying `keys` and w1..wn, wj = element_at(t, i − n + j).
+    * Arrays shorter than n are filtered out first, because sequence(n, k)
+    * for k < n DESCENDS and would index outside the array. */
+  private def ngrams(tok: DataFrame, n: Int, keys: String*): DataFrame = {
+    val slots = (1 to n).map { j =>
+      val back = if (j == n) "i" else s"i - ${n - j}"
+      s"element_at(t, $back) AS w$j"
+    }
+    tok.filter(size(col("t")) >= n)
+      .select(keys.map(col) :+ explode(expr(
+        s"transform(sequence($n, size(t)), i -> struct(${slots.mkString(", ")}))"))
+        .as("g"): _*)
+      .select(keys.map(col) ++ (1 to n).map(j => col(s"g.w$j")): _*)
+  }
+
+  /** The train side of every held-out n-gram LM scorer: the fused
+    * tier-tagged count of all n-grams up to `order`, persisted.
+    * `tier(n, cnt)` is the (w1..wn, cnt) count table of one order;
+    * `histories` is, per bigram history w1, c1 = its bigram count and
+    * n1f = its distinct continuations; `totals` is the 1-row frame
+    * nn = token count, v = vocabulary size (both from tier 1) and
+    * t2 = distinct bigram count. */
+  private final case class NgramLm(grams: DataFrame) {
+    def tier(n: Int, cnt: String): DataFrame =
+      grams.filter(col("n") === n)
+        .select((1 to n).map(j => col(s"w$j")) :+ col("cnt").as(cnt): _*)
+    def histories: DataFrame = tier(2, "c12").groupBy(col("w1"))
+      .agg(sum(col("c12")).cast(LongType).as("c1"),
+        count(lit(1)).cast(LongType).as("n1f"))
+    def totals: DataFrame = grams.agg(
+      sum(when(col("n") === 1, col("cnt"))).cast(LongType).as("nn"),
+      count(when(col("n") === 1, lit(1))).cast(LongType).as("v"),
+      count(when(col("n") === 2, lit(1))).cast(LongType).as("t2"))
+  }
+
+  /** The n-gram LM kernel behind [[bigramScore]], [[kneserNeyScore]],
+    * [[wittenBellScore]], [[jelinekMercerScore]], [[trigramScore]],
+    * [[fivegramScore]] and [[doremiWeights]].
+    *
+    * Fused count: one explode emits, per token position i, the n-gram
+    * ENDING at i for every n ≤ min(order, i), tagged with n (unused key
+    * slots NULL, which group as constants), and ONE aggregation shuffle
+    * counts every tier — a count per tier would shuffle once per order and
+    * scan the train corpus again for the totals. The result is persisted;
+    * each tier is a filter of it, and the totals are one aggregate over it
+    * (unigram sum ≡ token count, unigram count ≡ countDistinct, as no
+    * token from [[withTokens]]' split is NULL). Per-tier keys and counts
+    * are exactly those of a separate per-tier count
+    * (wj = element_at(t, i − n + j)), and all are integers, so model
+    * values do not depend on the fusion.
+    *
+    * size ≥ 1 guard: [[withTokens]] passes a caller-supplied `t` through,
+    * and on an EMPTY array sequence(1, size(t)) = sequence(1, 0) is the
+    * descending [1, 0] — n = 0 rows and element_at(t, 0) fails at runtime.
+    *
+    * Broadcast contract: every model table is bounded by the TRAIN
+    * corpus's distinct n-grams and is broadcast onto the eval side's
+    * [[ngrams]] explode with the 1-row totals, so scoring is one
+    * eval-corpus scan with no shuffle of eval rows before the per-doc
+    * partial aggregation ([[perDocMeanLp]]). This is the reference-corpus
+    * LM shape (train ≪ crawl); a crawl-sized train side would swap the
+    * broadcasts for shuffle joins, same plan otherwise. */
+  private def ngramLm(train: DataFrame, order: Int): NgramLm = {
+    val slots = "element_at(t, i - n + 1) AS w1" +: (2 to order).map(j =>
+      s"CASE WHEN n >= $j THEN element_at(t, i - n + $j) END AS w$j")
+    val keys = col("n") +: (1 to order).map(j => col(s"w$j"))
+    NgramLm(graft.core.InternalCaches.persist(
+      withTokens(train).filter(size(col("t")) >= 1).select(explode(expr(
+        s"""flatten(transform(sequence(1, size(t)), i ->
+             transform(sequence(1, least($order, i)), n -> struct(
+               n AS n, ${slots.mkString(", ")}))))""")).as("g"))
+        .select(col("g.*"))
+        .groupBy(keys: _*)
+        .agg(count(lit(1)).cast(LongType).as("cnt"))))
+  }
+
+  /** Every per-doc LM scorer's finish: the count of scored positions and
+    * the mean of round(ln p, 9) over them, summed as decimals (order-free)
+    * with one double division, rounded to 6. */
+  private def perDocMeanLp(scored: DataFrame, p: Column, nName: String,
+                           avgName: String = "avg_lp"): DataFrame =
+    scored.withColumn("lp", round(log(p), 9))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).cast(LongType).as(nName),
+        round(sum(col("lp").cast(DecimalType(28, 12))).cast(DoubleType)
+          / count(lit(1)), 6).as(avgName))
+
   /** Held-out LM scoring — train the q100 bigram model on one corpus
     * half and score the OTHER half with add-1 smoothing: the
     * train/apply split q88's self-scored unigram filter lacks, and the
@@ -3335,39 +3411,16 @@ object Text {
     * quality gate (CCNet et al. — a KenLM slots in as a bigger model,
     * same plumbing). P(w2|w1) = (n12 + 1)/(n1 + V); per-doc mean of
     * round(ln P, 9) over bigram positions, decimal sums (order-free).
-    *
-    * Scale shape: the model tables are vocab-bounded and BROADCAST onto
-    * the eval side's bigram explode — scoring is one eval-corpus scan,
-    * no shuffle of eval rows at all; the unigram denominators cascade
-    * from the bigram counts (the q100 one-scan trick), so training is
-    * one train-corpus scan + bounded rollups. */
+    * The unigram denominators cascade from the bigram counts (the q100
+    * trick). Model build and plan: [[ngramLm]]. */
   def bigramScore(train: DataFrame, eval: DataFrame): DataFrame = {
-    val bigramExpr = expr(
-      "transform(sequence(2, size(t)), i -> " +
-        "struct(element_at(t, i - 1) AS w1, element_at(t, i) AS w2))")
-    val trainTok = graft.core.InternalCaches.persist(
-      withTokens(train).select(col("t")))
-    val n12 = graft.core.InternalCaches.persist(
-      trainTok.filter(size(col("t")) >= 2)
-        .select(explode(bigramExpr).as("bg"))
-        .select(col("bg.w1"), col("bg.w2"))
-        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).cast(LongType).as("n12")))
-    val n1 = n12.groupBy(col("w1")).agg(sum(col("n12")).cast(LongType).as("n1"))
-    val v = trainTok.select(explode(col("t")).as("w"))
-      .agg(countDistinct(col("w")).cast(LongType).as("v"))
-    withTokens(eval).filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(bigramExpr).as("bg"))
-      .select(col("doc_id"), col("bg.w1"), col("bg.w2"))
-      .join(broadcast(n12), Seq("w1", "w2"), "left")
-      .join(broadcast(n1), Seq("w1"), "left")
-      .crossJoin(broadcast(v))
-      .withColumn("lp", round(log(
-        (coalesce(col("n12"), lit(0L)) + lit(1.0)) /
-          (coalesce(col("n1"), lit(0L)) + col("v")).cast(DoubleType)), 9))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast(LongType).as("n_bigrams"),
-        round(sum(col("lp").cast(DecimalType(28, 12))).cast(DoubleType)
-          / count(lit(1)), 6).as("avg_lp"))
+    val lm = ngramLm(train, 2)
+    val scored = ngrams(withTokens(eval), 2, "doc_id")
+      .join(broadcast(lm.tier(2, "n12")), Seq("w1", "w2"), "left")
+      .join(broadcast(lm.histories), Seq("w1"), "left")
+      .crossJoin(broadcast(lm.totals))
+    perDocMeanLp(scored, (coalesce(col("n12"), lit(0L)) + lit(1.0)) /
+      (coalesce(col("c1"), lit(0L)) + col("v")).cast(DoubleType), "n_bigrams")
   }
 
   def qBigramScore(s: SparkSession, dir: String): DataFrame = {
@@ -3388,50 +3441,24 @@ object Text {
     * eval words score finitely (the pinned-floor contract of q122);
     * unseen w1 backs off to Pc alone. "Francisco" scores low despite
     * high frequency because it follows only "San" — the signal raw
-    * counts miss.
-    *
-    * Scale shape: the q120/q122 contract verbatim — every model table
-    * (bigrams, left/right continuation counts) is train-vocab-bounded
-    * and BROADCAST onto the eval bigram explode with the 1-row totals
-    * frame; eval rows never shuffle before the per-doc partial-agg sum.
-    * Per-bigram P is one pinned double chain, ln rounds 9, per-doc
-    * decimal mean rounds 6. */
+    * counts miss. Per-bigram P is one pinned double chain; T is the
+    * kernel's t2 and V its v ([[ngramLm]]). */
   def kneserNeyScore(train: DataFrame, eval: DataFrame): DataFrame = {
-    val bigramExpr = expr(
-      "transform(sequence(2, size(t)), i -> " +
-        "struct(element_at(t, i - 1) AS w1, element_at(t, i) AS w2))")
-    val trainTok = graft.core.InternalCaches.persist(
-      withTokens(train).select(col("t")))
-    val n12 = graft.core.InternalCaches.persist(
-      trainTok.filter(size(col("t")) >= 2)
-        .select(explode(bigramExpr).as("bg"))
-        .select(col("bg.w1"), col("bg.w2"))
-        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).cast(LongType).as("c12")))
-    val n1 = n12.groupBy(col("w1"))
-      .agg(sum(col("c12")).cast(LongType).as("c1"),
-        count(lit(1)).cast(LongType).as("n1f"))
+    val lm = ngramLm(train, 2)
+    val n12 = lm.tier(2, "c12")
     val nb = n12.groupBy(col("w2")).agg(count(lit(1)).cast(LongType).as("n1b"))
-    val tot = n12.agg(count(lit(1)).cast(LongType).as("t_types"))
-      .crossJoin(trainTok.select(explode(col("t")).as("w"))
-        .agg(countDistinct(col("w")).cast(LongType).as("v")))
-    withTokens(eval).filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(bigramExpr).as("bg"))
-      .select(col("doc_id"), col("bg.w1"), col("bg.w2"))
+    val scored = ngrams(withTokens(eval), 2, "doc_id")
       .join(broadcast(n12), Seq("w1", "w2"), "left")
-      .join(broadcast(n1), Seq("w1"), "left")
+      .join(broadcast(lm.histories), Seq("w1"), "left")
       .join(broadcast(nb), Seq("w2"), "left")
-      .crossJoin(broadcast(tot))
+      .crossJoin(broadcast(lm.totals))
       .withColumn("pc",
-        expr("(coalesce(n1b, 0) + 1.0) / CAST(t_types + v AS DOUBLE)"))
+        expr("(coalesce(n1b, 0) + 1.0) / CAST(t2 + v AS DOUBLE)"))
       .withColumn("p", expr(
         "CASE WHEN c1 IS NULL THEN pc ELSE " +
           "greatest(CAST(coalesce(c12, 0) AS DOUBLE) - 0.75, 0.0) / CAST(c1 AS DOUBLE) " +
           "+ 0.75 * CAST(n1f AS DOUBLE) / CAST(c1 AS DOUBLE) * pc END"))
-      .withColumn("lp", round(log(col("p")), 9))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast(LongType).as("n_bigrams"),
-        round(sum(col("lp").cast(DecimalType(28, 12))).cast(DoubleType)
-          / count(lit(1)), 6).as("avg_lp"))
+    perDocMeanLp(scored, col("p"), "n_bigrams")
   }
 
   def qKneserNey(s: SparkSession, dir: String): DataFrame = {
@@ -3452,50 +3479,32 @@ object Text {
     *   P_add1(w2) = (c(w2)+1)/(N+V)      (the q120 add-one unigram floor)
     *   unseen w1 → P_add1(w2)
     *
-    * Same shape and scale contract as [[kneserNeyScore]]: every model
-    * table (bigrams, histories, unigrams, totals) is train-corpus-bounded
-    * and broadcast; eval rows never shuffle. Both engines evaluate the
-    * identical double chain (λ and 1−λ spelled as the two explicit
-    * ratios over c1+n1f) with the ln-round-9 / decimal-sum / round-6
-    * finish. */
+    * Both engines evaluate the identical double chain (λ and 1−λ spelled
+    * as the two explicit ratios over c1+n1f). Model build and plan:
+    * [[ngramLm]]. */
   def wittenBellScore(train: DataFrame, eval: DataFrame): DataFrame = {
-    val bigramExpr = expr(
-      "transform(sequence(2, size(t)), i -> " +
-        "struct(element_at(t, i - 1) AS w1, element_at(t, i) AS w2))")
-    val trainTok = graft.core.InternalCaches.persist(
-      withTokens(train).select(col("t")))
-    val n12 = graft.core.InternalCaches.persist(
-      trainTok.filter(size(col("t")) >= 2)
-        .select(explode(bigramExpr).as("bg"))
-        .select(col("bg.w1"), col("bg.w2"))
-        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).cast(LongType).as("c12")))
-    val n1 = n12.groupBy(col("w1"))
-      .agg(sum(col("c12")).cast(LongType).as("c1"),
-        count(lit(1)).cast(LongType).as("n1f"))
-    val uniT = graft.core.InternalCaches.persist(
-      trainTok.select(explode(col("t")).as("w2"))
-        .groupBy(col("w2")).agg(count(lit(1)).cast(LongType).as("cu")))
-    val tot = uniT.agg(sum(col("cu")).cast(LongType).as("nn"),
-      count(lit(1)).cast(LongType).as("v"))
-    withTokens(eval).filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(bigramExpr).as("bg"))
-      .select(col("doc_id"), col("bg.w1"), col("bg.w2"))
-      .join(broadcast(n12), Seq("w1", "w2"), "left")
-      .join(broadcast(n1), Seq("w1"), "left")
-      .join(broadcast(uniT), Seq("w2"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("pu",
-        expr("(coalesce(cu, 0) + 1.0) / CAST(nn + v AS DOUBLE)"))
+    val scored = addOneMixture(train, eval)
       .withColumn("p", expr(
         "CASE WHEN c1 IS NULL THEN pu ELSE " +
           "(CAST(c1 AS DOUBLE) / CAST(c1 + n1f AS DOUBLE)) " +
           "* (CAST(coalesce(c12, 0) AS DOUBLE) / CAST(c1 AS DOUBLE)) " +
           "+ (CAST(n1f AS DOUBLE) / CAST(c1 + n1f AS DOUBLE)) * pu END"))
-      .withColumn("lp", round(log(col("p")), 9))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast(LongType).as("n_bigrams"),
-        round(sum(col("lp").cast(DecimalType(28, 12))).cast(DoubleType)
-          / count(lit(1)), 6).as("avg_lp"))
+    perDocMeanLp(scored, col("p"), "n_bigrams")
+  }
+
+  /** The model side Witten–Bell and Jelinek–Mercer share: the eval
+    * bigrams joined to their count c12, the history counts c1/n1f, the
+    * unigram count cu of w2 and the totals, plus the add-1 unigram floor
+    * pu = (cu + 1)/(N + V). */
+  private def addOneMixture(train: DataFrame, eval: DataFrame): DataFrame = {
+    val lm = ngramLm(train, 2)
+    ngrams(withTokens(eval), 2, "doc_id")
+      .join(broadcast(lm.tier(2, "c12")), Seq("w1", "w2"), "left")
+      .join(broadcast(lm.histories), Seq("w1"), "left")
+      .join(broadcast(lm.tier(1, "cu").withColumnRenamed("w1", "w2")), Seq("w2"), "left")
+      .crossJoin(broadcast(lm.totals))
+      .withColumn("pu",
+        expr("(coalesce(cu, 0) + 1.0) / CAST(nn + v AS DOUBLE)"))
   }
 
   def qWittenBell(s: SparkSession, dir: String): DataFrame = {
@@ -3518,48 +3527,25 @@ object Text {
     * weight, tuned not derived. Unseen histories fall through to the
     * add-1 unigram exactly as q162 does.
     *
-    * Scale shape: identical to q162 — all model tables train-vocab-
-    * bounded and broadcast onto the eval bigram explode; zero eval-row
-    * shuffles before the per-doc rollup. */
+    * Both weights must lie in (0, 1) and sum to 1 within 1e-9: λ = 1
+    * gives p = 0 for a seen history with an unseen continuation, and
+    * ln 0 is NULL in Spark, which the sum would skip while the count
+    * still counts the position. Model build and plan: [[ngramLm]]. */
   def jelinekMercerScore(train: DataFrame, eval: DataFrame,
                          lambda: Double = 0.7,
                          oneMinusLambda: Double = 0.3): DataFrame = {
-    val bigramExpr = expr(
-      "transform(sequence(2, size(t)), i -> " +
-        "struct(element_at(t, i - 1) AS w1, element_at(t, i) AS w2))")
-    val trainTok = graft.core.InternalCaches.persist(
-      withTokens(train).select(col("t")))
-    val n12 = graft.core.InternalCaches.persist(
-      trainTok.filter(size(col("t")) >= 2)
-        .select(explode(bigramExpr).as("bg"))
-        .select(col("bg.w1"), col("bg.w2"))
-        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).cast(LongType).as("c12")))
-    val n1 = n12.groupBy(col("w1"))
-      .agg(sum(col("c12")).cast(LongType).as("c1"))
-    val uniT = graft.core.InternalCaches.persist(
-      trainTok.select(explode(col("t")).as("w2"))
-        .groupBy(col("w2")).agg(count(lit(1)).cast(LongType).as("cu")))
-    val tot = uniT.agg(sum(col("cu")).cast(LongType).as("nn"),
-      count(lit(1)).cast(LongType).as("v"))
-    withTokens(eval).filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(bigramExpr).as("bg"))
-      .select(col("doc_id"), col("bg.w1"), col("bg.w2"))
-      .join(broadcast(n12), Seq("w1", "w2"), "left")
-      .join(broadcast(n1), Seq("w1"), "left")
-      .join(broadcast(uniT), Seq("w2"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("pu",
-        expr("(coalesce(cu, 0) + 1.0) / CAST(nn + v AS DOUBLE)"))
+    require(lambda > 0.0 && lambda < 1.0, s"lambda must be in (0, 1), got $lambda")
+    require(oneMinusLambda > 0.0 && oneMinusLambda < 1.0,
+      s"oneMinusLambda must be in (0, 1), got $oneMinusLambda")
+    require(math.abs(lambda + oneMinusLambda - 1.0) <= 1e-9,
+      s"lambda + oneMinusLambda must be 1, got ${lambda + oneMinusLambda}")
+    val scored = addOneMixture(train, eval)
       .withColumn("p", expr(
         "CASE WHEN c1 IS NULL THEN pu ELSE " +
           s"CAST($lambda AS DOUBLE) " +
           "* (CAST(coalesce(c12, 0) AS DOUBLE) / CAST(c1 AS DOUBLE)) " +
           s"+ CAST($oneMinusLambda AS DOUBLE) * pu END"))
-      .withColumn("lp", round(log(col("p")), 9))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast(LongType).as("n_bigrams"),
-        round(sum(col("lp").cast(DecimalType(28, 12))).cast(DoubleType)
-          / count(lit(1)), 6).as("avg_lp"))
+    perDocMeanLp(scored, col("p"), "n_bigrams")
   }
 
   def qJelinekMercer(s: SparkSession, dir: String): DataFrame = {
@@ -3613,9 +3599,7 @@ object Text {
     * round-6 are unchanged (oracle hash-matched). 2 scans → 1,
     * steady 2.6 → ~1.0 s at sf0.1. */
   def qOovRate(s: SparkSession, dir: String): DataFrame = {
-    val sh = withTokens(Tables.documents(s, dir)).withColumn("t", expr(
-      "transform(sequence(1, greatest(size(t) - 2, 1)), " +
-        "i -> concat_ws(' ', slice(t, i, 3)))"))
+    val sh = shingleStream(Tables.documents(s, dir))
     // parity (not a boolean) so negative-odd doc_ids (% 2 = -1) stay
     // excluded from BOTH halves, exactly as the pre-fused two-filter form
     // behaved (round 20, advisor) — same single scan, same aggregation
@@ -3673,9 +3657,7 @@ object Text {
     * flattening is visible — at word level every mass is huge and the
     * distribution nearly proportional). */
   def qNegSampling(s: SparkSession, dir: String): DataFrame =
-    negSamplingTable(withTokens(Tables.documents(s, dir)).withColumn("t", expr(
-      "transform(sequence(1, greatest(size(t) - 2, 1)), " +
-        "i -> concat_ws(' ', slice(t, i, 3)))")))
+    negSamplingTable(shingleStream(Tables.documents(s, dir)))
 
   /** Per-source Good-Turing frequency-of-frequencies report (Good 1953;
     * Gale & Sampson 1995) — the count-of-counts table N_r behind every
@@ -3725,9 +3707,7 @@ object Text {
     * vocabulary is singleton-rich, which is the regime Good-Turing
     * exists for. */
   def qGoodTuring(s: SparkSession, dir: String): DataFrame =
-    goodTuring(withTokens(Tables.documents(s, dir)).withColumn("t", expr(
-      "transform(sequence(1, greatest(size(t) - 2, 1)), " +
-        "i -> concat_ws(' ', slice(t, i, 3)))")))
+    goodTuring(shingleStream(Tables.documents(s, dir)))
 
   /** Stupid-backoff trigram scoring (Brants et al., EMNLP 2007 — "Large
     * Language Models in Machine Translation") — the round-12 upgrade of
@@ -3748,82 +3728,32 @@ object Text {
     * the mean of round(ln S, 9) over trigram positions, decimal-summed
     * (order-free) and rounded to 6, the q120 recipe.
     *
-    * Scale shape (q120's contract, one table bigger): the model tables are
-    * bounded by the TRAIN corpus's distinct n-grams and broadcast onto the
-    * eval side's trigram explode — scoring is one eval-corpus scan with
-    * zero eval-row shuffles; training is one cached train-corpus scan +
-    * three bounded rollups. The broadcast contract is the
-    * reference-corpus-LM shape (train ≪ crawl); a crawl-sized train side
-    * would swap the broadcasts for shuffle joins, same plan otherwise.
     * Every branch divides a BIGINT by a BIGINT in one double division with
     * the multiplication order pinned, so the oracle reproduces the IEEE
-    * chain bit-for-bit. */
+    * chain bit-for-bit. Model build and plan: [[ngramLm]]. */
   def trigramScore(train: DataFrame, eval: DataFrame, alpha: Double = 0.4): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
-    val trigramExpr = expr(
-      "transform(sequence(3, size(t)), i -> " +
-        "struct(element_at(t, i - 2) AS w1, element_at(t, i - 1) AS w2, " +
-        "element_at(t, i) AS w3))")
-    val trainTok = graft.core.InternalCaches.persist(
-      withTokens(train).select(col("t")))
-    // FUSED n-gram rollup (round 20 — the q127 round-19 recipe at trigram
-    // order, guide §2.4): the three per-tier count tables were three
-    // separate explode+groupBy shuffles over the cached token frame, plus
-    // a FOURTH corpus pass for the count/countDistinct totals (whose
-    // mixed aggregate costs an Expand). One explode now emits, per token
-    // position i, the n-gram ENDING at i for every n ≤ min(3, i),
-    // tier-tagged with NULL-padded key slots; ONE shuffle counts all
-    // tiers, each tier table is a filter of the persisted combined frame,
-    // and the totals derive from the unigram tier (sum ≡ token count,
-    // count ≡ countDistinct). Per-tier keys and counts are index-identical
-    // (wj = element_at(t, i−n+j) ≡ the old i−(n−j)), so every model value
-    // is bit-identical (OptLab fingerprint + oracle hash-matched).
-    // 4 aggregation jobs → 1; Expand-free. size ≥ 1 guard: see q127.
-    val gramAll = graft.core.InternalCaches.persist(
-      trainTok.filter(size(col("t")) >= 1).select(explode(expr(
-        """flatten(transform(sequence(1, size(t)), i ->
-             transform(sequence(1, least(3, i)), n -> struct(
-               n AS n,
-               element_at(t, i - n + 1) AS w1,
-               CASE WHEN n >= 2 THEN element_at(t, i - n + 2) END AS w2,
-               CASE WHEN n >= 3 THEN element_at(t, i - n + 3) END AS w3))))"""))
-        .as("g"))
-        .select(col("g.n").as("n"), col("g.w1").as("w1"),
-          col("g.w2").as("w2"), col("g.w3").as("w3"))
-        .groupBy(col("n"), col("w1"), col("w2"), col("w3"))
-        .agg(count(lit(1)).cast(LongType).as("cnt")))
-    val n123 = gramAll.filter(col("n") === 3)
-      .select(col("w1"), col("w2"), col("w3"), col("cnt").as("n123"))
-    val n2 = gramAll.filter(col("n") === 2)
-      .select(col("w1"), col("w2"), col("cnt").as("n2"))
-    val n1 = gramAll.filter(col("n") === 1)
-      .select(col("w1").as("w"), col("cnt").as("n1"))
-    val tot = n1.agg(sum(col("n1")).cast(LongType).as("nn"),
-      count(lit(1)).cast(LongType).as("v"))
-    withTokens(eval).filter(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(trigramExpr).as("g"))
-      .select(col("doc_id"), col("g.w1"), col("g.w2"), col("g.w3"))
-      .join(broadcast(n123), Seq("w1", "w2", "w3"), "left")
+    val lm = ngramLm(train, 3)
+    val n2 = lm.tier(2, "n2")
+    val n1 = lm.tier(1, "n1")
+    val scored = ngrams(withTokens(eval), 3, "doc_id")
+      .join(broadcast(lm.tier(3, "n123")), Seq("w1", "w2", "w3"), "left")
       .join(broadcast(n2.withColumnRenamed("n2", "n12")), Seq("w1", "w2"), "left")
       .join(broadcast(n2.select(col("w1").as("w2"), col("w2").as("w3"),
         col("n2").as("n23"))), Seq("w2", "w3"), "left")
-      .join(broadcast(n1.select(col("w").as("w2"), col("n1").as("n1_2"))),
+      .join(broadcast(n1.select(col("w1").as("w2"), col("n1").as("n1_2"))),
         Seq("w2"), "left")
-      .join(broadcast(n1.select(col("w").as("w3"), col("n1").as("n1_3"))),
+      .join(broadcast(n1.select(col("w1").as("w3"), col("n1").as("n1_3"))),
         Seq("w3"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("lp", round(log(
-        when(col("n123").isNotNull,
-          col("n123").cast(DoubleType) / col("n12"))
-        .when(col("n23").isNotNull,
-          (lit(alpha) * col("n23")) / col("n1_2"))
-        .otherwise(
-          ((lit(alpha) * lit(alpha)) * (coalesce(col("n1_3"), lit(0L)) + lit(1.0)))
-            / (col("nn") + col("v")).cast(DoubleType))), 9))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast(LongType).as("n_trigrams"),
-        round(sum(col("lp").cast(DecimalType(28, 12))).cast(DoubleType)
-          / count(lit(1)), 6).as("avg_lp"))
+      .crossJoin(broadcast(lm.totals))
+    perDocMeanLp(scored,
+      when(col("n123").isNotNull,
+        col("n123").cast(DoubleType) / col("n12"))
+      .when(col("n23").isNotNull,
+        (lit(alpha) * col("n23")) / col("n1_2"))
+      .otherwise(
+        ((lit(alpha) * lit(alpha)) * (coalesce(col("n1_3"), lit(0L)) + lit(1.0)))
+          / (col("nn") + col("v")).cast(DoubleType)), "n_trigrams")
   }
 
   def qTrigramScore(s: SparkSession, dir: String): DataFrame = {
@@ -3847,69 +3777,21 @@ object Text {
     * with α = 0.4. Same output shape as q120/q122: per-doc mean of
     * round(ln S, 9) over 5-gram positions, decimal-summed, rounded to 6.
     *
-    * Scale shape (q122's contract, two tables bigger): ALL model tables
-    * are train-corpus-bounded and broadcast onto the eval side's 5-gram
-    * explode — scoring is one eval-corpus scan with zero eval-row
-    * shuffles (plan-asserted: 5 eval-side BroadcastHashJoins + 4
-    * model-side prefix joins inside the broadcast subtrees + the 1-row
-    * totals BNLJ, no SortMergeJoin); training is one cached train-corpus
-    * scan + four bounded n-gram rollups, each model row PREFIX-FUSED with
-    * its backoff denominator (round 17 — the denominator gram is always
-    * the numerator's prefix, so one train-bounded join per tier replaces
-    * a per-eval-row broadcast probe; 9 → 5 probes per eval row, values
-    * bit-identical). Each backoff tier divides a BIGINT by a
-    * BIGINT after one left-to-right α-product — the multiplication order
+    * Each model row carries its backoff denominator (the prefix fusion
+    * below). Each backoff tier divides a BIGINT by a BIGINT after one left-to-right α-product — the multiplication order
     * is pinned (α, then (α·α), then ((α·α)·α), then (((α·α)·α)·α)) so the
     * oracle reproduces the IEEE chain bit-for-bit. A seen n-gram
     * guarantees its context count is non-null (the context is a prefix of
-    * the seen n-gram), so no branch divides by null. */
+    * the seen n-gram), so no branch divides by null. Model build and
+    * plan: [[ngramLm]]. */
   def fivegramScore(train: DataFrame, eval: DataFrame, alpha: Double = 0.4): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
-    def gramExpr(n: Int): org.apache.spark.sql.Column = expr(
-      s"transform(sequence($n, size(t)), i -> struct(" +
-        (1 to n).map(j => s"element_at(t, i - ${n - j}) AS w$j").mkString(", ") + "))")
-    val trainTok = graft.core.InternalCaches.persist(
-      withTokens(train).select(col("t")))
-    // FUSED n-gram rollup (round 19, guide §2.4): the five per-tier
-    // count tables used to be five separate explode+groupBy jobs over the
-    // cached token frame — five aggregation shuffles per model build. One
-    // explode now emits, per token position i, the n-gram ENDING at i for
-    // every n ≤ min(5, i) tagged with its tier (unused key slots NULL),
-    // and ONE shuffle counts all tiers at once; each tier is a filter of
-    // the persisted combined frame. Per-tier keys and counts are exactly
-    // the old ones (wj = element_at(t, i−n+j) ≡ the old i−(n−j) indexing;
-    // NULL slots group as constants), so every model value is bit-identical
-    // (oracle hash-matched). 5 aggregation shuffles → 1; the grand total
-    // derives from the unigram tier instead of a sixth corpus pass.
-    // size >= 1 guard (round 20, advisor): withTokens is documented
-    // idempotent over a caller-supplied t column, and on an EMPTY token
-    // array sequence(1, size(t)) = sequence(1, 0) yields the DESCENDING
-    // [1, 0] — n = 0 struct rows and element_at(t, 0) errors at runtime.
-    // Unreachable via the gate path (split never returns an empty array);
-    // restores the old per-tier size(t) >= n robustness for free.
-    val gramAll = graft.core.InternalCaches.persist(
-      trainTok.filter(size(col("t")) >= 1).select(explode(expr(
-        """flatten(transform(sequence(1, size(t)), i ->
-             transform(sequence(1, least(5, i)), n -> struct(
-               n AS n,
-               element_at(t, i - n + 1) AS w1,
-               CASE WHEN n >= 2 THEN element_at(t, i - n + 2) END AS w2,
-               CASE WHEN n >= 3 THEN element_at(t, i - n + 3) END AS w3,
-               CASE WHEN n >= 4 THEN element_at(t, i - n + 4) END AS w4,
-               CASE WHEN n >= 5 THEN element_at(t, i - n + 5) END AS w5))))"""))
-          .as("g"))
-        .select(col("g.n").as("n"), col("g.w1").as("w1"), col("g.w2").as("w2"),
-          col("g.w3").as("w3"), col("g.w4").as("w4"), col("g.w5").as("w5"))
-        .groupBy(col("n"), col("w1"), col("w2"), col("w3"), col("w4"), col("w5"))
-        .agg(count(lit(1)).cast(LongType).as("cnt")))
-    def tier(n: Int, cntName: String): DataFrame =
-      gramAll.filter(col("n") === n)
-        .select((1 to n).map(j => col(s"w$j")) :+ col("cnt").as(cntName): _*)
-    val n5 = tier(5, "n5")
-    val n4 = tier(4, "n4")
-    val n3 = tier(3, "n3")
-    val n2 = tier(2, "n2")
-    val n1 = tier(1, "n1").withColumnRenamed("w1", "w")
+    val lm = ngramLm(train, 5)
+    val n5 = lm.tier(5, "n5")
+    val n4 = lm.tier(4, "n4")
+    val n3 = lm.tier(3, "n3")
+    val n2 = lm.tier(2, "n2")
+    val n1 = lm.tier(1, "n1")
     // PREFIX-FUSED model tables (round 17 — halves the eval-side join
     // count 9 → 5): every backoff denominator is the PREFIX context of
     // its tier's numerator gram (n5/n4(w1..w4), α·n4/n3(w2w3w4),
@@ -3926,17 +3808,12 @@ object Text {
       Seq("w1", "w2", "w3"))
     val n3m = n3.join(broadcast(n2.withColumnRenamed("n2", "n2_ctx")),
       Seq("w1", "w2"))
-    val n2m = n2.join(broadcast(n1.select(col("w").as("w1"),
-      col("n1").as("n1_ctx"))), Seq("w1"))
-    val tot = n1.agg(sum(col("n1")).cast(LongType).as("nn"),
-      count(lit(1)).cast(LongType).as("v"))
+    val n2m = n2.join(broadcast(n1.withColumnRenamed("n1", "n1_ctx")), Seq("w1"))
     val a1 = lit(alpha)
     val a2 = lit(alpha) * lit(alpha)
     val a3 = (lit(alpha) * lit(alpha)) * lit(alpha)
     val a4 = ((lit(alpha) * lit(alpha)) * lit(alpha)) * lit(alpha)
-    withTokens(eval).filter(size(col("t")) >= 5)
-      .select(col("doc_id"), explode(gramExpr(5)).as("g"))
-      .select(col("doc_id") +: (1 to 5).map(j => col(s"g.w$j")): _*)
+    val scored = ngrams(withTokens(eval), 5, "doc_id")
       .join(broadcast(n5m), Seq("w1", "w2", "w3", "w4", "w5"), "left")
       .join(broadcast(n4m.select(col("w1").as("w2"), col("w2").as("w3"),
         col("w3").as("w4"), col("w4").as("w5"), col("n4").as("n4_hit"),
@@ -3948,25 +3825,21 @@ object Text {
       .join(broadcast(n2m.select(col("w1").as("w4"), col("w2").as("w5"),
         col("n2").as("n2_hit"), col("n1_ctx").as("n1_4"))),
         Seq("w4", "w5"), "left")
-      .join(broadcast(n1.select(col("w").as("w5"), col("n1").as("n1_5"))),
+      .join(broadcast(n1.select(col("w1").as("w5"), col("n1").as("n1_5"))),
         Seq("w5"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("lp", round(log(
-        when(col("n5").isNotNull,
-          col("n5").cast(DoubleType) / col("n4_ctx"))
-        .when(col("n4_hit").isNotNull,
-          (a1 * col("n4_hit")) / col("n3_ctx"))
-        .when(col("n3_hit").isNotNull,
-          (a2 * col("n3_hit")) / col("n2_ctx"))
-        .when(col("n2_hit").isNotNull,
-          (a3 * col("n2_hit")) / col("n1_4"))
-        .otherwise(
-          (a4 * (coalesce(col("n1_5"), lit(0L)) + lit(1.0)))
-            / (col("nn") + col("v")).cast(DoubleType))), 9))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast(LongType).as("n_fivegrams"),
-        round(sum(col("lp").cast(DecimalType(28, 12))).cast(DoubleType)
-          / count(lit(1)), 6).as("avg_lp"))
+      .crossJoin(broadcast(lm.totals))
+    perDocMeanLp(scored,
+      when(col("n5").isNotNull,
+        col("n5").cast(DoubleType) / col("n4_ctx"))
+      .when(col("n4_hit").isNotNull,
+        (a1 * col("n4_hit")) / col("n3_ctx"))
+      .when(col("n3_hit").isNotNull,
+        (a2 * col("n3_hit")) / col("n2_ctx"))
+      .when(col("n2_hit").isNotNull,
+        (a3 * col("n2_hit")) / col("n1_4"))
+      .otherwise(
+        (a4 * (coalesce(col("n1_5"), lit(0L)) + lit(1.0)))
+          / (col("nn") + col("v")).cast(DoubleType)), "n_fivegrams")
   }
 
   def qFivegramScore(s: SparkSession, dir: String): DataFrame = {
@@ -4224,10 +4097,17 @@ object Text {
     val cr = bucketCounts(rFeats, "cr")
     val tot = ct.agg(sum(col("ct")).cast(LongType).as("nt"))
       .crossJoin(cr.agg(sum(col("cr")).cast(LongType).as("nr")))
-    eFeats
+    dsirLogWeights(eFeats
       .join(broadcast(ct), Seq("b"), "left")
       .join(broadcast(cr), Seq("b"), "left")
-      .crossJoin(broadcast(tot))
+      .crossJoin(broadcast(tot)), buckets)
+  }
+
+  /** DSIR's scoring tail over (doc_id, b) rows already joined to the
+    * target/raw bucket counts ct/cr and the totals nt/nr: the per-occurrence
+    * log ratio, rounded to 9, summed per doc as decimals, rounded to 6. */
+  private def dsirLogWeights(scored: DataFrame, buckets: Int): DataFrame =
+    scored
       .withColumn("lp", round(
         log((coalesce(col("ct"), lit(0L)) + lit(1.0)) / (col("nt") + lit(buckets.toLong))) -
         log((coalesce(col("cr"), lit(0L)) + lit(1.0)) / (col("nr") + lit(buckets.toLong))), 9))
@@ -4235,7 +4115,6 @@ object Text {
       .agg(count(lit(1)).cast(LongType).as("n_feat"),
         round(sum(col("lp").cast(DecimalType(28, 12))).cast(DoubleType), 6)
           .as("dsir_lw"))
-  }
 
   /** q130 — DSIR with the 'en' slice as the target domain and the whole
     * corpus as the raw distribution, scoring every document (the paper's
@@ -4268,16 +4147,9 @@ object Text {
         count(lit(1)).cast(LongType).as("cr")))
     val tot = bc.agg(sum(col("ct")).cast(LongType).as("nt"),
       sum(col("cr")).cast(LongType).as("nr"))
-    feats.select(col("doc_id"), col("b"))
+    dsirLogWeights(feats.select(col("doc_id"), col("b"))
       .join(broadcast(bc), Seq("b"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("lp", round(
-        log((coalesce(col("ct"), lit(0L)) + lit(1.0)) / (col("nt") + lit(buckets.toLong))) -
-        log((coalesce(col("cr"), lit(0L)) + lit(1.0)) / (col("nr") + lit(buckets.toLong))), 9))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast(LongType).as("n_feat"),
-        round(sum(col("lp").cast(DecimalType(28, 12))).cast(DoubleType), 6)
-          .as("dsir_lw"))
+      .crossJoin(broadcast(tot)), buckets)
   }
 
   /** Feature-hashing bucket health report — the collision audit published
@@ -4951,52 +4823,33 @@ object Text {
     *   excess_k = max(0, L_uni(k) − L_bi(k))  (mean NLL per position)
     *   w'_k ∝ w0_k · exp(η·excess_k),  w0_k = eval-token share
     *
-    * Scale shape: model tables are train-vocab-bounded and BROADCAST
-    * onto the eval explodes — eval rows never shuffle; the per-source
-    * rollup ships partial decimal sums only; the update runs on the
-    * K-row source table. Floats pinned: per-position ln's round to 9
-    * and sum as decimals; each mean is ONE double division; exp rounds
-    * to 9; the normalizer sums K rounded terms as decimals. */
+    * Model build and plan: [[ngramLm]]; the per-source rollup ships
+    * partial decimal sums only and the update runs on the K-row source
+    * table. Floats pinned: per-position ln's round to 9 and sum as
+    * decimals; each mean is ONE double division; exp rounds to 9; the
+    * normalizer sums K rounded terms as decimals. */
   def doremiWeights(train: DataFrame, eval: DataFrame,
                     eta: Double = 1.0): DataFrame = {
     val dec = DecimalType(28, 12)
-    val bigramExpr = expr(
-      "transform(sequence(2, size(t)), i -> " +
-        "struct(element_at(t, i - 1) AS w1, element_at(t, i) AS w2))")
-    val trainTok = graft.core.InternalCaches.persist(
-      withTokens(train).select(col("t")))
-    val cw = graft.core.InternalCaches.persist(
-      trainTok.select(explode(col("t")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("c_w")))
-    val tv = cw.agg(sum(col("c_w")).cast(LongType).as("t_all"),
-      count(lit(1)).cast(LongType).as("v"))
-    val n12 = graft.core.InternalCaches.persist(
-      trainTok.filter(size(col("t")) >= 2)
-        .select(explode(bigramExpr).as("bg"))
-        .select(col("bg.w1"), col("bg.w2"))
-        .groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).cast(LongType).as("n12")))
-    val n1 = n12.groupBy(col("w1")).agg(sum(col("n12")).cast(LongType).as("n1"))
+    val lm = ngramLm(train, 2)
     val evalTok = graft.core.InternalCaches.persist(
       withTokens(eval).select(col("source"), col("t")))
-    val uni = evalTok.select(col("source"), explode(col("t")).as("w"))
-      .join(broadcast(cw), Seq("w"), "left")
-      .crossJoin(broadcast(tv))
+    val uni = evalTok.select(col("source"), explode(col("t")).as("w1"))
+      .join(broadcast(lm.tier(1, "c_w")), Seq("w1"), "left")
+      .crossJoin(broadcast(lm.totals))
       .withColumn("lp", round(log(
         (coalesce(col("c_w"), lit(0L)) + lit(1.0)) /
-          (col("t_all") + col("v")).cast(DoubleType)), 9))
+          (col("nn") + col("v")).cast(DoubleType)), 9))
       .groupBy(col("source"))
       .agg(count(lit(1)).cast(LongType).as("n_tok"),
         sum(col("lp").cast(dec)).as("sum_uni"))
-    val bi = evalTok.filter(size(col("t")) >= 2)
-      .select(col("source"), explode(bigramExpr).as("bg"))
-      .select(col("source"), col("bg.w1"), col("bg.w2"))
-      .join(broadcast(n12), Seq("w1", "w2"), "left")
-      .join(broadcast(n1), Seq("w1"), "left")
-      .crossJoin(broadcast(tv))
+    val bi = ngrams(evalTok, 2, "source")
+      .join(broadcast(lm.tier(2, "n12")), Seq("w1", "w2"), "left")
+      .join(broadcast(lm.histories), Seq("w1"), "left")
+      .crossJoin(broadcast(lm.totals))
       .withColumn("lp", round(log(
         (coalesce(col("n12"), lit(0L)) + lit(1.0)) /
-          (coalesce(col("n1"), lit(0L)) + col("v")).cast(DoubleType)), 9))
+          (coalesce(col("c1"), lit(0L)) + col("v")).cast(DoubleType)), 9))
       .groupBy(col("source"))
       .agg(count(lit(1)).cast(LongType).as("n_big"),
         sum(col("lp").cast(dec)).as("sum_bi"))

@@ -535,18 +535,19 @@ class PlanContractSpec extends SparkSpec {
     // bounded) broadcast onto the eval explode; the only non-hash join is
     // the 1-row totals crossJoin. A SortMergeJoin here means the eval
     // corpus started shuffling by n-gram — the shape that dies at 100 TB.
+    // q162 and q179, the other two scorers on the shared n-gram kernel,
+    // ride the same loop.
     try {
       for (q <- Seq("q120_bigram_score", "q122_trigram_score", "q127_fivegram_score",
-                    "q156_kneser_ney")) {
+                    "q156_kneser_ney", "q162_witten_bell", "q179_jelinek_mercer")) {
         val p = plan(q)
         assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
           s"$q shuffles eval rows:\n$p")
         assert(!p.contains("CartesianProduct"), s"$q planned a cartesian:\n$p")
-        // q156 carries TWO 1-row totals frames (bigram-type count and
-        // vocab count come from different aggregates); the others one
-        val wantBnlj = if (q.startsWith("q156")) 2 else 1
-        assert("BroadcastNestedLoopJoin".r.findAllIn(p).length == wantBnlj,
-          s"$q expected exactly $wantBnlj 1-row totals broadcast crossJoins:\n$p")
+        // every scorer reads ONE 1-row totals frame off the shared n-gram
+        // kernel (q156's bigram-type and vocab counts included)
+        assert("BroadcastNestedLoopJoin".r.findAllIn(p).length == 1,
+          s"$q expected exactly one 1-row totals broadcast crossJoin:\n$p")
         val bhj = "BroadcastHashJoin".r.findAllIn(p).length
         // q127 (round 17, prefix-fused): FIVE eval-side joins (5/4/3/2-gram
         // hit tables each carrying their prefix-context count, + unigram)
@@ -555,8 +556,9 @@ class PlanContractSpec extends SparkSpec {
         // same count as the unfused r16 shape, but eval rows now pass 5
         // hash probes instead of 9.
         // q156: bigram + left-continuation + right-continuation = 3
+        // q162/q179: bigram + history + unigram = 3
         val want = if (q.startsWith("q127")) 9 else if (q.startsWith("q122")) 5
-          else if (q.startsWith("q156")) 3 else 2
+          else if (q.startsWith("q120")) 2 else 3
         assert(bhj == want, s"$q expected $want broadcast model joins, got $bhj:\n$p")
       }
     } finally graft.core.InternalCaches.release(spark)

@@ -2448,6 +2448,20 @@ class TextSpec extends SparkSpec {
     } finally graft.core.InternalCaches.release(spark)
   }
 
+  test("jelinekMercerScore: rejects weights outside (0, 1) or not summing to 1") {
+    import spark.implicits._
+    // with lambda = 1 the seen history "a" followed by the unseen "z"
+    // gets p = 0; ln 0 is NULL, so the mean would drop that position from
+    // its sum but not from its count
+    val train = Seq((0L, "a b a b")).toDF("doc_id", "text")
+    val eval_ = Seq((1L, "a z")).toDF("doc_id", "text")
+    for ((l, m) <- Seq((1.0, 0.0), (0.0, 1.0), (1.5, -0.5), (0.7, 0.2), (0.7, 0.3 + 2e-9)))
+      intercept[IllegalArgumentException](Text.jelinekMercerScore(train, eval_, l, m))
+    // a non-default pair summing to 1 still scores
+    try assert(Text.jelinekMercerScore(train, eval_, 0.6, 0.4).count() == 1L)
+    finally graft.core.InternalCaches.release(spark)
+  }
+
   test("mrrEval: rank-1 relevant scores rr=1, no-relevant terms guard to 0") {
     import spark.implicits._
     try {
