@@ -1816,54 +1816,95 @@ object Text {
   def qTokenBudget(s: SparkSession, dir: String): DataFrame =
     tokenBudget(Tables.documents(s, dir))
 
-  /** Okapi BM25 retrieval (Robertson et al., TREC-3) for a bounded query
-    * term set — the ranking function behind every lexical retrieval /
-    * RAG-recall stage, and the natural consumer of q84's inverted index.
-    * Only rows whose token matches a query term survive the explode
-    * FILTER, so the per-(doc, term) tf aggregation shuffles query-matching
-    * tokens only — at 100 TB the shuffle is sized by the posting lists,
-    * not the corpus. Corpus stats (N, Σdl) are ONE combine-friendly agg
-    * broadcast as a 1-row frame; df is a terms-bounded rollup of the tf
-    * table joined back by broadcast. Top-k is orderBy+limit ⇒
-    * TakeOrderedAndProject (bounded per-partition heaps, no global sort).
+  /** The BM25 posting kernel behind [[bm25]], [[bm25FromIndex]],
+    * [[dirichletQL]], [[ndcgEval]], [[mrrEval]] and [[rm3Bm25]]: tokenize
+    * → filter to query terms → per-(doc, term) tf → df → BM25 term score →
+    * finish, one piece each.
     *
-    * Numerics (cross-engine contract): the per-(doc, term) score is one
-    * double chain with pinned association — idf = ln(1 + (N − df + .5)/(df
-    * + .5)), tf·(k1+1) / (tf + k1·((1−b) + b·(dl·N/Σdl))) — rounded to 9;
-    * per-doc totals sum the rounded scalar as DECIMAL(28,12) (order-free,
-    * the q88 recipe) and round to 6. Ties break by doc_id. */
-  def bm25(docs: DataFrame, terms: Seq[String], k: Int = 10,
-           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(terms.nonEmpty, "bm25 needs at least one query term")
-    val tok = withTokens(docs).select(col("doc_id"), col("t"))
-    val stats = tok.agg(
-      count(lit(1)).cast(LongType).as("n_docs"),
-      sum(size(col("t")).cast(LongType)).as("sum_dl"))
-    // tf is consumed twice (the scored join AND its df rollup) and
-    // Catalyst never dedupes self-referencing subtrees — without the
-    // persist the corpus explode+filter+agg runs twice. The persisted
-    // frame is posting-list-sized (query-matching tokens only).
-    val tf = graft.core.InternalCaches.persist(tok
+    *  - `postings` (this method): the corpus explode is FILTERED to the
+    *    query terms before any shuffle, so the per-(doc, term) tf
+    *    aggregation shuffles query-matching tokens only — at 100 TB the
+    *    shuffle is sized by the posting lists, not the corpus. tf is read
+    *    twice (the scored join AND its df/cf rollup) and Catalyst never
+    *    dedupes self-referencing subtrees, so the posting-sized frame is
+    *    persisted; without it the corpus explode+filter+agg runs twice.
+    *  - [[corpusStats]]: (N, Σdl) as ONE combine-friendly agg, a 1-row
+    *    frame every consumer crossJoins by broadcast.
+    *  - [[bm25Scored]]: df is a terms-bounded rollup of tf joined back by
+    *    broadcast; adds the UNROUNDED term score `ts`, one double chain
+    *    with pinned association (the cross-engine contract):
+    *    ln(1 + (N − df + .5)/(df + .5)) · tf·(k1+1) / (tf + k1·((1−b) +
+    *    b·(dl·N/Σdl))). Each caller rounds it, or its weighted form, to 9.
+    *  - [[topDocs]]: per-doc n_hit and the rounded `score` summed as
+    *    DECIMAL(28,12) (order-free, the q88 recipe), round 6; top-k is
+    *    orderBy+limit ⇒ TakeOrderedAndProject (bounded per-partition
+    *    heaps, no global sort). Ties break by doc_id.
+    *  - [[rankPerTerm]]: the per-term top-k cut as the bounded-heap
+    *    TopKPerKey operator (no posting-sized window partitions), then
+    *    `rk` over ≤ k rows per term. */
+  private def postings(tok: DataFrame, terms: Seq[String]): DataFrame =
+    graft.core.InternalCaches.persist(tok
       .withColumn("dl", size(col("t")).cast(LongType))
       .select(col("doc_id"), col("dl"), explode(col("t")).as("tok"))
       .filter(col("tok").isin(terms: _*))
       .groupBy(col("doc_id"), col("dl"), col("tok"))
       .agg(count(lit(1)).cast(LongType).as("tf")))
+
+  /** `docLens`: one (doc_id, dl) row per document. */
+  private def corpusStats(docLens: DataFrame): DataFrame =
+    docLens.agg(
+      count(lit(1)).cast(LongType).as("n_docs"),
+      sum(col("dl")).cast(LongType).as("sum_dl"))
+
+  /** `tf`: (doc_id, dl, tok, tf) postings; `stats`: the 1-row corpus stats. */
+  private def bm25Scored(tf: DataFrame, stats: DataFrame,
+                         k1: Double, b: Double): DataFrame = {
+    require(k1 >= 0.0, s"k1 must be >= 0, got $k1")
+    require(b >= 0.0 && b <= 1.0, s"b must be in [0, 1], got $b")
     val dfTbl = tf.groupBy(col("tok")).agg(count(lit(1)).cast(LongType).as("df"))
-    val scored = tf
-      .join(broadcast(dfTbl), "tok")
+    tf.join(broadcast(dfTbl), "tok")
       .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-      .withColumn("score", round(
-        col("idf") * ((col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * (col("dl").cast(DoubleType) * col("n_docs") / col("sum_dl"))))), 9))
+      .withColumn("ts",
+        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
+          ((col("tf") * lit(k1 + 1.0)) /
+            (col("tf") + lit(k1) * (lit(1.0 - b) +
+              lit(b) * (col("dl").cast(DoubleType) * col("n_docs") / col("sum_dl"))))))
+  }
+
+  /** The corpus path: postings and stats from one tokenized frame. */
+  private def bm25Scored(docs: DataFrame, terms: Seq[String],
+                         k1: Double, b: Double): DataFrame = {
+    val tok = withTokens(docs).select(col("doc_id"), col("t"))
+    bm25Scored(postings(tok, terms), corpusStats(docLengths(tok)), k1, b)
+  }
+
+  private def topDocs(scored: DataFrame, name: String, k: Int): DataFrame =
     scored.groupBy(col("doc_id"))
       .agg(count(lit(1)).cast(LongType).as("n_hit"),
-        round(sum(col("score").cast(DecimalType(28, 12))).cast(DoubleType), 6).as("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id").asc)
+        round(sum(col("score").cast(DecimalType(28, 12))).cast(DoubleType), 6).as(name))
+      .orderBy(col(name).desc, col("doc_id").asc)
       .limit(k)
+
+  private def rankPerTerm(scored: DataFrame, by: String, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    graft.plans.TopK.perKey(scored, Seq("term"),
+        Seq(graft.plans.TopK.desc(by), graft.plans.TopK.asc("doc_id")), k)
+      .withColumn("rk", row_number().over(Window.partitionBy(col("term"))
+        .orderBy(col(by).desc, col("doc_id").asc)).cast(LongType))
+  }
+
+  /** Okapi BM25 retrieval (Robertson et al., TREC-3) for a bounded query
+    * term set — the ranking function behind every lexical retrieval /
+    * RAG-recall stage, and the natural consumer of q84's inverted index.
+    * Plan: the BM25 posting kernel end to end.
+    *
+    * Numerics (cross-engine contract): the kernel's per-(doc, term) score
+    * rounded to 9; per-doc totals sum it as DECIMAL(28,12) and round to 6.
+    * Ties break by doc_id. */
+  def bm25(docs: DataFrame, terms: Seq[String], k: Int = 10,
+           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    require(terms.nonEmpty, "bm25 needs at least one query term")
+    topDocs(bm25Scored(docs, terms, k1, b).withColumn("score", round(col("ts"), 9)), "bm25", k)
   }
 
   def qBm25(s: SparkSession, dir: String): DataFrame =
@@ -1884,29 +1925,25 @@ object Text {
     * document length alone and never enters a bounded-k result in
     * practice).
     *
-    * Scale shape: identical to the audited q113 plan — the corpus explode
-    * filters to query terms BEFORE any shuffle so the tf agg is
-    * posting-list-sized; collection stats are one broadcast 1-row agg;
-    * the cf table is terms-bounded and broadcast; top-k is a bounded
-    * heap. Floats pinned: μ·P(w|C) rounds to 12 on the bounded term
-    * frame, per-posting and per-term ln's round to 9, per-doc sums are
-    * order-free decimals, one round-6 finish. */
+    * Plan: the BM25 posting kernel's [[postings]] and [[corpusStats]]
+    * (Σdl is the collection length); the cf table is terms-bounded and
+    * broadcast; top-k is a bounded heap. Floats pinned: μ·P(w|C) rounds
+    * to 12 on the bounded term frame, per-posting and per-term ln's round
+    * to 9, per-doc sums are order-free decimals, one round-6 finish.
+    *
+    * μ must be > 0: for μ ≤ 0, μ·P(w|C) ≤ 0 and ln of it is NULL, which
+    * would null out every score without an error. */
   def dirichletQL(docs: DataFrame, terms: Seq[String], k: Int = 10,
                   mu: Double = 2000.0): DataFrame = {
     require(terms.nonEmpty, "dirichletQL needs at least one query term")
+    require(mu > 0.0, s"mu must be > 0, got $mu")
     val tok = withTokens(docs).select(col("doc_id"), col("t"))
-    val stats = tok.agg(sum(size(col("t")).cast(LongType)).as("tot"))
-    val tf = graft.core.InternalCaches.persist(tok
-      .withColumn("dl", size(col("t")).cast(LongType))
-      .select(col("doc_id"), col("dl"), explode(col("t")).as("tok"))
-      .filter(col("tok").isin(terms: _*))
-      .groupBy(col("doc_id"), col("dl"), col("tok"))
-      .agg(count(lit(1)).cast(LongType).as("tf")))
+    val tf = postings(tok, terms)
     val mupc = tf.groupBy(col("tok"))
       .agg(sum(col("tf")).cast(LongType).as("cf"))
-      .crossJoin(broadcast(stats))
+      .crossJoin(broadcast(corpusStats(docLengths(tok))))
       .withColumn("mupc",
-        round(lit(mu) * col("cf").cast(DoubleType) / col("tot").cast(DoubleType), 12))
+        round(lit(mu) * col("cf").cast(DoubleType) / col("sum_dl").cast(DoubleType), 12))
       .select(col("tok"), col("mupc"))
     // Σ_{w∈Q} ln(μ·P(w|C)) over the terms-bounded frame — a 1-row constant
     val cq = mupc.agg(
@@ -1944,11 +1981,9 @@ object Text {
     *   nDCG@k = DCG@k / IDCG@k  (ideal ranking: rel desc, doc_id asc)
     *   AP@k   = Σ_{r≤k, rel_r binary} P@r / min(R, k)
     *
-    * Scale shape: the only corpus-sized work is the q113 posting build
-    * (explode filtered to query terms before any shuffle); BOTH the
-    * system and ideal top-k cuts are the bounded-heap TopKPerKey operator
-    * — no posting-list-sized window partitions — and every downstream
-    * frame (ranked lists, per-term rollups) is ≤ k rows per term. Floats
+    * Plan: the BM25 posting kernel; BOTH the system and ideal top-k cuts
+    * are its [[rankPerTerm]] bounded heap, and every downstream frame
+    * (ranked lists, per-term rollups) is ≤ k rows per term. Floats
     * pinned: per-rank gains are exact small integers via CASE (no pow),
     * discounts round to 9, DCG/AP sums run in DECIMAL(28,12)
     * (order-free), finals round to 6. */
@@ -1957,44 +1992,18 @@ object Text {
     import org.apache.spark.sql.expressions.Window
     require(terms.nonEmpty, "ndcgEval needs at least one query term")
     val dec = DecimalType(28, 12)
-    val tok = withTokens(docs).select(col("doc_id"), col("t"))
-    val stats = tok.agg(
-      count(lit(1)).cast(LongType).as("n_docs"),
-      sum(size(col("t")).cast(LongType)).as("sum_dl"))
-    val tf = graft.core.InternalCaches.persist(tok
-      .withColumn("dl", size(col("t")).cast(LongType))
-      .select(col("doc_id"), col("dl"), explode(col("t")).as("term"))
-      .filter(col("term").isin(terms: _*))
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).cast(LongType).as("tf")))
-    val dfTbl = tf.groupBy(col("term")).agg(count(lit(1)).cast(LongType).as("df"))
     val gainSql = "CASE rel WHEN 1 THEN 1.0 WHEN 2 THEN 3.0 ELSE 7.0 END"
-    val scored = graft.core.InternalCaches.persist(tf
-      .join(broadcast(dfTbl), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-      .withColumn("score", round(
-        col("idf") * ((col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * (col("dl").cast(DoubleType) * col("n_docs") / col("sum_dl"))))), 9))
-      .withColumn("rel", least(col("tf"), lit(3L)).cast(LongType))
-      .withColumn("relb", (col("tf") >= 2L).cast(LongType))
-      .select(col("term"), col("doc_id"), col("score"), col("rel"), col("relb")))
-    val sys = graft.plans.TopK.perKey(scored, Seq("term"),
-        Seq(graft.plans.TopK.desc("score"), graft.plans.TopK.asc("doc_id")), k)
-      .withColumn("rk", row_number().over(Window.partitionBy(col("term"))
-        .orderBy(col("score").desc, col("doc_id").asc)).cast(LongType))
+    val scored = graft.core.InternalCaches.persist(bm25Scored(docs, terms, k1, b)
+      .select(col("tok").as("term"), col("doc_id"), round(col("ts"), 9).as("score"),
+        least(col("tf"), lit(3L)).cast(LongType).as("rel"),
+        (col("tf") >= 2L).cast(LongType).as("relb")))
+    val sys = rankPerTerm(scored, "score", k)
     val dcg = sys
       .withColumn("g", expr(gainSql))
       .groupBy(col("term"))
       .agg(sum(round(col("g") / log(col("rk").cast(DoubleType) + lit(1.0)), 9)
         .cast(dec)).as("dcg_d"))
-    val ideal = graft.plans.TopK.perKey(
-        scored.select(col("term"), col("doc_id"), col("rel")), Seq("term"),
-        Seq(graft.plans.TopK.desc("rel"), graft.plans.TopK.asc("doc_id")), k)
-      .withColumn("rk", row_number().over(Window.partitionBy(col("term"))
-        .orderBy(col("rel").desc, col("doc_id").asc)).cast(LongType))
+    val ideal = rankPerTerm(scored.select(col("term"), col("doc_id"), col("rel")), "rel", k)
       .withColumn("g", expr(gainSql))
       .groupBy(col("term"))
       .agg(sum(round(col("g") / log(col("rk").cast(DoubleType) + lit(1.0)), 9)
@@ -2034,40 +2043,17 @@ object Text {
     * (tf ≥ 2), same bounded-heap cuts, so the three metrics are
     * computed over the IDENTICAL ranking and publishable side by side.
     *
-    * Scale shape: the q113/q161 posting plan verbatim; everything after
-    * the bounded-heap top-k runs on ≤ k rows per term. rr is a max over
-    * the k-row frame (1/rk is monotone — the first relevant row has the
-    * largest reciprocal), never a scan-order dependency. */
+    * Plan: the BM25 posting kernel through its [[rankPerTerm]] bounded
+    * heap; everything after it runs on ≤ k rows per term. rr is a max
+    * over the k-row frame (1/rk is monotone — the first relevant row has
+    * the largest reciprocal), never a scan-order dependency. */
   def mrrEval(docs: DataFrame, terms: Seq[String], k: Int = 10,
               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(terms.nonEmpty, "mrrEval needs at least one query term")
-    val tok = withTokens(docs).select(col("doc_id"), col("t"))
-    val stats = tok.agg(
-      count(lit(1)).cast(LongType).as("n_docs"),
-      sum(size(col("t")).cast(LongType)).as("sum_dl"))
-    val tf = graft.core.InternalCaches.persist(tok
-      .withColumn("dl", size(col("t")).cast(LongType))
-      .select(col("doc_id"), col("dl"), explode(col("t")).as("term"))
-      .filter(col("term").isin(terms: _*))
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).cast(LongType).as("tf")))
-    val dfTbl = tf.groupBy(col("term")).agg(count(lit(1)).cast(LongType).as("df"))
-    val scored = tf
-      .join(broadcast(dfTbl), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-      .withColumn("score", round(
-        col("idf") * ((col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * (col("dl").cast(DoubleType) * col("n_docs") / col("sum_dl"))))), 9))
-      .withColumn("relb", (col("tf") >= 2L).cast(LongType))
-      .select(col("term"), col("doc_id"), col("score"), col("relb"))
-    graft.plans.TopK.perKey(scored, Seq("term"),
-        Seq(graft.plans.TopK.desc("score"), graft.plans.TopK.asc("doc_id")), k)
-      .withColumn("rk", row_number().over(Window.partitionBy(col("term"))
-        .orderBy(col("score").desc, col("doc_id").asc)).cast(LongType))
+    val scored = bm25Scored(docs, terms, k1, b)
+      .select(col("tok").as("term"), col("doc_id"), round(col("ts"), 9).as("score"),
+        (col("tf") >= 2L).cast(LongType).as("relb"))
+    rankPerTerm(scored, "score", k)
       .groupBy(col("term"))
       .agg(sum(col("relb")).cast(LongType).as("n_rel_topk"),
         coalesce(min(when(col("relb") === 1L, col("rk"))), lit(0L))
@@ -2086,14 +2072,16 @@ object Text {
     * P(w|R) = Σ_d ŵ(d)·tf(w,d)/|d| (ŵ = normalized BM25 score), take the
     * top `fbTerms` expansion terms, and re-run BM25 with interpolated
     * term weights — α/|Q| per original term, (1−α)·P̂(w) per expansion
-    * term. α and 1−α are BOTH pinned (the q153 precedent).
+    * term. α and 1−α are BOTH pinned (the q153 precedent), each in
+    * (0, 1) and summing to 1 within 1e-9 — a pair that does not sum to 1
+    * would interpolate silently wrong weights.
     *
-    * Scale shape: pass 1 is the audited q113 plan; the relevance model
-    * touches ONLY the fbDocs feedback documents (a bounded frame — the
-    * expansion-term selection sorts the vocabulary of 5 documents, not
-    * the corpus); the final |Q|+fbTerms term weights collect to the
-    * driver (≤ 8 rows, the BPE-argmax precedent) and ship back as plan
-    * literals into pass 2, which is again the q113 posting-list shape.
+    * Scale shape: pass 1 is [[bm25]]; the relevance model touches ONLY
+    * the fbDocs feedback documents (a bounded frame — the expansion-term
+    * selection sorts the vocabulary of 5 documents, not the corpus); the
+    * final |Q|+fbTerms term weights collect to the driver (≤ 8 rows, the
+    * BPE-argmax precedent) and ship back as plan literals into pass 2,
+    * the BM25 posting kernel over the expanded terms.
     * Floats pinned end-to-end: feedback weights are round-6 BM25 scores
     * over an exact decimal total, relevance-model contributions round 9
     * into decimal sums, term weights round 9 BEFORE the collect (so the
@@ -2104,6 +2092,11 @@ object Text {
               alpha: Double = 0.6, oneMinusAlpha: Double = 0.4,
               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "rm3 needs at least one query term")
+    require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0, 1), got $alpha")
+    require(oneMinusAlpha > 0.0 && oneMinusAlpha < 1.0,
+      s"oneMinusAlpha must be in (0, 1), got $oneMinusAlpha")
+    require(math.abs(alpha + oneMinusAlpha - 1.0) <= 1e-9,
+      s"alpha + oneMinusAlpha must be 1, got ${alpha + oneMinusAlpha}")
     val dec = DecimalType(28, 12)
     val tok = graft.core.InternalCaches.persist(
       withTokens(docs).select(col("doc_id"), col("t")))
@@ -2132,29 +2125,8 @@ object Text {
       .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
     val weights = terms.map(t => (t, ow)) ++ eW
     val mapCol = map(weights.flatMap { case (t, v) => Seq(lit(t), lit(v)) }: _*)
-    val allTerms = weights.map(_._1)
-    val stats = tok.agg(count(lit(1)).cast(LongType).as("n_docs"),
-      sum(size(col("t")).cast(LongType)).as("sum_dl"))
-    val tf2 = graft.core.InternalCaches.persist(tok
-      .withColumn("dl", size(col("t")).cast(LongType))
-      .select(col("doc_id"), col("dl"), explode(col("t")).as("tok"))
-      .filter(col("tok").isin(allTerms: _*))
-      .groupBy(col("doc_id"), col("dl"), col("tok"))
-      .agg(count(lit(1)).cast(LongType).as("tf")))
-    val df2 = tf2.groupBy(col("tok")).agg(count(lit(1)).cast(LongType).as("df"))
-    tf2.join(broadcast(df2), "tok")
-      .crossJoin(broadcast(stats))
-      .withColumn("ts",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          ((col("tf") * lit(k1 + 1.0)) /
-            (col("tf") + lit(k1) * (lit(1.0 - b) +
-              lit(b) * (col("dl").cast(DoubleType) * col("n_docs") / col("sum_dl"))))))
-      .withColumn("score", round(element_at(mapCol, col("tok")) * col("ts"), 9))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast(LongType).as("n_hit"),
-        round(sum(col("score").cast(dec)).cast(DoubleType), 6).as("rm3"))
-      .orderBy(col("rm3").desc, col("doc_id").asc)
-      .limit(k)
+    topDocs(bm25Scored(tok, weights.map(_._1), k1, b)
+      .withColumn("score", round(element_at(mapCol, col("tok")) * col("ts"), 9)), "rm3", k)
   }
 
   def qRm3(s: SparkSession, dir: String): DataFrame =
@@ -2308,33 +2280,20 @@ object Text {
     * [[bm25]] (same pinned double chain, same decimal sums — asserted in
     * TextSpec); the difference is purely physical: tf comes from the
     * pre-built postings (filter on token = posting-list lookup), dl/N/Σdl
-    * from a doc-length side table a real index stores alongside. */
+    * from a doc-length side table a real index stores alongside. Both feed
+    * the BM25 posting kernel's df/score/finish pieces ([[bm25Scored]],
+    * [[corpusStats]], [[topDocs]]). */
   def bm25FromIndex(postings: DataFrame, docLens: DataFrame, terms: Seq[String],
                     k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25FromIndex needs at least one query term")
-    val stats = docLens.agg(
-      count(lit(1)).cast(LongType).as("n_docs"),
-      sum(col("dl")).cast(LongType).as("sum_dl"))
-    // same double-consume shape as bm25's tf: persist the
+    // same double-consume shape as the kernel's postings: persist the
     // posting-list-sized lookup so the postings filter runs once
     val tf = graft.core.InternalCaches.persist(postings
       .filter(col("token").isin(terms: _*))
       .select(col("token").as("tok"), col("doc_id"), col("tf"))
       .join(docLens, "doc_id"))
-    val dfTbl = tf.groupBy(col("tok")).agg(count(lit(1)).cast(LongType).as("df"))
-    tf.join(broadcast(dfTbl), "tok")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-      .withColumn("score", round(
-        col("idf") * ((col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * (col("dl").cast(DoubleType) * col("n_docs") / col("sum_dl"))))), 9))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast(LongType).as("n_hit"),
-        round(sum(col("score").cast(DecimalType(28, 12))).cast(DoubleType), 6).as("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id").asc)
-      .limit(k)
+    topDocs(bm25Scored(tf, corpusStats(docLens), k1, b)
+      .withColumn("score", round(col("ts"), 9)), "bm25", k)
   }
 
   /** Gopher quality-rule battery (Rae et al. 2021, Appendix A1.1) — the

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
+import graft.functions.BitMix
 
 /** Order-relaxed distributed variants of the stream sketches, as typed
   * `Aggregator`s (SURVEY §2.8): at 100 TB the driver-sequential semantics
@@ -21,15 +22,9 @@ object DistributedSketches {
   final class DistributedReservoir(m: Int, seed: Long)
       extends Aggregator[(Long, Long), ReservoirBuf, Array[Long]] {
     // (position, item) in; key = splitmix64(position ^ seed)
-    private def mix(z0: Long): Long = {
-      var z = z0 + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
     def zero: ReservoirBuf = ReservoirBuf(Array.empty, Array.empty)
     def reduce(b: ReservoirBuf, a: (Long, Long)): ReservoirBuf =
-      mergePairs(b, Array(mix(a._1 ^ seed)), Array(a._2))
+      mergePairs(b, Array(BitMix.splitmix64(a._1 ^ seed)), Array(a._2))
     def merge(b1: ReservoirBuf, b2: ReservoirBuf): ReservoirBuf =
       mergePairs(b1, b2.keys, b2.items)
     private def mergePairs(b: ReservoirBuf, ks: Array[Long], vs: Array[Long]): ReservoirBuf = {
@@ -115,14 +110,9 @@ object DistributedSketches {
   }
 
   object CountMin {
-    private def mix(z0: Long): Long = {
-      var z = z0 + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
     private[streaming] def bucket(row: Int, w: Int, seed: Long, item: Long): Int =
-      java.lang.Long.remainderUnsigned(mix(item ^ (seed + 0x5851f42d4c957f2dL * (row + 1))), w.toLong).toInt
+      java.lang.Long.remainderUnsigned(
+        BitMix.splitmix64(item ^ (seed + 0x5851f42d4c957f2dL * (row + 1))), w.toLong).toInt
 
     /** Point query: min over the d row counters — never undercounts. */
     def estimate(sk: CMBuf, d: Int, w: Int, seed: Long, item: Long): Long = {

@@ -59,9 +59,9 @@ object OptLab {
       "q145_base" -> (() => SparkEntry.queries("q145_phrase_search")(spark, dir)),
       "q187_base" -> (() => SparkEntry.queries("q187_wordpiece_train")(spark, dir)),
       "q133_base" -> (() => SparkEntry.queries("q133_duplicated_spans")(spark, dir)),
-      "q91_new" -> (() => SparkEntry.queries("q91_grouping_sets")(spark, dir)),
-      "q159_new" -> (() => SparkEntry.queries("q159_oov_rate")(spark, dir)),
-      "q127_new" -> (() => SparkEntry.queries("q127_fivegram_score")(spark, dir)),
+      "q91_base" -> (() => SparkEntry.queries("q91_grouping_sets")(spark, dir)),
+      "q159_base" -> (() => SparkEntry.queries("q159_oov_rate")(spark, dir)),
+      "q127_base" -> (() => SparkEntry.queries("q127_fivegram_score")(spark, dir)),
       "q121_base" -> (() => SparkEntry.queries("q121_containment")(spark, dir)),
       "q185_base" -> (() => SparkEntry.queries("q185_unigram_train")(spark, dir)),
       "q186_base" -> (() => SparkEntry.queries("q186_unigram_apply")(spark, dir)),
@@ -69,6 +69,13 @@ object OptLab {
       "q136_base" -> (() => SparkEntry.queries("q136_tokenizer_fertility")(spark, dir)),
       "q124_base" -> (() => SparkEntry.queries("q124_bpe_inference")(spark, dir)),
       "q75_base" -> (() => SparkEntry.queries("q75_range_join")(spark, dir)),
+      "q84_base" -> (() => SparkEntry.queries("q84_inverted_index")(spark, dir)),
+      "q113_base" -> (() => SparkEntry.queries("q113_bm25")(spark, dir)),
+      "q125_base" -> (() => SparkEntry.queries("q125_rrf_fusion")(spark, dir)),
+      "q157_base" -> (() => SparkEntry.queries("q157_rm3_expansion")(spark, dir)),
+      "q161_base" -> (() => SparkEntry.queries("q161_ndcg")(spark, dir)),
+      "q169_base" -> (() => SparkEntry.queries("q169_dirichlet_ql")(spark, dir)),
+      "q177_base" -> (() => SparkEntry.queries("q177_mrr")(spark, dir)),
     )
 
     val chosen = if (args.isEmpty) variants.keys.toSeq.sorted else args.toSeq

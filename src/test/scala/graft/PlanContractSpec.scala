@@ -485,6 +485,35 @@ class PlanContractSpec extends SparkSpec {
       s"q113 tf lost its partial agg:\n$p")
   }
 
+  test("q157/q161/q177: BM25 posting-kernel rankers keep their heaps, broadcasts and partial aggs") {
+    // exact join counts of the executed plan (cached subplans included):
+    // the df join broadcasts, the 1-row stats frame rides a broadcast
+    // crossJoin, and q161's per-term rollups join by broadcast
+    val want = Map(
+      "q157_rm3_expansion" -> ((1, 1, "TakeOrderedAndProject")),
+      "q161_ndcg" -> ((7, 4, "TopKPerKey")),
+      "q177_mrr" -> ((1, 1, "TopKPerKey")))
+    try {
+      for ((q, (bhj, bnlj, heap)) <- want) {
+        val p = plan(q)
+        assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
+          s"$q shuffles posting rows for a join:\n$p")
+        assert("BroadcastHashJoin".r.findAllIn(p).length == bhj,
+          s"$q expected $bhj broadcast hash joins:\n$p")
+        assert("BroadcastNestedLoopJoin".r.findAllIn(p).length == bnlj,
+          s"$q expected $bnlj broadcast 1-row crossJoins:\n$p")
+        assert(p.contains(heap), s"$q top-k lost its bounded heap:\n$p")
+        assert("HashAggregate".r.findAllIn(p).length >= 2,
+          s"$q tf lost its partial agg:\n$p")
+        graft.core.InternalCaches.release(spark)
+      }
+      // q157 collects its expansion-term weights while it is built: pass 1,
+      // the relevance model and the weight collect run here, not at write
+      val rm3Jobs = jobsOf(SparkEntry.queries("q157_rm3_expansion")(spark, sfDir))
+      assert(rm3Jobs == 21, s"q157 construction ran $rm3Jobs jobs")
+    } finally graft.core.InternalCaches.release(spark)
+  }
+
   test("q114/q117: corpus work is one partial-agg'd aggregation; windows run post-agg") {
     for (q <- Seq("q114_temperature_mix", "q117_drift_psi")) {
       val p = plan(q)

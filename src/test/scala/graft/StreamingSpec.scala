@@ -144,6 +144,9 @@ class StreamingSpec extends SparkSpec {
     val out2 = ds.repartition(7).select[Array[Long]](agg.toColumn).collect().head
     assert(out1.length == 16)
     assert(out1.toSeq == out2.toSeq) // order-independent: same keys win
+    // the exact draw pins the key hash (splitmix64 of position ^ seed)
+    assert(out1.toSeq == Seq(57L, 29L, 51L, 70L, 66L, 88L, 32L, 16L,
+      70L, 18L, 50L, 57L, 89L, 67L, 60L, 5L))
   }
 
   test("MisraGries: heavy hitters survive any merge order") {

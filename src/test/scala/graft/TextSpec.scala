@@ -2462,6 +2462,33 @@ class TextSpec extends SparkSpec {
     finally graft.core.InternalCaches.release(spark)
   }
 
+  test("retrieval rankers: reject parameters that give silently wrong output") {
+    import spark.implicits._
+    val docs = Seq((1L, "cat dog cat"), (2L, "cat mouse")).toDF("doc_id", "text")
+    val terms = Seq("cat", "dog")
+    try {
+      // rm3: a weight pair that does not sum to 1, or a weight outside (0, 1)
+      for ((a, m) <- Seq((0.7, 0.2), (1.0, 0.0), (0.0, 1.0), (1.2, -0.2)))
+        intercept[IllegalArgumentException](Text.rm3Bm25(docs, terms, alpha = a, oneMinusAlpha = m))
+      intercept[IllegalArgumentException](Text.rm3Bm25(docs, terms, alpha = 0.7))
+      // dirichletQL: mu <= 0 makes ln(mu·P(w|C)) NULL
+      for (mu <- Seq(-1.0, 0.0))
+        intercept[IllegalArgumentException](Text.dirichletQL(docs, terms, mu = mu))
+      // BM25: k1 >= 0 and 0 <= b <= 1, checked once in the kernel
+      for ((k1, b) <- Seq((-0.1, 0.75), (1.2, -0.1), (1.2, 1.5))) {
+        intercept[IllegalArgumentException](Text.bm25(docs, terms, k1 = k1, b = b))
+        intercept[IllegalArgumentException](Text.ndcgEval(docs, terms, k1 = k1, b = b))
+        intercept[IllegalArgumentException](Text.mrrEval(docs, terms, k1 = k1, b = b))
+        intercept[IllegalArgumentException](Text.rm3Bm25(docs, terms, k1 = k1, b = b))
+        intercept[IllegalArgumentException](Text.bm25FromIndex(
+          Text.invertedIndex(docs), Text.docLengths(docs), terms, k1 = k1, b = b))
+      }
+      // the bounds themselves are valid
+      assert(Text.bm25(docs, terms, k1 = 0.0, b = 1.0).count() == 2L)
+      assert(Text.dirichletQL(docs, terms, mu = 0.5).count() == 2L)
+    } finally graft.core.InternalCaches.release(spark)
+  }
+
   test("mrrEval: rank-1 relevant scores rr=1, no-relevant terms guard to 0") {
     import spark.implicits._
     try {
