@@ -2,6 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.Sessions
 import graft.ops.Geometry
 import graft.sources.PointSource
 
@@ -21,6 +22,7 @@ object CliSession {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.locality.wait", "0s")
+      .config(Sessions.CheckpointFileManager._1, Sessions.CheckpointFileManager._2)
     // spark-submit injects spark.master; standalone runs default to local
     val withMaster =
       if (sys.props.contains("spark.master")) b

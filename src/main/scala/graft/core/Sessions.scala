@@ -23,4 +23,11 @@ object Sessions {
     // RDD shuffle several times wider than it needs to be
     .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    // offset/commit logs and state-store files on a local checkpoint are
+    // written without forking chmod/readlink processes
+    .config(CheckpointFileManager._1, CheckpointFileManager._2)
+
+  /** Spark's checkpoint-file-manager key, pointed at [[LocalCheckpointFileManager]]. */
+  val CheckpointFileManager: (String, String) =
+    "spark.sql.streaming.checkpointFileManagerClass" -> classOf[LocalCheckpointFileManager].getName
 }

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import java.util.concurrent.Semaphore
+import java.util.concurrent.{Semaphore, TimeUnit}
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -13,17 +16,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Reference → engine mapping:
   *  - DStream `foreachRDD` → `writeStream.foreachBatch` (T1);
   *  - per-batch `mapToPair/reduceByKey/collectAsMap` → a driver fold of the
-  *    batch rows into the histogram (T6): the raw arrival-order rows must
-  *    reach the driver anyway for reservoir/sticky, so a distributed
-  *    pre-aggregation would be a second action on the same batch, not a
-  *    saving — the distributed analogue lives in [[DistributedSketches]];
+  *    batch items into the histogram (T6): reservoir and sticky need the raw
+  *    arrival-order items on the driver anyway, so a distributed combine
+  *    would only add a second action on the same batch;
   *  - semaphore + `ssc.stop` → semaphore + `query.stop()` from the main
   *    thread (T2);
   *  - the n-item cutoff truncates the final batch in arrival order; with a
   *    file/socket source a micro-batch arrives as a single ordered
   *    partition, matching the reference's `zipWithIndex().filter` cut.
   *
-  * The reservoir/sticky updates are inherently sequential driver state
+  * Each batch reaches the driver as one `long[]` per partition, taken from
+  * the Tungsten rows in one job, and folds into primitive sketch state. The
+  * reservoir/sticky updates are inherently sequential driver state
   * (SURVEY §7.4 risk 3) — by design, like the reference; the distributed
   * order-relaxed variants live in [[DistributedSketches]].
   */
@@ -39,7 +43,8 @@ object FrequentItemsJob {
       stickyEstimate: Seq[Long])
 
   /** Run over a streaming DataFrame with a single LongType `item` column.
-    * Blocks until n items are processed, then stops the query. */
+    * Blocks until n items are processed, then stops the query; throws if
+    * the query ends first. */
   def run(spark: SparkSession, stream: DataFrame, n: Long, phi: Double,
           epsilon: Double, delta: Double, seed: Long = 42L): Report = {
     val hist = new Sketches.ExactHistogram
@@ -56,39 +61,41 @@ object FrequentItemsJob {
       .trigger(Trigger.ProcessingTime("10 milliseconds"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (processed < n) {
-          val remaining = n - processed
-          // arrival-order array; truncate the final batch like the
-          // reference's zipWithIndex().filter (G016HW3.java:84-87). The
-          // raw rows are required by reservoir/sticky, whose state is
-          // order-exact by definition (reference semantics).
-          val items0 = batch.select("item").collect().map(_.getLong(0))
-          val truncated = items0.length > remaining
-          val items = if (truncated) items0.take(remaining.toInt) else items0
-          processed += items.length
-          // All three sketches fold the already-collected rows: reservoir
-          // and sticky are order-exact by reference semantics, so the raw
-          // arrival-order array MUST reach the driver every batch — which
-          // means a distributed groupBy+count combine for the histogram
-          // could only ever ADD a second full action on the same batch,
-          // never replace the collect. (An earlier revision ran such a
-          // combine for >= 64k-row batches; it was strictly extra work.)
-          // The genuinely distributed, order-relaxed analogues — mergeable
-          // Aggregators with executor-side partial aggregation — live in
-          // [[DistributedSketches]].
-          var i = 0
-          while (i < items.length) {
-            val it = items(i)
-            hist.add(it)
-            reservoir.add(it)
-            sticky.add(it)
-            i += 1
+          // foreachBatch hands the batch over as a LogicalRDD over rows that
+          // are already planned: read them without planning a second time
+          val rows = batch.queryExecution.logical match {
+            case l: LogicalRDD => l.rdd
+            case _ => batch.queryExecution.toRdd
+          }
+          // partitions in order = arrival order; truncate the final batch
+          // like the reference's zipWithIndex().filter (G016HW3.java:84-87)
+          val parts = spark.sparkContext.runJob(rows, longs _)
+          var p = 0
+          while (p < parts.length && processed < n) {
+            val items = parts(p)
+            val take = math.min(items.length.toLong, n - processed).toInt
+            var i = 0
+            while (i < take) {
+              val it = items(i)
+              hist.add(it)
+              reservoir.add(it)
+              sticky.add(it)
+              i += 1
+            }
+            processed += take
+            p += 1
           }
           if (processed >= n) done.release()
         }
       }
       .start()
 
-    done.acquire()
+    while (!done.tryAcquire(100, TimeUnit.MILLISECONDS)) {
+      if (!query.isActive) {
+        query.exception.foreach(e => throw e)
+        throw new IllegalStateException(s"stream stopped after $processed of $n items")
+      }
+    }
     query.stop()
     query.awaitTermination()
 
@@ -96,9 +103,19 @@ object FrequentItemsJob {
       n = processed,
       histogramSize = hist.counts.size,
       trueFrequent = hist.frequent(phi, processed),
-      reservoirSample = reservoir.sample.toSeq,
+      reservoirSample = reservoir.sample,
       reservoirEstimate = reservoir.estimate,
       stickyTableSize = sticky.table.size,
       stickyEstimate = sticky.estimate)
+  }
+
+  /** One partition's `item` column as a single array. */
+  private def longs(rows: Iterator[InternalRow]): Array[Long] = {
+    val b = new mutable.ArrayBuilder.ofLong
+    rows.foreach { r =>
+      if (r.isNullAt(0)) throw new IllegalArgumentException("null item in the stream")
+      b += r.getLong(0)
+    }
+    b.result()
   }
 }

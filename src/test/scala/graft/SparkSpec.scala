@@ -18,6 +18,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.Sessions.CheckpointFileManager._1, graft.core.Sessions.CheckpointFileManager._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

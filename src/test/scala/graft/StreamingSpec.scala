@@ -1,7 +1,14 @@
 package graft
 
+import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener}
 import graft.streaming.{DistributedSketches, FrequentItemsJob, Sketches, StreamJoins, WindowedAnalytics}
 
 class StreamingSpec extends SparkSpec {
@@ -120,6 +127,149 @@ class StreamingSpec extends SparkSpec {
     assert(rep.stickyTableSize >= 10 && rep.stickyTableSize <= 300)
   }
 
+  /** The boxed fold FrequentItemsJob ran before its primitive path —
+    * HashMap histogram and sticky table, ArrayBuffer reservoir — over the
+    * arrival order a Row collect of each batch yields. */
+  private def boxedReport(arrival: Seq[Long], n: Int, phi: Double, epsilon: Double,
+                          delta: Double, seed: Long): FrequentItemsJob.Report = {
+    val items = arrival.take(n)
+    val hist = mutable.HashMap.empty[Long, Long]
+    val m = math.ceil(1.0 / phi).toInt
+    val sample = mutable.ArrayBuffer.empty[Long]
+    val rRng = new scala.util.Random(seed)
+    val r = math.log(1.0 / (delta * phi)) / epsilon
+    val table = mutable.HashMap.empty[Long, Long]
+    val sRng = new scala.util.Random(seed + 1)
+    items.zipWithIndex.foreach { case (it, t) =>
+      hist.update(it, hist.getOrElse(it, 0L) + 1L)
+      if (sample.length < m) sample += it
+      else if (rRng.nextDouble() < m.toDouble / (t + 1).toDouble) sample(rRng.nextInt(m)) = it
+      table.get(it) match {
+        case Some(c) => table.update(it, c + 1)
+        case None => if (sRng.nextDouble() < r / n.toDouble) table.update(it, 1L)
+      }
+    }
+    val threshold = math.ceil(phi * items.size).toLong
+    val stickyThreshold = (phi - epsilon) * n.toDouble
+    FrequentItemsJob.Report(
+      n = items.size,
+      histogramSize = hist.size,
+      trueFrequent = hist.iterator.filter(_._2 >= threshold).map(_._1).toSeq.sorted,
+      reservoirSample = sample.toSeq,
+      reservoirEstimate = sample.distinct.sorted.toSeq,
+      stickyTableSize = table.size,
+      stickyEstimate = table.iterator.filter(_._2 >= stickyThreshold).map(_._1).toSeq.sorted)
+  }
+
+  /** Arrival order of a stream: every batch Row-collected, in order. */
+  private def arrivalOrder(stream: org.apache.spark.sql.DataFrame): Seq[Long] = {
+    val out = mutable.ArrayBuffer.empty[Long]
+    val q = stream.writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+      out ++= b.collect().map(_.getLong(0)); ()
+    }.start()
+    q.processAllAvailable()
+    q.stop()
+    out.toSeq
+  }
+
+  test("FrequentItemsJob: Report bit-identical to the boxed Row fold") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // six planted items at about 4 % each clear phi = 3 %
+    val (phi, eps, delta) = (0.03, 0.01, 0.1)
+    def blocks(seed: Long): Seq[Seq[Long]] = {
+      val items = planted(30000, 6, seed)
+      Seq(items.take(7000), items.slice(7000, 8000), items.slice(8000, 19000),
+        items.slice(19000, 26000), items.drop(26000))
+    }
+    def stream(mem: MemoryStream[Long]) = mem.toDF().select(col("value").as("item"))
+    // one partition per block, fed while the job runs: several batches, the
+    // first spanning several partitions, n cut inside the fourth block
+    for (seed <- Seq(101L, 102L)) {
+      val bs = blocks(seed)
+      val twin = MemoryStream[Long]
+      bs.foreach(twin.addData(_))
+      val expected = boxedReport(arrivalOrder(stream(twin)), 23456, phi, eps, delta, seed)
+      val mem = MemoryStream[Long]
+      bs.take(2).foreach(mem.addData(_))
+      val feeder = new Thread(() => bs.drop(2).foreach { b => Thread.sleep(200); mem.addData(b) })
+      feeder.start()
+      val rep = FrequentItemsJob.run(spark, stream(mem), n = 23456, phi, eps, delta, seed)
+      feeder.join()
+      assert(rep == expected, s"seed $seed")
+      assert(rep.trueFrequent.size == 6 && rep.stickyTableSize > 6 && rep.reservoirSample.size == 34)
+    }
+    // rows spread round-robin over 3 partitions, final batch truncated
+    val bs = blocks(103L)
+    def partitioned() = { val m = MemoryStream[Long](3); bs.foreach(m.addData(_)); m }
+    val expected = boxedReport(arrivalOrder(stream(partitioned())), 29999, phi, eps, delta, 103L)
+    assert(FrequentItemsJob.run(spark, stream(partitioned()), n = 29999, phi, eps, delta, 103L) == expected)
+  }
+
+  test("FrequentItemsJob.run throws instead of hanging when its query dies") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val boom = udf((x: Long) => if (x == 13L) throw new IllegalStateException("boom") else x)
+    // a throwing UDF, and a null item (a socket line that is not a number)
+    for ((item, cause) <- Seq(boom(col("value")) -> "boom",
+                              when(col("value") =!= 13L, col("value")) -> "null item")) {
+      val mem = MemoryStream[Long]
+      mem.addData(1L to 100L)
+      val job = Future(FrequentItemsJob.run(spark, mem.toDF().select(item.as("item")), n = 1000,
+        phi = 0.1, epsilon = 0.05, delta = 0.1))(ExecutionContext.global)
+      val e = intercept[StreamingQueryException](Await.result(job, 60.seconds))
+      assert(e.getMessage.contains(cause))
+    }
+  }
+
+  test("HW3 steady batches fork no process on the stream execution thread") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val chunk = 20000
+    val items = planted(9 * chunk, 5, seed = 21)
+    val done = new java.util.concurrent.LinkedBlockingQueue[java.lang.Long]
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) done.put(e.progress.batchId)
+    }
+    val mem = MemoryStream[Long]
+    val recording = new Recording()
+    recording.enable("jdk.ProcessStart")
+    spark.streams.addListener(listener)
+    val events = try {
+      val job = Future(FrequentItemsJob.run(spark, mem.toDF().select(col("value").as("item")),
+        n = items.size, phi = 0.07, epsilon = 0.03, delta = 0.1))(ExecutionContext.global)
+      // batches 3..7 run inside the recording; a probe fork on another
+      // thread shows the recording sees forks at all
+      for (k <- 0 until 9) {
+        if (k == 3) {
+          recording.start()
+          val probe = new Thread(() => new ProcessBuilder("true").start().waitFor(), "fork probe")
+          probe.start(); probe.join()
+        }
+        if (k == 8) recording.stop()
+        mem.addData(items.slice(k * chunk, (k + 1) * chunk))
+        if (k < 8)
+          assert(done.poll(60, java.util.concurrent.TimeUnit.SECONDS) != null, s"batch for chunk $k")
+      }
+      assert(Await.result(job, 60.seconds).n == items.size)
+      val file = java.nio.file.Files.createTempFile("hw3-forks", ".jfr")
+      recording.dump(file)
+      try RecordingFile.readAllEvents(file).asScala.toSeq
+      finally java.nio.file.Files.delete(file)
+    } finally {
+      spark.streams.removeListener(listener)
+      recording.close()
+    }
+    def on(prefix: String) = events.filter(e => e.getEventType.getName == "jdk.ProcessStart" &&
+      Option(e.getThread).exists(_.getJavaName.startsWith(prefix)))
+    assert(on("fork probe").size == 1)
+    val forks = on("stream execution thread")
+    assert(forks.isEmpty, s"${forks.size} forks, first: ${forks.take(3).map(_.getString("command")).mkString("; ")}")
+  }
+
   test("Reservoir sketch: size bound and fill behavior") {
     val r = new Sketches.Reservoir(10, new scala.util.Random(3))
     (1L to 5L).foreach(r.add)
@@ -131,9 +281,9 @@ class StreamingSpec extends SparkSpec {
   test("StickySampling: tracked items always increment") {
     val s = new Sketches.StickySampling(0.1, 0.05, 0.1, 1000, new scala.util.Random(4))
     // force-track by direct table seed, then verify increments
-    s.table.update(42L, 1L)
+    s.table.add(42L, 1L)
     (1 to 99).foreach(_ => s.add(42L))
-    assert(s.table(42L) == 100L)
+    assert(s.table.getOrElse(42L, 0L) == 100L)
   }
 
   test("DistributedReservoir: deterministic, mergeable, size m") {
