@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR
   * and prints one JSON line. Results are forced through the noop sink so the
@@ -22,6 +22,14 @@ object Bench {
   private[graft] def medianValid(xs: Seq[Double]): Double = {
     val ok = xs.filter(_ >= 0)
     if (ok.nonEmpty) median(ok) else -1.0
+  }
+
+  /** Seconds to build `df` and run it through the noop sink — the one timed
+    * unit of Bench, TimeProbe and OptLab. */
+  private[graft] def timeNoop(df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    df.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** The HIGH VARIANCE stderr line for a run vector whose valid max/min
@@ -532,15 +540,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.core.Sessions.cpus
+    val spark = graft.core.Sessions.local("bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup: touch the scan + hash-agg + shuffle paths once so
     // the first measured query doesn't pay JIT cost
@@ -606,11 +607,7 @@ object Bench {
       System.err.println(s"[bench] resume manifest $resumeFile: serving " +
         s"${resumedClean.size} clean medians, resuming ${resumedPartial.size} " +
         s"partial vectors (key $manifestKey)")
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def once(fn: (SparkSession, String) => DataFrame): Double = timeNoop(fn(spark, sfDir))
     val runsByQ = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
     val failedQ = scala.collection.mutable.Set.empty[String]
     // Compact (name -> warm median) pairs per reference section — hoisted
@@ -1083,21 +1080,30 @@ object Bench {
         f""""${name}_loadavg_post":${loadAvg()}%.2f,$fullProvenance$degradedMark""" +
         f""""${name}_gc_s":${(gcMs() - gc0) / 1000.0}%.2f,"$name":$warmMed%.3f"""
     }
-    // HARD-budget section skip (round 18): past 1.5x the wall budget even
-    // degraded 1-rep anchors stop — a skipped section is absent from the
-    // artifact (same as a dropped one) and logged, bounding the post-budget
-    // tail so the contract line always lands inside the driver's window.
-    def skipSection(section: String): Boolean = {
-      val skip = Bench.hardExhausted()
-      if (skip) System.err.println(s"[bench] section $section SKIPPED (hard wall budget)")
-      skip
-    }
+    // One anchor section. HARD-budget skip (round 18): past 1.5x the wall
+    // budget even degraded 1-rep anchors stop — a skipped section is absent
+    // from the artifact (same as a dropped one) and logged, bounding the
+    // post-budget tail so the contract line always lands inside the
+    // driver's window. Only a genuine anchor mismatch fails the bench;
+    // non-fatal infrastructure failures degrade to an absent section WITH
+    // a stderr trace, so hours of already-validated timings are not
+    // discarded (fatal VM errors — OOM — propagate: a JSON line printed
+    // from a heap in unknown state is worth nothing).
+    def section(name: String)(body: => String): String =
+      if (Bench.hardExhausted()) {
+        System.err.println(s"[bench] section $name SKIPPED (hard wall budget)"); ""
+      } else try body catch {
+        case e: GoldenMismatch => throw e
+        case e if scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] $name section dropped: $e")
+          compactRef.remove(name); ""
+      }
     // BASELINE.md-comparable reference workloads (uber-100k, D=0.02 M=10):
     // published numbers are ExactOutliers 61 655 ms / MRApproxOutliers 960 ms
     val uber = "/root/reference/Homework_1/Data/uber-100k.csv"
-    val ref = if (new java.io.File(uber).exists() && !skipSection("reference")) {
+    val ref = if (new java.io.File(uber).exists()) section("reference") {
       try {
-        val pts = graft.sources.PointSource.read(spark, uber, cpus.toInt)
+        val pts = graft.sources.PointSource.read(spark, uber, cpus)
         pts.count()
         var exactN = -1L
         val exactJson = coldWarm("reference", "exact_outliers_uber100k") {
@@ -1121,15 +1127,6 @@ object Bench {
             s"uber-100k golden anchor MISMATCH: exact=$exactN (want 673) " +
             s"sure=$sure (want 435) uncertain=$unc (want 658)")
         s""","reference":{$exactJson,$approxJson,$fftJson}"""
-      } catch {
-        // only a genuine anchor mismatch fails the bench; non-fatal
-        // infrastructure failures degrade to an absent reference section
-        // WITH a stderr trace (fatal VM errors — OOM — propagate: a JSON
-        // line printed from a heap in unknown state is worth nothing)
-        case e: GoldenMismatch => throw e
-        case e if scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] uber-100k section dropped: $e")
-          compactRef.remove("reference"); ""
       } finally graft.core.InternalCaches.release(spark)
     } else ""
     // Synthetic geometry anchor sections: generate the ArtificialPoints
@@ -1143,7 +1140,7 @@ object Bench {
     // section so hours of already-validated timings are not discarded.
     def syntheticAnchors(tag: String, nClusterPts: Long, numPartitions: Int,
                          k: Int, l: Int, withExact: Boolean,
-                         warmReps: Int = 3): String = if (skipSection(s"reference_$tag")) "" else try {
+                         warmReps: Int = 3): String = section(s"reference_$tag") {
       val pts = graft.sources.ArtificialPoints.generate(spark,
           nClusterPts = nClusterPts, numPartitions = numPartitions)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1173,11 +1170,6 @@ object Bench {
         }
         f""","reference_$tag%s":{$fftJson%s,$approxJson%s,$exactJson%s"radius_k$k%d":$radius%.8f}"""
       } finally { pts.unpersist(); graft.core.InternalCaches.release(spark) }
-    } catch {
-      case e: GoldenMismatch => throw e
-      case e if scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] reference_$tag section dropped: $e")
-        compactRef.remove(s"reference_$tag"); ""
     }
     // reference_1m: the published artificial1M workload (1 000 108 pts,
     // M=10 K=200 L=16 — BASELINE.md: MRFFT R1+R2+R3 ≈ 1.13 s, Radius
@@ -1208,15 +1200,15 @@ object Bench {
     def textAnchor(tag: String, nBase: Long, warmReps: Int,
                    withContainment: Boolean = false,
                    withEdit: Boolean = false): String = {
-      val section = if (tag == "300k") "reference_text" else s"reference_text_$tag"
-      if (skipSection(section)) "" else try {
+      val sec = if (tag == "300k") "reference_text" else s"reference_text_$tag"
+      section(sec) {
         val docs = graft.sources.SyntheticDocs.planted(spark,
             nBase = nBase, nPlant = 1500L)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           docs.count()
           var nPairs = -1L
-          val lshJson = coldWarm(section, s"minhash_lsh_$tag", warmReps) {
+          val lshJson = coldWarm(sec, s"minhash_lsh_$tag", warmReps) {
             nPairs = graft.ops.Text.minHashLshPairs(docs).count() }
           if (nPairs != 1500L)
             throw new GoldenMismatch(
@@ -1228,7 +1220,7 @@ object Bench {
           // the df-capped shingle join must stay linear to find them
           val contJson = if (withContainment) {
             var nCont = -1L
-            val j = coldWarm(section, s"containment_$tag", warmReps) {
+            val j = coldWarm(sec, s"containment_$tag", warmReps) {
               nCont = graft.ops.Text.containmentPairs(docs, tau = 0.85).count() }
             if (nCont != 1500L)
               throw new GoldenMismatch(
@@ -1242,20 +1234,15 @@ object Bench {
           // 1500 bounded DPs
           val editJson = if (withEdit) {
             var nEdit = -1L
-            val j = coldWarm(section, s"edit_verified_$tag", warmReps) {
+            val j = coldWarm(sec, s"edit_verified_$tag", warmReps) {
               nEdit = graft.ops.Text.editVerifiedPairs(docs).count() }
             if (nEdit != 1500L)
               throw new GoldenMismatch(
                 s"edit-verify anchor ($tag) MISMATCH: $nEdit pairs (want the 1500 planted)")
             "," + j
           } else ""
-          s""","$section":{$lshJson$contJson$editJson}"""
+          s""","$sec":{$lshJson$contJson$editJson}"""
         } finally { docs.unpersist(); graft.core.InternalCaches.release(spark) }
-      } catch {
-        case e: GoldenMismatch => throw e
-        case e if scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $section section dropped: $e")
-          compactRef.remove(section); ""
       }
     }
     val refText = textAnchor("300k", nBase = 300000L, warmReps = 3,
@@ -1268,7 +1255,7 @@ object Bench {
     // band hashes — expected hot bucket f·N/s̄², a constant multiple of
     // the mean) and Σ per-bucket pairs ≤ N. A skew regression in the
     // banding fails the bench loudly at 300k, not at 100 TB.
-    val refTextSkew = if (skipSection("reference_text_skew")) "" else try {
+    val refTextSkew = section("reference_text_skew") {
       val docs = graft.sources.SyntheticDocs.planted(spark,
           nBase = 300000L, nPlant = 1500L, hotEvery = 10)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1289,11 +1276,6 @@ object Bench {
         s""","reference_text_skew":{$lshJson,"skew_max_bucket":$maxB,""" +
           f""""skew_mean_bucket":$meanB%.3f,"skew_cand_pairs":$candPairs}"""
       } finally { docs.unpersist(); graft.core.InternalCaches.release(spark) }
-    } catch {
-      case e: GoldenMismatch => throw e
-      case e if scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] reference_text_skew section dropped: $e")
-        compactRef.remove("reference_text_skew"); ""
     }
     // reference_text_1m (opt-in: SPARK_GRAFT_BIG=1): the dedup path is the
     // engine's flagship 100 TB claim — this tier proves the banded join
@@ -1311,99 +1293,92 @@ object Bench {
     // contiguous 8192-token bins). A wrong number in ANY stage — quality,
     // dedup, LSH recall, chunk arithmetic, prefix-sum packing — fails the
     // bench loudly at 1M scale.
-    val refPipe1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1") && !skipSection("reference_pipeline_1m")) {
+    val refPipe1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1")) section("reference_pipeline_1m") {
+      val docs = graft.sources.SyntheticDocs.planted(spark,
+          nBase = 1000000L, nPlant = 1500L)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val docs = graft.sources.SyntheticDocs.planted(spark,
-            nBase = 1000000L, nPlant = 1500L)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          docs.count()
-          var rows = Array.empty[org.apache.spark.sql.Row]
-          val j = coldWarm("reference_pipeline_1m", "pipeline_1m", warmReps = 3) {
-            rows = graft.ops.Pipeline.summaryOver(docs).collect() }
-          val bad = rows.length != 4 || rows.exists { r =>
-            r.getLong(1) != 250375L || r.getLong(2) != 250000L ||
-            r.getLong(3) != 500000L || r.getLong(4) != 1465L }
-          if (bad) throw new GoldenMismatch(
-            s"pipeline 1M anchor MISMATCH: ${rows.mkString("; ")} " +
-            "(want 4 x [lang, 250375, 250000, 500000, 1465])")
-          // split_leakage_1m (round 13): both corpus-sized semi-join tiers
-          // at 1M train docs with leak ground truth BY CONSTRUCTION — the
-          // 1500 plants are the eval split, every plant shares its base
-          // doc's 8-gram shingles (one mid-doc swap leaves both flanks
-          // intact) so n_near = exactly 375 per language; the exact tier
-          // fires only on the ~1-in-5000 swapped-token collisions
-          // (bounded, not pinned). A missed leak or a phantom one fails
-          // loudly at 1M scale.
-          var leakRows = Array.empty[org.apache.spark.sql.Row]
-          val jLeak = coldWarm("reference_pipeline_1m", "split_leakage_1m",
-              warmReps = 3) {
-            leakRows = graft.ops.Text.splitLeakage(
-                docs.withColumnRenamed("lang", "source"),
-                org.apache.spark.sql.functions.col("doc_id") >= 1000000L,
-                n = 8)
-              .collect() }
-          val leakBad = leakRows.length != 4 || leakRows.exists { r =>
-            r.getLong(1) != 375L || r.getLong(3) != 375L ||
-            r.getLong(2) > 3L }
-          if (leakBad) throw new GoldenMismatch(
-            s"split leakage 1M anchor MISMATCH: ${leakRows.mkString("; ")} " +
-            "(want 4 x [lang, 375 eval, <=3 exact, 375 near])")
-          // streaming_funnel_1m (round 15): the ingest-time funnel twin's
-          // flat-lineage claim, MEASURED — 1M base docs + the q167-style
-          // re-keyed exact-dup plants replayed through StreamingFunnel in
-          // 8 micro-batches (plants FIRST, so their small-id originals
-          // arriving later exercise retroactive canonical displacement at
-          // scale). Per-batch cost must stay flat (batch-bounded work —
-          // the round-15 contract; the earlier full-history re-checkpoint
-          // was O(batches²) and would show the late batches ~2-3x the
-          // early ones), and the converged report must equal the batch
-          // funnel over the identical corpus.
-          import org.apache.spark.sql.functions.{col, expr, lit, pmod}
-          val funnelBase = docs.filter(col("doc_id") < 1000000L)
-            .withColumnRenamed("lang", "source")
-          val funnelPlants = funnelBase.filter(expr("doc_id % 16 = 1"))
-            .select((lit(4L) * (col("doc_id") + lit(1000000000L))).as("doc_id"),
-              col("source"), col("text"))
-          val funnel = new graft.streaming.StatefulOps.StreamingFunnel
-          val batches = funnelPlants +: (0 until 7).map(i =>
-            funnelBase.filter(pmod(col("doc_id"), lit(7)) === i))
-          val batchTimes = batches.map(b => time(funnel.ingestBatch(b))).toVector
-          var reportRows = Array.empty[String]
-          val tReport = time {
-            reportRows = funnel.report().collect().map(_.toString).sorted }
-          val wantRows = graft.ops.Text.filterFunnel(
-              funnelBase.unionByName(funnelPlants))
-            .collect().map(_.toString).sorted
-          if (reportRows.toSeq != wantRows.toSeq)
-            throw new GoldenMismatch(
-              s"streaming funnel 1M diverges from the batch funnel: " +
-              s"${reportRows.mkString("; ")} vs ${wantRows.mkString("; ")}")
-          // batches 1-3 and 5-7 are the equal-sized base batches (batch 0
-          // is the smaller plant batch); flat per-batch cost puts the two
-          // medians within noise of each other
-          val fEarly = batchTimes.slice(1, 4).sorted.apply(1)
-          val fLate = batchTimes.slice(5, 8).sorted.apply(1)
-          val funnelFlat = fLate / math.max(fEarly, 0.05)
-          if (funnelFlat > 3.0)
-            System.err.println(
-              f"[bench] WARNING streaming funnel per-batch cost NOT flat: late-batch " +
-              f"median $funnelFlat%.1fx the early one (batch-bounded ingest predicts ~1x)")
-          addCompact("reference_pipeline_1m", "streaming_funnel_1m",
-            f"${batchTimes.sum}%.2f")
-          val jFunnel =
-            f""""streaming_funnel_1m_batches":[${batchTimes.map(t => f"$t%.3f").mkString(",")}],""" +
-            f""""streaming_funnel_1m_flat_ratio":$funnelFlat%.2f,""" +
-            f""""streaming_funnel_1m_report_s":$tReport%.3f,""" +
-            f""""streaming_funnel_1m":${batchTimes.sum}%.3f"""
-          s""","reference_pipeline_1m":{$j,$jLeak,$jFunnel}"""
-        } finally { docs.unpersist(); graft.core.InternalCaches.release(spark) }
-      } catch {
-        case e: GoldenMismatch => throw e
-        case e if scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] reference_pipeline_1m section dropped: $e")
-          compactRef.remove("reference_pipeline_1m"); ""
-      }
+        docs.count()
+        var rows = Array.empty[org.apache.spark.sql.Row]
+        val j = coldWarm("reference_pipeline_1m", "pipeline_1m", warmReps = 3) {
+          rows = graft.ops.Pipeline.summaryOver(docs).collect() }
+        val bad = rows.length != 4 || rows.exists { r =>
+          r.getLong(1) != 250375L || r.getLong(2) != 250000L ||
+          r.getLong(3) != 500000L || r.getLong(4) != 1465L }
+        if (bad) throw new GoldenMismatch(
+          s"pipeline 1M anchor MISMATCH: ${rows.mkString("; ")} " +
+          "(want 4 x [lang, 250375, 250000, 500000, 1465])")
+        // split_leakage_1m (round 13): both corpus-sized semi-join tiers
+        // at 1M train docs with leak ground truth BY CONSTRUCTION — the
+        // 1500 plants are the eval split, every plant shares its base
+        // doc's 8-gram shingles (one mid-doc swap leaves both flanks
+        // intact) so n_near = exactly 375 per language; the exact tier
+        // fires only on the ~1-in-5000 swapped-token collisions
+        // (bounded, not pinned). A missed leak or a phantom one fails
+        // loudly at 1M scale.
+        var leakRows = Array.empty[org.apache.spark.sql.Row]
+        val jLeak = coldWarm("reference_pipeline_1m", "split_leakage_1m",
+            warmReps = 3) {
+          leakRows = graft.ops.Text.splitLeakage(
+              docs.withColumnRenamed("lang", "source"),
+              org.apache.spark.sql.functions.col("doc_id") >= 1000000L,
+              n = 8)
+            .collect() }
+        val leakBad = leakRows.length != 4 || leakRows.exists { r =>
+          r.getLong(1) != 375L || r.getLong(3) != 375L ||
+          r.getLong(2) > 3L }
+        if (leakBad) throw new GoldenMismatch(
+          s"split leakage 1M anchor MISMATCH: ${leakRows.mkString("; ")} " +
+          "(want 4 x [lang, 375 eval, <=3 exact, 375 near])")
+        // streaming_funnel_1m (round 15): the ingest-time funnel twin's
+        // flat-lineage claim, MEASURED — 1M base docs + the q167-style
+        // re-keyed exact-dup plants replayed through StreamingFunnel in
+        // 8 micro-batches (plants FIRST, so their small-id originals
+        // arriving later exercise retroactive canonical displacement at
+        // scale). Per-batch cost must stay flat (batch-bounded work —
+        // the round-15 contract; the earlier full-history re-checkpoint
+        // was O(batches²) and would show the late batches ~2-3x the
+        // early ones), and the converged report must equal the batch
+        // funnel over the identical corpus.
+        import org.apache.spark.sql.functions.{col, expr, lit, pmod}
+        val funnelBase = docs.filter(col("doc_id") < 1000000L)
+          .withColumnRenamed("lang", "source")
+        val funnelPlants = funnelBase.filter(expr("doc_id % 16 = 1"))
+          .select((lit(4L) * (col("doc_id") + lit(1000000000L))).as("doc_id"),
+            col("source"), col("text"))
+        val funnel = new graft.streaming.StatefulOps.StreamingFunnel
+        val batches = funnelPlants +: (0 until 7).map(i =>
+          funnelBase.filter(pmod(col("doc_id"), lit(7)) === i))
+        val batchTimes = batches.map(b => time(funnel.ingestBatch(b))).toVector
+        var reportRows = Array.empty[String]
+        val tReport = time {
+          reportRows = funnel.report().collect().map(_.toString).sorted }
+        val wantRows = graft.ops.Text.filterFunnel(
+            funnelBase.unionByName(funnelPlants))
+          .collect().map(_.toString).sorted
+        if (reportRows.toSeq != wantRows.toSeq)
+          throw new GoldenMismatch(
+            s"streaming funnel 1M diverges from the batch funnel: " +
+            s"${reportRows.mkString("; ")} vs ${wantRows.mkString("; ")}")
+        // batches 1-3 and 5-7 are the equal-sized base batches (batch 0
+        // is the smaller plant batch); flat per-batch cost puts the two
+        // medians within noise of each other
+        val fEarly = batchTimes.slice(1, 4).sorted.apply(1)
+        val fLate = batchTimes.slice(5, 8).sorted.apply(1)
+        val funnelFlat = fLate / math.max(fEarly, 0.05)
+        if (funnelFlat > 3.0)
+          System.err.println(
+            f"[bench] WARNING streaming funnel per-batch cost NOT flat: late-batch " +
+            f"median $funnelFlat%.1fx the early one (batch-bounded ingest predicts ~1x)")
+        addCompact("reference_pipeline_1m", "streaming_funnel_1m",
+          f"${batchTimes.sum}%.2f")
+        val jFunnel =
+          f""""streaming_funnel_1m_batches":[${batchTimes.map(t => f"$t%.3f").mkString(",")}],""" +
+          f""""streaming_funnel_1m_flat_ratio":$funnelFlat%.2f,""" +
+          f""""streaming_funnel_1m_report_s":$tReport%.3f,""" +
+          f""""streaming_funnel_1m":${batchTimes.sum}%.3f"""
+        s""","reference_pipeline_1m":{$j,$jLeak,$jFunnel}"""
+      } finally { docs.unpersist(); graft.core.InternalCaches.release(spark) }
     } else ""
     // reference_tok_1m (opt-in: SPARK_GRAFT_BIG=1): the round-11 tokenizer
     // and retrieval layer at 1M docs (~2000x the gate corpus). BPE training
@@ -1414,215 +1389,208 @@ object Bench {
     // explode must return the full k with every hit containing a query
     // term. Self-evident invariants only — both operators' exact values
     // are oracle-gated at sf tiers; this tier proves the SCALE shape.
-    val refTok1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1") && !skipSection("reference_tok_1m")) {
+    val refTok1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1")) section("reference_tok_1m") {
+      val docs = graft.sources.SyntheticDocs.planted(spark,
+          nBase = 1000000L, nPlant = 0L)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val docs = graft.sources.SyntheticDocs.planted(spark,
-            nBase = 1000000L, nPlant = 0L)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          docs.count()
-          var mergeTables = Vector.empty[Seq[(Long, String, String, String, Long)]]
-          val bpeJson = coldWarm("reference_tok_1m", "bpe_train_1m", warmReps = 3) {
-            mergeTables = mergeTables :+ graft.ops.Text.bpeTrain(docs, nMerges = 8)
-              .collect().toSeq.map(r => (r.getLong(0), r.getString(1),
-                r.getString(2), r.getString(3), r.getLong(4))) }
-          val bad = mergeTables.exists { t =>
-            t.size != 8 || t.exists { case (_, l, r2, m, c) => m != l + r2 || c <= 0L } } ||
-            mergeTables.distinct.size != 1
-          if (bad) throw new GoldenMismatch(
-            s"bpe 1M anchor MISMATCH: ${mergeTables.map(_.take(2)).mkString(" | ")} " +
-            "(want 8 stable merges, merged = lhs+rhs, positive counts)")
-          // bpe_train_1m_256 (round 12): PRODUCTION merge counts. The
-          // per-merge eager localCheckpoint keeps plan depth constant, so
-          // cost must stay ~linear in merges (flat per-merge) — the r11
-          // regime this contract covered only in prose. The 8-merge
-          // anchor above already cached the base word table, so the
-          // ratio below is a near-pure merge-loop measurement: flat
-          // per-merge cost predicts ~32x the 8-merge time; quadratic
-          // lineage replay predicts >1000x. The merge table must also be
-          // identical across reps AND serve the full 256 requested (the
-          // 5000-token synthetic vocab sustains far more).
-          var mergeTables256 = Vector.empty[Seq[(Long, String, String)]]
-          val bpe256Json = coldWarm("reference_tok_1m", "bpe_train_1m_256", warmReps = 3) {
-            mergeTables256 = mergeTables256 :+ graft.ops.Text.bpeTrain(docs, nMerges = 256)
-              .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getString(2))) }
-          if (mergeTables256.exists(_.size != 256) || mergeTables256.distinct.size != 1)
-            throw new GoldenMismatch(
-              s"bpe 1M 256-merge anchor MISMATCH: sizes ${mergeTables256.map(_.size)} " +
-              "(want 3 identical 256-merge tables)")
-          val warm8 = timeOf(bpeJson, "bpe_train_1m_warm")
-          val warm256 = timeOf(bpe256Json, "bpe_train_1m_256_warm")
-          // a parse failure must fail LOUDLY, not let the flatness gate
-          // self-disable on a negative ratio (round-13 ADVICE fix)
-          if (warm8 < 0 || warm256 < 0) throw new GoldenMismatch(
-            s"bpe flatness inputs unparsed: warm8=$warm8 warm256=$warm256 " +
-            "— timeOf found no warm reading, the cross-anchor assert cannot run")
-          val mergeScale = warm256 / math.max(warm8, 0.05)
-          if (mergeScale > 96.0) throw new GoldenMismatch(
-            f"bpe per-merge cost NOT FLAT: 256 merges took $mergeScale%.1fx the " +
-            "8-merge anchor (flat predicts ~32x, bound 96x — lineage cut regressed?)")
-          // bpe_train_1m_4k (round 13): a REAL tokenizer's merge count
-          // regime (4096 — the 30k path is the same mechanism, just more
-          // iterations of a measured-flat loop). One warm rep keeps the
-          // ~16x-the-256-anchor runtime bounded; cold + warm both collect
-          // the merge table, which must be identical (training is a pure
-          // function of the corpus) and the full 4096 requested (the
-          // ~5000-word synthetic vocab sustains ~17k merges).
-          var mergeTables4k = Vector.empty[Seq[(String, String)]]
-          val bpe4kJson = coldWarm("reference_tok_1m", "bpe_train_1m_4k", warmReps = 1) {
-            mergeTables4k = mergeTables4k :+ graft.ops.Text.bpeTrain(docs, nMerges = 4096)
-              .collect().toSeq.map(r => (r.getString(1), r.getString(2))) }
-          if (mergeTables4k.exists(_.size != 4096) || mergeTables4k.distinct.size != 1)
-            throw new GoldenMismatch(
-              s"bpe 1M 4k-merge anchor MISMATCH: sizes ${mergeTables4k.map(_.size)} " +
-              "(want identical 4096-row merge tables across reps)")
-          val warm4k = timeOf(bpe4kJson, "bpe_train_1m_4k_warm")
-          if (warm4k < 0) throw new GoldenMismatch(
-            s"bpe 4k flatness input unparsed: warm4k=$warm4k")
-          val mergeScale4k = warm4k / math.max(warm256, 0.05)
-          if (mergeScale4k > 48.0) throw new GoldenMismatch(
-            f"bpe per-merge cost NOT FLAT at 4k: 4096 merges took " +
-            f"$mergeScale4k%.1fx the 256-merge anchor (flat predicts ~16x, bound 48x)")
-          // bpe_infer_1m_4k (round 13): frozen-table inference at the SAME
-          // production merge count — 4096 replaces chunked every 64 into
-          // 64 localCheckpointed projection jobs over the vocab-bounded
-          // word table (the chunked path was spec-only before this
-          // anchor). The histogram must be identical across reps.
-          var histos4k = Vector.empty[Seq[(String, Long)]]
-          val infer4kJson = coldWarm("reference_tok_1m", "bpe_infer_1m_4k", warmReps = 1) {
-            histos4k = histos4k :+ graft.ops.Text.bpeApplyMerges(
-                docs, mergeTables4k.head, topK = 20)
-              .collect().toSeq.map(r => (r.getString(0), r.getLong(1))) }
-          if (histos4k.exists(_.size != 20) || histos4k.distinct.size != 1)
-            throw new GoldenMismatch(
-              s"bpe 1M 4k inference anchor MISMATCH: sizes ${histos4k.map(_.size)} " +
-              "(want identical 20-row histograms across reps)")
-          var hits = Array.empty[org.apache.spark.sql.Row]
-          val bmJson = coldWarm("reference_tok_1m", "bm25_1m", warmReps = 3) {
-            hits = graft.ops.Text.bm25(docs, Seq("t0", "t1", "t2")).collect() }
-          if (hits.length != 10 ||
-              hits.exists(r => r.getLong(1) < 1L || r.getLong(1) > 3L))
-            throw new GoldenMismatch(
-              s"bm25 1M anchor MISMATCH: ${hits.length} rows " +
-              s"n_hit=${hits.map(_.getLong(1)).mkString(",")} (want 10 rows, hits in [1,3])")
-          // dirichlet_ql_1m (round 13): the LM-retrieval twin on the same
-          // posting plan — full k served, every hit matched >= 1 query
-          // term, and the ranking must be identical across reps (scoring
-          // is a pure function of the corpus)
-          var qlRows = Vector.empty[Seq[(Long, Long)]]
-          val qlJson = coldWarm("reference_tok_1m", "dirichlet_ql_1m", warmReps = 3) {
-            qlRows = qlRows :+ graft.ops.Text.dirichletQL(docs, Seq("t0", "t1", "t2"))
-              .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))) }
-          if (qlRows.exists(t => t.size != 10 ||
-                t.exists { case (_, h) => h < 1L || h > 3L }) ||
-              qlRows.distinct.size != 1)
-            throw new GoldenMismatch(
-              s"dirichlet QL 1M anchor MISMATCH: sizes ${qlRows.map(_.size)} " +
-              "(want identical 10-row rankings, hits in [1,3])")
-          // unigram_viterbi_1m (round 13): the FOURTH tokenizer family at
-          // 1M docs — the Viterbi DP's cost is vocab-bounded stages, so
-          // the corpus size only pays the one token scan; the report must
-          // be identical across reps (segmentation is a pure function of
-          // the corpus), non-UNK scores strictly negative, every piece
-          // count >= 1
-          var vitReports = Vector.empty[Seq[(String, Long, Long, String)]]
-          val vitJson = coldWarm("reference_tok_1m", "unigram_viterbi_1m", warmReps = 1) {
-            vitReports = vitReports :+ graft.ops.Text.unigramViterbi(docs)
-              .collect().toSeq.map(r => (r.getString(0), r.getLong(1),
-                r.getLong(2), r.getString(3))) }
-          val vitBad = vitReports.exists { t =>
-            t.size != 100 || t.exists { case (w, cnt, np, seq) =>
-              cnt <= 0L || np < 1L || (seq != "[UNK]" && seq.replace(" ", "") != w) } } ||
-            vitReports.distinct.size != 1
-          if (vitBad) throw new GoldenMismatch(
-            s"unigram viterbi 1M anchor MISMATCH: sizes ${vitReports.map(_.size)} " +
-            "(want identical 100-row reports whose pieces rejoin the word)")
-          // unigram_train_1m (round 14): hard-EM TRAINING of the fourth
-          // tokenizer family at 1M docs — nIters=3 rounds of the q140 DP
-          // over the vocab-bounded word table, so corpus size pays the
-          // ONE token scan and each EM round is corpus-size-independent.
-          // The trained piece table must be identical across reps
-          // (training is a pure function of the corpus), the alphabet
-          // complete at mass >= 1, every lp9 strictly negative, and the
-          // multi-char survivors within the top-V budget. The
-          // cross-anchor flatness gate below pins the "one scan +
-          // vocab-bounded iterations" shape: 3 EM rounds each do ~one
-          // Viterbi DP + a bounded m-step, so warm cost must stay within
-          // 12x the single-DP viterbi anchor (a trainer that re-scans
-          // the corpus per iteration blows through it).
-          var trainTables = Vector.empty[Seq[(String, Long, Long, Long)]]
-          val trainJson = coldWarm("reference_tok_1m", "unigram_train_1m", warmReps = 1) {
-            trainTables = trainTables :+ graft.ops.Text.unigramTrain(docs)
-              .collect().toSeq.map(r => (r.getString(0), r.getLong(1),
-                r.getLong(2), r.getLong(3))) }
-          val trainBad = trainTables.exists { t =>
-            t.isEmpty || t.count(_._1.length >= 2) > 40 ||
-              t.exists { case (p, l, m, lp) =>
-                l != p.length.toLong || m < 1L || lp >= 0L } } ||
-            trainTables.distinct.size != 1
-          if (trainBad) throw new GoldenMismatch(
-            s"unigram train 1M anchor MISMATCH: sizes ${trainTables.map(_.size)} " +
-            "(want identical piece tables, alphabet mass >= 1, lp9 < 0, <= 40 multi-char)")
-          val warmVit = timeOf(vitJson, "unigram_viterbi_1m_warm")
-          val warmTrain = timeOf(trainJson, "unigram_train_1m_warm")
-          if (warmVit < 0 || warmTrain < 0) throw new GoldenMismatch(
-            s"unigram flatness inputs unparsed: vit=$warmVit train=$warmTrain")
-          // Timing-ratio gate WARNS instead of throwing (round 15,
-          // advisor): with warmReps=1 a single contended rep would have
-          // converted a perf flake into a correctness-mismatch abort of
-          // the whole BIG tier. The ratio is always in the artifact
-          // (unigram_train_scale_ratio) so a real shape regression is
-          // still machine-readable; correctness mismatches above still
-          // throw.
-          val trainScale = warmTrain / math.max(warmVit, 0.05)
-          if (trainScale > 12.0)
-            System.err.println(
-              f"[bench] WARNING unigram EM cost ratio $trainScale%.1fx over the 12x " +
-              "vocab-bounded bar (3 flat EM rounds predict ~3-4x) — perf flake or " +
-              "shape regression; see unigram_train_scale_ratio in the artifact")
-          // wordpiece_train_1m (round 15): the LAST tokenizer trainer —
-          // the q118 merge loop scored by the exact scaled-integer
-          // likelihood. Same scale contract as BPE training (one corpus
-          // scan + vocab-bounded iterations); per iteration it runs TWO
-          // vocab-bounded aggregations (pairs + unigrams) instead of
-          // one, so warm cost should sit at ~2-3x the 8-merge BPE
-          // anchor; a trainer that re-scans the corpus per merge blows
-          // the recorded ratio. The merge table must be well-formed and
-          // every score positive (cnt(ab) <= cnt(a), cnt(b) bounds
-          // score18 at (0, 1e18]).
-          var wpTables = Vector.empty[Seq[(Long, String, String, String, Long, Long)]]
-          val wpJson = coldWarm("reference_tok_1m", "wordpiece_train_1m", warmReps = 1) {
-            wpTables = wpTables :+ graft.ops.Text.wordpieceTrain(docs, nMerges = 8)
-              .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getString(2),
-                r.getString(3), r.getLong(4), r.getLong(5))) }
-          val wpBad = wpTables.exists { t =>
-            t.size != 8 || t.exists { case (_, l, r2, m, c, s18) =>
-              m != l + r2 || c <= 0L || s18 <= 0L || s18 > 1000000000000000000L } } ||
-            wpTables.distinct.size != 1
-          if (wpBad) throw new GoldenMismatch(
-            s"wordpiece 1M anchor MISMATCH: ${wpTables.map(_.take(2)).mkString(" | ")} " +
-            "(want 8 stable merges, merged = lhs+rhs, cnt > 0, score18 in (0, 1e18])")
-          val warmWp = timeOf(wpJson, "wordpiece_train_1m_warm")
-          if (warmWp < 0) throw new GoldenMismatch(
-            s"wordpiece flatness input unparsed: warmWp=$warmWp")
-          val wpScale = warmWp / math.max(warm8, 0.05)
-          if (wpScale > 12.0)
-            System.err.println(
-              f"[bench] WARNING wordpiece train cost ratio $wpScale%.1fx the 8-merge " +
-              "BPE anchor (two vocab-bounded aggs/iter predict ~2-3x, bar 12x) — " +
-              "perf flake or a corpus re-scan crept into the loop")
-          s""","reference_tok_1m":{$bpeJson,$bpe256Json,$bpe4kJson,$infer4kJson,$bmJson,$qlJson,$vitJson,$trainJson,$wpJson,""" +
-            f""""bpe_merge_scale_ratio":$mergeScale%.2f,""" +
-            f""""unigram_train_scale_ratio":$trainScale%.2f,""" +
-            f""""wordpiece_train_scale_ratio":$wpScale%.2f,""" +
-            f""""bpe_merge_scale_ratio_4k":$mergeScale4k%.2f,"bpe_infer_chunks":64}"""
-        } finally { docs.unpersist(); graft.core.InternalCaches.release(spark) }
-      } catch {
-        case e: GoldenMismatch => throw e
-        case e if scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] reference_tok_1m section dropped: $e")
-          compactRef.remove("reference_tok_1m"); ""
-      }
+        docs.count()
+        var mergeTables = Vector.empty[Seq[(Long, String, String, String, Long)]]
+        val bpeJson = coldWarm("reference_tok_1m", "bpe_train_1m", warmReps = 3) {
+          mergeTables = mergeTables :+ graft.ops.Text.bpeTrain(docs, nMerges = 8)
+            .collect().toSeq.map(r => (r.getLong(0), r.getString(1),
+              r.getString(2), r.getString(3), r.getLong(4))) }
+        val bad = mergeTables.exists { t =>
+          t.size != 8 || t.exists { case (_, l, r2, m, c) => m != l + r2 || c <= 0L } } ||
+          mergeTables.distinct.size != 1
+        if (bad) throw new GoldenMismatch(
+          s"bpe 1M anchor MISMATCH: ${mergeTables.map(_.take(2)).mkString(" | ")} " +
+          "(want 8 stable merges, merged = lhs+rhs, positive counts)")
+        // bpe_train_1m_256 (round 12): PRODUCTION merge counts. The
+        // per-merge eager localCheckpoint keeps plan depth constant, so
+        // cost must stay ~linear in merges (flat per-merge) — the r11
+        // regime this contract covered only in prose. The 8-merge
+        // anchor above already cached the base word table, so the
+        // ratio below is a near-pure merge-loop measurement: flat
+        // per-merge cost predicts ~32x the 8-merge time; quadratic
+        // lineage replay predicts >1000x. The merge table must also be
+        // identical across reps AND serve the full 256 requested (the
+        // 5000-token synthetic vocab sustains far more).
+        var mergeTables256 = Vector.empty[Seq[(Long, String, String)]]
+        val bpe256Json = coldWarm("reference_tok_1m", "bpe_train_1m_256", warmReps = 3) {
+          mergeTables256 = mergeTables256 :+ graft.ops.Text.bpeTrain(docs, nMerges = 256)
+            .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getString(2))) }
+        if (mergeTables256.exists(_.size != 256) || mergeTables256.distinct.size != 1)
+          throw new GoldenMismatch(
+            s"bpe 1M 256-merge anchor MISMATCH: sizes ${mergeTables256.map(_.size)} " +
+            "(want 3 identical 256-merge tables)")
+        val warm8 = timeOf(bpeJson, "bpe_train_1m_warm")
+        val warm256 = timeOf(bpe256Json, "bpe_train_1m_256_warm")
+        // a parse failure must fail LOUDLY, not let the flatness gate
+        // self-disable on a negative ratio (round-13 ADVICE fix)
+        if (warm8 < 0 || warm256 < 0) throw new GoldenMismatch(
+          s"bpe flatness inputs unparsed: warm8=$warm8 warm256=$warm256 " +
+          "— timeOf found no warm reading, the cross-anchor assert cannot run")
+        val mergeScale = warm256 / math.max(warm8, 0.05)
+        if (mergeScale > 96.0) throw new GoldenMismatch(
+          f"bpe per-merge cost NOT FLAT: 256 merges took $mergeScale%.1fx the " +
+          "8-merge anchor (flat predicts ~32x, bound 96x — lineage cut regressed?)")
+        // bpe_train_1m_4k (round 13): a REAL tokenizer's merge count
+        // regime (4096 — the 30k path is the same mechanism, just more
+        // iterations of a measured-flat loop). One warm rep keeps the
+        // ~16x-the-256-anchor runtime bounded; cold + warm both collect
+        // the merge table, which must be identical (training is a pure
+        // function of the corpus) and the full 4096 requested (the
+        // ~5000-word synthetic vocab sustains ~17k merges).
+        var mergeTables4k = Vector.empty[Seq[(String, String)]]
+        val bpe4kJson = coldWarm("reference_tok_1m", "bpe_train_1m_4k", warmReps = 1) {
+          mergeTables4k = mergeTables4k :+ graft.ops.Text.bpeTrain(docs, nMerges = 4096)
+            .collect().toSeq.map(r => (r.getString(1), r.getString(2))) }
+        if (mergeTables4k.exists(_.size != 4096) || mergeTables4k.distinct.size != 1)
+          throw new GoldenMismatch(
+            s"bpe 1M 4k-merge anchor MISMATCH: sizes ${mergeTables4k.map(_.size)} " +
+            "(want identical 4096-row merge tables across reps)")
+        val warm4k = timeOf(bpe4kJson, "bpe_train_1m_4k_warm")
+        if (warm4k < 0) throw new GoldenMismatch(
+          s"bpe 4k flatness input unparsed: warm4k=$warm4k")
+        val mergeScale4k = warm4k / math.max(warm256, 0.05)
+        if (mergeScale4k > 48.0) throw new GoldenMismatch(
+          f"bpe per-merge cost NOT FLAT at 4k: 4096 merges took " +
+          f"$mergeScale4k%.1fx the 256-merge anchor (flat predicts ~16x, bound 48x)")
+        // bpe_infer_1m_4k (round 13): frozen-table inference at the SAME
+        // production merge count — 4096 replaces chunked every 64 into
+        // 64 localCheckpointed projection jobs over the vocab-bounded
+        // word table (the chunked path was spec-only before this
+        // anchor). The histogram must be identical across reps.
+        var histos4k = Vector.empty[Seq[(String, Long)]]
+        val infer4kJson = coldWarm("reference_tok_1m", "bpe_infer_1m_4k", warmReps = 1) {
+          histos4k = histos4k :+ graft.ops.Text.bpeApplyMerges(
+              docs, mergeTables4k.head, topK = 20)
+            .collect().toSeq.map(r => (r.getString(0), r.getLong(1))) }
+        if (histos4k.exists(_.size != 20) || histos4k.distinct.size != 1)
+          throw new GoldenMismatch(
+            s"bpe 1M 4k inference anchor MISMATCH: sizes ${histos4k.map(_.size)} " +
+            "(want identical 20-row histograms across reps)")
+        var hits = Array.empty[org.apache.spark.sql.Row]
+        val bmJson = coldWarm("reference_tok_1m", "bm25_1m", warmReps = 3) {
+          hits = graft.ops.Text.bm25(docs, Seq("t0", "t1", "t2")).collect() }
+        if (hits.length != 10 ||
+            hits.exists(r => r.getLong(1) < 1L || r.getLong(1) > 3L))
+          throw new GoldenMismatch(
+            s"bm25 1M anchor MISMATCH: ${hits.length} rows " +
+            s"n_hit=${hits.map(_.getLong(1)).mkString(",")} (want 10 rows, hits in [1,3])")
+        // dirichlet_ql_1m (round 13): the LM-retrieval twin on the same
+        // posting plan — full k served, every hit matched >= 1 query
+        // term, and the ranking must be identical across reps (scoring
+        // is a pure function of the corpus)
+        var qlRows = Vector.empty[Seq[(Long, Long)]]
+        val qlJson = coldWarm("reference_tok_1m", "dirichlet_ql_1m", warmReps = 3) {
+          qlRows = qlRows :+ graft.ops.Text.dirichletQL(docs, Seq("t0", "t1", "t2"))
+            .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))) }
+        if (qlRows.exists(t => t.size != 10 ||
+              t.exists { case (_, h) => h < 1L || h > 3L }) ||
+            qlRows.distinct.size != 1)
+          throw new GoldenMismatch(
+            s"dirichlet QL 1M anchor MISMATCH: sizes ${qlRows.map(_.size)} " +
+            "(want identical 10-row rankings, hits in [1,3])")
+        // unigram_viterbi_1m (round 13): the FOURTH tokenizer family at
+        // 1M docs — the Viterbi DP's cost is vocab-bounded stages, so
+        // the corpus size only pays the one token scan; the report must
+        // be identical across reps (segmentation is a pure function of
+        // the corpus), non-UNK scores strictly negative, every piece
+        // count >= 1
+        var vitReports = Vector.empty[Seq[(String, Long, Long, String)]]
+        val vitJson = coldWarm("reference_tok_1m", "unigram_viterbi_1m", warmReps = 1) {
+          vitReports = vitReports :+ graft.ops.Text.unigramViterbi(docs)
+            .collect().toSeq.map(r => (r.getString(0), r.getLong(1),
+              r.getLong(2), r.getString(3))) }
+        val vitBad = vitReports.exists { t =>
+          t.size != 100 || t.exists { case (w, cnt, np, seq) =>
+            cnt <= 0L || np < 1L || (seq != "[UNK]" && seq.replace(" ", "") != w) } } ||
+          vitReports.distinct.size != 1
+        if (vitBad) throw new GoldenMismatch(
+          s"unigram viterbi 1M anchor MISMATCH: sizes ${vitReports.map(_.size)} " +
+          "(want identical 100-row reports whose pieces rejoin the word)")
+        // unigram_train_1m (round 14): hard-EM TRAINING of the fourth
+        // tokenizer family at 1M docs — nIters=3 rounds of the q140 DP
+        // over the vocab-bounded word table, so corpus size pays the
+        // ONE token scan and each EM round is corpus-size-independent.
+        // The trained piece table must be identical across reps
+        // (training is a pure function of the corpus), the alphabet
+        // complete at mass >= 1, every lp9 strictly negative, and the
+        // multi-char survivors within the top-V budget. The
+        // cross-anchor flatness gate below pins the "one scan +
+        // vocab-bounded iterations" shape: 3 EM rounds each do ~one
+        // Viterbi DP + a bounded m-step, so warm cost must stay within
+        // 12x the single-DP viterbi anchor (a trainer that re-scans
+        // the corpus per iteration blows through it).
+        var trainTables = Vector.empty[Seq[(String, Long, Long, Long)]]
+        val trainJson = coldWarm("reference_tok_1m", "unigram_train_1m", warmReps = 1) {
+          trainTables = trainTables :+ graft.ops.Text.unigramTrain(docs)
+            .collect().toSeq.map(r => (r.getString(0), r.getLong(1),
+              r.getLong(2), r.getLong(3))) }
+        val trainBad = trainTables.exists { t =>
+          t.isEmpty || t.count(_._1.length >= 2) > 40 ||
+            t.exists { case (p, l, m, lp) =>
+              l != p.length.toLong || m < 1L || lp >= 0L } } ||
+          trainTables.distinct.size != 1
+        if (trainBad) throw new GoldenMismatch(
+          s"unigram train 1M anchor MISMATCH: sizes ${trainTables.map(_.size)} " +
+          "(want identical piece tables, alphabet mass >= 1, lp9 < 0, <= 40 multi-char)")
+        val warmVit = timeOf(vitJson, "unigram_viterbi_1m_warm")
+        val warmTrain = timeOf(trainJson, "unigram_train_1m_warm")
+        if (warmVit < 0 || warmTrain < 0) throw new GoldenMismatch(
+          s"unigram flatness inputs unparsed: vit=$warmVit train=$warmTrain")
+        // Timing-ratio gate WARNS instead of throwing (round 15,
+        // advisor): with warmReps=1 a single contended rep would have
+        // converted a perf flake into a correctness-mismatch abort of
+        // the whole BIG tier. The ratio is always in the artifact
+        // (unigram_train_scale_ratio) so a real shape regression is
+        // still machine-readable; correctness mismatches above still
+        // throw.
+        val trainScale = warmTrain / math.max(warmVit, 0.05)
+        if (trainScale > 12.0)
+          System.err.println(
+            f"[bench] WARNING unigram EM cost ratio $trainScale%.1fx over the 12x " +
+            "vocab-bounded bar (3 flat EM rounds predict ~3-4x) — perf flake or " +
+            "shape regression; see unigram_train_scale_ratio in the artifact")
+        // wordpiece_train_1m (round 15): the LAST tokenizer trainer —
+        // the q118 merge loop scored by the exact scaled-integer
+        // likelihood. Same scale contract as BPE training (one corpus
+        // scan + vocab-bounded iterations); per iteration it runs TWO
+        // vocab-bounded aggregations (pairs + unigrams) instead of
+        // one, so warm cost should sit at ~2-3x the 8-merge BPE
+        // anchor; a trainer that re-scans the corpus per merge blows
+        // the recorded ratio. The merge table must be well-formed and
+        // every score positive (cnt(ab) <= cnt(a), cnt(b) bounds
+        // score18 at (0, 1e18]).
+        var wpTables = Vector.empty[Seq[(Long, String, String, String, Long, Long)]]
+        val wpJson = coldWarm("reference_tok_1m", "wordpiece_train_1m", warmReps = 1) {
+          wpTables = wpTables :+ graft.ops.Text.wordpieceTrain(docs, nMerges = 8)
+            .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getString(2),
+              r.getString(3), r.getLong(4), r.getLong(5))) }
+        val wpBad = wpTables.exists { t =>
+          t.size != 8 || t.exists { case (_, l, r2, m, c, s18) =>
+            m != l + r2 || c <= 0L || s18 <= 0L || s18 > 1000000000000000000L } } ||
+          wpTables.distinct.size != 1
+        if (wpBad) throw new GoldenMismatch(
+          s"wordpiece 1M anchor MISMATCH: ${wpTables.map(_.take(2)).mkString(" | ")} " +
+          "(want 8 stable merges, merged = lhs+rhs, cnt > 0, score18 in (0, 1e18])")
+        val warmWp = timeOf(wpJson, "wordpiece_train_1m_warm")
+        if (warmWp < 0) throw new GoldenMismatch(
+          s"wordpiece flatness input unparsed: warmWp=$warmWp")
+        val wpScale = warmWp / math.max(warm8, 0.05)
+        if (wpScale > 12.0)
+          System.err.println(
+            f"[bench] WARNING wordpiece train cost ratio $wpScale%.1fx the 8-merge " +
+            "BPE anchor (two vocab-bounded aggs/iter predict ~2-3x, bar 12x) — " +
+            "perf flake or a corpus re-scan crept into the loop")
+        s""","reference_tok_1m":{$bpeJson,$bpe256Json,$bpe4kJson,$infer4kJson,$bmJson,$qlJson,$vitJson,$trainJson,$wpJson,""" +
+          f""""bpe_merge_scale_ratio":$mergeScale%.2f,""" +
+          f""""unigram_train_scale_ratio":$trainScale%.2f,""" +
+          f""""wordpiece_train_scale_ratio":$wpScale%.2f,""" +
+          f""""bpe_merge_scale_ratio_4k":$mergeScale4k%.2f,"bpe_infer_chunks":64}"""
+      } finally { docs.unpersist(); graft.core.InternalCaches.release(spark) }
     } else ""
     // reference_vec_1m (opt-in: SPARK_GRAFT_BIG=1): the similarity-search /
     // clustering layer at 1M vectors (500x the gate corpus) with cluster
@@ -1632,112 +1600,105 @@ object Bench {
     // agree with the brute-force exact top-10 on the probe queries at
     // recall >= 0.9. A quantizer regression, an argmin tie-break change,
     // or a bucket-probe bug fails the bench loudly at 1M scale.
-    val refVec1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1") && !skipSection("reference_vec_1m")) {
+    val refVec1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1")) section("reference_vec_1m") {
+      import org.apache.spark.sql.functions.{col, lit, pmod}
+      val vecs = graft.sources.SyntheticVectors.clustered(spark, 1000000L)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        import org.apache.spark.sql.functions.{col, lit, pmod}
-        val vecs = graft.sources.SyntheticVectors.clustered(spark, 1000000L)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          vecs.count()
-          var wrong = -1L
-          val j1 = coldWarm("reference_vec_1m", "kmeans_assign_1m", warmReps = 3) {
-            wrong = graft.ops.Clustering.assignSeeded(vecs, 64)
-              .filter(col("cidx") =!= pmod(col("vec_id"), lit(64)).cast("int"))
-              .count() }
-          if (wrong != 0L) throw new GoldenMismatch(
-            s"kmeans 1M anchor MISMATCH: $wrong vectors off their planted center (want 0)")
-          val exact = graft.ops.Embeddings.bruteForceKnn(vecs, col("vec_id") < 8, 10)
+        vecs.count()
+        var wrong = -1L
+        val j1 = coldWarm("reference_vec_1m", "kmeans_assign_1m", warmReps = 3) {
+          wrong = graft.ops.Clustering.assignSeeded(vecs, 64)
+            .filter(col("cidx") =!= pmod(col("vec_id"), lit(64)).cast("int"))
+            .count() }
+        if (wrong != 0L) throw new GoldenMismatch(
+          s"kmeans 1M anchor MISMATCH: $wrong vectors off their planted center (want 0)")
+        val exact = graft.ops.Embeddings.bruteForceKnn(vecs, col("vec_id") < 8, 10)
+          .select("qid", "nid").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        var recall = -1.0
+        val j2 = coldWarm("reference_vec_1m", "ivf_knn_1m", warmReps = 3) {
+          val approx = graft.ops.Ann.ivfKnn(vecs, col("vec_id") < 8, k = 10)
             .select("qid", "nid").collect()
             .map(r => (r.getLong(0), r.getLong(1))).toSet
-          var recall = -1.0
-          val j2 = coldWarm("reference_vec_1m", "ivf_knn_1m", warmReps = 3) {
-            val approx = graft.ops.Ann.ivfKnn(vecs, col("vec_id") < 8, k = 10)
-              .select("qid", "nid").collect()
-              .map(r => (r.getLong(0), r.getLong(1))).toSet
-            recall = (approx & exact).size.toDouble / exact.size }
-          if (recall < 0.9) throw new GoldenMismatch(
-            f"IVF 1M recall MISMATCH: $recall%.3f < 0.9 vs brute force")
-          addCompact("reference_vec_1m", "ivf_recall_1m", f"$recall%.3f")
-          // int8 quantization at the full 1M: label = planted center id, so
-          // every label holds EXACTLY 1M/64 = 15625 vectors, and since no
-          // synthetic vector is the zero vector, its max-|x| element
-          // saturates — n_sat >= n_vecs per label, first principles both.
-          // Input-split guard (round 15, after the r14 7.4 s regression):
-          // the quantize row stage is a pure projection, so its
-          // parallelism IS the input partition count — a collapse of the
-          // persisted frame would run it near-single-threaded. Assert it
-          // so that failure mode can't return silently. (The r14 6.6×
-          // itself was NOT a collapse — loadavg_post 13 showed parallel
-          // tasks — but interpreted-HOF eval going megamorphic in the
-          // long-lived JVM; the row stage is now the native codegen'd
-          // graft_int8, immune to both.)
-          // WARN, don't throw (round 16, advisor): a partition collapse is
-          // an environmental/perf condition like the timing-ratio gates,
-          // not a wrong answer — the artifact carries the count either
-          // way, so a slow-because-collapsed reading is attributable
-          // without aborting the whole BIG tier over it.
-          val vecParts = vecs.rdd.getNumPartitions
-          if (vecParts < spark.sparkContext.defaultParallelism / 2)
-            System.err.println(
-              s"[bench] WARNING: quantize 1M input collapsed to $vecParts " +
-                s"partitions (want >= ${spark.sparkContext.defaultParallelism / 2}) " +
-                "— the quantize_1m reading is near-single-threaded")
-          addCompact("reference_vec_1m", "quantize_1m_input_partitions", vecParts.toString)
-          var qBad = -1L
-          val j3 = coldWarm("reference_vec_1m", "quantize_1m", warmReps = 3) {
-            val rep = graft.ops.Embeddings.quantizeInt8Report(
-                vecs.withColumn("label", pmod(col("vec_id"), lit(64)).cast("int")))
-              .collect()
-            qBad = rep.count(r => r.getLong(1) != 15625L || r.getLong(3) < r.getLong(1)) +
-              (64 - rep.length) }
-          if (qBad != 0L) throw new GoldenMismatch(
-            s"quantize 1M anchor MISMATCH: $qBad labels off (want 64 x n_vecs=15625, n_sat>=n_vecs)")
-          // covariance on a 100k slice (20x the gate corpus): the full
-          // upper triangle must materialize (2080 cells, n_vecs = 100000
-          // each) and every diagonal variance must be positive — the
-          // planted noise guarantees spread in every dimension.
-          var cBad = -1L
-          val j4 = coldWarm("reference_vec_1m", "covariance_100k", warmReps = 3) {
-            val cov = graft.ops.Embeddings.covarianceReport(
-                vecs.filter(col("vec_id") < 100000L)).collect()
-            cBad = cov.count(r => r.getLong(2) != 100000L ||
-                (r.getLong(0) == r.getLong(1) && r.getDouble(3) <= 0.0)) +
-              (2080 - cov.length) }
-          if (cBad != 0L) throw new GoldenMismatch(
-            s"covariance 100k anchor MISMATCH: $cBad cells off (want 2080 cells, n=100000, diag>0)")
-          // logreg training at 1M (2000x the gate corpus): 3 full-batch
-          // epochs; the decimal gradient sums make the trained model
-          // bit-identical across reps regardless of partitioning — every
-          // warm rep must produce the same 65 coefficients, and the model
-          // must have moved off the zero start.
-          var models = List.empty[(Seq[Double], Double)]
-          val j5 = coldWarm("reference_vec_1m", "logreg_train_1m", warmReps = 3) {
-            val (w, b) = graft.ops.Embeddings.logregTrainWeights(
+          recall = (approx & exact).size.toDouble / exact.size }
+        if (recall < 0.9) throw new GoldenMismatch(
+          f"IVF 1M recall MISMATCH: $recall%.3f < 0.9 vs brute force")
+        addCompact("reference_vec_1m", "ivf_recall_1m", f"$recall%.3f")
+        // int8 quantization at the full 1M: label = planted center id, so
+        // every label holds EXACTLY 1M/64 = 15625 vectors, and since no
+        // synthetic vector is the zero vector, its max-|x| element
+        // saturates — n_sat >= n_vecs per label, first principles both.
+        // Input-split guard (round 15, after the r14 7.4 s regression):
+        // the quantize row stage is a pure projection, so its
+        // parallelism IS the input partition count — a collapse of the
+        // persisted frame would run it near-single-threaded. Assert it
+        // so that failure mode can't return silently. (The r14 6.6×
+        // itself was NOT a collapse — loadavg_post 13 showed parallel
+        // tasks — but interpreted-HOF eval going megamorphic in the
+        // long-lived JVM; the row stage is now the native codegen'd
+        // graft_int8, immune to both.)
+        // WARN, don't throw (round 16, advisor): a partition collapse is
+        // an environmental/perf condition like the timing-ratio gates,
+        // not a wrong answer — the artifact carries the count either
+        // way, so a slow-because-collapsed reading is attributable
+        // without aborting the whole BIG tier over it.
+        val vecParts = vecs.rdd.getNumPartitions
+        if (vecParts < spark.sparkContext.defaultParallelism / 2)
+          System.err.println(
+            s"[bench] WARNING: quantize 1M input collapsed to $vecParts " +
+              s"partitions (want >= ${spark.sparkContext.defaultParallelism / 2}) " +
+              "— the quantize_1m reading is near-single-threaded")
+        addCompact("reference_vec_1m", "quantize_1m_input_partitions", vecParts.toString)
+        var qBad = -1L
+        val j3 = coldWarm("reference_vec_1m", "quantize_1m", warmReps = 3) {
+          val rep = graft.ops.Embeddings.quantizeInt8Report(
               vecs.withColumn("label", pmod(col("vec_id"), lit(64)).cast("int")))
-            models = (w.toSeq, b) :: models }
-          if (models.distinct.size != 1 || models.head._1.forall(_ == 0.0))
-            throw new GoldenMismatch(
-              s"logreg 1M anchor MISMATCH: ${models.distinct.size} distinct models " +
-                "across reps (want 1, nonzero)")
-          // PQ encoding at 1M: every vector must yield exactly m=4 codes
-          // (counts conserve 4M) with nonnegative reconstruction errors in
-          // every populated cell.
-          var pqBad = -1L
-          val j6 = coldWarm("reference_vec_1m", "pq_encode_1m", warmReps = 3) {
-            val rep = graft.ops.Ann.pqReport(vecs).collect()
-            pqBad = math.abs(rep.map(_.getLong(2)).sum - 4000000L) +
-              rep.count(r => r.getDouble(3) < 0.0 || r.getDouble(4) < r.getDouble(3)) }
-          if (pqBad != 0L) throw new GoldenMismatch(
-            s"pq 1M anchor MISMATCH: $pqBad (want 4x1M codes, 0 <= avg <= max)")
-          s""","reference_vec_1m":{$j1,$j2,$j3,$j4,$j5,$j6,"ivf_recall_1m":$recall,""" +
-            s""""quantize_1m_input_partitions":$vecParts}"""
-        } finally { vecs.unpersist(); graft.core.InternalCaches.release(spark) }
-      } catch {
-        case e: GoldenMismatch => throw e
-        case e if scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] reference_vec_1m section dropped: $e")
-          compactRef.remove("reference_vec_1m"); ""
-      }
+            .collect()
+          qBad = rep.count(r => r.getLong(1) != 15625L || r.getLong(3) < r.getLong(1)) +
+            (64 - rep.length) }
+        if (qBad != 0L) throw new GoldenMismatch(
+          s"quantize 1M anchor MISMATCH: $qBad labels off (want 64 x n_vecs=15625, n_sat>=n_vecs)")
+        // covariance on a 100k slice (20x the gate corpus): the full
+        // upper triangle must materialize (2080 cells, n_vecs = 100000
+        // each) and every diagonal variance must be positive — the
+        // planted noise guarantees spread in every dimension.
+        var cBad = -1L
+        val j4 = coldWarm("reference_vec_1m", "covariance_100k", warmReps = 3) {
+          val cov = graft.ops.Embeddings.covarianceReport(
+              vecs.filter(col("vec_id") < 100000L)).collect()
+          cBad = cov.count(r => r.getLong(2) != 100000L ||
+              (r.getLong(0) == r.getLong(1) && r.getDouble(3) <= 0.0)) +
+            (2080 - cov.length) }
+        if (cBad != 0L) throw new GoldenMismatch(
+          s"covariance 100k anchor MISMATCH: $cBad cells off (want 2080 cells, n=100000, diag>0)")
+        // logreg training at 1M (2000x the gate corpus): 3 full-batch
+        // epochs; the decimal gradient sums make the trained model
+        // bit-identical across reps regardless of partitioning — every
+        // warm rep must produce the same 65 coefficients, and the model
+        // must have moved off the zero start.
+        var models = List.empty[(Seq[Double], Double)]
+        val j5 = coldWarm("reference_vec_1m", "logreg_train_1m", warmReps = 3) {
+          val (w, b) = graft.ops.Embeddings.logregTrainWeights(
+            vecs.withColumn("label", pmod(col("vec_id"), lit(64)).cast("int")))
+          models = (w.toSeq, b) :: models }
+        if (models.distinct.size != 1 || models.head._1.forall(_ == 0.0))
+          throw new GoldenMismatch(
+            s"logreg 1M anchor MISMATCH: ${models.distinct.size} distinct models " +
+              "across reps (want 1, nonzero)")
+        // PQ encoding at 1M: every vector must yield exactly m=4 codes
+        // (counts conserve 4M) with nonnegative reconstruction errors in
+        // every populated cell.
+        var pqBad = -1L
+        val j6 = coldWarm("reference_vec_1m", "pq_encode_1m", warmReps = 3) {
+          val rep = graft.ops.Ann.pqReport(vecs).collect()
+          pqBad = math.abs(rep.map(_.getLong(2)).sum - 4000000L) +
+            rep.count(r => r.getDouble(3) < 0.0 || r.getDouble(4) < r.getDouble(3)) }
+        if (pqBad != 0L) throw new GoldenMismatch(
+          s"pq 1M anchor MISMATCH: $pqBad (want 4x1M codes, 0 <= avg <= max)")
+        s""","reference_vec_1m":{$j1,$j2,$j3,$j4,$j5,$j6,"ivf_recall_1m":$recall,""" +
+          s""""quantize_1m_input_partitions":$vecParts}"""
+      } finally { vecs.unpersist(); graft.core.InternalCaches.release(spark) }
     } else ""
     // reference_100m (opt-in: SPARK_GRAFT_BIG=1, needs SPARK_DRIVER_MEM
     // >= 48g): the artificial100M scalability workload — BASELINE.md
@@ -1757,114 +1718,107 @@ object Bench {
     // 100 = 999996 units — so the anchor asserts rank spread EXACTLY 0
     // and the closed-form value, proving the fixed-point arithmetic does
     // not drift at 1000x the gate's graph size.
-    val refGraph1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1") && !skipSection("reference_graph_1m")) {
+    val refGraph1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1")) section("reference_graph_1m") {
+      import org.apache.spark.sql.functions.{col, max, min, sum}
+      val n = 1000000L
+      val base = spark.range(n).toDF("i")
+      def chord(k: Long) =
+        base.select(col("i").as("d1"), ((col("i") + k) % n).as("d2"))
+      val edgesP = graft.core.InternalCaches.persist(
+        chord(1L).union(chord(7919L)).union(chord(104729L)))
       try {
-        import org.apache.spark.sql.functions.{col, max, min, sum}
-        val n = 1000000L
-        val base = spark.range(n).toDF("i")
-        def chord(k: Long) =
-          base.select(col("i").as("d1"), ((col("i") + k) % n).as("d2"))
-        val edgesP = graft.core.InternalCaches.persist(
-          chord(1L).union(chord(7919L)).union(chord(104729L)))
-        try {
-          var spread = -1L; var rank = -1L
-          val j1 = coldWarm("reference_graph_1m", "pagerank_1m", warmReps = 3) {
-            val agg = graft.ops.Embeddings.pageRank(edgesP, iters = 3)
-              .agg(min(col("rank_units")).as("mn"), max(col("rank_units")).as("mx"),
-                   sum(col("rank_units"))).head
-            spread = agg.getLong(1) - agg.getLong(0)
-            rank = agg.getLong(0)
-          }
-          if (spread != 0L || rank != 999996L) throw new GoldenMismatch(
-            s"pagerank 1M anchor MISMATCH: spread=$spread (want 0), rank=$rank (want 999996)")
-          addCompact("reference_graph_1m", "pagerank_rank", "999996")
-          // round 14 — the graph FAMILY at the same 1M scale, over a
-          // second circulant with chords {1, 2, 7919}: 1+1=2 is the ONLY
-          // chord identity (checked over ±K sums/differences), so each
-          // node closes exactly ONE directed triangle and the family has
-          // first-principles goldens:
-          //  - HITS: 3-in/3-out regular → every half-step normalizes
-          //    (3·scale·scale) div (3·scale) = scale exactly; hub = auth
-          //    = scale at every node (the q94 zero-spread contract).
-          //  - assortativity: 6-regular → denominator EXACTLY 0 → the
-          //    0.0 guard at scale, n_edges 3M, max_degree 6.
-          //  - k-core: every node sits in the 6-core (k=6 peels are the
-          //    identity); k=7 empties the graph in ONE peel — the
-          //    negative control, timed inside the same anchor.
-          //  - transitivity: exactly n triangles and 15M wedges →
-          //    C = 3·1M/15M = 0.2 exactly (0.2 is twice double(0.1) —
-          //    bit-exact).
-          val edges2 = graft.core.InternalCaches.persist(
-            chord(1L).union(chord(2L)).union(chord(7919L)))
-          var hitsRow: org.apache.spark.sql.Row = null
-          val jh = coldWarm("reference_graph_1m", "hits_1m", warmReps = 2) {
-            hitsRow = graft.ops.Embeddings.hits(edges2, iters = 3)
-              .agg(min(col("hub_units")), max(col("hub_units")),
-                min(col("auth_units")), max(col("auth_units")),
-                org.apache.spark.sql.functions.count(
-                  org.apache.spark.sql.functions.lit(1))).head
-          }
-          if ((0 to 3).exists(i => hitsRow.getLong(i) != 1000000L) ||
-              hitsRow.getLong(4) != n) throw new GoldenMismatch(
-            s"hits 1M anchor MISMATCH: $hitsRow (want hub=auth=1000000 uniform at $n nodes)")
-          var asRow: org.apache.spark.sql.Row = null
-          val ja = coldWarm("reference_graph_1m", "assortativity_1m", warmReps = 2) {
-            asRow = graft.ops.Embeddings.assortativity(edges2).head
-          }
-          if (asRow.getLong(0) != n || asRow.getLong(1) != 3000000L ||
-              asRow.getLong(2) != 6L || asRow.getDouble(3) != 0.0)
-            throw new GoldenMismatch(
-              s"assortativity 1M anchor MISMATCH: $asRow " +
-              s"(want $n nodes, 3M edges, max_degree 6, regular-graph guard 0.0)")
-          var kRow: org.apache.spark.sql.Row = null
-          var k7 = -1L
-          val jk = coldWarm("reference_graph_1m", "kcore_1m", warmReps = 2) {
-            kRow = graft.ops.Embeddings.kCore(edges2, k = 6, iters = 3)
-              .agg(org.apache.spark.sql.functions.count(
-                  org.apache.spark.sql.functions.lit(1)),
-                min(col("deg")), max(col("deg"))).head
-            k7 = graft.ops.Embeddings.kCore(edges2, k = 7, iters = 1).count()
-          }
-          if (kRow.getLong(0) != n || kRow.getLong(1) != 6L ||
-              kRow.getLong(2) != 6L || k7 != 0L) throw new GoldenMismatch(
-            s"kcore 1M anchor MISMATCH: $kRow k7=$k7 " +
-            s"(want all $n nodes at degree 6 in the 6-core; empty 7-core)")
-          var tRow: org.apache.spark.sql.Row = null
-          val jt = coldWarm("reference_graph_1m", "transitivity_1m", warmReps = 2) {
-            tRow = graft.ops.Embeddings.transitivity(edges2).head
-          }
-          if (tRow.getLong(0) != n || tRow.getLong(1) != 3000000L ||
-              tRow.getLong(2) != 1000000L || tRow.getLong(3) != 15000000L ||
-              tRow.getDouble(4) != 0.2) throw new GoldenMismatch(
-            s"transitivity 1M anchor MISMATCH: $tRow " +
-            s"(want $n nodes, 3M edges, 1M triangles, 15M wedges, C=0.2)")
-          // hits_1m's honest target is RELATIVE (round 18, verdict item 6):
-          // the old <= 5 s absolute bar predates the environment shift.
-          // HITS runs two normalized half-steps per iteration where
-          // PageRank runs one, plus two bounded collects — <= 3x
-          // pagerank_1m measured in the SAME window is the defensible bar
-          // (r17: 8.74/3.05 = 2.9x, inside it). Recorded, and warned on
-          // breach rather than thrown (a timing ratio is a perf signal,
-          // not a wrong answer).
-          val warmPr1m = timeOf(j1, "pagerank_1m_warm")
-          val warmHits1m = timeOf(jh, "hits_1m_warm")
-          val hitsRatio =
-            if (warmPr1m > 0 && warmHits1m > 0) warmHits1m / warmPr1m else -1.0
-          if (hitsRatio > 3.0)
-            System.err.println(
-              f"[bench] WARNING hits_1m at $hitsRatio%.2fx pagerank_1m in the same " +
-              "window (two half-steps per iteration predict ~2-3x) — perf flake " +
-              "or a HITS-loop regression; see hits_vs_pagerank_ratio")
-          s""","reference_graph_1m":{$j1,$jh,$ja,$jk,$jt,"pagerank_spread":$spread,"pagerank_rank":$rank,""" +
-            f""""hits_vs_pagerank_ratio":$hitsRatio%.2f,""" +
-            s""""hits_spread":0,"kcore7_survivors":$k7,"transitivity_value":${tRow.getDouble(4)}}"""
-        } finally { edgesP.unpersist(); graft.core.InternalCaches.release(spark) }
-      } catch {
-        case e: GoldenMismatch => throw e
-        case e if scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] reference_graph_1m section dropped: $e")
-          compactRef.remove("reference_graph_1m"); ""
-      }
+        var spread = -1L; var rank = -1L
+        val j1 = coldWarm("reference_graph_1m", "pagerank_1m", warmReps = 3) {
+          val agg = graft.ops.Embeddings.pageRank(edgesP, iters = 3)
+            .agg(min(col("rank_units")).as("mn"), max(col("rank_units")).as("mx"),
+                 sum(col("rank_units"))).head
+          spread = agg.getLong(1) - agg.getLong(0)
+          rank = agg.getLong(0)
+        }
+        if (spread != 0L || rank != 999996L) throw new GoldenMismatch(
+          s"pagerank 1M anchor MISMATCH: spread=$spread (want 0), rank=$rank (want 999996)")
+        addCompact("reference_graph_1m", "pagerank_rank", "999996")
+        // round 14 — the graph FAMILY at the same 1M scale, over a
+        // second circulant with chords {1, 2, 7919}: 1+1=2 is the ONLY
+        // chord identity (checked over ±K sums/differences), so each
+        // node closes exactly ONE directed triangle and the family has
+        // first-principles goldens:
+        //  - HITS: 3-in/3-out regular → every half-step normalizes
+        //    (3·scale·scale) div (3·scale) = scale exactly; hub = auth
+        //    = scale at every node (the q94 zero-spread contract).
+        //  - assortativity: 6-regular → denominator EXACTLY 0 → the
+        //    0.0 guard at scale, n_edges 3M, max_degree 6.
+        //  - k-core: every node sits in the 6-core (k=6 peels are the
+        //    identity); k=7 empties the graph in ONE peel — the
+        //    negative control, timed inside the same anchor.
+        //  - transitivity: exactly n triangles and 15M wedges →
+        //    C = 3·1M/15M = 0.2 exactly (0.2 is twice double(0.1) —
+        //    bit-exact).
+        val edges2 = graft.core.InternalCaches.persist(
+          chord(1L).union(chord(2L)).union(chord(7919L)))
+        var hitsRow: org.apache.spark.sql.Row = null
+        val jh = coldWarm("reference_graph_1m", "hits_1m", warmReps = 2) {
+          hitsRow = graft.ops.Embeddings.hits(edges2, iters = 3)
+            .agg(min(col("hub_units")), max(col("hub_units")),
+              min(col("auth_units")), max(col("auth_units")),
+              org.apache.spark.sql.functions.count(
+                org.apache.spark.sql.functions.lit(1))).head
+        }
+        if ((0 to 3).exists(i => hitsRow.getLong(i) != 1000000L) ||
+            hitsRow.getLong(4) != n) throw new GoldenMismatch(
+          s"hits 1M anchor MISMATCH: $hitsRow (want hub=auth=1000000 uniform at $n nodes)")
+        var asRow: org.apache.spark.sql.Row = null
+        val ja = coldWarm("reference_graph_1m", "assortativity_1m", warmReps = 2) {
+          asRow = graft.ops.Embeddings.assortativity(edges2).head
+        }
+        if (asRow.getLong(0) != n || asRow.getLong(1) != 3000000L ||
+            asRow.getLong(2) != 6L || asRow.getDouble(3) != 0.0)
+          throw new GoldenMismatch(
+            s"assortativity 1M anchor MISMATCH: $asRow " +
+            s"(want $n nodes, 3M edges, max_degree 6, regular-graph guard 0.0)")
+        var kRow: org.apache.spark.sql.Row = null
+        var k7 = -1L
+        val jk = coldWarm("reference_graph_1m", "kcore_1m", warmReps = 2) {
+          kRow = graft.ops.Embeddings.kCore(edges2, k = 6, iters = 3)
+            .agg(org.apache.spark.sql.functions.count(
+                org.apache.spark.sql.functions.lit(1)),
+              min(col("deg")), max(col("deg"))).head
+          k7 = graft.ops.Embeddings.kCore(edges2, k = 7, iters = 1).count()
+        }
+        if (kRow.getLong(0) != n || kRow.getLong(1) != 6L ||
+            kRow.getLong(2) != 6L || k7 != 0L) throw new GoldenMismatch(
+          s"kcore 1M anchor MISMATCH: $kRow k7=$k7 " +
+          s"(want all $n nodes at degree 6 in the 6-core; empty 7-core)")
+        var tRow: org.apache.spark.sql.Row = null
+        val jt = coldWarm("reference_graph_1m", "transitivity_1m", warmReps = 2) {
+          tRow = graft.ops.Embeddings.transitivity(edges2).head
+        }
+        if (tRow.getLong(0) != n || tRow.getLong(1) != 3000000L ||
+            tRow.getLong(2) != 1000000L || tRow.getLong(3) != 15000000L ||
+            tRow.getDouble(4) != 0.2) throw new GoldenMismatch(
+          s"transitivity 1M anchor MISMATCH: $tRow " +
+          s"(want $n nodes, 3M edges, 1M triangles, 15M wedges, C=0.2)")
+        // hits_1m's honest target is RELATIVE (round 18, verdict item 6):
+        // the old <= 5 s absolute bar predates the environment shift.
+        // HITS runs two normalized half-steps per iteration where
+        // PageRank runs one, plus two bounded collects — <= 3x
+        // pagerank_1m measured in the SAME window is the defensible bar
+        // (r17: 8.74/3.05 = 2.9x, inside it). Recorded, and warned on
+        // breach rather than thrown (a timing ratio is a perf signal,
+        // not a wrong answer).
+        val warmPr1m = timeOf(j1, "pagerank_1m_warm")
+        val warmHits1m = timeOf(jh, "hits_1m_warm")
+        val hitsRatio =
+          if (warmPr1m > 0 && warmHits1m > 0) warmHits1m / warmPr1m else -1.0
+        if (hitsRatio > 3.0)
+          System.err.println(
+            f"[bench] WARNING hits_1m at $hitsRatio%.2fx pagerank_1m in the same " +
+            "window (two half-steps per iteration predict ~2-3x) — perf flake " +
+            "or a HITS-loop regression; see hits_vs_pagerank_ratio")
+        s""","reference_graph_1m":{$j1,$jh,$ja,$jk,$jt,"pagerank_spread":$spread,"pagerank_rank":$rank,""" +
+          f""""hits_vs_pagerank_ratio":$hitsRatio%.2f,""" +
+          s""""hits_spread":0,"kcore7_survivors":$k7,"transitivity_value":${tRow.getDouble(4)}}"""
+      } finally { edgesP.unpersist(); graft.core.InternalCaches.release(spark) }
     } else ""
     // Two output lines + a detail file. The round driver keeps only the last
     // ~2000 chars of stdout, so the LAST line is the compact contract line

@@ -10,8 +10,7 @@ package graft
 object DevHookProbe {
   def main(args: Array[String]): Unit = {
     if (args.contains("spark")) {
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+      val spark = graft.core.Sessions.local("hookprobe")
       spark.sparkContext.setLogLevel("WARN")
       spark.range(10).count()
       System.err.println("[hookprobe] spark session live")

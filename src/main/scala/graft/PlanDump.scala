@@ -1,15 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: print the formatted physical plan of named gate queries at
-  * sf0.01 (the source of PLANS.md). Usage: runMain graft.PlanDump q41_... */
+  * sf0.01 (the source of PLANS.md). Usage: runMain graft.PlanDump q41_...
+  * Pinned at 8 cores so the dumps do not depend on the host. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.Sessions.local("plandump", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     for (name <- args) {

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: steady-state timing of named gate queries (5 noop-sink runs
   * each) — the per-query twin of PlanDump for chasing local regressions.
   * Usage: runMain graft.TimeProbe q66_pipeline_summary [...]
-  * Data dir and parallelism come from SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS
-  * (same contract as Bench) so the probe runs on any machine, not just one
-  * with the /root/testdata fixture and 32 cores.
+  * The data dir comes from SPARK_GRAFT_SF_DIR and the session from
+  * `Sessions.local` (SPARK_GRAFT_CPUS cores, default the host's) — the
+  * configuration Bench measures, so a probe steady and a bench median time
+  * the same engine. Probes committed before this session was shared ran on
+  * Java serialization without the graft extensions.
   *
   * CONTAMINATION GUARD (round 17 — PROBE_r16 committed steadies for
   * q34/q35/q57/q58 that an I/O-noise window had inflated 6-27×, and
@@ -78,7 +78,6 @@ object TimeProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     if (args.isEmpty || !new java.io.File(dir).isDirectory) {
       System.err.println(
         s"usage: SPARK_GRAFT_SF_DIR=<parquet dir> runMain graft.TimeProbe <query name>... | all\n" +
@@ -87,20 +86,7 @@ object TimeProbe {
       if (args.isEmpty) return
       sys.exit(2)
     }
-    // SPARK_GRAFT_SERIALIZER=kryo opts this probe session into the same
-    // Kryo RDD-lane serializer Bench runs under — the A/B lever for
-    // bisecting serializer-sensitive drift (run the same queries with and
-    // without it in one quiet window). Default = Spark's JavaSerializer,
-    // the probe's historical configuration, so committed PROBE_r*.txt
-    // baselines stay comparable.
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (sys.env.get("SPARK_GRAFT_SERIALIZER").contains("kryo"))
-      builder.config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-    else builder).getOrCreate()
+    val spark = graft.core.Sessions.local("timeprobe")
     spark.sparkContext.setLogLevel("WARN")
     // `all` expands to the full sorted gate inventory — the sweep that
     // tools/compare_probe.py cross-checks a bench artifact against
@@ -110,11 +96,7 @@ object TimeProbe {
     val ref = bestKnownSteady()
     var suspects = 0
     def vector(name: String): Seq[Double] = {
-      val ts = (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val ts = (1 to 5).map(_ => Bench.timeNoop(SparkEntry.queries(name)(spark, dir)))
       graft.core.InternalCaches.release(spark)
       ts
     }

@@ -16,18 +16,11 @@ import graft.sources.PointSource
   */
 object CliSession {
   def make(app: String): SparkSession = {
-    val b = SparkSession.builder()
-      .appName(app)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.locality.wait", "0s")
-      .config(Sessions.CheckpointFileManager._1, Sessions.CheckpointFileManager._2)
+    val b = SparkSession.builder().appName(app).config("spark.locality.wait", "0s")
     // spark-submit injects spark.master; standalone runs default to local
     val withMaster =
-      if (sys.props.contains("spark.master")) b
-      else b.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-    withMaster.getOrCreate()
+      if (sys.props.contains("spark.master")) b else b.master(s"local[${Sessions.cpus}]")
+    Sessions.configure(withMaster, Sessions.cpus).getOrCreate()
   }
 }
 

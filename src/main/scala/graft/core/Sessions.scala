@@ -2,14 +2,22 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's recommended configuration. Local mode
-  * sizes shuffle partitions to the core count; on a cluster, leave master
-  * to spark-submit and size `spark.sql.shuffle.partitions` to 2-3× total
-  * executor cores (and let AQE coalesce down). */
+/** Session factory with the engine's recommended configuration: every
+  * in-repo entry point (Bench, TimeProbe, Verify, PlanDump, the CLI, the
+  * benchmark) builds its session here. Local mode sizes shuffle partitions
+  * to the core count; on a cluster, leave master to spark-submit and size
+  * `spark.sql.shuffle.partitions` to 2-3× total executor cores (and let AQE
+  * coalesce down). */
 object Sessions {
 
-  def local(app: String = "graft", cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    configure(SparkSession.builder().appName(app).master(s"local[$cores]"), cores).getOrCreate()
+  /** Local core count: `SPARK_GRAFT_CPUS` when set, else the host's. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(app: String = "graft", cores: Int = cpus): SparkSession =
+    configure(SparkSession.builder().appName(app).master(s"local[$cores]"), cores)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
 
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = b
     .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

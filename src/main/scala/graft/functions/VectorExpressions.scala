@@ -562,38 +562,13 @@ case class Int8RowStat(child: Expression, mode: Int)
 
 /** Idempotent per-session registration of the graft SQL functions. */
 object GraftFunctions {
-  private def info(clazz: Class[_], name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(clazz.getName, null, name, usage, "", "", "", "", "", "", "built-in")
+  type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val dotInfo = info(classOf[DotProduct], "graft_dot",
-    "graft_dot(a, b) - double dot product of two float/double arrays")
-
-  val shinglesInfo = info(classOf[ShingleHashes], "graft_shingles",
-    "graft_shingles(tokens, n) - distinct 64-bit hashes of the n-gram shingles of a token array")
-
-  val zorderInfo = info(classOf[ZOrder2], "graft_zorder",
-    "graft_zorder(i, j) - Morton (Z-order) interleave of two 32-bit coordinates into a long sort key")
-
-  val lcsInfo = info(classOf[LcsLength], "graft_lcs",
-    "graft_lcs(c, r) - longest-common-subsequence length of two string arrays")
-
-  val int8Info = info(classOf[Int8RowStat], "graft_int8",
-    "graft_int8(v, mode) - int8-quantization row stat of a float/double array: mode 0 = code sum, mode 1 = saturation count")
-
-  val entropyInfo = info(classOf[CharEntropyStat], "graft_entropy",
-    "graft_entropy(s) - struct(n_distinct, entropy): character-distribution Shannon entropy of a string")
-
-  val hash31Info = info(classOf[Hash31], "graft_hash31",
-    "graft_hash31(s, mod) - 31-ary code-point polynomial bucket hash of a string, reduced mod `mod` at every step")
-
-  val feats31Info = info(classOf[Feats31], "graft_feats31",
-    "graft_feats31(t, mod) - hash31 of every token and every adjacent bigram of a token array (the DSIR feature space)")
-
-  val ngramsInfo = info(classOf[NGramStructs], "graft_ngrams",
-    "graft_ngrams(t, maxN) - all (n, gram) structs for n = 1..maxN of a token array in one pass")
-
-  val bleuInfo = info(classOf[BleuClipStats], "graft_bleu",
-    "graft_bleu(c, r, maxN) - per-row BLEU clipped-match (n, m, tot) structs for n = 1..maxN")
+  private def fn(clazz: Class[_], name: String, usage: String)(
+      build: Seq[Expression] => Expression): Entry =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(clazz.getName, null, name, usage, "", "", "", "", "", "", "built-in"),
+      build)
 
   private def toInt(e: Expression): Int =
     e.eval(null).asInstanceOf[Number].intValue()
@@ -601,57 +576,46 @@ object GraftFunctions {
   private def toLong(e: Expression): Long =
     e.eval(null).asInstanceOf[Number].longValue()
 
+  /** Every graft_* function, the one table both [[register]] and the
+    * `graft.plans.GraftExtensions` session extension install — so a
+    * cluster session configured only through spark.sql.extensions sees
+    * the same functions as a locally registered one. */
+  val table: Seq[Entry] = Seq(
+    fn(classOf[DotProduct], "graft_dot",
+      "graft_dot(a, b) - double dot product of two float/double arrays")(
+      c => DotProduct(c(0), c(1))),
+    fn(classOf[ShingleHashes], "graft_shingles",
+      "graft_shingles(tokens, n) - distinct 64-bit hashes of the n-gram shingles of a token array")(
+      c => ShingleHashes(c(0), toInt(c(1)))),
+    fn(classOf[ZOrder2], "graft_zorder",
+      "graft_zorder(i, j) - Morton (Z-order) interleave of two 32-bit coordinates into a long sort key")(
+      c => ZOrder2(c(0), c(1))),
+    fn(classOf[LcsLength], "graft_lcs",
+      "graft_lcs(c, r) - longest-common-subsequence length of two string arrays")(
+      c => LcsLength(c(0), c(1))),
+    fn(classOf[Int8RowStat], "graft_int8",
+      "graft_int8(v, mode) - int8-quantization row stat of a float/double array: mode 0 = code sum, mode 1 = saturation count")(
+      c => Int8RowStat(c(0), toInt(c(1)))),
+    fn(classOf[CharEntropyStat], "graft_entropy",
+      "graft_entropy(s) - struct(n_distinct, entropy): character-distribution Shannon entropy of a string")(
+      c => CharEntropyStat(c(0))),
+    fn(classOf[Hash31], "graft_hash31",
+      "graft_hash31(s, mod) - 31-ary code-point polynomial bucket hash of a string, reduced mod `mod` at every step")(
+      c => Hash31(c(0), toLong(c(1)))),
+    fn(classOf[Feats31], "graft_feats31",
+      "graft_feats31(t, mod) - hash31 of every token and every adjacent bigram of a token array (the DSIR feature space)")(
+      c => Feats31(c(0), toLong(c(1)))),
+    fn(classOf[NGramStructs], "graft_ngrams",
+      "graft_ngrams(t, maxN) - all (n, gram) structs for n = 1..maxN of a token array in one pass")(
+      c => NGramStructs(c(0), toInt(c(1)))),
+    fn(classOf[BleuClipStats], "graft_bleu",
+      "graft_bleu(c, r, maxN) - per-row BLEU clipped-match (n, m, tot) structs for n = 1..maxN")(
+      c => BleuClipStats(c(0), c(1), toInt(c(2)))),
+  )
+
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    val dotId = FunctionIdentifier("graft_dot")
-    if (!registry.functionExists(dotId)) {
-      registry.registerFunction(dotId, dotInfo,
-        (children: Seq[Expression]) => DotProduct(children(0), children(1)))
-    }
-    val shId = FunctionIdentifier("graft_shingles")
-    if (!registry.functionExists(shId)) {
-      registry.registerFunction(shId, shinglesInfo,
-        (children: Seq[Expression]) => ShingleHashes(children(0), toInt(children(1))))
-    }
-    val zId = FunctionIdentifier("graft_zorder")
-    if (!registry.functionExists(zId)) {
-      registry.registerFunction(zId, zorderInfo,
-        (children: Seq[Expression]) => ZOrder2(children(0), children(1)))
-    }
-    val lcsId = FunctionIdentifier("graft_lcs")
-    if (!registry.functionExists(lcsId)) {
-      registry.registerFunction(lcsId, lcsInfo,
-        (children: Seq[Expression]) => LcsLength(children(0), children(1)))
-    }
-    val int8Id = FunctionIdentifier("graft_int8")
-    if (!registry.functionExists(int8Id)) {
-      registry.registerFunction(int8Id, int8Info,
-        (children: Seq[Expression]) => Int8RowStat(children(0), toInt(children(1))))
-    }
-    val entId = FunctionIdentifier("graft_entropy")
-    if (!registry.functionExists(entId)) {
-      registry.registerFunction(entId, entropyInfo,
-        (children: Seq[Expression]) => CharEntropyStat(children(0)))
-    }
-    val h31Id = FunctionIdentifier("graft_hash31")
-    if (!registry.functionExists(h31Id)) {
-      registry.registerFunction(h31Id, hash31Info,
-        (children: Seq[Expression]) => Hash31(children(0), toLong(children(1))))
-    }
-    val f31Id = FunctionIdentifier("graft_feats31")
-    if (!registry.functionExists(f31Id)) {
-      registry.registerFunction(f31Id, feats31Info,
-        (children: Seq[Expression]) => Feats31(children(0), toLong(children(1))))
-    }
-    val ngId = FunctionIdentifier("graft_ngrams")
-    if (!registry.functionExists(ngId)) {
-      registry.registerFunction(ngId, ngramsInfo,
-        (children: Seq[Expression]) => NGramStructs(children(0), toInt(children(1))))
-    }
-    val bleuId = FunctionIdentifier("graft_bleu")
-    if (!registry.functionExists(bleuId)) {
-      registry.registerFunction(bleuId, bleuInfo,
-        (children: Seq[Expression]) => BleuClipStats(children(0), children(1), toInt(children(2))))
-    }
+    for ((id, info, build) <- table if !registry.functionExists(id))
+      registry.registerFunction(id, info, build)
   }
 }

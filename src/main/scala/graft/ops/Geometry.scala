@@ -305,30 +305,8 @@ object Geometry {
     * max distance to its nearest center; incremental min-dist array, O(nk);
     * first-index tiebreak for determinism). Driver-side by design: inputs
     * are ≤ K·L coreset points. */
-  def sequentialFFT(pts: Array[(Double, Double)], k: Int): Array[(Double, Double)] = {
-    require(pts.nonEmpty, "FFT on empty point set")
-    val n = pts.length
-    val kk = math.min(k, n)
-    val centers = new Array[(Double, Double)](kk)
-    val minD2 = Array.fill(n)(Double.MaxValue)
-    centers(0) = pts(0)
-    var c = 0
-    while (c < kk - 1) {
-      val (cx, cy) = centers(c)
-      var best = -1; var bestD = -1.0
-      var i = 0
-      while (i < n) {
-        val dx = pts(i)._1 - cx; val dy = pts(i)._2 - cy
-        val d2 = dx * dx + dy * dy
-        if (d2 < minD2(i)) minD2(i) = d2
-        if (minD2(i) > bestD) { bestD = minD2(i); best = i }
-        i += 1
-      }
-      c += 1
-      centers(c) = pts(best)
-    }
-    centers
-  }
+  def sequentialFFT(pts: Array[(Double, Double)], k: Int): Array[(Double, Double)] =
+    fftIndices(pts.map(_._1), pts.map(_._2), k, canonical = false).map(pts)
 
   /** FFT over primitive coordinate arrays, returning selected indices —
     * the executor-side kernel behind MRFFT R1. At 100M points the boxed

@@ -1,9 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.Expression
-import graft.functions.{BleuClipStats, CharEntropyStat, DotProduct, Feats31, GraftFunctions, Hash31, Int8RowStat, LcsLength, NGramStructs, ShingleHashes, ZOrder2}
+import graft.functions.GraftFunctions
 
 /** Session extension registering the graft native functions, for sessions
   * configured with `spark.sql.extensions=graft.plans.GraftExtensions`
@@ -12,35 +10,7 @@ import graft.functions.{BleuClipStats, CharEntropyStat, DotProduct, Feats31, Gra
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_dot"), GraftFunctions.dotInfo,
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((FunctionIdentifier("graft_shingles"), GraftFunctions.shinglesInfo,
-      (children: Seq[Expression]) => ShingleHashes(children(0),
-        children(1).eval(null).asInstanceOf[Number].intValue())))
-    // keep the two registration paths (extensions vs GraftFunctions.register)
-    // surface-identical: a cluster session configured only via
-    // spark.sql.extensions must see every graft_* function
-    ext.injectFunction((FunctionIdentifier("graft_zorder"), GraftFunctions.zorderInfo,
-      (children: Seq[Expression]) => ZOrder2(children(0), children(1))))
-    ext.injectFunction((FunctionIdentifier("graft_lcs"), GraftFunctions.lcsInfo,
-      (children: Seq[Expression]) => LcsLength(children(0), children(1))))
-    ext.injectFunction((FunctionIdentifier("graft_int8"), GraftFunctions.int8Info,
-      (children: Seq[Expression]) => Int8RowStat(children(0),
-        children(1).eval(null).asInstanceOf[Number].intValue())))
-    ext.injectFunction((FunctionIdentifier("graft_entropy"), GraftFunctions.entropyInfo,
-      (children: Seq[Expression]) => CharEntropyStat(children(0))))
-    ext.injectFunction((FunctionIdentifier("graft_hash31"), GraftFunctions.hash31Info,
-      (children: Seq[Expression]) => Hash31(children(0),
-        children(1).eval(null).asInstanceOf[Number].longValue())))
-    ext.injectFunction((FunctionIdentifier("graft_feats31"), GraftFunctions.feats31Info,
-      (children: Seq[Expression]) => Feats31(children(0),
-        children(1).eval(null).asInstanceOf[Number].longValue())))
-    ext.injectFunction((FunctionIdentifier("graft_ngrams"), GraftFunctions.ngramsInfo,
-      (children: Seq[Expression]) => NGramStructs(children(0),
-        children(1).eval(null).asInstanceOf[Number].intValue())))
-    ext.injectFunction((FunctionIdentifier("graft_bleu"), GraftFunctions.bleuInfo,
-      (children: Seq[Expression]) => BleuClipStats(children(0), children(1),
-        children(2).eval(null).asInstanceOf[Number].intValue())))
+    GraftFunctions.table.foreach(ext.injectFunction)
     // band-join → equi-join rewrite (see BandJoinRule); also available on a
     // live session via spark.experimental.extraOptimizations
     ext.injectOptimizerRule(_ => BandJoinRule())

@@ -221,6 +221,13 @@ class GeometrySpec extends SparkSpec {
     // weaker than we can assert directly, but r(k) must be >= max pairwise
     // distance / (2k) — sanity lower bound
     assert(radii.last > 0.0)
+    // planted equal-distance ties: four points at distance 5 from the seed,
+    // then three-way and two-way ties at every later step — each pick must
+    // be the EARLIEST tied index (a later-index tie-break would pick
+    // (0,-5) second)
+    val ties = Array((0.0, 0.0), (0.5, 0.0), (-4.0, 3.0), (3.0, 4.0), (4.0, -3.0), (0.0, -5.0))
+    assert(Geometry.sequentialFFT(ties, 5).toSeq ==
+      Seq((0.0, 0.0), (-4.0, 3.0), (3.0, 4.0), (4.0, -3.0), (0.0, -5.0)))
   }
 
   test("artificial1M anchors: pinned per-L radii, tight cross-L envelope, planted-outlier recall") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev scratchpad for optimization-round A/B experiments: times named
@@ -25,27 +25,14 @@ object OptLab {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local("optlab")
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$dir/lineitem.parquet")
       .limit(10000).groupBy("l_returnflag").count().collect()
 
-    def time1(df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     def bench(name: String)(df: => DataFrame): Unit = {
       spark.sparkContext.setJobDescription(name)
-      val runs = (1 to 5).map(_ => time1(df))
+      val runs = (1 to 5).map(_ => Bench.timeNoop(df))
       val fp = fingerprint(df)
       graft.core.InternalCaches.release(spark)
       println(f"LAB $name%-28s ${runs.map(v => f"$v%.2f").mkString(" ")}  $fp")
