@@ -343,21 +343,37 @@ object Bench {
     }.toMap
   }
 
+  /** The header TimeProbe prints before its `PROBE` lines: the data dir
+    * and core count its steadies were measured at. */
+  private[graft] def probeConfigLine(sfDir: String, cpus: Int): String =
+    s"PROBE_CONFIG sf=$sfDir cpus=$cpus"
+
   /** The committed probe sweep to requeue against: SPARK_GRAFT_PROBE_FILE
-    * if set, else the newest PROBE_r<N>.txt in the working directory.
-    * Empty map (requeue disabled) when neither exists — round 1 of a
-    * fresh clone has no probe history yet. */
-  private[graft] def loadProbeSteady(): Map[String, Double] = try {
+    * if set, else the newest PROBE_r<N>.txt in `dir`. Empty map (requeue
+    * disabled) when neither exists — round 1 of a fresh clone has no probe
+    * history yet — and, with one stderr line, when the sweep's
+    * `PROBE_CONFIG` header is missing or names another data dir or core
+    * count than this run's: an sf0.1 steady is no bar for an sf0.01 run. */
+  private[graft] def loadProbeSteady(sfDir: String, cpus: Int,
+                                     dir: java.io.File = new java.io.File(".")): Map[String, Double] = try {
     val f = sys.env.get("SPARK_GRAFT_PROBE_FILE").map(new java.io.File(_))
       .orElse {
-        Option(new java.io.File(".").listFiles())
+        Option(dir.listFiles())
           .map(_.toSeq).getOrElse(Seq.empty)
           .filter(_.getName.matches("PROBE_r\\d+\\.txt"))
           .sortBy(f => f.getName.replaceAll("\\D", "").toInt).lastOption
       }
     f.filter(_.isFile).map { file =>
       val src = scala.io.Source.fromFile(file)
-      try parseProbeSteady(src.getLines()) finally src.close()
+      val lines = try src.getLines().toVector finally src.close()
+      val want = probeConfigLine(sfDir, cpus)
+      val header = lines.map(_.trim).find(_.contains("PROBE_CONFIG "))
+      if (header.exists(_.endsWith(want))) parseProbeSteady(lines.iterator)
+      else {
+        System.err.println(s"[bench] ${file.getName} has ${header.getOrElse("no PROBE_CONFIG header")}, " +
+          s"this run needs $want: probe bar disabled")
+        Map.empty[String, Double]
+      }
     }.getOrElse(Map.empty)
   } catch { case e if scala.util.control.NonFatal(e) =>
     System.err.println(s"[bench] probe sweep not loaded (requeue disabled): $e")
@@ -766,7 +782,7 @@ object Bench {
     // the median at 1.0). A query still over the bar after 5 is
     // genuinely slower than its committed steady state — exactly what
     // the artifact should then show.
-    val probeSteady = loadProbeSteady()
+    val probeSteady = loadProbeSteady(sfDir, cpus)
     def overProbeBar(name: String): Boolean = probeSteady.get(name).exists { st =>
       val med = medianValid(runsByQ(name))
       med > 0.5 && med > 1.5 * math.max(st, 0.01)

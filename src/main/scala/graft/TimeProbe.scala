@@ -7,7 +7,9 @@ package graft
   * `Sessions.local` (SPARK_GRAFT_CPUS cores, default the host's) — the
   * configuration Bench measures, so a probe steady and a bench median time
   * the same engine. Probes committed before this session was shared ran on
-  * Java serialization without the graft extensions.
+  * Java serialization without the graft extensions. The first line is
+  * `PROBE_CONFIG sf=<dir> cpus=<n>`, so Bench grades a run only against a
+  * probe of its own data dir and core count.
   *
   * CONTAMINATION GUARD (round 17 — PROBE_r16 committed steadies for
   * q34/q35/q57/q58 that an I/O-noise window had inflated 6-27×, and
@@ -88,6 +90,7 @@ object TimeProbe {
     }
     val spark = graft.core.Sessions.local("timeprobe")
     spark.sparkContext.setLogLevel("WARN")
+    println(Bench.probeConfigLine(dir, graft.core.Sessions.cpus))
     // `all` expands to the full sorted gate inventory — the sweep that
     // tools/compare_probe.py cross-checks a bench artifact against
     val names: Seq[String] =

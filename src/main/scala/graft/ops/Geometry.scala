@@ -1,9 +1,13 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
+import graft.functions.BitMix
+import java.util.Arrays
 import scala.jdk.CollectionConverters._
 
 /** Geometric operators from the reference, Spark-first.
@@ -18,20 +22,22 @@ import scala.jdk.CollectionConverters._
   *    `G016HW2.java:114-220`.
   *
   * Architecture differences (scale-first, NOT a port):
-  *  - The exact all-pairs neighbor count takes a driver path while the
-  *    data allows it: the reference's N3/N7 bound (`G019HW1.java:209-261`)
-  *    settles every Λ-cell with N3 > M as inliers with no pairwise work,
-  *    one collect brings back the points of the remaining cells' 7×7
-  *    neighborhoods, and the driver counts them with the join's own
-  *    distance expression. When the cell table or those points exceed
-  *    `driverCellLimit`, it falls back to a *grid-bucketed equi-join*:
+  *  - Both outlier operators take a driver path while the data allows
+  *    it: one job with no shuffle over the once-planned points builds the
+  *    Λ-cell histogram on the driver from primitive per-partition maps,
+  *    as the reference downloads it (`G019HW1.java:209-261`). Its N3/N7
+  *    bound settles every Λ-cell with N3 > M as inliers with no pairwise
+  *    work, a second job on the same rows brings back the points of the
+  *    remaining cells' 7×7 neighborhoods, and the driver counts them with
+  *    the join's own distance expression. When the cell table or those
+  *    points exceed `driverCellLimit`, it falls back to a *grid-bucketed equi-join*:
   *    each candidate is exploded to its 3×3 neighbor cells (cell width =
   *    D) and joined on the cell key — a shuffle hash join that scales to a
   *    1000-executor cluster, instead of the reference's driver nested
   *    loop. The prune is exact: dist <= D ⟹ per-axis diff <= D ⟹
   *    Chebyshev cell distance <= 1.
   *  - The N3/N7 neighborhood sums are likewise a driver hash-map pass over
-  *    a collected histogram of at most `driverCellLimit` cells, with a
+  *    that histogram of at most `driverCellLimit` cells, with a
   *    7×7-offset explode + equi-join + conditional aggregation as the
   *    twin for larger tables: the non-empty cell table is small for dense
   *    data, but a 100 TB sparse dataset can have billions of non-empty
@@ -90,66 +96,120 @@ object Geometry {
         sum(col("src_sz")).as("n7"))
   }
 
-  /** Hash-map N3/N7 pass over a collected cell histogram: the reference's
-    * Step B shape, which the assignment explicitly allows ("the total
-    * number of non-empty cells is small … can be downloaded in a local
-    * data structure"). [[cellNeighborhoods]] is the equi-join twin that
-    * survives billions of non-empty cells; both are oracle-verified to
-    * produce identical tables. */
-  private def n3n7Local(local: Array[((Long, Long), Long)]): Array[(Long, Long, Long, Long, Long)] = {
-    val byCell = local.toMap
-    local.map { case ((ci, cj), sz) =>
-      var n3 = 0L; var n7 = 0L
-      var di = -3
-      while (di <= 3) {
-        var dj = -3
-        while (dj <= 3) {
-          byCell.get((ci + di, cj + dj)).foreach { s =>
-            n7 += s
-            if (math.abs(di) <= 1 && math.abs(dj) <= 1) n3 += s
-          }
-          dj += 1
+  /** Cell id of one double coordinate at width `cell`, off the plan:
+    * [[cellIndex]]'s floor toward −∞, which Catalyst evaluates on the
+    * coordinate widened to double. */
+  private def cellOf(v: Double, cell: Double): Long = math.floor(v / cell).toLong
+
+  /** (ci, cj) → count on primitive arrays, with no boxed key per cell:
+    * the cells sit in `ci/cj/sz(0 until n)` in insertion order, and a
+    * power-of-two slot table at most half full holds each one's index
+    * (−1 marks a free slot), probed linearly. */
+  private[graft] final class CellMap extends Serializable {
+    var n = 0
+    var ci = new Array[Long](8); var cj = new Array[Long](8); var sz = new Array[Long](8)
+    private var slots = Array.fill(16)(-1)
+
+    /** Slot of (i, j), or the free slot where it would go. */
+    private def slot(i: Long, j: Long): Int = {
+      val mask = slots.length - 1
+      var s = BitMix.splitmix64(i * 0x9e3779b97f4a7c15L + j).toInt & mask
+      while (slots(s) >= 0 && (ci(slots(s)) != i || cj(slots(s)) != j)) s = (s + 1) & mask
+      s
+    }
+
+    /** The count of (i, j), 0 when absent. */
+    def apply(i: Long, j: Long): Long = { val e = slots(slot(i, j)); if (e < 0) 0L else sz(e) }
+
+    /** Adds `c` to the count of (i, j), inserting it if absent. */
+    def add(i: Long, j: Long, c: Long): Unit = {
+      var s = slot(i, j)
+      if (slots(s) >= 0) sz(slots(s)) += c
+      else {
+        if (n == ci.length) {
+          ci = Arrays.copyOf(ci, 2 * n); cj = Arrays.copyOf(cj, 2 * n); sz = Arrays.copyOf(sz, 2 * n)
+          slots = Array.fill(4 * n)(-1)
+          for (e <- 0 until n) slots(slot(ci(e), cj(e))) = e
+          s = slot(i, j)
         }
-        di += 1
+        ci(n) = i; cj(n) = j; sz(n) = c; slots(s) = n; n += 1
       }
-      (ci, cj, sz, n3, n7)
     }
   }
 
-  /** The Λ-cell histogram of `pts` with its (ci, cj, sz, n3, n7) sums,
-    * computed on the driver — or None when the table holds more than
-    * `driverCellLimit` cells. ONE collect of at most limit+1 rows both
-    * fetches the histogram and decides whether it fits the driver, so no
-    * job is spent on path selection alone. */
-  private def localNeighborhoods(pts: DataFrame, lambda: Double,
-                                 driverCellLimit: Int): Option[Array[(Long, Long, Long, Long, Long)]] = {
-    val local = cellHistogram(pts, lambda).limit(driverCellLimit + 1).collect()
-    if (local.length > driverCellLimit) None
-    else Some(n3n7Local(local.map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))))
+  /** `pts`' x and y widened to double at ordinals 0 and 1, then `extra`,
+    * planned once: the rows a grid pass reads. */
+  private[graft] def gridRows(pts: DataFrame, extra: Column*): RDD[InternalRow] =
+    pts.select(col("x").cast(DoubleType) +: col("y").cast(DoubleType) +: extra: _*).queryExecution.toRdd
+
+  /** The Λ-cell histogram (reference Step A, `G019HW1.java:183-189`) of
+    * [[gridRows]], or None when it holds more than `limit` cells. One job,
+    * no shuffle: each partition counts its cells in a [[CellMap]] and
+    * ships them as three compact arrays, or nothing once it alone holds
+    * more than `limit`; the driver merges the partitions as they arrive
+    * and stops once the merged map holds more than `limit`. */
+  private[graft] def localHistogram(rows: RDD[InternalRow], lambda: Double, limit: Int): Option[CellMap] = {
+    val merged = new CellMap
+    var fits = true
+    rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+      val h = new CellMap
+      while (h.n <= limit && it.hasNext) {
+        val r = it.next()
+        require(!r.isNullAt(0) && !r.isNullAt(1), "outliers: null coordinate")
+        h.add(cellOf(r.getDouble(0), lambda), cellOf(r.getDouble(1), lambda), 1L)
+      }
+      if (h.n > limit) None else Some((h.ci.take(h.n), h.cj.take(h.n), h.sz.take(h.n)))
+    }, (_: Int, part: Option[(Array[Long], Array[Long], Array[Long])]) => part match {
+      case Some((ci, cj, sz)) if fits =>
+        var e = 0
+        while (e < ci.length && merged.n <= limit) { merged.add(ci(e), cj(e), sz(e)); e += 1 }
+        fits = merged.n <= limit
+      case _ => fits = false
+    })
+    if (fits) Some(merged) else None
   }
+
+  /** N3 and N7 of every cell of `h`, the points of its 3×3 and 7×7 blocks
+    * (reference Step B, `G019HW1.java:209-261`, on the histogram the
+    * assignment allows to download): [[cellNeighborhoods]] is its
+    * oracle-verified equi-join twin for billions of non-empty cells. */
+  private def neighborhoodSums(h: CellMap): (Array[Long], Array[Long]) = {
+    val n3 = new Array[Long](h.n); val n7 = new Array[Long](h.n)
+    for (e <- 0 until h.n; a <- -3 to 3; b <- -3 to 3) {
+      val s = h(h.ci(e) + a, h.cj(e) + b)
+      n7(e) += s
+      if (math.abs(a) <= 1 && math.abs(b) <= 1) n3(e) += s
+    }
+    (n3, n7)
+  }
+
+  private def requireRadius(d: Double): Unit =
+    require(d > 0 && !d.isInfinite, s"outlier radius must be positive and finite, got $d")
+
+  private val ApproxSchema = StructType.fromDDL("cls string, n_points bigint not null, n_cells bigint not null")
 
   /** MRApproxOutliers (reference Q2): returns one row per class:
     * sure (N7 <= M), uncertain (N3 <= M < N7), inlier.
     *
-    * Job shape: ONE collect on the small path ([[localNeighborhoods]]); the
-    * class roll-up then runs in-driver over ≤ limit cells and the result is
-    * a 3-row local DataFrame. Larger cell tables take the distributed
-    * neighborhood equi-join. */
+    * Job shape: ONE job and no shuffle on the small path, the grid pass
+    * of [[localHistogram]]; the class roll-up then runs in-driver over
+    * ≤ limit cells. Larger cell tables take the distributed neighborhood
+    * equi-join, whose three rows are collected. Either way the result is
+    * a 3-row local DataFrame. */
   def approxOutliers(pts: DataFrame, d: Double, m: Long,
                      driverCellLimit: Int = 200000): DataFrame = {
-    val spark = pts.sparkSession
-    import spark.implicits._
+    requireRadius(d)
     val lambda = d / (2.0 * math.sqrt(2.0))
-    localNeighborhoods(pts, lambda, driverCellLimit) match {
-      case Some(nb) =>
-        val agg = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-        nb.foreach { case (_, _, sz, n3, n7) =>
-          val cls = if (n7 <= m) "sure" else if (n3 <= m) "uncertain" else "inlier"
-          val (p, c) = agg.getOrElse(cls, (0L, 0L))
-          agg.update(cls, (p + sz, c + 1L))
+    val rows = localHistogram(gridRows(pts), lambda, driverCellLimit) match {
+      case Some(h) =>
+        val (n3, n7) = neighborhoodSums(h)
+        val classes = Seq("sure", "uncertain", "inlier")
+        val points = new Array[Long](3); val cells = new Array[Long](3)
+        for (e <- 0 until h.n) {
+          val k = if (n7(e) <= m) 0 else if (n3(e) <= m) 1 else 2
+          points(k) += h.sz(e); cells(k) += 1
         }
-        val rows = agg.toSeq.map { case (cls, (p, c)) => (cls, p, c) }
-        spark.createDataset(rows).toDF("cls", "n_points", "n_cells")
+        classes.indices.filter(cells(_) > 0).map(k => Row(classes(k), points(k), cells(k)))
       case None =>
         val cached = cellHistogram(pts, lambda).cache()
         try {
@@ -159,10 +219,11 @@ object Geometry {
                 .otherwise(lit("inlier")).as("cls"),
               col("sz"))
             .groupBy(col("cls"))
-            .agg(sum(col("sz")).cast(LongType).as("n_points"), count(lit(1)).as("n_cells"))
-            .localCheckpoint() // materialize while cached, then release
+            .agg(sum(col("sz")).as("n_points"), count(lit(1)).as("n_cells"))
+            .collect().toSeq
         } finally cached.unpersist()
     }
+    pts.sparkSession.createDataFrame(rows.asJava, ApproxSchema)
   }
 
   /** Exact (M,D)-outliers: |B(p,D)| (self included) for every point with
@@ -177,14 +238,13 @@ object Geometry {
     * diff < 2Λ ⇒ dist < 2√2·Λ = D; GeometrySpec pins the tight corner
     * case in floating point), so it is an inlier. Only cells with
     * N3 ≤ M stay candidates; a neighbor within D of a candidate lies in
-    * its 7×7 Λ-block (D/Λ = 2.83 < 3). One collect brings back the points
-    * of those blocks (cells computed by Spark, filtered through a
-    * broadcast cell set; the histogram bounds the count before the job
-    * runs), and the driver counts each candidate's neighbors with the
-    * fallback join's own cell condition and distance expression, so both
-    * paths return the same rows. The result is a local DataFrame: three
-    * jobs in all under AQE (histogram shuffle, its collect, the point
-    * collect).
+    * its 7×7 Λ-block (D/Λ = 2.83 < 3). `gridRows(pts, id)` is planned
+    * once for two jobs: the grid pass of [[localHistogram]], then one that
+    * keeps the points whose Λ-cell is in the primitive set of those blocks
+    * (the histogram bounds their count first). The driver counts each
+    * candidate's neighbors with the fallback join's own cell condition and
+    * distance expression, so both paths return the same rows. The result
+    * is a local DataFrame: two jobs in all, one planning, no shuffle.
     *
     * Fallback (the histogram or the candidate points exceed
     * `driverCellLimit`, or non-double coordinates): a *pruned*
@@ -192,60 +252,60 @@ object Geometry {
     */
   def exactOutliers(pts: DataFrame, d: Double, m: Long,
                     driverCellLimit: Int = 200000): DataFrame = {
+    requireRadius(d)
     val lambda = d / (2.0 * math.sqrt(2.0))
     val doubles = Seq("x", "y").forall(c => pts.schema(c).dataType == DoubleType)
-    val local = if (!doubles) None else
-      localNeighborhoods(pts, lambda, driverCellLimit)
-        .flatMap(nb => exactLocal(pts, d, m, lambda, nb, driverCellLimit))
+    val local = if (!doubles) None else exactLocal(pts, d, m, lambda, driverCellLimit)
     local.getOrElse(exactJoin(pts, d, m))
   }
 
-  /** The driver half of [[exactOutliers]]' small path, given the Λ-cell
-    * neighborhood sums; None when the candidates' 7×7 blocks hold more
-    * than `pointLimit` points. */
+  /** [[exactOutliers]]' small path; None when the Λ-cell histogram holds
+    * more than `limit` cells or the candidates' 7×7 blocks more than
+    * `limit` points. */
   private def exactLocal(pts: DataFrame, d: Double, m: Long, lambda: Double,
-                         nb: Array[(Long, Long, Long, Long, Long)],
-                         pointLimit: Int): Option[DataFrame] = {
-    val spark = pts.sparkSession
-    val idField = pts.schema("id")
-    val schema = StructType(Seq(
-      StructField("qid", idField.dataType, idField.nullable, idField.metadata),
-      StructField("n_neighbors", LongType, nullable = false)))
-    val sizes = nb.iterator.map { case (ci, cj, sz, _, _) => (ci, cj) -> sz }.toMap
-    val candidates = nb.iterator.collect { case (ci, cj, _, n3, _) if n3 <= m => (ci, cj) }.toSet
-    val needed = for ((ci, cj) <- candidates; a <- -3 to 3; b <- -3 to 3
-                      if sizes.contains((ci + a, cj + b))) yield (ci + a, cj + b)
-    if (needed.iterator.map(sizes).sum > pointLimit) return None
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    if (candidates.nonEmpty) {
-      val bc = spark.sparkContext.broadcast(needed)
-      val inNeeded = udf((ci: Long, cj: Long) => bc.value.contains((ci, cj)))
-      val rows = try {
-        pts.select(col("id"), col("x"), col("y"),
-            cellIndex(col("x"), lambda).as("ci"), cellIndex(col("y"), lambda).as("cj"),
-            cellIndex(col("x"), d).as("di"), cellIndex(col("y"), d).as("dj"))
-          .filter(inNeeded(col("ci"), col("cj")))
-          .collect()
-      } finally bc.destroy()
-      val xs = rows.map(_.getDouble(1)); val ys = rows.map(_.getDouble(2))
-      val di = rows.map(_.getLong(5)); val dj = rows.map(_.getLong(6))
-      val byCell = rows.indices.groupBy(i => (rows(i).getLong(3), rows(i).getLong(4)))
-      val dd = d * d
-      for (i <- rows.indices) {
-        val (ci, cj) = (rows(i).getLong(3), rows(i).getLong(4))
-        if (candidates.contains((ci, cj))) {
+                         limit: Int): Option[DataFrame] = {
+    val rows = gridRows(pts, col("id"))
+    localHistogram(rows, lambda, limit).flatMap { h =>
+      val (n3, _) = neighborhoodSums(h)
+      val candidates = new CellMap; val needed = new CellMap
+      var neededPoints = 0L
+      for (e <- 0 until h.n if n3(e) <= m) {
+        candidates.add(h.ci(e), h.cj(e), 1L)
+        for (a <- -3 to 3; b <- -3 to 3) {
+          val (i, j) = (h.ci(e) + a, h.cj(e) + b)
+          val s = h(i, j)
+          if (s > 0 && needed(i, j) == 0L) { needed.add(i, j, s); neededPoints += s }
+        }
+      }
+      if (neededPoints > limit) None else {
+        val idField = pts.schema("id")
+        val schema = StructType(Seq(
+          StructField("qid", idField.dataType, idField.nullable, idField.metadata),
+          StructField("n_neighbors", LongType, nullable = false)))
+        val kept = if (candidates.n == 0) Array.empty[InternalRow] else
+          rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) =>
+            it.filter(r => needed(cellOf(r.getDouble(0), lambda), cellOf(r.getDouble(1), lambda)) > 0)
+              .map(_.copy()).toArray).flatten
+        val toId = CatalystTypeConverters.createToScalaConverter(idField.dataType)
+        val xs = kept.map(_.getDouble(0)); val ys = kept.map(_.getDouble(1))
+        val ci = xs.map(cellOf(_, lambda)); val cj = ys.map(cellOf(_, lambda))
+        val di = xs.map(cellOf(_, d)); val dj = ys.map(cellOf(_, d))
+        val byCell = kept.indices.groupBy(i => (ci(i), cj(i)))
+        val dd = d * d
+        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+        for (i <- kept.indices if candidates(ci(i), cj(i)) > 0) {
           var n = 0L
-          for (a <- -3 to 3; b <- -3 to 3; j <- byCell.getOrElse((ci + a, cj + b), Nil)) {
+          for (a <- -3 to 3; b <- -3 to 3; j <- byCell.getOrElse((ci(i) + a, cj(i) + b), Nil)) {
             // the fallback join's pair condition: D-cells within Chebyshev
             // distance 1, then the same double expression, same operand order
             if (math.abs(di(j) - di(i)) <= 1 && math.abs(dj(j) - dj(i)) <= 1 &&
                 (xs(i) - xs(j)) * (xs(i) - xs(j)) + (ys(i) - ys(j)) * (ys(i) - ys(j)) <= dd) n += 1
           }
-          if (n <= m) out += Row(rows(i).get(0), n)
+          if (n <= m) out += Row(toId(kept(i).get(2, idField.dataType)), n)
         }
+        Some(pts.sparkSession.createDataFrame(out.asJava, schema))
       }
     }
-    Some(spark.createDataFrame(out.asJava, schema))
   }
 
   /** Exact (M,D)-outliers as a *pruned* grid-bucketed equi-join — the

@@ -682,8 +682,8 @@ object Text {
   private[graft] def dedupComponents(edges0: DataFrame,
                                      driverEdgeLimit: Long = 100000): DataFrame = {
     val s = edges0.sparkSession
-    // ONE action both selects the path and fetches the driver input (the
-    // same gate shape as Geometry.approxOutliers): collect up to limit+1
+    // ONE action both selects the path and fetches the driver input:
+    // collect up to limit+1
     // edges — <= limit rows back proves the pair graph fits the driver;
     // limit+1 means overflow, fall back to the distributed contraction.
     // The previous shape spent a dedicated cache()+count() job purely on

@@ -49,6 +49,20 @@ class BenchMathSpec extends AnyFunSuite {
       "q66_pipeline_summary" -> 0.80))
   }
 
+  test("loadProbeSteady: grades only against a probe of the run's data dir and core count") {
+    assume(sys.env.get("SPARK_GRAFT_PROBE_FILE").isEmpty, "a probe file override is set")
+    val dir = java.nio.file.Files.createTempDirectory("probe_config").toFile
+    def write(body: String): Unit = java.nio.file.Files.write(
+      new java.io.File(dir, "PROBE_r21.txt").toPath, body.getBytes("UTF-8"))
+    val probes = "PROBE q01_agg 0.20 0.10 0.12\nPROBE q03_topk 0.30 0.25\n"
+    write(s"[info] ${Bench.probeConfigLine("/data/sf0.1", 4)}\n$probes")
+    assert(Bench.loadProbeSteady("/data/sf0.1", 4, dir) == Map("q01_agg" -> 0.10, "q03_topk" -> 0.25))
+    assert(Bench.loadProbeSteady("/data/sf0.01", 4, dir).isEmpty)
+    assert(Bench.loadProbeSteady("/data/sf0.1", 14, dir).isEmpty)
+    write(probes) // no header: the sweep's configuration is unknown
+    assert(Bench.loadProbeSteady("/data/sf0.1", 4, dir).isEmpty)
+  }
+
   test("compactContractLine: 91-query inventory fits the driver window, sections intact") {
     // the round-9 shape that overflowed: 91 realistic query names plus all
     // nine reference sections

@@ -163,6 +163,74 @@ class GeometrySpec extends SparkSpec {
     }
   }
 
+  test("approxOutliers: the driver grid pass equals the neighborhood join, on every numeric column type") {
+    import spark.implicits._
+    val d = 0.5; val m = 10
+    val lambda = d / (2.0 * math.sqrt(2.0))
+    def classes(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Long)] =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    def asType(pts: org.apache.spark.sql.DataFrame, t: String) =
+      pts.select(col("id"), col("x").cast(t).as("x"), col("y").cast(t).as("y"))
+    val types = Seq("double", "int", "float", "decimal(18,6)")
+    for (seed <- Seq(1, 2, 3)) {
+      val pts = edgeCasePoints(seed, d, m).toDF("id", "x", "y").cache()
+      try for (t <- types; mm <- Seq(m.toLong, -1L)) {
+        val in = asType(pts, t)
+        val small = Geometry.approxOutliers(in, d, mm)
+        val join = Geometry.approxOutliers(in, d, mm, driverCellLimit = 0)
+        // a limit of 0 trips the cell bound: the join answers
+        assert(Geometry.localHistogram(Geometry.gridRows(in), lambda, 0).isEmpty)
+        assert(classes(small) == classes(join), s"seed $seed $t m $mm")
+        assert(small.schema == join.schema, s"${small.schema} vs ${join.schema}")
+      } finally { pts.unpersist(); graft.core.InternalCaches.release(spark) }
+    }
+    // the grid pass's primitive cell ids are cellHistogram's on the same
+    // columns: negative coordinates, exact multiples of Λ, |x/Λ| > 2^31
+    val rng = new scala.util.Random(5)
+    val edges = Seq.tabulate(400) { i =>
+      val k = rng.nextInt(4001) - 2000
+      val v = i % 4 match {
+        case 0 => k * lambda
+        case 1 => -k * lambda * 3
+        case 2 => (rng.nextDouble() - 0.5) * 1.6e10 * lambda
+        case _ => rng.nextGaussian() * 50
+      }
+      (i.toLong, v, -v / 2)
+    }.toDF("id", "x", "y")
+    for (t <- types) {
+      val in = asType(edges, t)
+      val h = Geometry.localHistogram(Geometry.gridRows(in), lambda, Int.MaxValue).get
+      val grid = (0 until h.n).map(e => (h.ci(e), h.cj(e), h.sz(e))).toSet
+      val catalyst = Geometry.cellHistogram(in, lambda).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(grid == catalyst, s"$t: cell ids differ")
+      assert(grid.exists(c => math.abs(c._1) > (1L << 31)), s"$t: no cell beyond 2^31")
+    }
+  }
+
+  test("outlier ops: a bad radius or a null coordinate raises; empty input keeps the schema") {
+    import spark.implicits._
+    val pts = Seq((1L, 0.0, 0.0), (2L, 1.0, 1.0)).toDF("id", "x", "y")
+    for (d <- Seq(0.0, -0.5, Double.NaN, Double.PositiveInfinity); limit <- Seq(200000, 0)) {
+      intercept[IllegalArgumentException](Geometry.approxOutliers(pts, d, 3, limit).collect())
+      intercept[IllegalArgumentException](Geometry.exactOutliers(pts, d, 3, limit).collect())
+    }
+    val nulls = Seq((1L, Some(0.0), 0.0), (2L, None, 1.0)).toDF("id", "x", "y")
+    def nullCoordinate(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(c => String.valueOf(c.getMessage).contains("null coordinate"))
+    assert(nullCoordinate(intercept[Exception](Geometry.approxOutliers(nulls, 1.0, 3).collect())))
+    assert(nullCoordinate(intercept[Exception](Geometry.exactOutliers(nulls, 1.0, 3).collect())))
+    val empty = Seq.empty[(Long, Double, Double)].toDF("id", "x", "y")
+    val approx = Geometry.approxOutliers(empty, 1.0, 3)
+    assert(approx.collect().isEmpty)
+    assert(approx.schema == org.apache.spark.sql.types.StructType.fromDDL(
+      "cls string, n_points bigint not null, n_cells bigint not null"))
+    val exact = Geometry.exactOutliers(empty, 1.0, 3)
+    assert(exact.collect().isEmpty)
+    assert(exact.schema == org.apache.spark.sql.types.StructType.fromDDL(
+      "qid bigint not null, n_neighbors bigint not null"))
+  }
+
   test("uber-10k golden: 236 exact / 165 sure / 195 uncertain (published reference output)") {
     // anchors from Homework_1/Data/Example/output_uber10k_0.02_10_5_2.pdf;
     // the uber-100k twin (673/435/658) is asserted inside Bench so the

@@ -70,9 +70,10 @@ class PlanContractSpec extends SparkSpec {
   test("HW1/HW2 point ops: bounded job counts on the driver paths") {
     // eager-path operators hide their distributed work behind a bare
     // LocalTableScan, so the job count is the contract: the exact outliers
-    // run the histogram (shuffle + collect) and ONE candidate-point
-    // collect; MRFFT runs the repartition, R1 and R3 over one cached array
-    // pair per partition; the approximate outliers run the histogram only
+    // run the grid-pass histogram and ONE candidate-point job over the
+    // same planned rows; MRFFT runs the repartition, R1 and R3 over one
+    // cached array pair per partition; the approximate outliers run the
+    // grid pass only
     import graft.ops.Geometry
     import spark.implicits._
     val rng = new scala.util.Random(11)
@@ -92,11 +93,16 @@ class PlanContractSpec extends SparkSpec {
       assert(p.contains("LocalTableScan") && !p.contains("Exchange"),
         s"exact outliers left the driver path:\n$p")
       assert(planted.map(_._1).toSet.subsetOf(exact.collect().map(_.getLong(0)).toSet))
-      assert(exactJobs <= 3, s"exactOutliers ran $exactJobs jobs")
+      assert(exactJobs <= 2, s"exactOutliers ran $exactJobs jobs")
       val fftJobs = jobsOf(Geometry.mrFFT(pts, k = 30, l = 4))
       assert(fftJobs <= 3, s"mrFFT ran $fftJobs jobs")
-      val approxJobs = jobsOf(Geometry.approxOutliers(pts, radius, 10).collect())
-      assert(approxJobs <= 2, s"approxOutliers ran $approxJobs jobs")
+      var approx: org.apache.spark.sql.DataFrame = null
+      val approxJobs = jobsOf { approx = Geometry.approxOutliers(pts, radius, 10) }
+      assert(approxJobs <= 1, s"approxOutliers ran $approxJobs jobs")
+      val ap = approx.queryExecution.executedPlan
+      assert(ap.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec],
+        s"approx outliers left the driver path:\n$ap")
+      assert(jobsOf(approx.collect()) == 0)
     } finally { pts.unpersist(); graft.core.InternalCaches.release(spark) }
   }
 
