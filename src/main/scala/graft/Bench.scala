@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.storage.StorageLevel
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.mutable
 
 /** Benchmark main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR
   * and prints one JSON line. Results are forced through the noop sink so the
@@ -8,7 +11,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Distinguishes a real golden-anchor failure from the generic
     * IllegalStateExceptions Spark throws for infrastructure states. */
-  private final class GoldenMismatch(msg: String) extends RuntimeException(msg)
+  private[graft] final class GoldenMismatch(msg: String) extends RuntimeException(msg)
+
+  /** Fails the bench with a [[GoldenMismatch]] unless `ok`. */
+  private[graft] def golden(ok: Boolean, msg: => String): Unit =
+    if (!ok) throw new GoldenMismatch(msg)
+
+  private type Query = (SparkSession, String) => DataFrame
 
   private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted; val n = s.length
@@ -32,6 +41,10 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  private def seconds(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
   /** The HIGH VARIANCE stderr line for a run vector whose valid max/min
     * ratio exceeds 4x (None when dispersion is acceptable) — makes any
     * phantom median self-identifying in the round log instead of needing
@@ -43,90 +56,76 @@ object Bench {
     else None
   }
 
+  /** The probe bar: a median over 0.5 s and over 1.5x its probe steady
+    * state measures contention or a regression, not the query. Sub-0.5 s
+    * medians ratio wildly on scheduling jitter, so they never trip it.
+    * tools/compare_probe.py applies the same test to the artifact. */
+  private[graft] def overBar(median: Double, steady: Double): Boolean =
+    median > 0.5 && median > 1.5 * math.max(steady, 0.01)
+
   /** The driver keeps the last ~2000 stdout chars and parses the literal
     * last line; 1950 leaves slack for a noisy window widening medians. */
   private[graft] val ContractBudget = 1950
 
   /** 1-minute host load average (first /proc/loadavg field) — the load
-    * evidence BENCH_DETAIL carries per measurement round and per BIG
-    * anchor, so a contended window is machine-readable in the artifact.
+    * evidence BENCH_DETAIL carries per measurement round and per anchor.
     * -1.0 when unreadable (non-Linux dev box). */
   private[graft] def loadAvg(): Double = try {
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-      .split("\\s+")(0).toDouble
+    new String(Files.readAllBytes(Paths.get("/proc/loadavg")), "UTF-8").split("\\s+")(0).toDouble
   } catch { case e if scala.util.control.NonFatal(e) => -1.0 }
 
-  /** GLOBAL WALL-CLOCK BUDGET (round 17 — the r16 driver bench died rc 124
-    * with `parsed: null` because the probe-requeue cascade, the isolated
-    * re-measure phase, and the 900 s load-gate sleeps compose without any
-    * total cap). Once `budgetExhausted`, every OPTIONAL phase degrades —
-    * requeue rounds, isolated re-measures, load-gate sleeps, anchor extra
-    * reps all skip, and anchors drop to 1 warm rep — so the run always
-    * reaches the contract line, which then carries
-    * `"budget_exhausted":true`. Contended evidence beats zero evidence.
-    * SPARK_GRAFT_WALL_BUDGET (seconds, <= 0 disables) defaults to 1200 —
-    * a clean full run finishes well under it, and the degraded tail keeps
-    * even a contended run inside the driver's timeout window (round 18:
-    * 1500 → 1200, leaving headroom for the post-budget 1-rep anchors the
-    * driver's ~3600 s window must also fit).
-    *
-    * Round 18 — the budget now gates the MANDATORY passes too: the r17
-    * driver run spent 3 588 s in warm/settle/measured rounds under a
-    * contended window (they had no budgetExhausted() check) and died at
-    * rc 124 with the contract line unprinted for the second consecutive
-    * round. Past the budget, warm/settle runs skip and measured rounds
-    * append the existing -1.0 marker; past [[hardExhausted]] (1.5x the
-    * budget) whole anchor sections skip, bounding the degraded tail. */
+  /** Global wall-clock budget (SPARK_GRAFT_WALL_BUDGET seconds, <= 0
+    * disables, default 1200). Requeue rounds, isolated re-measures and
+    * load-gate sleeps compose without any other total cap, and a run the
+    * driver kills at its timeout prints no contract line. Past the budget
+    * every optional phase skips, warm/settle runs skip, measured rounds
+    * append -1.0 markers and anchors drop to one rep; the contract line
+    * then carries `"budget_exhausted":true`: contended evidence beats
+    * zero evidence. Past [[hardExhausted]] whole anchor sections skip,
+    * bounding the degraded tail; 1200 s leaves a contended run with its
+    * degraded tail inside the driver's ~3600 s window. */
   private[graft] val wallStartNs: Long = System.nanoTime()
   private[graft] def wallBudgetSec(): Long = sys.env.get("SPARK_GRAFT_WALL_BUDGET")
     .flatMap(_.toLongOption).getOrElse(1200L)
+  private def elapsedSec(): Double = (System.nanoTime() - wallStartNs) / 1e9
+  private def overBudget(factor: Double): Boolean = {
+    val b = wallBudgetSec()
+    b > 0 && elapsedSec() > factor * b
+  }
   @volatile private[graft] var budgetTripped = false
   private[graft] def budgetExhausted(): Boolean = {
-    val b = wallBudgetSec()
-    val ex = b > 0 && (System.nanoTime() - wallStartNs) / 1e9 > b
+    val ex = overBudget(1.0)
     if (ex && !budgetTripped) {
       budgetTripped = true
-      System.err.println(f"[bench] WALL BUDGET EXHAUSTED after " +
-        f"${(System.nanoTime() - wallStartNs) / 1e9}%.0f s (budget ${b}%d s) — " +
-        "skipping all remaining requeues/isolation/load-waits/extra-reps")
+      System.err.println(f"[bench] WALL BUDGET EXHAUSTED after ${elapsedSec()}%.0f s " +
+        f"(budget ${wallBudgetSec()}%d s) — skipping all remaining requeues/isolation/load-waits/extra-reps")
     }
     ex
   }
 
-  /** HARD exhaustion (1.5x the wall budget): even the 1-warm-rep degraded
-    * anchors stop — remaining sections skip entirely so the contract line
-    * lands with whatever evidence exists. The soft budget degrades; this
-    * one amputates. */
-  private[graft] def hardExhausted(): Boolean = {
-    val b = wallBudgetSec()
-    b > 0 && (System.nanoTime() - wallStartNs) / 1e9 > 1.5 * b
-  }
+  /** HARD exhaustion (1.5x the wall budget): even the 1-rep degraded
+    * anchors stop, so the contract line lands with whatever evidence
+    * exists. The soft budget degrades; this one amputates. */
+  private[graft] def hardExhausted(): Boolean = overBudget(1.5)
 
-  /** LAST-RESORT contract line (round 18 — BENCH_r16 AND BENCH_r17 both
-    * came back rc 124 / `parsed: null`; the driver keeps only the last
-    * ~2000 stdout chars and the contract line printed only at the very end
-    * of main()). The main loop stashes a best-available compact line here
-    * at every phase boundary; a JVM shutdown hook prints it iff the normal
-    * path never did. The r16/r17 tails prove SIGTERM is delivered and
-    * hooks run (Spark's own shutdown hook fired). Registered through
-    * Hadoop's ShutdownHookManager at priority 0 when available — Spark's
-    * hooks run at higher priority, so their stop()-time stderr noise lands
-    * BEFORE this stdout line — with a plain Runtime hook as fallback. */
+  /** Last-resort contract line. A run killed before the end of main()
+    * would leave the driver no contract line, so the run stashes a
+    * best-available compact line here at every phase boundary, and a
+    * SIGTERM handler (with a last-priority shutdown hook as fallback)
+    * prints it iff the normal path never did. */
   @volatile private[graft] var contractPrinted = false
   @volatile private[graft] var sigtermSeen = false
   private[graft] val emergencyLine =
     new java.util.concurrent.atomic.AtomicReference[String](null)
   @volatile private var hookRegistered = false
-  private def printEmergencyLine(): Unit = {
+  private[graft] def printEmergencyLine(): Unit = {
     val stashed = emergencyLine.get
     if (!contractPrinted && stashed != null) {
       contractPrinted = true // print at most once across handler + hook
-      // the stash is built with the sigterm marker; a non-signal exit
+      // the stash carries the sigterm marker; an exit without a signal
       // (e.g. an uncaught exception in main) reaching only the fallback
-      // shutdown hook relabels it "emergency" so the artifact never claims
-      // a SIGTERM that was not delivered (round 19, advisor). Both markers
-      // are within the ContractBudget slack, so the shed math holds.
+      // hook relabels it, so the artifact never claims a SIGTERM that was
+      // not delivered. Both markers fit the ContractBudget slack.
       val line = if (sigtermSeen) stashed
         else stashed.replace("\"sigterm\":true", "\"emergency\":true")
       System.out.println(line)
@@ -136,15 +135,13 @@ object Bench {
   private[graft] def registerEmergencyHook(): Unit = synchronized {
     if (!hookRegistered) {
       hookRegistered = true
-      // PRIMARY: an immediate SIGTERM handler. A shutdown HOOK is too late
-      // — measured with DevHookProbe: sbt pumps the forked JVM's stdout,
-      // and by the time a hook has waited behind Spark's stop() the
-      // TERM'd sbt parent is gone and the pump with it, so a hook-printed
-      // line lands in a dead pipe (without Spark the same hook's line
-      // arrives). The handler prints within ms of the signal — while the
-      // pump is still draining — then chains to the previous handler (or
-      // exits 143, which runs the normal shutdown hooks: Spark's stop
-      // included).
+      // PRIMARY: an immediate SIGTERM handler. A shutdown HOOK is too late:
+      // sbt pumps the forked JVM's stdout, and by the time a hook has waited
+      // behind Spark's stop() the TERM'd sbt parent is gone and the pump
+      // with it (measured: with a live SparkSession the hook's line is
+      // lost, the handler's lands). The handler prints within ms of the
+      // signal, then chains to the previous handler (or exits 143, which
+      // runs the normal shutdown hooks: Spark's stop included).
       try {
         import sun.misc.{Signal, SignalHandler}
         class Chain extends SignalHandler {
@@ -189,36 +186,30 @@ object Bench {
     * iowait (4), and guest/guest_nice (8, 9 — already folded into
     * user/nice on Linux, so summing them double-counts a VM-hosting
     * box's guest time). Includes STEAL (7): jiffies the hypervisor gave
-    * to co-tenant VMs count as foreign work against this box, which the
-    * round-17 probes measured at ~1 core even while this box idled.
-    * One half of the FOREIGN-WORK meter below. -1 when unreadable. */
+    * to co-tenant VMs count as foreign work against this box. One half
+    * of the FOREIGN-WORK meter below. -1 when unreadable. */
   private[graft] def hostBusyJiffies(): Long = try {
-    val line = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/stat")), "UTF-8").linesIterator.next()
-    val f = line.trim.split("\\s+").drop(1).map(_.toLong)
-    f.zipWithIndex.collect {
-      case (v, i) if i != 3 && i != 4 && i != 8 && i != 9 => v }.sum
+    cpuJiffies().zipWithIndex.collect { case (v, i) if i != 3 && i != 4 && i != 8 && i != 9 => v }.sum
   } catch { case e if scala.util.control.NonFatal(e) => -1L }
 
+  private def procStat(): Iterator[String] =
+    new String(Files.readAllBytes(Paths.get("/proc/stat")), "UTF-8").linesIterator
+
+  /** The aggregate `cpu` line of /proc/stat, in jiffies per field. */
+  private def cpuJiffies(): Array[Long] = procStat().next().trim.split("\\s+").drop(1).map(_.toLong)
+
   /** Host-wide iowait jiffies (/proc/stat cpu field 4) — the I/O-noise
-    * meter beside [[hostBusyJiffies]]: this box's documented dominant
-    * noise mode is D-state I/O contention (loadavg 10-25 at ~0 foreign
-    * CPU — the mode that contaminated PROBE_r16's q34/q35/q57/q58 vectors
-    * 6-27x), which a CPU-only meter reads as CLEAN. -1 when unreadable. */
-  private[graft] def hostIowaitJiffies(): Long = try {
-    val line = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/stat")), "UTF-8").linesIterator.next()
-    line.trim.split("\\s+").drop(1).map(_.toLong).lift(4).getOrElse(-1L)
-  } catch { case e if scala.util.control.NonFatal(e) => -1L }
+    * meter beside [[hostBusyJiffies]]: D-state I/O contention (loadavg
+    * 10-25 at ~0 foreign CPU) reads as CLEAN to a CPU-only meter. -1 when
+    * unreadable. */
+  private[graft] def hostIowaitJiffies(): Long = try cpuJiffies().lift(4).getOrElse(-1L)
+  catch { case e if scala.util.control.NonFatal(e) => -1L }
 
   /** Instantaneous count of D-state (uninterruptible-sleep) processes
     * (`procs_blocked` in /proc/stat) — the second I/O-contention signal.
     * -1 when unreadable. */
   private[graft] def procsBlocked(): Long = try {
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/stat")), "UTF-8").linesIterator
-      .find(_.startsWith("procs_blocked"))
-      .map(_.split("\\s+")(1).toLong).getOrElse(-1L)
+    procStat().find(_.startsWith("procs_blocked")).map(_.split("\\s+")(1).toLong).getOrElse(-1L)
   } catch { case e if scala.util.control.NonFatal(e) => -1L }
 
   /** This JVM's cumulative CPU time in ns (all threads, GC included).
@@ -230,17 +221,11 @@ object Bench {
     }
 
   /** Average FOREIGN cpu-cores burned during `f`: (host busy CPU − this
-    * JVM's CPU) / wall. This is the post-run contention meter the 1-min
-    * loadavg cannot be (round 16 — the r15 100M geometry anchors drifted
-    * 1.3-1.6× under a window that turned loaded MID-run; the pre-anchor
-    * gate admits it and loadavg_post is dominated by the anchor's own 32
-    * threads, but host-minus-self CPU cleanly separates our work from
-    * everyone else's regardless of how hard the anchor itself runs).
-    * Round 17 adds the I/O face of the same meter: average host iowait
-    * cores burned during `f` and the peak D-state process count sampled
-    * at the rep's endpoints — the exclusion logic below consumes BOTH
-    * (a rep can be I/O-starved at zero foreign CPU). Meters read -1 when
-    * unreadable. */
+    * JVM's CPU) / wall, plus average host iowait cores and the peak D-state
+    * process count at the rep's endpoints. The 1-minute loadavg cannot
+    * separate a saturating anchor's own threads from everyone else's;
+    * host-minus-self CPU can, and a rep can be I/O-starved at zero foreign
+    * CPU. Meters read -1 when unreadable. */
   private[graft] final case class RepMeter(sec: Double, foreign: Double,
                                            iowaitCores: Double, blocked: Long)
   private[graft] def timeWithForeign(f: => Unit): RepMeter = {
@@ -260,54 +245,31 @@ object Bench {
     RepMeter(sec, foreign, iowait, math.max(blk0, blk1))
   }
 
-  /** Foreign-cores bar above which an anchor rep counts as CONTENDED
-    * (SPARK_GRAFT_FOREIGN_GATE, default 3.0 cores; <= 0 disables). A
-    * quiet box shows < 1 foreign core under a saturating anchor; the r15
-    * drifted windows carried ambient loads of 8-15. */
-  private[graft] def foreignGate(): Double = sys.env.get("SPARK_GRAFT_FOREIGN_GATE")
-    .flatMap(_.toDoubleOption).getOrElse(3.0)
-
-  /** Iowait-cores bar above which a rep counts as CONTENDED even at zero
-    * foreign CPU (SPARK_GRAFT_IOWAIT_GATE, default 2.0 cores; <= 0
-    * disables) — a CPU-saturating anchor on warm page cache shows ~0
-    * host iowait, while the box's D-state episodes show several cores. */
-  private[graft] def iowaitGate(): Double = sys.env.get("SPARK_GRAFT_IOWAIT_GATE")
-    .flatMap(_.toDoubleOption).getOrElse(2.0)
-
-  /** D-state process-count bar for the same exclusion
-    * (SPARK_GRAFT_BLOCKED_GATE, default 8; <= 0 disables) — this bench's
-    * own writes park 0-2 procs in D briefly; the documented noise windows
-    * show tens. */
-  private[graft] def blockedGate(): Long = sys.env.get("SPARK_GRAFT_BLOCKED_GATE")
-    .flatMap(_.toLongOption).getOrElse(8L)
+  /** Contention gates for one rep. A quiet box shows < 1 foreign core
+    * under a saturating anchor, ~0 host iowait on warm page cache and
+    * 0-2 D-state processes from the bench's own writes; the noise windows
+    * these gates exist for showed ambient loads of 8-15, several iowait
+    * cores and tens of blocked processes. */
+  private val ForeignGate = 3.0
+  private val IowaitGate = 2.0
+  private val BlockedGate = 8L
 
   /** A rep measured against more contention than ANY gate admits —
-    * foreign CPU cores, host iowait cores, or a D-state pile-up. */
-  private[graft] def contendedRep(r: RepMeter): Boolean = {
-    val fThr = foreignGate(); val wThr = iowaitGate(); val bThr = blockedGate()
-    (fThr > 0 && r.foreign > fThr) || (wThr > 0 && r.iowaitCores > wThr) ||
-      (bThr > 0 && r.blocked > bThr)
-  }
+    * foreign CPU cores, host iowait cores, or a D-state pile-up.
+    * Unreadable (-1) meters never count. */
+  private[graft] def contendedRep(r: RepMeter): Boolean =
+    r.foreign > ForeignGate || r.iowaitCores > IowaitGate || r.blocked > BlockedGate
 
-  /** Ambient-load GATE for the anchor sections (round 13 — the r12 BIG
-    * tier measured at loadavg 4-27 and published a 2.5x-inflated
-    * minhash_lsh_300k; recording load wasn't enough, the bench must
-    * DEFER). Before an anchor's measurement starts — and before each
-    * dispersion-requeue rep — the bench waits until the 1-minute
-    * /proc/loadavg drops below the threshold (SPARK_GRAFT_LOAD_GATE,
-    * default 5 — round 14: the r13 sweep's skew anchor passed the old
-    * gate of 8 at ambient 7.7 and published 3x its quiet value, so the
-    * default now sits below the decay tail of the sweep's own load;
-    * <= 0 disables), sleeping 20 s per check up to
-    * `maxWaitSec` (default 900; SPARK_GRAFT_LOAD_GATE_WAIT). Returns
-    * (ambient load at go-time, seconds waited, gate-expired — true when
-    * measurement proceeds with ambient STILL over the threshold, which
-    * marks the anchor `*_degraded` in the artifact). The published
-    * `*_loadavg` is THIS pre-measurement ambient reading: a saturating
-    * 32-thread anchor's own reps drive the post-reps 1-min average
-    * toward ~32 all by themselves, so a post reading (kept as
-    * `*_loadavg_post` for transparency) cannot distinguish contention
-    * from honest work — ambient-at-start can. */
+  /** Ambient-load gate: before a measurement starts, wait until the
+    * 1-minute loadavg drops below SPARK_GRAFT_LOAD_GATE (default 5, <= 0
+    * disables), checking every 20 s for up to SPARK_GRAFT_LOAD_GATE_WAIT
+    * seconds (default 900) or until the wall budget trips. Recording load
+    * was not enough: anchors measured at loadavg 4-27 published 2.5-3x
+    * their quiet values. Returns (ambient load at go-time, seconds waited,
+    * gate expired — measuring with ambient STILL over the threshold, which
+    * marks an anchor `*_degraded`). The ambient reading is what an anchor
+    * publishes as `*_loadavg`: a saturating anchor's own threads dominate
+    * any post-reps reading. */
   private[graft] def awaitQuietLoad(name: String): (Double, Long, Boolean) = {
     val thr = sys.env.get("SPARK_GRAFT_LOAD_GATE")
       .flatMap(_.toDoubleOption).getOrElse(5.0)
@@ -350,8 +312,8 @@ object Bench {
 
   /** The committed probe sweep to requeue against: SPARK_GRAFT_PROBE_FILE
     * if set, else the newest PROBE_r<N>.txt in `dir`. Empty map (requeue
-    * disabled) when neither exists — round 1 of a fresh clone has no probe
-    * history yet — and, with one stderr line, when the sweep's
+    * disabled) when neither exists — a fresh clone has no probe history
+    * yet — and, with one stderr line, when the sweep's
     * `PROBE_CONFIG` header is missing or names another data dir or core
     * count than this run's: an sf0.1 steady is no bar for an sf0.01 run. */
   private[graft] def loadProbeSteady(sfDir: String, cpus: Int,
@@ -380,33 +342,28 @@ object Bench {
     Map.empty
   }
 
-  /** RESUMABLE BENCH (round 19, verdict item 1): four consecutive rounds
-    * produced zero complete sets of clean per-query driver timings because
-    * each contended 1200 s budget window started the sweep from scratch and
-    * shed whatever it could not finish. The bench now persists per-query
-    * evidence to a plain-text manifest as it accumulates, and a
-    * re-invocation ON THE SAME CODE serves already-clean medians from the
-    * manifest instead of re-measuring — so several budget windows compose
-    * one complete artifact. Served medians are first-class provenance:
-    * "manifest" in published_source, "queries_resumed" on the contract
-    * line.
+  /** RESUMABLE BENCH: per-query evidence persists to a plain-text manifest
+    * as it accumulates, and a re-invocation ON THE SAME CODE serves
+    * already-clean medians from it instead of re-measuring, so several
+    * contended budget windows compose one complete artifact instead of
+    * each shedding what it could not finish. Served medians are
+    * first-class provenance: "manifest" in published_source,
+    * "queries_resumed" on the contract line.
     *
     * Validity key: SHA-256 over every file under src/main/scala (sorted
     * path + bytes) plus the run configuration (sf dir, cpus, measured-run
-    * count). ANY source change — not just to the touched operator —
-    * invalidates every entry, so a stale median can never survive a code
-    * edit; a mismatched or unreadable key disables reuse, never crashes.
+    * count). ANY source change invalidates every entry, so a stale median
+    * can never survive a code edit; a mismatched or unreadable key
+    * disables reuse, never crashes.
     *
     * Entry lifecycle: partial run vectors save after every measured round
     * (clean=false — a SIGTERM'd window still contributes its runs); the
     * final save marks a query clean only when it has >= 2 valid runs, no
-    * high-variance flag, and its PUBLISHED median clears the probe bar
-    * (the same 1.5x-steady test the requeue cascade uses) — a median
-    * measured against contention is therefore never blessed for reuse.
-    * Not-clean entries with fewer valid runs than the target are resumed
-    * as partial vectors (fresh rounds append); not-clean entries that
-    * already reached the target re-measure from scratch (they were
-    * adjudicated contested — stale evidence must not accumulate). */
+    * high-variance flag, and its PUBLISHED median clears the probe bar, so
+    * a median measured against contention is never blessed for reuse.
+    * Not-clean entries with fewer valid runs than the target resume as
+    * partial vectors; not-clean entries that already reached the target
+    * were adjudicated contested and re-measure from scratch. */
   private[graft] final case class ManifestEntry(runs: Vector[Double],
       published: Double, source: String, clean: Boolean)
 
@@ -414,20 +371,19 @@ object Bench {
     * configuration). "nokey" — which disables reuse — when the tree is
     * unreadable (e.g. the bench runs outside the repo root). */
   private[graft] def sourceKey(extra: String,
-      root: java.nio.file.Path = java.nio.file.Paths.get("src/main/scala")): String = try {
-    if (!java.nio.file.Files.isDirectory(root)) "nokey" else {
+      root: Path = Paths.get("src/main/scala")): String = try {
+    if (!Files.isDirectory(root)) "nokey" else {
       val md = java.security.MessageDigest.getInstance("SHA-256")
       import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(root)
+      val walk = Files.walk(root)
       try {
         val files = walk.iterator().asScala
-          .filter(p => p.toString.endsWith(".scala") &&
-            java.nio.file.Files.isRegularFile(p))
+          .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
           .toVector.sortBy(_.toString)
         if (files.isEmpty) return "nokey"
         files.foreach { p =>
           md.update(p.toString.getBytes("UTF-8"))
-          md.update(java.nio.file.Files.readAllBytes(p))
+          md.update(Files.readAllBytes(p))
         }
       } finally walk.close()
       md.update(extra.getBytes("UTF-8"))
@@ -483,11 +439,10 @@ object Bench {
       val runs = if (e.runs.isEmpty) "-" else e.runs.map(r => f"$r%.3f").mkString(",")
       sb.append(f"Q $n ${e.published}%.3f ${e.source} ${e.clean} $runs\n")
     }
-    val tmp = java.nio.file.Paths.get(path + ".tmp")
-    java.nio.file.Files.write(tmp, sb.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val tmp = Paths.get(path + ".tmp")
+    Files.write(tmp, sb.toString.getBytes("UTF-8"))
+    Files.move(tmp, Paths.get(path),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   } catch { case e if scala.util.control.NonFatal(e) =>
     System.err.println(s"[bench] resume manifest not saved: $e")
   }
@@ -495,12 +450,11 @@ object Bench {
   /** Build the compact contract line, shedding until it fits the driver's
     * stdout window: cheapest per-query medians FIRST (their full values
     * survive in BENCH_DETAIL.json and a "queries_shed" marker records the
-    * omission — round 9's 91-query inventory outgrew the window on query
-    * names alone, the r6/r7 parsed:null failure mode), then reference
-    * sections least-graded-on first (the uber section the BASELINE.md bar
-    * reads goes last). The expensive queries — the ones a regression
-    * grader needs in front of it — and the baseline sections always
-    * outlive the cheap tail. Returns (line, nQueriesShed, sectionsShed). */
+    * omission), then reference sections least-graded-on first (the uber
+    * section the BASELINE.md bar reads goes last). The expensive queries —
+    * the ones a regression grader needs in front of it — and the baseline
+    * sections always outlive the cheap tail. Returns (line, nQueriesShed,
+    * sectionsShed). */
   private[graft] def compactContractLine(
       total: Double, sfDir: String,
       queryMedians: Vector[(String, Double)],
@@ -523,14 +477,11 @@ object Bench {
         .mkString("{", ",", "}")
       val shedMark = (if (qShed > 0) s""","queries_shed":$qShed""" else "") +
         (if (nIsolated > 0) s""","queries_isolated":$nIsolated""" else "") +
-        // the headline total sums only valid medians, so a degraded run
-        // with -1.0 flags publishes a SMALLER total than a complete one —
-        // the excluded count makes the shrunken total self-describing on
-        // the contract line itself (round 19, advisor)
+        // the headline total sums only valid medians, so the excluded count
+        // makes a degraded run's smaller total self-describing
         (if (nExcluded > 0) s""","queries_excluded":$nExcluded""" else "") +
-        // medians served from the resume manifest (measured by an earlier
-        // same-code invocation) are counted so the line states how much of
-        // it was measured in THIS window (round 19, resumable bench)
+        // how much of the line was served from the resume manifest rather
+        // than measured in this window
         (if (nResumed > 0) s""","queries_resumed":$nResumed""" else "") +
         (if (budgetExhausted) s""","budget_exhausted":true""" else "") +
         (if (sigterm) s""","sigterm":true""" else "")
@@ -554,6 +505,902 @@ object Bench {
     (compact, qShed, sectionsShed.toSeq)
   }
 
+  /** One anchor's timing: its detail keys and the published warm median. */
+  private[graft] final case class Timed(json: String, warm: Double)
+
+  private def gcMs(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime.max(0L)).sum
+  }
+
+  private def heapHeadroomMb(): Long = {
+    val rt = Runtime.getRuntime
+    (rt.maxMemory - (rt.totalMemory - rt.freeMemory)) / (1024 * 1024)
+  }
+
+  /** Per-rep meter arrays as detail keys, each name prefixed `prefix`. */
+  private def meterJson(prefix: String, reps: Seq[RepMeter]): String =
+    s""""${prefix}foreign_cores":[${reps.map(r => f"${r.foreign}%.2f").mkString(",")}],""" +
+      s""""${prefix}iowait_cores":[${reps.map(r => f"${r.iowaitCores}%.2f").mkString(",")}],""" +
+      s""""${prefix}procs_blocked":[${reps.map(_.blocked).mkString(",")}]"""
+
+  /** Times one anchor: a cold run and `warmReps` warm runs of `f`, each
+    * under [[timeWithForeign]] meters. The BASELINE.md numbers are one-shot
+    * runs that include JIT, so the cold figure keeps the comparison honest;
+    * goldens and the baseline bar read the warm median.
+    *  - The ambient load gate runs first (`*_loadavg`, `*_load_wait_s`).
+    *  - Past the wall budget the anchor runs ONE rep in total: the cold
+    *    run doubles as the warm one, so `f` still ran for the goldens. The
+    *    budget is re-checked between reps.
+    *  - Anchors run back-to-back, so their dispersion bar is 1.5x (the
+    *    sweep's is 4x): a wider vector, or one where every rep breached a
+    *    contention gate, earns up to 2 re-gated extra reps. Honest-work
+    *    anchors sit well under 1.3x, so the bar does not flap.
+    *  - The published warm is the median of the steady cluster: the clean
+    *    reps (all reps if none is clean) within 1.5x of their min. When
+    *    that excludes reps, `*_warm_full` and `*_warm_excluded` publish
+    *    beside it, so every exclusion is auditable.
+    *  - `*_degraded` marks an anchor measured past the budget, after an
+    *    expired load gate, or with every rep contended.
+    *  - `*_mem_headroom_mb` and `*_gc_s` tell memory pressure from a
+    *    regression. */
+  private[graft] def coldWarm(name: String, warmReps: Int)(f: => Unit): Timed = {
+    val (ambient, waited, gateExpired) = awaitQuietLoad(name)
+    val gc0 = gcMs()
+    val preBudget = budgetExhausted()
+    val cold = timeWithForeign(f)
+    val effReps = if (preBudget || budgetExhausted()) 1 else warmReps
+    var reps = if (preBudget) Vector(cold) else Vector(timeWithForeign(f))
+    while (reps.size < effReps && !budgetExhausted())
+      reps = reps :+ timeWithForeign(f)
+    def warms = reps.map(_.sec)
+    var extra = 0
+    while (extra < 2 && warms.length > 1 && warms.min > 0 &&
+        (warms.max / warms.min > 1.5 || reps.forall(contendedRep)) &&
+        !budgetExhausted()) {
+      if (reps.forall(contendedRep))
+        System.err.println(f"[bench] $name%s: every warm rep ran against " +
+          "gate-breaching contention (foreign CPU / iowait / D-state) — " +
+          "re-gating and requeueing one rep")
+      else
+        System.err.println(f"[bench] $name%s anchor dispersion " +
+          f"${warms.max / warms.min}%.2f > 1.5 — requeueing one rep")
+      awaitQuietLoad(s"$name(requeue)")
+      reps = reps :+ timeWithForeign(f)
+      extra += 1
+    }
+    highVarianceLine(name, warms).foreach(System.err.println)
+    val clean = reps.filterNot(contendedRep)
+    val steadyPool = if (clean.nonEmpty) clean.map(_.sec) else warms
+    val steady = steadyPool.filter(_ <= steadyPool.min * 1.5)
+    val warmMed = median(steady)
+    val fullProvenance =
+      if (steady.size < warms.size)
+        f""""${name}_warm_full":${median(warms)}%.3f,""" +
+          f""""${name}_warm_excluded":${warms.size - steady.size}%d,"""
+      else ""
+    val degraded = gateExpired || budgetExhausted() || clean.isEmpty
+    val degradedMark = if (degraded) s""""${name}_degraded":true,""" else ""
+    // the cold rep's meters publish under their own *_cold_* keys, so the
+    // per-rep meter arrays line up with *_warm_runs
+    Timed(
+      f""""${name}_cold":${cold.sec}%.3f,"${name}_cold_foreign":${cold.foreign}%.2f,""" +
+        f""""${name}_cold_iowait":${cold.iowaitCores}%.2f,"${name}_warm":$warmMed%.3f,""" +
+        s""""${name}_warm_runs":[${warms.map(x => f"$x%.3f").mkString(",")}],""" +
+        meterJson(s"${name}_", reps) +
+        f""","${name}_mem_headroom_mb":${heapHeadroomMb()}%d,""" +
+        f""""${name}_loadavg":$ambient%.2f,"${name}_load_wait_s":$waited%d,""" +
+        f""""${name}_loadavg_post":${loadAvg()}%.2f,$fullProvenance$degradedMark""" +
+        f""""${name}_gc_s":${(gcMs() - gc0) / 1000.0}%.2f,"$name":$warmMed%.3f""",
+      warmMed)
+  }
+
+  /** One anchor section of the detail JSON. Only a genuine golden mismatch
+    * fails the bench; any other non-fatal failure degrades to an absent
+    * section (and drops its `compact` entries) with a stderr trace, so
+    * already-validated timings are not discarded. Fatal VM errors (OOM)
+    * propagate: a JSON line printed from a heap in unknown state is worth
+    * nothing. Past the hard budget the section skips. */
+  private[graft] def section(compact: mutable.Map[String, _], name: String)(body: => String): String =
+    if (hardExhausted()) {
+      System.err.println(s"[bench] section $name SKIPPED (hard wall budget)"); ""
+    } else try body catch {
+      case e: GoldenMismatch => throw e
+      case e if scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] $name section dropped: $e")
+        compact.remove(name); ""
+    }
+
+  private val UberCsv = "/root/reference/Homework_1/Data/uber-100k.csv"
+
+  private def outlierClasses(rows: Array[Row]): (Long, Long) = {
+    val byCls = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+    (byCls.getOrElse("sure", 0L), byCls.getOrElse("uncertain", 0L))
+  }
+
+  /** At most this many over-probe-bar queries get the probe requeue and
+    * the isolated re-measure, largest absolute excess first. A uniformly
+    * contended sweep window pushes most sub-second queries over the bar at
+    * once (~70 of 180 observed at ambient loadavg 2-4), and requeueing all
+    * of them ate the whole wall budget before any isolated median could
+    * publish; a flag count that large is a window signature, and only the
+    * largest excesses move the headline. */
+  private val ProbeRequeueCap = 15
+
+  /** One bench invocation, shared by the phases [[main]] runs in order.
+    *
+    * The sweep is INTERLEAVED: rounds over the whole query inventory, each
+    * round running every query once, with the median taken per query
+    * across rounds. Back-to-back runs all sit inside the same few seconds,
+    * so one sustained noise window can own 2 of 3 runs and win the
+    * median (a 10.9 s median published against a 0.42 s steady state); a
+    * query's interleaved runs are minutes apart. That needs every
+    * query's operator-internal persists to stay materialized through the
+    * measured rounds (the warm pass builds them); one release after the
+    * last round leaves the session's storage empty for the anchors. */
+  private final class Run(spark: SparkSession, sfDir: String, cpus: Int) {
+    // a malformed override must not crash the bench before any timing runs
+    private val measuredRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
+      .flatMap { v =>
+        val p = v.toIntOption
+        if (p.isEmpty) System.err.println(s"[bench] ignoring malformed SPARK_GRAFT_BENCH_RUNS='$v'")
+        p
+      }.getOrElse(3).max(1).min(9)
+    private val qseq: Seq[(String, Query)] = SparkEntry.queries.toSeq.sortBy(_._1)
+
+    // Resume is on by default (SPARK_GRAFT_RESUME=0 disables); the manifest
+    // lives in the working directory, see the ManifestEntry scaladoc.
+    private val resumeEnabled = !sys.env.get("SPARK_GRAFT_RESUME").contains("0")
+    private val resumeFile = sys.env.getOrElse("SPARK_GRAFT_RESUME_FILE", "BENCH_MANIFEST.txt")
+    private val manifestKey =
+      if (resumeEnabled) sourceKey(s"$sfDir|$cpus|$measuredRuns") else "nokey"
+    private val (resumedClean, resumedPartial) = {
+      val manifest =
+        if (resumeEnabled) loadManifest(resumeFile, manifestKey) else Map.empty[String, ManifestEntry]
+      val qNames = qseq.map(_._1).toSet
+      // clean entries serve their published median without re-measuring;
+      // partial (not-clean, under-target) vectors resume where they stopped
+      val clean = manifest.filter { case (n, e) => qNames(n) && e.clean }
+      val partial = manifest.collect {
+        case (n, e) if qNames(n) && !e.clean &&
+            e.runs.count(_ >= 0) > 0 && e.runs.count(_ >= 0) < measuredRuns =>
+          n -> e.runs.filter(_ >= 0)
+      }
+      if (clean.nonEmpty || partial.nonEmpty)
+        System.err.println(s"[bench] resume manifest $resumeFile: serving " +
+          s"${clean.size} clean medians, resuming ${partial.size} " +
+          s"partial vectors (key $manifestKey)")
+      (clean, partial)
+    }
+
+    private val runsByQ = mutable.LinkedHashMap.empty[String, Vector[Double]]
+    private val failedQ = mutable.Set.empty[String]
+    // host load per measurement phase, so a contended round is
+    // machine-readable in the artifact
+    private val roundLoads = mutable.LinkedHashMap.empty[String, Double]
+    // compact (name -> warm median) pairs per anchor section: the contract
+    // line carries these, the full record goes to BENCH_DETAIL.json
+    private val compactRef = mutable.LinkedHashMap.empty[String, Vector[(String, String)]]
+    private val probeSteady = loadProbeSteady(sfDir, cpus)
+    private var isolatedJson = ""
+    private var isolatedMedian = Map.empty[String, Double]
+
+    private def once(fn: Query): Double = timeNoop(fn(spark, sfDir))
+
+    /** One sweep step: append a timed run, or on failure a -1.0 marker —
+      * earlier minutes-apart runs are exactly the evidence the
+      * interleaving exists to keep. False on failure. */
+    private def measure(name: String, fn: Query, phase: String): Boolean =
+      try { runsByQ(name) :+= once(fn); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed ($phase): ${e.getMessage}")
+        runsByQ(name) :+= -1.0; false }
+
+    private def overProbeBar(name: String): Boolean =
+      probeSteady.get(name).exists(overBar(medianValid(runsByQ(name)), _))
+
+    private def publishedMedian(name: String): Double =
+      resumedClean.get(name).map(_.published)
+        .orElse(isolatedMedian.get(name)).getOrElse(medianValid(runsByQ(name)))
+
+    /** Stash the best-available contract line for the emergency path. */
+    def stash(): Unit = try {
+      val qMed = runsByQ.toVector.map { case (k, v) =>
+        k -> resumedClean.get(k).map(_.published).getOrElse(medianValid(v)) }
+      val (line, _, _) = compactContractLine(
+        qMed.map(_._2).filter(_ >= 0).sum, sfDir, qMed, compactRef.toSeq,
+        budgetExhausted = budgetTripped, sigterm = true,
+        nExcluded = qMed.count(_._2 < 0), nResumed = resumedClean.size)
+      emergencyLine.set(line)
+    } catch { case e if scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] contract stash failed: $e") }
+
+    /** Mid-run manifest save (clean=false): a budget-shed or SIGTERM'd
+      * window still leaves its valid runs for the next invocation. */
+    private def saveProgress(): Unit = if (resumeEnabled) {
+      val fresh = runsByQ.toVector.collect {
+        case (n, v) if !resumedClean.contains(n) && v.exists(_ >= 0) =>
+          n -> ManifestEntry(v.filter(_ >= 0), medianValid(v), "interleaved", clean = false)
+      }
+      saveManifest(resumeFile, manifestKey, resumedClean.toVector ++ fresh)
+    }
+
+    private def addCompact(sec: String, name: String, v: String): Unit = {
+      compactRef(sec) = compactRef.getOrElse(sec, Vector.empty) :+ (name -> v)
+      stash()
+    }
+
+    /** Warm pass then an untimed settling round. The warm pass is every
+      * query's first execution (JIT, shuffle-file page cache, persists); a
+      * transient failure there retries once before the query is marked
+      * failed. When it ends the JVM is still draining the C2 queue and the
+      * heap absorbing fresh persists, and that window inflates the
+      * first-sorting queries' round-1 runs 3-20x; the settling round
+      * absorbs it. Past the budget both skip, and the query's measured
+      * rounds then publish -1.0. A fully resumed sweep skips the load gate. */
+    def warmAndSettle(): Unit = {
+      if (qseq.exists(q => !resumedClean.contains(q._1)))
+        awaitQuietLoad("gate_sweep")
+      roundLoads("warm") = loadAvg()
+      for ((name, fn) <- qseq) {
+        runsByQ(name) = resumedClean.get(name).map(_.runs)
+          .orElse(resumedPartial.get(name)).getOrElse(Vector.empty)
+        if (!resumedClean.contains(name) && !budgetExhausted()) {
+          try once(fn)
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed (warm run, retrying once): ${e.getMessage}")
+            try once(fn)
+            catch { case e2: Throwable =>
+              System.err.println(s"[bench] $name failed (warm retry): ${e2.getMessage}")
+              failedQ += name; runsByQ(name) = Vector(-1.0) } }
+        }
+      }
+      stash()
+      roundLoads("settle") = loadAvg()
+      for ((name, fn) <- qseq if !failedQ(name) && !resumedClean.contains(name) &&
+          !budgetExhausted()) {
+        try once(fn)
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed (settling round, ignored): ${e.getMessage}") }
+      }
+      stash()
+    }
+
+    /** The measured rounds. A query leaves the round-robin once it holds
+      * `measuredRuns` valid runs, so a resumed partial vector only tops up
+      * its missing rounds; past the budget a run degrades to -1.0. */
+    def measuredRounds(): Unit =
+      for (round <- 1 to measuredRuns) {
+        roundLoads(s"r$round") = loadAvg()
+        for ((name, fn) <- qseq if !failedQ(name) && !resumedClean.contains(name)
+            && runsByQ(name).count(_ >= 0) < measuredRuns) {
+          if (budgetExhausted()) runsByQ(name) :+= -1.0
+          else if (!measure(name, fn, s"round $round")) failedQ += name
+        }
+        stash()
+        saveProgress()
+      }
+
+    /** Requeues; returns the capped over-probe-bar set for [[isolate]].
+      *  - Variance: a query whose vector trips HIGH VARIANCE gets ONE extra
+      *    run (a median over 4 absorbs a single spike). A vector still
+      *    dispersed afterwards is flagged and left for TimeProbe.
+      *  - Probe: a uniformly elevated vector (a whole-window contention
+      *    mode the max/min guard cannot see) shows as a median over the
+      *    probe bar. The top [[ProbeRequeueCap]] such queries get up to 5
+      *    extra runs, stopping once the median clears the bar. Five because
+      *    with all 3 original runs contended, the median over the full
+      *    vector needs >= 4 steady extras to land on a steady run. A query
+      *    still over the bar after 5 is genuinely slower than its steady. */
+    def requeue(): Set[String] = {
+      val flagged = runsByQ.collect {
+        case (n, v) if !failedQ(n) && !resumedClean.contains(n) &&
+          highVarianceLine(n, v).isDefined => n
+      }.toSet
+      if (flagged.nonEmpty && !budgetExhausted()) {
+        System.err.println(s"[bench] requeueing ${flagged.size} HIGH VARIANCE " +
+          s"queries for one extra round: ${flagged.mkString(", ")}")
+        roundLoads("requeue") = loadAvg()
+        for ((name, fn) <- qseq if flagged(name)) measure(name, fn, "requeue round")
+      }
+      val allFlagged = qseq.collect {
+        case (n, _) if !failedQ(n) && !resumedClean.contains(n) && overProbeBar(n) => n }.toSet
+      val capped =
+        if (allFlagged.size <= ProbeRequeueCap) allFlagged
+        else {
+          System.err.println(s"[bench] ${allFlagged.size} queries over the probe bar — " +
+            s"an ambient-window signature; capping requeue+isolation to the top " +
+            s"$ProbeRequeueCap by absolute excess (the ${allFlagged.size - ProbeRequeueCap} " +
+            "others keep their interleaved medians)")
+          allFlagged.toSeq.sortBy(n => probeSteady.getOrElse(n, 0.0) - medianValid(runsByQ(n)))
+            .take(ProbeRequeueCap).toSet
+        }
+      var probeExtra = 0
+      var probeFlagged = capped
+      while (probeExtra < 5 && probeFlagged.nonEmpty && !budgetExhausted()) {
+        System.err.println(s"[bench] probe-divergence requeue ${probeExtra + 1}: " +
+          probeFlagged.toSeq.sorted.map { n =>
+            f"$n (median ${medianValid(runsByQ(n))}%.2f vs steady ${probeSteady(n)}%.2f)"
+          }.mkString(", "))
+        roundLoads(s"probe${probeExtra + 1}") = loadAvg()
+        for ((name, fn) <- qseq if probeFlagged(name)) measure(name, fn, "probe requeue")
+        probeExtra += 1
+        probeFlagged = probeFlagged.filter(n => !failedQ(n) && overProbeBar(n))
+      }
+      if (probeFlagged.nonEmpty)
+        System.err.println(s"[bench] still over the probe bar after $probeExtra requeues " +
+          s"(real regression or sustained contention): ${probeFlagged.toSeq.sorted.mkString(", ")}")
+      stash()
+      saveProgress()
+      capped
+    }
+
+    /** ISOLATED steady-state re-measure of the queries still over the probe
+      * bar: release every operator cache, rebuild only this query's
+      * persists with one untimed run, then take 3 metered runs. The
+      * interleaved sweep keeps every query's persists resident, and the
+      * persist-heavy pairwise family published 1.5-2.6x its one-query-per-JVM
+      * probe steady under that cache pressure; a production caller runs a
+      * query against its own caches. The isolated median replaces the
+      * interleaved one unless a rep breached a contention gate or it is
+      * HIGHER than the interleaved median (isolation removes cache
+      * pressure, so a slower reading is contention). The isolated block
+      * stays in the artifact either way, naming the published winner. */
+    def isolate(capped: Set[String]): Unit = {
+      val flaggedNow = if (budgetExhausted()) Set.empty[String]
+        else capped.filter(n => !failedQ(n) && overProbeBar(n))
+      if (flaggedNow.nonEmpty) {
+        System.err.println(s"[bench] isolated steady-state re-measure of " +
+          s"${flaggedNow.size} over-probe-bar queries: ${flaggedNow.toSeq.sorted.mkString(", ")}")
+        awaitQuietLoad("isolated_remeasure")
+        val load0 = loadAvg()
+        val meds = mutable.HashMap.empty[String, Double]
+        val entries = qseq.filter(q => flaggedNow(q._1)).map { case (name, fn) =>
+          val probe = f""""probe":${probeSteady.getOrElse(name, -1.0)}%.3f"""
+          // the budget can trip mid-phase: the rest skip with a marker
+          if (budgetExhausted()) s""""$name":{"runs":[],"steady":-1.0,$probe,"skipped":"wall_budget"}"""
+          else {
+            graft.core.InternalCaches.release(spark)
+            try {
+              once(fn)
+              var reps = Vector.empty[RepMeter]
+              while (reps.size < 3 && (reps.isEmpty || !budgetExhausted()))
+                reps = reps :+ timeWithForeign { once(fn); () }
+              val runs = reps.map(_.sec)
+              val isoMed = median(runs)
+              val interMed = medianValid(runsByQ(name))
+              val dirty = reps.exists(contendedRep)
+              val substitute = !dirty && (interMed < 0 || isoMed <= interMed)
+              if (substitute) meds(name) = isoMed
+              else System.err.println(f"[bench] $name isolated median $isoMed%.3f NOT " +
+                f"published (interleaved $interMed%.3f kept): " +
+                (if (dirty) "meter-gated contention during isolated reps"
+                 else "isolated median above interleaved — contention, not the query"))
+              f""""$name":{"runs":[${runs.map(x => f"$x%.3f").mkString(",")}],""" +
+                f""""steady":${runs.min}%.3f,$probe,""" + meterJson("", reps) +
+                s""","published":"${if (substitute) "isolated" else "interleaved"}"}"""
+            } catch { case e: Throwable =>
+              System.err.println(s"[bench] $name isolated re-measure failed: ${e.getMessage}")
+              s""""$name":{"runs":[],"steady":-1.0,$probe}"""
+            }
+          }
+        }
+        isolatedJson = f""","isolated_steady":{${entries.mkString(",")},"loadavg":$load0%.2f}"""
+        isolatedMedian = meds.toMap
+      }
+      stash()
+      graft.core.InternalCaches.release(spark)
+      runsByQ.foreach { case (n, v) => highVarianceLine(n, v).foreach(System.err.println) }
+    }
+
+    /** Final manifest save: blesses this window's clean evidence for reuse
+      * by the next same-code invocation (criteria in the ManifestEntry
+      * scaladoc). */
+    def blessForResume(): Unit = if (resumeEnabled) {
+      val fresh = runsByQ.toVector.collect {
+        case (n, v) if !resumedClean.contains(n) =>
+          val pub = publishedMedian(n)
+          val valid = v.filter(_ >= 0)
+          val clean = !failedQ(n) && pub >= 0 &&
+            valid.size >= math.min(2, measuredRuns) &&
+            highVarianceLine(n, v).isEmpty && !probeSteady.get(n).exists(overBar(pub, _))
+          val src = if (isolatedMedian.contains(n)) "isolated" else "interleaved"
+          n -> ManifestEntry(valid, pub, src, clean)
+      }
+      saveManifest(resumeFile, manifestKey, resumedClean.toVector ++ fresh)
+      val nClean = fresh.count(_._2.clean)
+      System.err.println(s"[bench] resume manifest saved: $nClean newly clean + " +
+        s"${resumedClean.size} carried over, ${fresh.size - nClean} not blessed for reuse")
+    }
+
+    /** Times `op` as one anchor of section `sec` and records its compact
+      * warm median; returns the timing and the value of every rep, cold
+      * included. */
+    private def anchor[T](sec: String, name: String, reps: Int = 3)(op: => T): (Timed, Vector[T]) = {
+      val vals = Vector.newBuilder[T]
+      val t = coldWarm(name, reps) { vals += op; () }
+      addCompact(sec, name, f"${t.warm}%.2f")
+      (t, vals.result())
+    }
+
+    /** An anchor whose last value must pass the golden `ok`. */
+    private def checked[T](sec: String, name: String, want: String, reps: Int = 3)(op: => T)(
+        ok: T => Boolean): (Timed, T) = {
+      val (t, vs) = anchor(sec, name, reps)(op)
+      golden(ok(vs.last), s"$name anchor MISMATCH: ${vs.last} (want $want)")
+      (t, vs.last)
+    }
+
+    /** An anchor whose output is a pure function of its input: every rep's
+      * value must pass `ok` and all must be identical. */
+    private def stable[T](sec: String, name: String, want: String, reps: Int = 3)(op: => T)(
+        ok: T => Boolean): (Timed, T) = {
+      val (t, vs) = anchor(sec, name, reps)(op)
+      golden(vs.forall(ok) && vs.distinct.size == 1, s"$name anchor MISMATCH: " +
+        s"${vs.distinct.size} distinct outputs over ${vs.size} reps, last ${vs.last.toString.take(300)} (want $want)")
+      (t, vs.last)
+    }
+
+    private def plantedPairs(sec: String, name: String)(op: => Long): Timed =
+      checked(sec, name, "the 1500 planted pairs")(op)(_ == 1500L)._1
+
+    /** Runs `body` on `df` persisted and counted; unpersists and releases
+      * every operator cache afterwards. */
+    private def persisted(df: DataFrame)(body: DataFrame => String): String = {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      try { df.count(); body(df) }
+      finally { df.unpersist(); graft.core.InternalCaches.release(spark) }
+    }
+
+    /** Every anchor section, in run order; returns their detail JSON. The
+      * BIG tier (SPARK_GRAFT_BIG=1) adds the 1M-scale and 100M sections. */
+    def anchors(): String = {
+      val big = sys.env.get("SPARK_GRAFT_BIG").contains("1")
+      def opt(on: Boolean)(s: => String): String = if (on) s else ""
+      val uber = opt(new java.io.File(UberCsv).exists())(uberSection())
+      // BASELINE.md artificial1M: 1 000 108 pts, M=10 K=200 L=16, radius
+      // 0.60045445 on the original blob (stripped; the twin stands in)
+      val r1m = geometrySection("1m", nClusterPts = 1000008L, numPartitions = 64,
+        k = 200, withExact = false)
+      // BASELINE.md TEST 2 row K=110 at artificial10M: the every-round
+      // mid-scale guard for regressions that only show at 10x the 1M scale
+      val r10m = geometrySection("10m", nClusterPts = 10000008L, numPartitions = 128,
+        k = 110, withExact = false)
+      val text = textSection("300k", nBase = 300000L, withEdit = true)
+      val skew = skewSection()
+      val text1m = opt(big)(textSection("1m", nBase = 1000000L, withContainment = true))
+      val pipe = opt(big)(pipelineSection())
+      val tok = opt(big)(tokSection())
+      val vec = opt(big)(vecSection())
+      // BASELINE.md TEST 1 artificial100M (needs SPARK_DRIVER_MEM >= 48g)
+      val r100m = opt(big)(geometrySection("100m", nClusterPts = 100000008L,
+        numPartitions = 256, k = 110, withExact = true))
+      val graph = opt(big)(graphSection())
+      Seq(uber, r1m, r10m, text, skew, text1m, pipe, tok, vec, graph, r100m).mkString
+    }
+
+    /** BASELINE.md uber-100k (D=0.02 M=10; published ExactOutliers
+      * 61 655 ms, MRApproxOutliers 960 ms). The goldens are the reference's
+      * published output — 673 exact, 435 sure, 658 uncertain — so a silent
+      * correctness regression on real data fails the bench instead of
+      * shipping a fast wrong answer. */
+    private def uberSection(): String = section(compactRef, "reference") {
+      val sec = "reference"
+      try {
+        val pts = graft.sources.PointSource.read(spark, UberCsv, cpus)
+        pts.count()
+        val (exact, _) = checked(sec, "exact_outliers_uber100k", "673")(
+          graft.ops.Geometry.exactOutliers(pts, 0.02, 10).count())(_ == 673L)
+        val (approx, _) = checked(sec, "approx_outliers_uber100k", "(sure, uncertain) = (435, 658)")(
+          outlierClasses(graft.ops.Geometry.approxOutliers(pts, 0.02, 10).collect()))(_ == (435L, 658L))
+        val (fft, _) = anchor(sec, "mrfft_k100_uber100k") {
+          graft.ops.Geometry.mrFFT(pts, k = 100, l = 16, deterministic = false) }
+        s""","$sec":{${exact.json},${approx.json},${fft.json}}"""
+      } finally graft.core.InternalCaches.release(spark)
+    }
+
+    /** Synthetic geometry section on the ArtificialPoints twin: MRFFT
+      * (radius = D) and MRApproxOutliers, asserting the planted-outlier
+      * recall — exactly 100 sure / 0 uncertain. `withExact` also times the
+      * exact path (the reference's is an O(N²) driver loop, infeasible at
+      * 100M; the Λ-cell-pruned equi-join does it exactly). */
+    private def geometrySection(tag: String, nClusterPts: Long, numPartitions: Int,
+                                k: Int, withExact: Boolean): String = {
+      val sec = s"reference_$tag"
+      section(compactRef, sec) {
+        persisted(graft.sources.ArtificialPoints.generate(spark,
+            nClusterPts = nClusterPts, numPartitions = numPartitions)) { pts =>
+          val (fft, radii) = anchor(sec, s"mrfft_k${k}_$tag") {
+            graft.ops.Geometry.mrFFT(pts, k = k, l = 16)._1 }
+          val radius = radii.last
+          val (approx, _) = checked(sec, s"approx_outliers_$tag",
+              s"(sure, uncertain) = (100, 0), the planted outliers at D=$radius")(
+            outlierClasses(graft.ops.Geometry.approxOutliers(pts, radius, 10).collect()))(_ == (100L, 0L))
+          val exactJson = if (!withExact) "" else checked(sec, s"exact_outliers_$tag", "100")(
+            graft.ops.Geometry.exactOutliers(pts, radius, 10).count())(_ == 100L)._1.json + ","
+          f""","$sec%s":{${fft.json}%s,${approx.json}%s,$exactJson%s"radius_k$k%d":$radius%.8f}"""
+        }
+      }
+    }
+
+    /** Text dedup section: SyntheticDocs with 1500 planted near-dup pairs
+      * (shingle Jaccard ≈ 0.85, banding miss probability ~1e-9). LSH must
+      * return EXACTLY the 1500 — misses show as fewer, and the re-verify
+      * stage bounds false positives, so a count match is recall plus
+      * precision. Each plant differs by ONE mid-doc token, so containment
+      * (≈ 0.92 per pair, tau 0.85) and the edit-distance verify must also
+      * confirm exactly the 1500. */
+    private def textSection(tag: String, nBase: Long, withContainment: Boolean = false,
+                            withEdit: Boolean = false): String = {
+      val sec = if (tag == "300k") "reference_text" else s"reference_text_$tag"
+      section(compactRef, sec) {
+        persisted(graft.sources.SyntheticDocs.planted(spark, nBase = nBase, nPlant = 1500L)) { docs =>
+          val lsh = plantedPairs(sec, s"minhash_lsh_$tag")(graft.ops.Text.minHashLshPairs(docs).count())
+          val cont = if (!withContainment) "" else "," + plantedPairs(sec, s"containment_$tag")(
+            graft.ops.Text.containmentPairs(docs, tau = 0.85).count()).json
+          val edit = if (!withEdit) "" else "," + plantedPairs(sec, s"edit_verified_$tag")(
+            graft.ops.Text.editVerifiedPairs(docs).count()).json
+          s""","$sec":{${lsh.json}$cont$edit}"""
+        }
+      }
+    }
+
+    /** The skew twin of reference_text: 10% of docs share one hot
+      * boilerplate shingle. Same 1500-pair recall, and the candidate layer
+      * must stay linear: max band bucket ≤ 64× mean (a hot shingle only
+      * owns a band key when it is the min of both band hashes, a constant
+      * multiple of the mean) and Σ per-bucket pairs ≤ N. */
+    private def skewSection(): String = section(compactRef, "reference_text_skew") {
+      val sec = "reference_text_skew"
+      persisted(graft.sources.SyntheticDocs.planted(spark,
+          nBase = 300000L, nPlant = 1500L, hotEvery = 10)) { docs =>
+        val lsh = plantedPairs(sec, "minhash_lsh_skew300k")(graft.ops.Text.minHashLshPairs(docs).count())
+        val (maxB, meanB, candPairs, nDocs) = graft.ops.Text.lshBucketStats(docs)
+        golden(maxB <= 64 * meanB && candPairs <= nDocs,
+          s"skew bucket bound MISMATCH: max=$maxB mean=$meanB " +
+          s"candPairs=$candPairs nDocs=$nDocs (want max <= 64*mean, cand <= n)")
+        addCompact(sec, "skew_max_bucket", maxB.toString)
+        s""","$sec":{${lsh.json},"skew_max_bucket":$maxB,""" +
+          f""""skew_mean_bucket":$meanB%.3f,"skew_cand_pairs":$candPairs}"""
+      }
+    }
+
+    /** The clean→dedup→chunk→pack pipeline at 1M docs, with goldens from
+      * the corpus construction: per language 250375 docs in, 250000 kept
+      * (LSH drops exactly the plants), 500000 chunks, 1465 8192-token bins.
+      * Then split leakage with the plants as the eval split (375 near
+      * leaks per language by construction, exact leaks only from rare
+      * swapped-token collisions), and the streaming funnel: per-batch cost
+      * must stay flat and its report must equal the batch funnel's. */
+    private def pipelineSection(): String = section(compactRef, "reference_pipeline_1m") {
+      import org.apache.spark.sql.functions.{col, expr, lit, pmod}
+      val sec = "reference_pipeline_1m"
+      persisted(graft.sources.SyntheticDocs.planted(spark,
+          nBase = 1000000L, nPlant = 1500L)) { docs =>
+        val (pipe, _) = checked(sec, "pipeline_1m", "4 x [lang, 250375, 250000, 500000, 1465]")(
+          graft.ops.Pipeline.summaryOver(docs).collect().toSeq) { rows =>
+          rows.length == 4 && rows.forall { r => r.getLong(1) == 250375L &&
+            r.getLong(2) == 250000L && r.getLong(3) == 500000L && r.getLong(4) == 1465L } }
+        val (leak, _) = checked(sec, "split_leakage_1m", "4 x [lang, 375 eval, <=3 exact, 375 near]")(
+          graft.ops.Text.splitLeakage(docs.withColumnRenamed("lang", "source"),
+            col("doc_id") >= 1000000L, n = 8).collect().toSeq) { rows =>
+          rows.length == 4 && rows.forall { r =>
+            r.getLong(1) == 375L && r.getLong(3) == 375L && r.getLong(2) <= 3L } }
+        // 1M base docs + re-keyed exact-dup plants in 8 micro-batches,
+        // plants FIRST so their originals arriving later exercise
+        // retroactive canonical displacement at scale
+        val funnelBase = docs.filter(col("doc_id") < 1000000L)
+          .withColumnRenamed("lang", "source")
+        val funnelPlants = funnelBase.filter(expr("doc_id % 16 = 1"))
+          .select((lit(4L) * (col("doc_id") + lit(1000000000L))).as("doc_id"),
+            col("source"), col("text"))
+        val funnel = new graft.streaming.StatefulOps.StreamingFunnel
+        val batches = funnelPlants +: (0 until 7).map(i =>
+          funnelBase.filter(pmod(col("doc_id"), lit(7)) === i))
+        val batchTimes = batches.map(b => seconds(funnel.ingestBatch(b))).toVector
+        var reportRows = Array.empty[String]
+        val tReport = seconds {
+          reportRows = funnel.report().collect().map(_.toString).sorted }
+        val wantRows = graft.ops.Text.filterFunnel(
+            funnelBase.unionByName(funnelPlants))
+          .collect().map(_.toString).sorted
+        golden(reportRows.toSeq == wantRows.toSeq,
+          s"streaming funnel 1M diverges from the batch funnel: " +
+          s"${reportRows.mkString("; ")} vs ${wantRows.mkString("; ")}")
+        // batches 1-3 and 5-7 are the equal-sized base batches (batch 0 is
+        // the smaller plant batch); flat per-batch cost puts the two
+        // medians within noise of each other
+        val fEarly = batchTimes.slice(1, 4).sorted.apply(1)
+        val fLate = batchTimes.slice(5, 8).sorted.apply(1)
+        val funnelFlat = fLate / math.max(fEarly, 0.05)
+        if (funnelFlat > 3.0)
+          System.err.println(
+            f"[bench] WARNING streaming funnel per-batch cost NOT flat: late-batch " +
+            f"median $funnelFlat%.1fx the early one (batch-bounded ingest predicts ~1x)")
+        addCompact(sec, "streaming_funnel_1m", f"${batchTimes.sum}%.2f")
+        s""","$sec":{${pipe.json},${leak.json},""" +
+          f""""streaming_funnel_1m_batches":[${batchTimes.map(t => f"$t%.3f").mkString(",")}],""" +
+          f""""streaming_funnel_1m_flat_ratio":$funnelFlat%.2f,""" +
+          f""""streaming_funnel_1m_report_s":$tReport%.3f,""" +
+          f""""streaming_funnel_1m":${batchTimes.sum}%.3f}"""
+      }
+    }
+
+    /** Tokenizer and retrieval layer at 1M docs. Every trainer must stay
+      * ONE corpus scan + vocab-bounded iterations, and every output must be
+      * identical across reps (each is a pure function of the corpus).
+      * Cross-anchor ratios pin the shape: BPE per-merge cost stays flat
+      * from 8 to 256 merges (~32x predicted, a lineage replay would be
+      * >1000x; bound 96x) and from 256 to 4096 (~16x, bound 48x). The
+      * unigram-EM and WordPiece ratios only warn: with one warm rep a
+      * single contended rep would turn a perf flake into a golden abort. */
+    private def tokSection(): String = section(compactRef, "reference_tok_1m") {
+      import graft.ops.Text
+      val sec = "reference_tok_1m"
+      persisted(graft.sources.SyntheticDocs.planted(spark,
+          nBase = 1000000L, nPlant = 0L)) { docs =>
+        val (bpe8, _) = stable(sec, "bpe_train_1m", "8 merges, merged = lhs+rhs, positive counts")(
+          Text.bpeTrain(docs, nMerges = 8).collect().toSeq.map(r =>
+            (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))) { t =>
+          t.size == 8 && t.forall { case (_, l, r2, m, c) => m == l + r2 && c > 0L } }
+        // the 8-merge anchor already cached the base word table, so this
+        // ratio is a near-pure merge-loop measurement
+        val (bpe256, _) = stable(sec, "bpe_train_1m_256", "256 merges")(
+          Text.bpeTrain(docs, nMerges = 256).collect().toSeq.map(r =>
+            (r.getLong(0), r.getString(1), r.getString(2))))(_.size == 256)
+        val mergeScale = bpe256.warm / math.max(bpe8.warm, 0.05)
+        golden(mergeScale <= 96.0,
+          f"bpe per-merge cost NOT FLAT: 256 merges took $mergeScale%.1fx the " +
+          "8-merge anchor (flat predicts ~32x, bound 96x — lineage cut regressed?)")
+        // a real tokenizer's merge count; one warm rep bounds the runtime
+        val (bpe4k, table4k) = stable(sec, "bpe_train_1m_4k", "4096 merges", reps = 1)(
+          Text.bpeTrain(docs, nMerges = 4096).collect().toSeq.map(r =>
+            (r.getString(1), r.getString(2))))(_.size == 4096)
+        val mergeScale4k = bpe4k.warm / math.max(bpe256.warm, 0.05)
+        golden(mergeScale4k <= 48.0,
+          f"bpe per-merge cost NOT FLAT at 4k: 4096 merges took " +
+          f"$mergeScale4k%.1fx the 256-merge anchor (flat predicts ~16x, bound 48x)")
+        // frozen-table inference at 4096 merges: chunked every 64 into 64
+        // localCheckpointed projection jobs over the word table
+        val (infer4k, _) = stable(sec, "bpe_infer_1m_4k", "a 20-row histogram", reps = 1)(
+          Text.bpeApplyMerges(docs, table4k, topK = 20).collect().toSeq.map(r =>
+            (r.getString(0), r.getLong(1))))(_.size == 20)
+        val (bm, _) = checked(sec, "bm25_1m", "10 rows, hits in [1,3]")(
+          Text.bm25(docs, Seq("t0", "t1", "t2")).collect().toSeq.map(_.getLong(1))) { hits =>
+          hits.size == 10 && hits.forall(h => h >= 1L && h <= 3L) }
+        val (ql, _) = stable(sec, "dirichlet_ql_1m", "a 10-row ranking, hits in [1,3]")(
+          Text.dirichletQL(docs, Seq("t0", "t1", "t2")).collect().toSeq.map(r =>
+            (r.getLong(0), r.getLong(1)))) { t =>
+          t.size == 10 && t.forall { case (_, h) => h >= 1L && h <= 3L } }
+        val (vit, _) = stable(sec, "unigram_viterbi_1m",
+            "a 100-row report whose non-UNK pieces rejoin the word", reps = 1)(
+          Text.unigramViterbi(docs).collect().toSeq.map(r =>
+            (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3)))) { t =>
+          t.size == 100 && t.forall { case (w, cnt, np, seq) =>
+            cnt > 0L && np >= 1L && (seq == "[UNK]" || seq.replace(" ", "") == w) } }
+        // hard-EM training, 3 rounds of the Viterbi DP
+        val (train, _) = stable(sec, "unigram_train_1m",
+            "a piece table with alphabet mass >= 1, lp9 < 0, <= 40 multi-char pieces", reps = 1)(
+          Text.unigramTrain(docs).collect().toSeq.map(r =>
+            (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))) { t =>
+          t.nonEmpty && t.count(_._1.length >= 2) <= 40 &&
+            t.forall { case (p, l, m, lp) => l == p.length.toLong && m >= 1L && lp < 0L } }
+        val trainScale = train.warm / math.max(vit.warm, 0.05)
+        if (trainScale > 12.0)
+          System.err.println(
+            f"[bench] WARNING unigram EM cost ratio $trainScale%.1fx over the 12x " +
+            "vocab-bounded bar (3 flat EM rounds predict ~3-4x) — perf flake or " +
+            "shape regression; see unigram_train_scale_ratio in the artifact")
+        // WordPiece runs two vocab-bounded aggregations per merge, so ~2-3x
+        // the 8-merge BPE anchor
+        val (wp, _) = stable(sec, "wordpiece_train_1m",
+            "8 merges, merged = lhs+rhs, cnt > 0, score18 in (0, 1e18]", reps = 1)(
+          Text.wordpieceTrain(docs, nMerges = 8).collect().toSeq.map(r => (r.getLong(0),
+            r.getString(1), r.getString(2), r.getString(3), r.getLong(4), r.getLong(5)))) { t =>
+          t.size == 8 && t.forall { case (_, l, r2, m, c, s18) =>
+            m == l + r2 && c > 0L && s18 > 0L && s18 <= 1000000000000000000L } }
+        val wpScale = wp.warm / math.max(bpe8.warm, 0.05)
+        if (wpScale > 12.0)
+          System.err.println(
+            f"[bench] WARNING wordpiece train cost ratio $wpScale%.1fx the 8-merge " +
+            "BPE anchor (two vocab-bounded aggs/iter predict ~2-3x, bar 12x) — " +
+            "perf flake or a corpus re-scan crept into the loop")
+        val jsons = Seq(bpe8, bpe256, bpe4k, infer4k, bm, ql, vit, train, wp).map(_.json)
+        s""","$sec":{${jsons.mkString(",")},""" +
+          f""""bpe_merge_scale_ratio":$mergeScale%.2f,""" +
+          f""""unigram_train_scale_ratio":$trainScale%.2f,""" +
+          f""""wordpiece_train_scale_ratio":$wpScale%.2f,""" +
+          f""""bpe_merge_scale_ratio_4k":$mergeScale4k%.2f,"bpe_infer_chunks":64}"""
+      }
+    }
+
+    /** Similarity search and clustering at 1M vectors, with cluster
+      * membership as ground truth by construction (SyntheticVectors): the
+      * seeded KMeans assignment recovers EVERY vector's planted center, IVF
+      * top-10 agrees with brute force at recall >= 0.9, int8 quantization
+      * holds exactly 15625 vectors per label with every max element
+      * saturated, the covariance upper triangle is complete with positive
+      * variances, logreg training is bit-identical across reps, and PQ
+      * conserves 4 codes per vector. */
+    private def vecSection(): String = section(compactRef, "reference_vec_1m") {
+      import org.apache.spark.sql.functions.{col, lit, pmod}
+      val sec = "reference_vec_1m"
+      persisted(graft.sources.SyntheticVectors.clustered(spark, 1000000L)) { vecs =>
+        def labelled = vecs.withColumn("label", pmod(col("vec_id"), lit(64)).cast("int"))
+        val (kmeans, _) = checked(sec, "kmeans_assign_1m", "0 vectors off their planted center")(
+          graft.ops.Clustering.assignSeeded(vecs, 64)
+            .filter(col("cidx") =!= pmod(col("vec_id"), lit(64)).cast("int")).count())(_ == 0L)
+        val exact = graft.ops.Embeddings.bruteForceKnn(vecs, col("vec_id") < 8, 10)
+          .select("qid", "nid").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        val (ivf, recall) = checked(sec, "ivf_knn_1m", "recall >= 0.9 vs brute force") {
+          val approx = graft.ops.Ann.ivfKnn(vecs, col("vec_id") < 8, k = 10)
+            .select("qid", "nid").collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+          (approx & exact).size.toDouble / exact.size }(_ >= 0.9)
+        addCompact(sec, "ivf_recall_1m", f"$recall%.3f")
+        // the quantize row stage is a pure projection, so its parallelism
+        // IS the input partition count: a collapsed frame would run it
+        // near-single-threaded. Warned, not thrown — an environmental perf
+        // condition, not a wrong answer; the artifact carries the count.
+        val vecParts = vecs.rdd.getNumPartitions
+        if (vecParts < spark.sparkContext.defaultParallelism / 2)
+          System.err.println(
+            s"[bench] WARNING: quantize 1M input collapsed to $vecParts " +
+              s"partitions (want >= ${spark.sparkContext.defaultParallelism / 2}) " +
+              "— the quantize_1m reading is near-single-threaded")
+        addCompact(sec, "quantize_1m_input_partitions", vecParts.toString)
+        // count of off labels: want 64 labels of exactly 15625 vectors, each
+        // with every vector's max element saturated (no vector is zero)
+        val (quant, _) = checked(sec, "quantize_1m", "0 off of 64 x n_vecs=15625, n_sat>=n_vecs") {
+          val rep = graft.ops.Embeddings.quantizeInt8Report(labelled).collect()
+          rep.count(r => r.getLong(1) != 15625L || r.getLong(3) < r.getLong(1)) +
+            (64 - rep.length) }(_ == 0L)
+        val (cov, _) = checked(sec, "covariance_100k", "0 off of 2080 cells, n=100000, diag>0") {
+          val c = graft.ops.Embeddings.covarianceReport(
+              vecs.filter(col("vec_id") < 100000L)).collect()
+          c.count(r => r.getLong(2) != 100000L ||
+              (r.getLong(0) == r.getLong(1) && r.getDouble(3) <= 0.0)) +
+            (2080 - c.length) }(_ == 0L)
+        val (logreg, _) = stable(sec, "logreg_train_1m", "one nonzero model") {
+          val (w, b) = graft.ops.Embeddings.logregTrainWeights(labelled)
+          (w.toSeq, b) }(!_._1.forall(_ == 0.0))
+        val (pq, _) = checked(sec, "pq_encode_1m", "0: 4x1M codes, 0 <= avg <= max") {
+          val rep = graft.ops.Ann.pqReport(vecs).collect()
+          math.abs(rep.map(_.getLong(2)).sum - 4000000L) +
+            rep.count(r => r.getDouble(3) < 0.0 || r.getDouble(4) < r.getDouble(3)) }(_ == 0L)
+        val jsons = Seq(kmeans, ivf, quant, cov, logreg, pq).map(_.json)
+        s""","$sec":{${jsons.mkString(",")},"ivf_recall_1m":$recall,""" +
+          s""""quantize_1m_input_partitions":$vecParts}"""
+      }
+    }
+
+    /** The graph layer at 1M nodes with first-principles goldens from
+      * vertex transitivity. PageRank (3 iterations) over the 6-regular
+      * circulant with chords {1, 7919, 104729}: every node computes the
+      * same integer sequence, reaching r = 999996 units with spread
+      * exactly 0. The family over chords {1, 2, 7919}, where 1+1=2 is the
+      * only chord identity, so each node closes exactly one directed
+      * triangle: HITS hub = auth = 1000000 everywhere; assortativity hits
+      * the regular-graph 0.0 guard (3M edges, max degree 6); every node
+      * sits in the 6-core and k=7 empties the graph; transitivity
+      * 3·1M/15M = 0.2 exactly. HITS runs two half-steps per iteration, so
+      * <= 3x pagerank_1m in the same window (warned, not thrown). */
+    private def graphSection(): String = section(compactRef, "reference_graph_1m") {
+      import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
+      import graft.ops.Embeddings
+      val sec = "reference_graph_1m"
+      val n = 1000000L
+      val base = spark.range(n).toDF("i")
+      def chord(k: Long) =
+        base.select(col("i").as("d1"), ((col("i") + k) % n).as("d2"))
+      val edgesP = graft.core.InternalCaches.persist(
+        chord(1L).union(chord(7919L)).union(chord(104729L)))
+      try {
+        val (pr, (spread, rank)) = checked(sec, "pagerank_1m", "(spread, rank) = (0, 999996)") {
+          val agg = Embeddings.pageRank(edgesP, iters = 3)
+            .agg(min(col("rank_units")).as("mn"), max(col("rank_units")).as("mx"),
+                 sum(col("rank_units"))).head()
+          (agg.getLong(1) - agg.getLong(0), agg.getLong(0)) }(_ == (0L, 999996L))
+        addCompact(sec, "pagerank_rank", "999996")
+        val edges2 = graft.core.InternalCaches.persist(
+          chord(1L).union(chord(2L)).union(chord(7919L)))
+        val (hits, _) = checked(sec, "hits_1m", s"hub=auth=1000000 uniform at $n nodes", reps = 2)(
+          Embeddings.hits(edges2, iters = 3).agg(min(col("hub_units")), max(col("hub_units")),
+            min(col("auth_units")), max(col("auth_units")), count(lit(1))).head()) { r =>
+          (0 to 3).forall(i => r.getLong(i) == 1000000L) && r.getLong(4) == n }
+        val (assort, _) = checked(sec, "assortativity_1m",
+            s"$n nodes, 3M edges, max_degree 6, regular-graph guard 0.0", reps = 2)(
+          Embeddings.assortativity(edges2).head()) { r =>
+          r.getLong(0) == n && r.getLong(1) == 3000000L && r.getLong(2) == 6L && r.getDouble(3) == 0.0 }
+        val (kcore, (_, k7)) = checked(sec, "kcore_1m",
+            s"all $n nodes at degree 6 in the 6-core; empty 7-core", reps = 2)(
+          (Embeddings.kCore(edges2, k = 6, iters = 3)
+            .agg(count(lit(1)), min(col("deg")), max(col("deg"))).head(),
+           Embeddings.kCore(edges2, k = 7, iters = 1).count())) { case (r, k7) =>
+          r.getLong(0) == n && r.getLong(1) == 6L && r.getLong(2) == 6L && k7 == 0L }
+        val (trans, tRow) = checked(sec, "transitivity_1m",
+            s"$n nodes, 3M edges, 1M triangles, 15M wedges, C=0.2", reps = 2)(
+          Embeddings.transitivity(edges2).head()) { r =>
+          r.getLong(0) == n && r.getLong(1) == 3000000L && r.getLong(2) == 1000000L &&
+            r.getLong(3) == 15000000L && r.getDouble(4) == 0.2 }
+        val hitsRatio = hits.warm / math.max(pr.warm, 0.05)
+        if (hitsRatio > 3.0)
+          System.err.println(
+            f"[bench] WARNING hits_1m at $hitsRatio%.2fx pagerank_1m in the same " +
+            "window (two half-steps per iteration predict ~2-3x) — perf flake " +
+            "or a HITS-loop regression; see hits_vs_pagerank_ratio")
+        val jsons = Seq(pr, hits, assort, kcore, trans).map(_.json)
+        s""","$sec":{${jsons.mkString(",")},"pagerank_spread":$spread,"pagerank_rank":$rank,""" +
+          f""""hits_vs_pagerank_ratio":$hitsRatio%.2f,""" +
+          s""""hits_spread":0,"kcore7_survivors":$k7,"transitivity_value":${tRow.getDouble(4)}}"""
+      } finally { edgesP.unpersist(); graft.core.InternalCaches.release(spark) }
+    }
+
+    /** Two output lines and a detail file. The driver keeps only the last
+      * ~2000 stdout chars, so the LAST line is the compact contract line
+      * (headline total, per-query medians, warm anchor medians) and must
+      * fit that window; the full record goes on the line before and into
+      * BENCH_DETAIL.json. */
+    def publish(refs: String): Unit = {
+      val results = runsByQ.toSeq
+      val qs = results.map { case (k, _) => "\"" + k + "\":" + f"${publishedMedian(k)}%.3f" }
+        .mkString("{", ",", "}")
+      val runsJson = results.map { case (k, v) =>
+        "\"" + k + "\":[" + v.map(x => f"$x%.3f").mkString(",") + "]" }
+        .mkString("{", ",", "}")
+      // the headline total sums VALID medians only: per-query -1 flags stay
+      // in "queries" for the driver, the total stays a time
+      val total = results.map(r => publishedMedian(r._1)).filter(_ >= 0).sum
+      val loadsJson = roundLoads.map { case (k, v) => f""""$k":$v%.2f""" }
+        .mkString("{", ",", "}")
+      // which methodology each published median comes from
+      val provenanceJson = results.map { case (k, _) =>
+        val src = if (resumedClean.contains(k)) "manifest"
+          else if (isolatedMedian.contains(k)) "isolated" else "interleaved"
+        s""""$k":"$src""""
+      }.mkString(""","published_source":{""", ",", "}")
+      val resumeJson = if (resumedClean.nonEmpty || resumedPartial.nonEmpty)
+        s""","resume":{"file":"$resumeFile","key":"$manifestKey",""" +
+          s""""served_clean":${resumedClean.size},"resumed_partial":${resumedPartial.size}}"""
+      else ""
+      val budgetMark = if (budgetTripped)
+        f""","budget_exhausted":true,"budget_sec":${wallBudgetSec()}%d,"elapsed_sec":${elapsedSec()}%.0f"""
+      else ""
+      val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runsJson,"round_loadavg":$loadsJson$isolatedJson$provenanceJson$resumeJson$budgetMark,"sf":"$sfDir"$refs}"""
+      try {
+        val p = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
+        Files.write(Paths.get(p), (detail + "\n").getBytes("UTF-8"))
+      } catch { case e if scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] detail file not written: $e") }
+      val (compact, qShed, sectionsShed) = compactContractLine(
+        total, sfDir,
+        results.toVector.map { case (k, _) => k -> publishedMedian(k) },
+        compactRef.toSeq, nIsolated = isolatedMedian.size,
+        budgetExhausted = budgetTripped,
+        nExcluded = results.count { case (k, _) => publishedMedian(k) < 0 },
+        nResumed = resumedClean.size)
+      if (qShed > 0)
+        System.err.println(s"[bench] compact line over budget; shed the $qShed cheapest per-query medians (all ${results.size} remain in BENCH_DETAIL.json)")
+      for (victim <- sectionsShed)
+        System.err.println(s"[bench] compact line over budget; shed section '$victim' (see BENCH_DETAIL.json)")
+      if (compact.length > ContractBudget)
+        System.err.println(s"[bench] compact line STILL ${compact.length} chars — driver tail may truncate it")
+      // Stop Spark BEFORE printing: nothing Spark-side (shutdown-hook
+      // warnings relayed through sbt) may land after the contract line. A
+      // stop()-time exception must not discard validated timings.
+      try spark.stop()
+      catch { case e if scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] spark.stop() failed (timings unaffected): $e") }
+      println(detail)
+      // stand the emergency path down BEFORE the contract line: a SIGTERM
+      // landing after it would append the stale stash as the last line
+      contractPrinted = true
+      println(compact)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.core.Sessions.cpus
@@ -563,1343 +1410,14 @@ object Bench {
     // the first measured query doesn't pay JIT cost
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .limit(10000).groupBy("l_returnflag").count().collect()
-    // warm run (JIT + shuffle-file page cache) then N measured runs per
-    // query, reporting the MEDIAN; the noop sink forces full plan execution
-    // every time. A single measured run let one bad scheduling window write
-    // a phantom 10-40x regression into the round artifact (BENCH_r05
-    // recorded q34 at 33 s against a 0.8 s steady state). Median-of-3
-    // defends against ONE bad run, but back-to-back runs all sit inside
-    // the same few seconds — a sustained degraded window (GC storm, CPU
-    // contention) owned 2 of 3 runs and won the median anyway (BENCH_r07:
-    // q30 published 10.9 s, q51 2.5 s, against 0.42 / 0.30 s steady
-    // states). So measurement is INTERLEAVED: rounds over the whole query
-    // inventory, each round running every query once, median per query
-    // ACROSS rounds. A query's runs are now minutes apart — no single
-    // noise window can touch more than one of them. The per-run values are
-    // kept in the JSON ("runs") and a dispersion guard flags any query
-    // whose max/min run ratio exceeds 4x. Interleaving requires the
-    // operator-internal persists of ALL queries to stay materialized
-    // through the measurement phase (the warm pass builds them, every
-    // round reuses them — the warm steady state); at gate SF that is a few
-    // hundred MB against the bench heap, and ONE release after the last
-    // round still leaves the session's storage empty for the anchors.
-    // toIntOption: a malformed override (e.g. "3x") must not crash the whole
-    // bench before any timing runs; fall back to 3 and cap at 9 runs.
-    val measuredRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
-      .flatMap { v =>
-        val p = v.toIntOption
-        if (p.isEmpty) System.err.println(s"[bench] ignoring malformed SPARK_GRAFT_BENCH_RUNS='$v'")
-        p
-      }.getOrElse(3).max(1).min(9)
-    def median(xs: Seq[Double]): Double = Bench.median(xs)
-    def medianValid(xs: Seq[Double]): Double = Bench.medianValid(xs)
-    def dispersionGuard(name: String, raw: Seq[Double]): Unit =
-      Bench.highVarianceLine(name, raw).foreach(System.err.println)
-    val qseq = SparkEntry.queries.toSeq.sortBy(_._1)
-    // RESUMABLE BENCH (round 19): see the ManifestEntry scaladoc. Reuse is
-    // on by default (SPARK_GRAFT_RESUME=0 disables); the manifest lives in
-    // the working directory and is committed with the round's artifacts, so
-    // the driver's budget window inherits the builder's clean-window
-    // medians and spends itself only on what is still unmeasured.
-    val resumeEnabled = !sys.env.get("SPARK_GRAFT_RESUME").contains("0")
-    val resumeFile = sys.env.getOrElse("SPARK_GRAFT_RESUME_FILE", "BENCH_MANIFEST.txt")
-    val manifestKey =
-      if (resumeEnabled) Bench.sourceKey(s"$sfDir|$cpus|$measuredRuns") else "nokey"
-    val manifest0: Map[String, Bench.ManifestEntry] =
-      if (resumeEnabled) Bench.loadManifest(resumeFile, manifestKey) else Map.empty
-    val qNames = qseq.map(_._1).toSet
-    // clean entries serve their published median without re-measuring
-    val resumedClean: Map[String, Bench.ManifestEntry] =
-      manifest0.filter { case (n, e) => qNames(n) && e.clean }
-    // partial (not-clean, under-target) vectors resume where they stopped;
-    // not-clean vectors already AT target were adjudicated contested and
-    // re-measure from scratch
-    val resumedPartial: Map[String, Vector[Double]] = manifest0.collect {
-      case (n, e) if qNames(n) && !e.clean &&
-          e.runs.count(_ >= 0) > 0 && e.runs.count(_ >= 0) < measuredRuns =>
-        n -> e.runs.filter(_ >= 0)
-    }
-    if (resumedClean.nonEmpty || resumedPartial.nonEmpty)
-      System.err.println(s"[bench] resume manifest $resumeFile: serving " +
-        s"${resumedClean.size} clean medians, resuming ${resumedPartial.size} " +
-        s"partial vectors (key $manifestKey)")
-    def once(fn: (SparkSession, String) => DataFrame): Double = timeNoop(fn(spark, sfDir))
-    val runsByQ = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
-    val failedQ = scala.collection.mutable.Set.empty[String]
-    // Compact (name -> warm median) pairs per reference section — hoisted
-    // above the measurement loops (round 18) so the emergency contract
-    // line can carry whatever anchor sections exist at SIGTERM time. The
-    // round driver captures only the LAST ~2000 chars of stdout, so the
-    // final contract line must stay short — full per-run/cold detail goes
-    // to a separate earlier line and BENCH_DETAIL.json.
-    val compactRef =
-      scala.collection.mutable.LinkedHashMap.empty[String, Vector[(String, String)]]
-    // Stash a best-available contract line at every phase boundary; the
-    // shutdown hook prints the latest stash iff main() never reached its
-    // own println — so a SIGTERM'd run yields a parseable (sigterm-marked)
-    // last line instead of rc 124 / parsed:null (the r16+r17 failure).
-    def stashContract(): Unit = try {
-      val qMed = runsByQ.toVector.map { case (k, v) =>
-        k -> resumedClean.get(k).map(_.published).getOrElse(medianValid(v)) }
-      val (line, _, _) = compactContractLine(
-        qMed.map(_._2).filter(_ >= 0).sum, sfDir, qMed, compactRef.toSeq,
-        budgetExhausted = Bench.budgetTripped, sigterm = true,
-        nExcluded = qMed.count(_._2 < 0), nResumed = resumedClean.size)
-      Bench.emergencyLine.set(line)
-    } catch { case e if scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] contract stash failed: $e") }
-    // Mid-run manifest save (clean=false): a budget-shed or SIGTERM'd
-    // window still leaves its valid runs on disk for the next invocation
-    // to build on. The final save below re-grades everything for reuse.
-    def saveProgress(): Unit = if (resumeEnabled) {
-      val fresh = runsByQ.toVector.collect {
-        case (n, v) if !resumedClean.contains(n) && v.exists(_ >= 0) =>
-          n -> Bench.ManifestEntry(v.filter(_ >= 0), medianValid(v),
-            "interleaved", clean = false)
-      }
-      Bench.saveManifest(resumeFile, manifestKey, resumedClean.toVector ++ fresh)
-    }
-    def addCompact(section: String, name: String, v: String): Unit = {
-      compactRef(section) = compactRef.getOrElse(section, Vector.empty) :+ (name -> v)
-      stashContract()
-    }
-    Bench.contractPrinted = false // re-arm for an in-session re-run
-    Bench.registerEmergencyHook()
-    stashContract()
-    // host load per measurement phase (round 12): the committed artifact
-    // used to explain contended windows only in prose; one loadavg reading
-    // per round makes them machine-readable (tools/compare_probe flags can
-    // be cross-checked against the load the round actually ran under)
-    val roundLoads = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Load-gate the SWEEP, not just the anchors (round 19, verdict item 1:
-    // "engineer the window luck away") — when anything actually needs
-    // measuring, wait for ambient quiet first; a fully-resumed sweep skips
-    // the wait. awaitQuietLoad stops waiting once the budget trips.
-    if (qseq.exists(q => !resumedClean.contains(q._1)))
-      Bench.awaitQuietLoad("gate_sweep")
-    roundLoads("warm") = Bench.loadAvg()
-    for ((name, fn) <- qseq) {
-      runsByQ(name) = resumedClean.get(name).map(_.runs)
-        .orElse(resumedPartial.get(name)).getOrElse(Vector.empty)
-      // manifest-served queries skip every measurement phase; past the
-      // wall budget the warm run SKIPS (round 18 — the mandatory
-      // passes were the one place the budget didn't reach, and the r17
-      // driver run spent 3588 s in them): the query's measured rounds then
-      // append -1.0 markers and it publishes the honest failure flag
-      if (!resumedClean.contains(name) && !Bench.budgetExhausted()) {
-        // a transient warm-run failure must not erase the query from every
-        // measurement round (the interleaving scheme exists BECAUSE one-off
-        // noise windows happen) — retry once before writing the -1 marker
-        try once(fn)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed (warm run, retrying once): ${e.getMessage}")
-          try once(fn)
-          catch { case e2: Throwable =>
-            System.err.println(s"[bench] $name failed (warm retry): ${e2.getMessage}")
-            failedQ += name; runsByQ(name) = Vector(-1.0) } }
-      }
-    }
-    stashContract()
-    // Untimed SETTLING round between the warm pass and the measured rounds
-    // (round-9 artifact forensics): the warm pass is every query's FIRST
-    // execution, so when it ends the JVM is still draining the C2 compile
-    // queue for ~93 queries' worth of generated classes and the heap is
-    // absorbing every operator's freshly-built persists. That settling
-    // window used to overlap the START of measured round 1 — the queries
-    // that sort first in each round (q0x, q10x, q1x) published round-1
-    // runs 3-20x their steady state (r9: q102 16.5 s vs 0.6 s warm,
-    // q15 6.4 s vs 0.9 s), and a 3-run median with one inflated run
-    // reports the MIDDLE value, so the headline total overstated the
-    // inventory by ~10%. One full untimed pass in the same round-robin
-    // order absorbs that window; failures here are already recorded by
-    // the warm pass, so they only log.
-    roundLoads("settle") = Bench.loadAvg()
-    for ((name, fn) <- qseq if !failedQ(name) && !resumedClean.contains(name) &&
-        !Bench.budgetExhausted()) {
-      try once(fn)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed (settling round, ignored): ${e.getMessage}") }
-    }
-    stashContract()
-    for (round <- 1 to measuredRuns) {
-      roundLoads(s"r$round") = Bench.loadAvg()
-      // a query leaves the round-robin once it holds measuredRuns VALID
-      // runs — fresh queries therefore run every round exactly as before,
-      // while a resumed partial vector only tops up its missing rounds
-      for ((name, fn) <- qseq if !failedQ(name) && !resumedClean.contains(name)
-          && runsByQ(name).count(_ >= 0) < measuredRuns) {
-        // past the wall budget a measured run degrades to the existing
-        // -1.0 marker (medianValid tolerates them; earlier valid rounds
-        // still carry the query) — the r17 rc 124 happened because these
-        // loops ran to completion regardless of budget
-        if (Bench.budgetExhausted()) runsByQ(name) = runsByQ(name) :+ -1.0
-        // a late-round transient failure APPENDS the -1 marker instead of
-        // replacing the vector: earlier valid minutes-apart runs are exactly
-        // the evidence the interleaving scheme exists to preserve
-        else try runsByQ(name) = runsByQ(name) :+ once(fn)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed (round $round): ${e.getMessage}")
-          failedQ += name; runsByQ(name) = runsByQ(name) :+ -1.0 }
-      }
-      stashContract()
-      saveProgress()
-    }
-    // Auto-requeue: any query whose run vector trips the HIGH VARIANCE
-    // guard gets ONE extra interleaved-equivalent run (median over 4 — two
-    // middle values — absorbs a single 3x spike that the round-robin
-    // spacing couldn't dodge). One round only: a vector still dispersed
-    // after the requeue is flagged below and left for TimeProbe, not
-    // re-measured until it happens to look clean.
-    val flagged = runsByQ.collect {
-      case (n, v) if !failedQ(n) && !resumedClean.contains(n) &&
-        Bench.highVarianceLine(n, v).isDefined => n
-    }.toSet
-    if (flagged.nonEmpty && !Bench.budgetExhausted()) {
-      System.err.println(s"[bench] requeueing ${flagged.size} HIGH VARIANCE " +
-        s"queries for one extra round: ${flagged.mkString(", ")}")
-      roundLoads("requeue") = Bench.loadAvg()
-      for ((name, fn) <- qseq if flagged(name)) {
-        try runsByQ(name) = runsByQ(name) :+ once(fn)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed (requeue round): ${e.getMessage}")
-          runsByQ(name) = runsByQ(name) :+ -1.0 }
-      }
-    }
-    // Probe-divergence requeue (round 11): r10's q34 published a bench
-    // median 2.5x its committed PROBE steady state with a UNIFORMLY
-    // elevated run vector — a whole-measurement-window contention mode the
-    // max/min dispersion guard above is structurally blind to. Cross-check
-    // every median against the committed probe sweep (the same
-    // steady-state reading tools/compare_probe.py grades the artifact on:
-    // median > 1.5x steady AND > 0.5 s) and give flagged queries up to 5
-    // extra minutes-apart runs, stopping early once the growing median
-    // clears the bar. FIVE because the median is over the FULL vector
-    // (every run is honest evidence): with all 3 original runs owned by
-    // a contended window, rank statistics need >= 4 steady extras before
-    // the median lands on a steady run — 3 extras leave the median at
-    // avg(rank3, rank4), still inside the contended cluster (observed on
-    // q34 in the r11 dev run: [1.11,1.11,1.54] + 3 extras ~0.5 s left
-    // the median at 1.0). A query still over the bar after 5 is
-    // genuinely slower than its committed steady state — exactly what
-    // the artifact should then show.
-    val probeSteady = loadProbeSteady(sfDir, cpus)
-    def overProbeBar(name: String): Boolean = probeSteady.get(name).exists { st =>
-      val med = medianValid(runsByQ(name))
-      med > 0.5 && med > 1.5 * math.max(st, 0.01)
-    }
-    // CASCADE CAP (round 18, second fix): with FRESH probe bars the
-    // requeue set is no longer driven by stale steadies — but a uniformly
-    // contended sweep window still pushes most sub-second queries over
-    // the 1.5x bar at once (observed same-day: ~70 of 180 flagged at
-    // ambient loadavg 2-4, and 5 requeue rounds x 70 queries ate the
-    // whole wall budget before the isolation phase could publish better
-    // medians for ANY of them). A flag count that large is a WINDOW
-    // signature, not per-query noise: cap requeue+isolation to the top
-    // SPARK_GRAFT_PROBE_REQUEUE_CAP (default 15) queries by ABSOLUTE
-    // excess over their steadies — the only ones whose phantom seconds
-    // move the headline — so both phases always fit the budget and the
-    // expensive queries get their isolated re-measure.
-    val requeueCap = sys.env.get("SPARK_GRAFT_PROBE_REQUEUE_CAP")
-      .flatMap(_.toIntOption).getOrElse(15).max(1)
-    def probeExcess(n: String): Double =
-      medianValid(runsByQ(n)) - probeSteady.getOrElse(n, 0.0)
-    val allFlagged = qseq.collect {
-      case (n, _) if !failedQ(n) && !resumedClean.contains(n) && overProbeBar(n) => n }.toSet
-    val cappedFlagged: Set[String] =
-      if (allFlagged.size <= requeueCap) allFlagged
-      else {
-        val keep = allFlagged.toSeq.sortBy(n => -probeExcess(n)).take(requeueCap).toSet
-        System.err.println(s"[bench] ${allFlagged.size} queries over the probe bar — " +
-          s"an ambient-window signature; capping requeue+isolation to the top " +
-          s"$requeueCap by absolute excess (the ${allFlagged.size - requeueCap} " +
-          "others keep their interleaved medians)")
-        keep
-      }
-    var probeExtra = 0
-    var probeFlagged = cappedFlagged
-    while (probeExtra < 5 && probeFlagged.nonEmpty && !Bench.budgetExhausted()) {
-      System.err.println(s"[bench] probe-divergence requeue ${probeExtra + 1}: " +
-        probeFlagged.toSeq.sorted.map { n =>
-          f"$n (median ${medianValid(runsByQ(n))}%.2f vs steady ${probeSteady(n)}%.2f)"
-        }.mkString(", "))
-      roundLoads(s"probe${probeExtra + 1}") = Bench.loadAvg()
-      for ((name, fn) <- qseq if probeFlagged(name)) {
-        try runsByQ(name) = runsByQ(name) :+ once(fn)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed (probe requeue): ${e.getMessage}")
-          runsByQ(name) = runsByQ(name) :+ -1.0 }
-      }
-      probeExtra += 1
-      probeFlagged = probeFlagged.filter(n => !failedQ(n) && overProbeBar(n))
-    }
-    if (probeFlagged.nonEmpty)
-      System.err.println(s"[bench] still over the probe bar after $probeExtra requeues " +
-        s"(real regression or sustained contention): ${probeFlagged.toSeq.sorted.mkString(", ")}")
-    stashContract()
-    saveProgress()
-    // ISOLATED STEADY-STATE re-measure (round 13 — root-causing the
-    // persist-heavy sweep signature): every round the same pairwise family
-    // (q34/q58/q76/q80/q83/q97/q22/q24/…) publishes interleaved medians
-    // 1.5-2.6x the committed probe steady state — the documented cache-
-    // pressure hypothesis (118 queries' operator persists coexist through
-    // the whole measurement phase; the probes run ONE query per JVM). Make
-    // the experiment part of the artifact: for each query still over the
-    // compare_probe bar, RELEASE every operator cache, rebuild only this
-    // query's persists with one untimed run, then take 3 timed runs —
-    // min = the probe's own steady-state reading. Isolated ≈ probe steady
-    // confirms cache pressure machine-readably; isolated ≫ probe means
-    // something real. Round 14: the isolated MEDIAN now REPLACES the
-    // published median for the re-measured queries (r13 confirmed all 10
-    // re-measured families at or below probe — the interleaved figure
-    // measures the harness's 176-coexisting-working-set artifact, not
-    // the query; a production caller runs a query against ITS caches,
-    // which is what the isolated column measures). Full interleaved run
-    // vectors stay in "runs" and the isolated evidence block remains, so
-    // the substitution is auditable.
-    //
-    // Round 18 — the substitution is now GUARDED two ways (BENCH_BIG_r17
-    // published q142_edit_verified at 38.07 s from isolated runs taken in
-    // the run's post-budget decay tail, against 8 interleaved reps of
-    // 0.57-1.05 s in the same artifact — ~70 s of phantom cost across 4
-    // queries): (a) every isolated rep runs under the same RepMeter
-    // foreign/iowait/D-state gates the anchors use — any breach keeps the
-    // interleaved median; (b) an isolated median HIGHER than the
-    // interleaved one never substitutes (isolation removes cache pressure,
-    // so a slower isolated reading is by construction contention, not the
-    // query). The isolated block stays in the artifact as evidence either
-    // way, with per-rep meters and a "published" field naming the winner.
-    val (isolatedJson, isolatedMedian): (String, Map[String, Double]) = {
-      // isolation honors the same cascade cap: only the capped set is
-      // eligible (the uncapped remainder publishes interleaved medians)
-      val flaggedNow = if (Bench.budgetExhausted()) Set.empty[String]
-        else cappedFlagged.filter(n => !failedQ(n) && overProbeBar(n))
-      if (flaggedNow.isEmpty) ("", Map.empty[String, Double]) else {
-        System.err.println(s"[bench] isolated steady-state re-measure of " +
-          s"${flaggedNow.size} over-probe-bar queries: ${flaggedNow.toSeq.sorted.mkString(", ")}")
-        // give the phase the same pre-measurement quiet gate the anchors
-        // get — the r17 isolations ran in the sweep's own decay tail
-        Bench.awaitQuietLoad("isolated_remeasure")
-        val load0 = Bench.loadAvg()
-        val meds = scala.collection.mutable.HashMap.empty[String, Double]
-        val entries = qseq.filter(q => flaggedNow(q._1)).map { case (name, fn) =>
-          // the budget can trip MID-phase (31 isolations × 4 runs was the
-          // r16 cascade): remaining queries skip with an explicit marker
-          if (Bench.budgetExhausted())
-            f""""$name":{"runs":[],"steady":-1.0,"probe":${probeSteady.getOrElse(name, -1.0)}%.3f,"skipped":"wall_budget"}"""
-          else {
-          graft.core.InternalCaches.release(spark)
-          try {
-            once(fn)
-            var reps = Vector.empty[Bench.RepMeter]
-            while (reps.size < 3 && (reps.isEmpty || !Bench.budgetExhausted()))
-              reps = reps :+ Bench.timeWithForeign { once(fn); () }
-            val runs = reps.map(_.sec)
-            val isoMed = median(runs)
-            val interMed = medianValid(runsByQ(name))
-            val dirty = reps.exists(Bench.contendedRep)
-            val substitute = !dirty && (interMed < 0 || isoMed <= interMed)
-            if (substitute) meds(name) = isoMed
-            else System.err.println(f"[bench] $name isolated median $isoMed%.3f NOT " +
-              f"published (interleaved $interMed%.3f kept): " +
-              (if (dirty) "meter-gated contention during isolated reps"
-               else "isolated median above interleaved — contention, not the query"))
-            val meters =
-              f""""foreign_cores":[${reps.map(r => f"${r.foreign}%.2f").mkString(",")}],""" +
-              f""""iowait_cores":[${reps.map(r => f"${r.iowaitCores}%.2f").mkString(",")}],""" +
-              f""""procs_blocked":[${reps.map(_.blocked).mkString(",")}]"""
-            f""""$name":{"runs":[${runs.map(x => f"$x%.3f").mkString(",")}],""" +
-              f""""steady":${runs.min}%.3f,"probe":${probeSteady.getOrElse(name, -1.0)}%.3f,""" +
-              meters +
-              s""","published":"${if (substitute) "isolated" else "interleaved"}"}"""
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name isolated re-measure failed: ${e.getMessage}")
-            f""""$name":{"runs":[],"steady":-1.0,"probe":${probeSteady.getOrElse(name, -1.0)}%.3f}"""
-          }
-          }
-        }
-        (f""","isolated_steady":{${entries.mkString(",")},"loadavg":$load0%.2f}""",
-          meds.toMap)
-      }
-    }
-    stashContract()
-    graft.core.InternalCaches.release(spark)
-    val results = runsByQ.toSeq
-    results.foreach { case (name, v) => dispersionGuard(name, v) }
-    def publishedMedian(name: String, v: Seq[Double]): Double =
-      resumedClean.get(name).map(_.published)
-        .orElse(isolatedMedian.get(name)).getOrElse(medianValid(v))
-    // FINAL manifest save: bless this window's clean evidence for reuse by
-    // the next same-code invocation (ManifestEntry scaladoc has the clean
-    // criteria — the PUBLISHED median must clear the probe bar, so a
-    // contended median is never served forward).
-    if (resumeEnabled) {
-      def overBarPub(n: String, pub: Double): Boolean = probeSteady.get(n).exists { st =>
-        pub > 0.5 && pub > 1.5 * math.max(st, 0.01) }
-      val fresh = runsByQ.toVector.collect {
-        case (n, v) if !resumedClean.contains(n) =>
-          val pub = publishedMedian(n, v)
-          val valid = v.filter(_ >= 0)
-          val clean = !failedQ(n) && pub >= 0 &&
-            valid.size >= math.min(2, measuredRuns) &&
-            Bench.highVarianceLine(n, v).isEmpty && !overBarPub(n, pub)
-          val src = if (isolatedMedian.contains(n)) "isolated" else "interleaved"
-          n -> Bench.ManifestEntry(valid, pub, src, clean)
-      }
-      Bench.saveManifest(resumeFile, manifestKey, resumedClean.toVector ++ fresh)
-      val nClean = fresh.count(_._2.clean)
-      System.err.println(s"[bench] resume manifest saved: $nClean newly clean + " +
-        s"${resumedClean.size} carried over, ${fresh.size - nClean} not blessed for reuse")
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"${publishedMedian(k, v)}%.3f" }
-      .mkString("{", ",", "}")
-    val runsJson = results.map { case (k, v) =>
-      "\"" + k + "\":[" + v.map(x => f"$x%.3f").mkString(",") + "]" }
-      .mkString("{", ",", "}")
-    // headline total = sum of VALID medians only (round 18): a budget- or
-    // failure-degraded run used to subtract its -1.0 flags from the total
-    // (a fully-degraded 180-query run published value:-180); per-query -1
-    // flags remain in "queries" for the driver, the total stays a time
-    val total = results.map(r => publishedMedian(r._1, r._2)).filter(_ >= 0).sum
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    // cold AND warm per workload: the BASELINE.md numbers are one-shot
-    // runs that include JIT, so a warm-only report flatters the
-    // comparison — the cold number keeps the claim honest. The golden
-    // anchors and the baseline bar stay on the warm (unsuffixed) keys;
-    // the warm figure is the median of `warmReps` runs (same noise
-    // defense as the gate queries) with per-run values reported.
-    // mem_headroom_mb (round 11): the r10 100M MRFFT anchor published a
-    // single warm rep SLOWER than its cold run, and the artifact could not
-    // tell memory pressure from regression. Each workload now records the
-    // JVM headroom (max heap minus live bytes) observed right after its
-    // warm reps, so a squeezed run is self-identifying in the detail JSON.
-    def heapHeadroomMb(): Long = {
-      val rt = Runtime.getRuntime
-      (rt.maxMemory - (rt.totalMemory - rt.freeMemory)) / (1024 * 1024)
-    }
-    // pull a recorded figure back out of a coldWarm JSON fragment (for
-    // cross-anchor asserts like the BPE flatness ratio); -1.0 if absent
-    def timeOf(fragment: String, key: String): Double = {
-      val re = ("\"" + java.util.regex.Pattern.quote(key) + "\":([0-9.]+)").r.unanchored
-      fragment match { case re(v) => v.toDouble; case _ => -1.0 }
-    }
-    // anchor-dispersion requeue + load evidence (round 12): the r11
-    // exact_outliers_100m anchor published warm [41.6, 20.2, 39.6]
-    // (max/min 2.06, median above cold) with no recourse, while gate
-    // queries got a requeue at max/min > 4. Anchors run back-to-back, so
-    // they get a TIGHTER bar with up to 2 extra reps, and every
-    // anchor records the 1-minute /proc/loadavg observed after its reps —
-    // a contended window is then machine-readable in the artifact instead
-    // of needing prose. Round 14: the bar tightened 2.0 → 1.5 — the r13
-    // skew anchor published warm [2.4, 4.0, 4.0] (max/min 1.67, two reps
-    // owned by a contention window the old bar ignored); at 1.5 those
-    // vectors earn re-gated extra reps whose quiet values pull the
-    // median back to steady state. Honest-work anchors sit well under
-    // 1.3 across reps, so the tighter bar does not flap.
-    def coldWarm(section: String, name: String, warmReps: Int = 3)(f: => Unit): String = {
-      // GATE, don't just record (round 13): wait for ambient quiet before
-      // the first run; `*_loadavg` is the post-gate AMBIENT reading (see
-      // awaitQuietLoad — post-reps load is dominated by the anchor's own
-      // 32 threads), `*_load_wait_s` the deferral evidence
-      val (ambient, waited, gateExpired) = Bench.awaitQuietLoad(name)
-      // GC evidence (round 15): the r14 quantize_1m 6.6× was only
-      // attributable post-hoc; the JVM-wide GC time spent during this
-      // anchor's reps makes a GC-pressure episode machine-readable.
-      def gcMs(): Long = {
-        import scala.jdk.CollectionConverters._
-        java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-          .asScala.map(_.getCollectionTime.max(0L)).sum
-      }
-      val gc0 = gcMs()
-      // past the wall budget an anchor runs ONE rep TOTAL (round 19 —
-      // r18's post-budget tail still ran cold + 1 warm per anchor and the
-      // run overran 1200 -> 1914 s): the cold rep doubles as the single
-      // "warm" rep — f executed once, so the golden asserts see their
-      // data, and the anchor publishes *_degraded either way. A degraded
-      // reading with its contention meters attached beats rc 124. The
-      // budget is re-checked BETWEEN reps (round 18, advisor): a budget
-      // that trips mid-anchor must bound the tail per-rep, not per-anchor.
-      val preBudget = Bench.budgetExhausted()
-      val cold = Bench.timeWithForeign(f)
-      val effReps = if (preBudget || Bench.budgetExhausted()) 1 else warmReps
-      var reps = if (preBudget) Vector(cold) else Vector(Bench.timeWithForeign(f))
-      while (reps.size < effReps && !Bench.budgetExhausted())
-        reps = reps :+ Bench.timeWithForeign(f)
-      def warms = reps.map(_.sec)
-      // A rep is CONTENDED when any meter breached its gate during it —
-      // foreign CPU cores (round 16), host iowait cores or a D-state
-      // pile-up (round 17 — the CPU meter alone read this box's dominant
-      // I/O-noise mode as CLEAN). The pre-anchor gate admits windows
-      // that turn loaded mid-run; these post-run meters catch them.
-      def contended(r: Bench.RepMeter) = Bench.contendedRep(r)
-      var extra = 0
-      while (extra < 2 && warms.length > 1 && warms.min > 0 &&
-          (warms.max / warms.min > 1.5 || reps.forall(contended)) &&
-          !Bench.budgetExhausted()) {
-        if (reps.forall(contended))
-          System.err.println(f"[bench] $name%s: every warm rep ran against " +
-            "gate-breaching contention (foreign CPU / iowait / D-state) — " +
-            "re-gating and requeueing one rep")
-        else
-          System.err.println(f"[bench] $name%s anchor dispersion " +
-            f"${warms.max / warms.min}%.2f > 1.5 — requeueing one rep")
-        Bench.awaitQuietLoad(s"$name(requeue)")
-        reps = reps :+ Bench.timeWithForeign(f)
-        extra += 1
-      }
-      dispersionGuard(name, warms)
-      // Published warm = median of the STEADY cluster — round 14: runs
-      // within 1.5x of the min; round 16: reps measured against
-      // gate-breaching contention are additionally excluded when at
-      // least one clean rep remains (a contended rep can land inside the
-      // 1.5x band and still inflate the median). The FULL vector and the
-      // per-rep meters stay in the artifact, so every exclusion is
-      // auditable.
-      val clean = reps.filterNot(contended)
-      val steadyPool = if (clean.nonEmpty) clean.map(_.sec) else warms
-      val steady = steadyPool.filter(_ <= steadyPool.min * 1.5)
-      val warmMed = median(steady)
-      // Transparency (round 15, advisor): when the steady cluster
-      // excludes reps, the full-vector median is published alongside
-      // under its own key — the artifact then states BOTH readings
-      // instead of only the faster one, and the excluded-rep count makes
-      // the substitution itself machine-readable.
-      val fullProvenance =
-        if (steady.size < warms.size)
-          f""""${name}_warm_full":${median(warms)}%.3f,""" +
-            f""""${name}_warm_excluded":${warms.size - steady.size}%d,"""
-        else ""
-      // DEGRADED marker (round 18, verdict item 5): an anchor measured
-      // past the wall budget (load gates disabled, 1 warm rep), after its
-      // load gate expired, or with EVERY rep meter-breached publishes
-      // `*_degraded:true` beside its keys — BENCH_BIG_r17's graph/tok
-      // anchors measured at ambient loadavg 16-31 and were
-      // indistinguishable from clean evidence without reading the raw
-      // meter arrays.
-      val degraded = gateExpired || Bench.budgetExhausted() || clean.isEmpty
-      val degradedMark = if (degraded) s""""${name}_degraded":true,""" else ""
-      val runs = warms.map(x => f"$x%.3f").mkString("[", ",", "]")
-      // the cold rep's meters publish under their own *_cold_* keys
-      // (round 17, advisor: the old prepended layout left *_foreign_cores
-      // off-by-one against *_warm_runs for anyone auditing exclusions)
-      val foreigns = reps.map(r => f"${r.foreign}%.2f").mkString("[", ",", "]")
-      val iowaits = reps.map(r => f"${r.iowaitCores}%.2f").mkString("[", ",", "]")
-      val blockeds = reps.map(_.blocked).mkString("[", ",", "]")
-      addCompact(section, name, f"$warmMed%.2f")
-      f""""${name}_cold":${cold.sec}%.3f,"${name}_cold_foreign":${cold.foreign}%.2f,""" +
-        f""""${name}_cold_iowait":${cold.iowaitCores}%.2f,"${name}_warm":$warmMed%.3f,""" +
-        f""""${name}_warm_runs":$runs%s,"${name}_foreign_cores":$foreigns%s,""" +
-        f""""${name}_iowait_cores":$iowaits%s,"${name}_procs_blocked":$blockeds%s,""" +
-        f""""${name}_mem_headroom_mb":${heapHeadroomMb()}%d,""" +
-        f""""${name}_loadavg":$ambient%.2f,"${name}_load_wait_s":$waited%d,""" +
-        f""""${name}_loadavg_post":${loadAvg()}%.2f,$fullProvenance$degradedMark""" +
-        f""""${name}_gc_s":${(gcMs() - gc0) / 1000.0}%.2f,"$name":$warmMed%.3f"""
-    }
-    // One anchor section. HARD-budget skip (round 18): past 1.5x the wall
-    // budget even degraded 1-rep anchors stop — a skipped section is absent
-    // from the artifact (same as a dropped one) and logged, bounding the
-    // post-budget tail so the contract line always lands inside the
-    // driver's window. Only a genuine anchor mismatch fails the bench;
-    // non-fatal infrastructure failures degrade to an absent section WITH
-    // a stderr trace, so hours of already-validated timings are not
-    // discarded (fatal VM errors — OOM — propagate: a JSON line printed
-    // from a heap in unknown state is worth nothing).
-    def section(name: String)(body: => String): String =
-      if (Bench.hardExhausted()) {
-        System.err.println(s"[bench] section $name SKIPPED (hard wall budget)"); ""
-      } else try body catch {
-        case e: GoldenMismatch => throw e
-        case e if scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $name section dropped: $e")
-          compactRef.remove(name); ""
-      }
-    // BASELINE.md-comparable reference workloads (uber-100k, D=0.02 M=10):
-    // published numbers are ExactOutliers 61 655 ms / MRApproxOutliers 960 ms
-    val uber = "/root/reference/Homework_1/Data/uber-100k.csv"
-    val ref = if (new java.io.File(uber).exists()) section("reference") {
-      try {
-        val pts = graft.sources.PointSource.read(spark, uber, cpus)
-        pts.count()
-        var exactN = -1L
-        val exactJson = coldWarm("reference", "exact_outliers_uber100k") {
-          exactN = graft.ops.Geometry.exactOutliers(pts, 0.02, 10).count() }
-        var approxRows = Array.empty[org.apache.spark.sql.Row]
-        val approxJson = coldWarm("reference", "approx_outliers_uber100k") {
-          approxRows = graft.ops.Geometry.approxOutliers(pts, 0.02, 10).collect() }
-        val fftJson = coldWarm("reference", "mrfft_k100_uber100k") {
-          graft.ops.Geometry.mrFFT(pts, k = 100, l = 16, deterministic = false) }
-        // golden anchors from the reference's published uber-100k output
-        // (Homework_1/Data/Example/output_uber100k_0.02_10_5_2.pdf): 673
-        // exact outliers, 435 sure, 658 uncertain. The bench TIMES this
-        // workload every round — asserting the counts here means a silent
-        // correctness regression on real data fails the bench loudly
-        // instead of shipping a fast wrong answer.
-        val byCls = approxRows.map(r => r.getString(0) -> r.getLong(1)).toMap
-        val sure = byCls.getOrElse("sure", 0L)
-        val unc = byCls.getOrElse("uncertain", 0L)
-        if (exactN != 673L || sure != 435L || unc != 658L)
-          throw new GoldenMismatch(
-            s"uber-100k golden anchor MISMATCH: exact=$exactN (want 673) " +
-            s"sure=$sure (want 435) uncertain=$unc (want 658)")
-        s""","reference":{$exactJson,$approxJson,$fftJson}"""
-      } finally graft.core.InternalCaches.release(spark)
-    } else ""
-    // Synthetic geometry anchor sections: generate the ArtificialPoints
-    // twin, time MRFFT (radius = D) and MRApproxOutliers cold+warm, and
-    // ASSERT the planted-outlier recall — the published classification is
-    // exactly 100 sure / 0 uncertain. Optionally also times + asserts the
-    // EXACT outlier path (the reference's exact path is the O(N²) driver
-    // loop — 61.7 s at 100k, 10¹⁶ pairs at 100M, infeasible; the
-    // Λ-cell-pruned equi-join does it exactly). A GoldenMismatch fails the
-    // bench loudly; any transient failure degrades to an absent JSON
-    // section so hours of already-validated timings are not discarded.
-    def syntheticAnchors(tag: String, nClusterPts: Long, numPartitions: Int,
-                         k: Int, l: Int, withExact: Boolean,
-                         warmReps: Int = 3): String = section(s"reference_$tag") {
-      val pts = graft.sources.ArtificialPoints.generate(spark,
-          nClusterPts = nClusterPts, numPartitions = numPartitions)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        pts.count()
-        var radius = 0.0
-        val fftJson = coldWarm(s"reference_$tag", s"mrfft_k${k}_$tag", warmReps) {
-          radius = graft.ops.Geometry.mrFFT(pts, k = k, l = l)._1 }
-        var rows = Array.empty[org.apache.spark.sql.Row]
-        val approxJson = coldWarm(s"reference_$tag", s"approx_outliers_$tag", warmReps) {
-          rows = graft.ops.Geometry.approxOutliers(pts, radius, 10).collect() }
-        val byCls = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
-        val sure = byCls.getOrElse("sure", 0L)
-        val unc = byCls.getOrElse("uncertain", 0L)
-        if (sure != 100L || unc != 0L)
-          throw new GoldenMismatch(
-            s"artificial-$tag recall anchor MISMATCH: sure=$sure (want 100, " +
-            s"the planted outliers) uncertain=$unc (want 0) at D=$radius")
-        val exactJson = if (!withExact) "" else {
-          var exactN = -1L
-          val j = coldWarm(s"reference_$tag", s"exact_outliers_$tag", warmReps) {
-            exactN = graft.ops.Geometry.exactOutliers(pts, radius, 10).count() }
-          if (exactN != 100L)
-            throw new GoldenMismatch(
-              s"artificial-$tag exact-outlier anchor MISMATCH: n=$exactN (want 100)")
-          j + ","
-        }
-        f""","reference_$tag%s":{$fftJson%s,$approxJson%s,$exactJson%s"radius_k$k%d":$radius%.8f}"""
-      } finally { pts.unpersist(); graft.core.InternalCaches.release(spark) }
-    }
-    // reference_1m: the published artificial1M workload (1 000 108 pts,
-    // M=10 K=200 L=16 — BASELINE.md: MRFFT R1+R2+R3 ≈ 1.13 s, Radius
-    // 0.60045445, MRApproxOutliers ≈ 0.52 s on 16 executors; the original
-    // blob is stripped, so the deterministic twin stands in).
-    val ref1m = syntheticAnchors("1m", nClusterPts = 1000008L,
-      numPartitions = 64, k = 200, l = 16, withExact = false)
-    // reference_10m (default-on): the artificial10M effectiveness workload —
-    // BASELINE.md TEST 2 row K=110 (`Filled TableHW2.docx`: radius
-    // 2.2207804, 97 sure / 3 uncertain on the original corpus; the
-    // deterministic twin plants 100 well-isolated outliers so the anchor is
-    // exactly 100 sure / 0 uncertain). This is the every-round mid-scale
-    // guard: a partition-strategy or kernel regression that only shows at
-    // 10x the 1M scale fails THIS bench, not a hypothetical big run.
-    val ref10m = syntheticAnchors("10m", nClusterPts = 10000008L,
-      numPartitions = 128, k = 110, l = 16, withExact = false)
-    // reference_text (default-on): the dedup-path scale anchor — the text
-    // analogue of the geometry sections. 300k deterministic docs (~600×
-    // the sf0.1 gate corpus) with 1500 planted near-dup pairs
-    // (SyntheticDocs: shingle Jaccard ≈ 0.85 each, banding miss
-    // probability ~1e-9); MinHash+LSH must return EXACTLY 1500 pairs —
-    // misses show as fewer (recall), and the operator's re-verify stage
-    // bounds false positives by actual Jaccard, so a count match is a
-    // recall+precision assert. 3 warm reps — same median-of-runs noise
-    // defense as the geometry anchors (the single-rep r7 number was the
-    // noisiest published figure). The 100k-doc spec test additionally
-    // pins full SET equality.
-    def textAnchor(tag: String, nBase: Long, warmReps: Int,
-                   withContainment: Boolean = false,
-                   withEdit: Boolean = false): String = {
-      val sec = if (tag == "300k") "reference_text" else s"reference_text_$tag"
-      section(sec) {
-        val docs = graft.sources.SyntheticDocs.planted(spark,
-            nBase = nBase, nPlant = 1500L)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          docs.count()
-          var nPairs = -1L
-          val lshJson = coldWarm(sec, s"minhash_lsh_$tag", warmReps) {
-            nPairs = graft.ops.Text.minHashLshPairs(docs).count() }
-          if (nPairs != 1500L)
-            throw new GoldenMismatch(
-              s"text dedup anchor ($tag) MISMATCH: $nPairs LSH pairs (want the 1500 planted)")
-          // q121 at scale (opt-in with the 1m tier): each planted copy
-          // differs by ONE mid-doc token, so containment ≈ 35/38 ≈ 0.92
-          // per pair while unrelated docs share ~no shingles — at
-          // tau = 0.85 the answer is EXACTLY the 1500 planted pairs, and
-          // the df-capped shingle join must stay linear to find them
-          val contJson = if (withContainment) {
-            var nCont = -1L
-            val j = coldWarm(sec, s"containment_$tag", warmReps) {
-              nCont = graft.ops.Text.containmentPairs(docs, tau = 0.85).count() }
-            if (nCont != 1500L)
-              throw new GoldenMismatch(
-                s"containment anchor ($tag) MISMATCH: $nCont pairs (want the 1500 planted)")
-            "," + j
-          } else ""
-          // q142 at scale (round 13): every planted copy is a ONE-token
-          // edit, so the Levenshtein verify must confirm EXACTLY the 1500
-          // LSH candidates at the default bar — the edit DP's per-pair
-          // cost is a constant, so this anchor costs ~the LSH anchor plus
-          // 1500 bounded DPs
-          val editJson = if (withEdit) {
-            var nEdit = -1L
-            val j = coldWarm(sec, s"edit_verified_$tag", warmReps) {
-              nEdit = graft.ops.Text.editVerifiedPairs(docs).count() }
-            if (nEdit != 1500L)
-              throw new GoldenMismatch(
-                s"edit-verify anchor ($tag) MISMATCH: $nEdit pairs (want the 1500 planted)")
-            "," + j
-          } else ""
-          s""","$sec":{$lshJson$contJson$editJson}"""
-        } finally { docs.unpersist(); graft.core.InternalCaches.release(spark) }
-      }
-    }
-    val refText = textAnchor("300k", nBase = 300000L, warmReps = 3,
-      withEdit = true)
-    // reference_text_skew (default-on): same 300k corpus with 10% of docs
-    // sharing one hot boilerplate shingle (SyntheticDocs hotEvery=10) —
-    // the skew twin of reference_text. Asserts the SAME 1500-pair recall
-    // AND that the candidate layer stayed linear: max band bucket ≤ 64×
-    // mean (a hot shingle only owns a band key when it is the min of both
-    // band hashes — expected hot bucket f·N/s̄², a constant multiple of
-    // the mean) and Σ per-bucket pairs ≤ N. A skew regression in the
-    // banding fails the bench loudly at 300k, not at 100 TB.
-    val refTextSkew = section("reference_text_skew") {
-      val docs = graft.sources.SyntheticDocs.planted(spark,
-          nBase = 300000L, nPlant = 1500L, hotEvery = 10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        docs.count()
-        var nPairs = -1L
-        val lshJson = coldWarm("reference_text_skew", "minhash_lsh_skew300k", warmReps = 3) {
-          nPairs = graft.ops.Text.minHashLshPairs(docs).count() }
-        if (nPairs != 1500L)
-          throw new GoldenMismatch(
-            s"skewed text dedup anchor MISMATCH: $nPairs LSH pairs (want the 1500 planted)")
-        val (maxB, meanB, candPairs, nDocs) = graft.ops.Text.lshBucketStats(docs)
-        if (maxB > 64 * meanB || candPairs > nDocs)
-          throw new GoldenMismatch(
-            s"skew bucket bound MISMATCH: max=$maxB mean=$meanB " +
-            s"candPairs=$candPairs nDocs=$nDocs (want max <= 64*mean, cand <= n)")
-        addCompact("reference_text_skew", "skew_max_bucket", maxB.toString)
-        s""","reference_text_skew":{$lshJson,"skew_max_bucket":$maxB,""" +
-          f""""skew_mean_bucket":$meanB%.3f,"skew_cand_pairs":$candPairs}"""
-      } finally { docs.unpersist(); graft.core.InternalCaches.release(spark) }
-    }
-    // reference_text_1m (opt-in: SPARK_GRAFT_BIG=1): the dedup path is the
-    // engine's flagship 100 TB claim — this tier proves the banded join
-    // holds at 1M docs (~2000x the gate corpus) with the same 1500-pair
-    // recall assert. One warm rep keeps the opt-in run bounded.
-    val refText1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1"))
-      textAnchor("1m", nBase = 1000000L, warmReps = 3, withContainment = true)
-    else ""
-    // reference_pipeline_1m (opt-in: SPARK_GRAFT_BIG=1): the full
-    // clean→dedup→chunk→pack pipeline at 1M docs with goldens derived
-    // from the corpus construction (the scale twin of PipelineSpec's
-    // 20k-doc version): per language docs_in = 1001500/4 = 250375,
-    // docs_kept = 250000 (LSH drops exactly the planted copies),
-    // n_chunks = 500000 (2 per doc), n_bins = 1465 (250000×48 tokens,
-    // contiguous 8192-token bins). A wrong number in ANY stage — quality,
-    // dedup, LSH recall, chunk arithmetic, prefix-sum packing — fails the
-    // bench loudly at 1M scale.
-    val refPipe1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1")) section("reference_pipeline_1m") {
-      val docs = graft.sources.SyntheticDocs.planted(spark,
-          nBase = 1000000L, nPlant = 1500L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        docs.count()
-        var rows = Array.empty[org.apache.spark.sql.Row]
-        val j = coldWarm("reference_pipeline_1m", "pipeline_1m", warmReps = 3) {
-          rows = graft.ops.Pipeline.summaryOver(docs).collect() }
-        val bad = rows.length != 4 || rows.exists { r =>
-          r.getLong(1) != 250375L || r.getLong(2) != 250000L ||
-          r.getLong(3) != 500000L || r.getLong(4) != 1465L }
-        if (bad) throw new GoldenMismatch(
-          s"pipeline 1M anchor MISMATCH: ${rows.mkString("; ")} " +
-          "(want 4 x [lang, 250375, 250000, 500000, 1465])")
-        // split_leakage_1m (round 13): both corpus-sized semi-join tiers
-        // at 1M train docs with leak ground truth BY CONSTRUCTION — the
-        // 1500 plants are the eval split, every plant shares its base
-        // doc's 8-gram shingles (one mid-doc swap leaves both flanks
-        // intact) so n_near = exactly 375 per language; the exact tier
-        // fires only on the ~1-in-5000 swapped-token collisions
-        // (bounded, not pinned). A missed leak or a phantom one fails
-        // loudly at 1M scale.
-        var leakRows = Array.empty[org.apache.spark.sql.Row]
-        val jLeak = coldWarm("reference_pipeline_1m", "split_leakage_1m",
-            warmReps = 3) {
-          leakRows = graft.ops.Text.splitLeakage(
-              docs.withColumnRenamed("lang", "source"),
-              org.apache.spark.sql.functions.col("doc_id") >= 1000000L,
-              n = 8)
-            .collect() }
-        val leakBad = leakRows.length != 4 || leakRows.exists { r =>
-          r.getLong(1) != 375L || r.getLong(3) != 375L ||
-          r.getLong(2) > 3L }
-        if (leakBad) throw new GoldenMismatch(
-          s"split leakage 1M anchor MISMATCH: ${leakRows.mkString("; ")} " +
-          "(want 4 x [lang, 375 eval, <=3 exact, 375 near])")
-        // streaming_funnel_1m (round 15): the ingest-time funnel twin's
-        // flat-lineage claim, MEASURED — 1M base docs + the q167-style
-        // re-keyed exact-dup plants replayed through StreamingFunnel in
-        // 8 micro-batches (plants FIRST, so their small-id originals
-        // arriving later exercise retroactive canonical displacement at
-        // scale). Per-batch cost must stay flat (batch-bounded work —
-        // the round-15 contract; the earlier full-history re-checkpoint
-        // was O(batches²) and would show the late batches ~2-3x the
-        // early ones), and the converged report must equal the batch
-        // funnel over the identical corpus.
-        import org.apache.spark.sql.functions.{col, expr, lit, pmod}
-        val funnelBase = docs.filter(col("doc_id") < 1000000L)
-          .withColumnRenamed("lang", "source")
-        val funnelPlants = funnelBase.filter(expr("doc_id % 16 = 1"))
-          .select((lit(4L) * (col("doc_id") + lit(1000000000L))).as("doc_id"),
-            col("source"), col("text"))
-        val funnel = new graft.streaming.StatefulOps.StreamingFunnel
-        val batches = funnelPlants +: (0 until 7).map(i =>
-          funnelBase.filter(pmod(col("doc_id"), lit(7)) === i))
-        val batchTimes = batches.map(b => time(funnel.ingestBatch(b))).toVector
-        var reportRows = Array.empty[String]
-        val tReport = time {
-          reportRows = funnel.report().collect().map(_.toString).sorted }
-        val wantRows = graft.ops.Text.filterFunnel(
-            funnelBase.unionByName(funnelPlants))
-          .collect().map(_.toString).sorted
-        if (reportRows.toSeq != wantRows.toSeq)
-          throw new GoldenMismatch(
-            s"streaming funnel 1M diverges from the batch funnel: " +
-            s"${reportRows.mkString("; ")} vs ${wantRows.mkString("; ")}")
-        // batches 1-3 and 5-7 are the equal-sized base batches (batch 0
-        // is the smaller plant batch); flat per-batch cost puts the two
-        // medians within noise of each other
-        val fEarly = batchTimes.slice(1, 4).sorted.apply(1)
-        val fLate = batchTimes.slice(5, 8).sorted.apply(1)
-        val funnelFlat = fLate / math.max(fEarly, 0.05)
-        if (funnelFlat > 3.0)
-          System.err.println(
-            f"[bench] WARNING streaming funnel per-batch cost NOT flat: late-batch " +
-            f"median $funnelFlat%.1fx the early one (batch-bounded ingest predicts ~1x)")
-        addCompact("reference_pipeline_1m", "streaming_funnel_1m",
-          f"${batchTimes.sum}%.2f")
-        val jFunnel =
-          f""""streaming_funnel_1m_batches":[${batchTimes.map(t => f"$t%.3f").mkString(",")}],""" +
-          f""""streaming_funnel_1m_flat_ratio":$funnelFlat%.2f,""" +
-          f""""streaming_funnel_1m_report_s":$tReport%.3f,""" +
-          f""""streaming_funnel_1m":${batchTimes.sum}%.3f"""
-        s""","reference_pipeline_1m":{$j,$jLeak,$jFunnel}"""
-      } finally { docs.unpersist(); graft.core.InternalCaches.release(spark) }
-    } else ""
-    // reference_tok_1m (opt-in: SPARK_GRAFT_BIG=1): the round-11 tokenizer
-    // and retrieval layer at 1M docs (~2000x the gate corpus). BPE training
-    // must stay ONE corpus scan + vocab-bounded iterations — a trainer that
-    // accidentally re-scans the corpus per merge shows up here as ~8x the
-    // expected time; the merge table must also be IDENTICAL across reps
-    // (training is a pure function of the corpus). BM25's posting-filtered
-    // explode must return the full k with every hit containing a query
-    // term. Self-evident invariants only — both operators' exact values
-    // are oracle-gated at sf tiers; this tier proves the SCALE shape.
-    val refTok1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1")) section("reference_tok_1m") {
-      val docs = graft.sources.SyntheticDocs.planted(spark,
-          nBase = 1000000L, nPlant = 0L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        docs.count()
-        var mergeTables = Vector.empty[Seq[(Long, String, String, String, Long)]]
-        val bpeJson = coldWarm("reference_tok_1m", "bpe_train_1m", warmReps = 3) {
-          mergeTables = mergeTables :+ graft.ops.Text.bpeTrain(docs, nMerges = 8)
-            .collect().toSeq.map(r => (r.getLong(0), r.getString(1),
-              r.getString(2), r.getString(3), r.getLong(4))) }
-        val bad = mergeTables.exists { t =>
-          t.size != 8 || t.exists { case (_, l, r2, m, c) => m != l + r2 || c <= 0L } } ||
-          mergeTables.distinct.size != 1
-        if (bad) throw new GoldenMismatch(
-          s"bpe 1M anchor MISMATCH: ${mergeTables.map(_.take(2)).mkString(" | ")} " +
-          "(want 8 stable merges, merged = lhs+rhs, positive counts)")
-        // bpe_train_1m_256 (round 12): PRODUCTION merge counts. The
-        // per-merge eager localCheckpoint keeps plan depth constant, so
-        // cost must stay ~linear in merges (flat per-merge) — the r11
-        // regime this contract covered only in prose. The 8-merge
-        // anchor above already cached the base word table, so the
-        // ratio below is a near-pure merge-loop measurement: flat
-        // per-merge cost predicts ~32x the 8-merge time; quadratic
-        // lineage replay predicts >1000x. The merge table must also be
-        // identical across reps AND serve the full 256 requested (the
-        // 5000-token synthetic vocab sustains far more).
-        var mergeTables256 = Vector.empty[Seq[(Long, String, String)]]
-        val bpe256Json = coldWarm("reference_tok_1m", "bpe_train_1m_256", warmReps = 3) {
-          mergeTables256 = mergeTables256 :+ graft.ops.Text.bpeTrain(docs, nMerges = 256)
-            .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getString(2))) }
-        if (mergeTables256.exists(_.size != 256) || mergeTables256.distinct.size != 1)
-          throw new GoldenMismatch(
-            s"bpe 1M 256-merge anchor MISMATCH: sizes ${mergeTables256.map(_.size)} " +
-            "(want 3 identical 256-merge tables)")
-        val warm8 = timeOf(bpeJson, "bpe_train_1m_warm")
-        val warm256 = timeOf(bpe256Json, "bpe_train_1m_256_warm")
-        // a parse failure must fail LOUDLY, not let the flatness gate
-        // self-disable on a negative ratio (round-13 ADVICE fix)
-        if (warm8 < 0 || warm256 < 0) throw new GoldenMismatch(
-          s"bpe flatness inputs unparsed: warm8=$warm8 warm256=$warm256 " +
-          "— timeOf found no warm reading, the cross-anchor assert cannot run")
-        val mergeScale = warm256 / math.max(warm8, 0.05)
-        if (mergeScale > 96.0) throw new GoldenMismatch(
-          f"bpe per-merge cost NOT FLAT: 256 merges took $mergeScale%.1fx the " +
-          "8-merge anchor (flat predicts ~32x, bound 96x — lineage cut regressed?)")
-        // bpe_train_1m_4k (round 13): a REAL tokenizer's merge count
-        // regime (4096 — the 30k path is the same mechanism, just more
-        // iterations of a measured-flat loop). One warm rep keeps the
-        // ~16x-the-256-anchor runtime bounded; cold + warm both collect
-        // the merge table, which must be identical (training is a pure
-        // function of the corpus) and the full 4096 requested (the
-        // ~5000-word synthetic vocab sustains ~17k merges).
-        var mergeTables4k = Vector.empty[Seq[(String, String)]]
-        val bpe4kJson = coldWarm("reference_tok_1m", "bpe_train_1m_4k", warmReps = 1) {
-          mergeTables4k = mergeTables4k :+ graft.ops.Text.bpeTrain(docs, nMerges = 4096)
-            .collect().toSeq.map(r => (r.getString(1), r.getString(2))) }
-        if (mergeTables4k.exists(_.size != 4096) || mergeTables4k.distinct.size != 1)
-          throw new GoldenMismatch(
-            s"bpe 1M 4k-merge anchor MISMATCH: sizes ${mergeTables4k.map(_.size)} " +
-            "(want identical 4096-row merge tables across reps)")
-        val warm4k = timeOf(bpe4kJson, "bpe_train_1m_4k_warm")
-        if (warm4k < 0) throw new GoldenMismatch(
-          s"bpe 4k flatness input unparsed: warm4k=$warm4k")
-        val mergeScale4k = warm4k / math.max(warm256, 0.05)
-        if (mergeScale4k > 48.0) throw new GoldenMismatch(
-          f"bpe per-merge cost NOT FLAT at 4k: 4096 merges took " +
-          f"$mergeScale4k%.1fx the 256-merge anchor (flat predicts ~16x, bound 48x)")
-        // bpe_infer_1m_4k (round 13): frozen-table inference at the SAME
-        // production merge count — 4096 replaces chunked every 64 into
-        // 64 localCheckpointed projection jobs over the vocab-bounded
-        // word table (the chunked path was spec-only before this
-        // anchor). The histogram must be identical across reps.
-        var histos4k = Vector.empty[Seq[(String, Long)]]
-        val infer4kJson = coldWarm("reference_tok_1m", "bpe_infer_1m_4k", warmReps = 1) {
-          histos4k = histos4k :+ graft.ops.Text.bpeApplyMerges(
-              docs, mergeTables4k.head, topK = 20)
-            .collect().toSeq.map(r => (r.getString(0), r.getLong(1))) }
-        if (histos4k.exists(_.size != 20) || histos4k.distinct.size != 1)
-          throw new GoldenMismatch(
-            s"bpe 1M 4k inference anchor MISMATCH: sizes ${histos4k.map(_.size)} " +
-            "(want identical 20-row histograms across reps)")
-        var hits = Array.empty[org.apache.spark.sql.Row]
-        val bmJson = coldWarm("reference_tok_1m", "bm25_1m", warmReps = 3) {
-          hits = graft.ops.Text.bm25(docs, Seq("t0", "t1", "t2")).collect() }
-        if (hits.length != 10 ||
-            hits.exists(r => r.getLong(1) < 1L || r.getLong(1) > 3L))
-          throw new GoldenMismatch(
-            s"bm25 1M anchor MISMATCH: ${hits.length} rows " +
-            s"n_hit=${hits.map(_.getLong(1)).mkString(",")} (want 10 rows, hits in [1,3])")
-        // dirichlet_ql_1m (round 13): the LM-retrieval twin on the same
-        // posting plan — full k served, every hit matched >= 1 query
-        // term, and the ranking must be identical across reps (scoring
-        // is a pure function of the corpus)
-        var qlRows = Vector.empty[Seq[(Long, Long)]]
-        val qlJson = coldWarm("reference_tok_1m", "dirichlet_ql_1m", warmReps = 3) {
-          qlRows = qlRows :+ graft.ops.Text.dirichletQL(docs, Seq("t0", "t1", "t2"))
-            .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))) }
-        if (qlRows.exists(t => t.size != 10 ||
-              t.exists { case (_, h) => h < 1L || h > 3L }) ||
-            qlRows.distinct.size != 1)
-          throw new GoldenMismatch(
-            s"dirichlet QL 1M anchor MISMATCH: sizes ${qlRows.map(_.size)} " +
-            "(want identical 10-row rankings, hits in [1,3])")
-        // unigram_viterbi_1m (round 13): the FOURTH tokenizer family at
-        // 1M docs — the Viterbi DP's cost is vocab-bounded stages, so
-        // the corpus size only pays the one token scan; the report must
-        // be identical across reps (segmentation is a pure function of
-        // the corpus), non-UNK scores strictly negative, every piece
-        // count >= 1
-        var vitReports = Vector.empty[Seq[(String, Long, Long, String)]]
-        val vitJson = coldWarm("reference_tok_1m", "unigram_viterbi_1m", warmReps = 1) {
-          vitReports = vitReports :+ graft.ops.Text.unigramViterbi(docs)
-            .collect().toSeq.map(r => (r.getString(0), r.getLong(1),
-              r.getLong(2), r.getString(3))) }
-        val vitBad = vitReports.exists { t =>
-          t.size != 100 || t.exists { case (w, cnt, np, seq) =>
-            cnt <= 0L || np < 1L || (seq != "[UNK]" && seq.replace(" ", "") != w) } } ||
-          vitReports.distinct.size != 1
-        if (vitBad) throw new GoldenMismatch(
-          s"unigram viterbi 1M anchor MISMATCH: sizes ${vitReports.map(_.size)} " +
-          "(want identical 100-row reports whose pieces rejoin the word)")
-        // unigram_train_1m (round 14): hard-EM TRAINING of the fourth
-        // tokenizer family at 1M docs — nIters=3 rounds of the q140 DP
-        // over the vocab-bounded word table, so corpus size pays the
-        // ONE token scan and each EM round is corpus-size-independent.
-        // The trained piece table must be identical across reps
-        // (training is a pure function of the corpus), the alphabet
-        // complete at mass >= 1, every lp9 strictly negative, and the
-        // multi-char survivors within the top-V budget. The
-        // cross-anchor flatness gate below pins the "one scan +
-        // vocab-bounded iterations" shape: 3 EM rounds each do ~one
-        // Viterbi DP + a bounded m-step, so warm cost must stay within
-        // 12x the single-DP viterbi anchor (a trainer that re-scans
-        // the corpus per iteration blows through it).
-        var trainTables = Vector.empty[Seq[(String, Long, Long, Long)]]
-        val trainJson = coldWarm("reference_tok_1m", "unigram_train_1m", warmReps = 1) {
-          trainTables = trainTables :+ graft.ops.Text.unigramTrain(docs)
-            .collect().toSeq.map(r => (r.getString(0), r.getLong(1),
-              r.getLong(2), r.getLong(3))) }
-        val trainBad = trainTables.exists { t =>
-          t.isEmpty || t.count(_._1.length >= 2) > 40 ||
-            t.exists { case (p, l, m, lp) =>
-              l != p.length.toLong || m < 1L || lp >= 0L } } ||
-          trainTables.distinct.size != 1
-        if (trainBad) throw new GoldenMismatch(
-          s"unigram train 1M anchor MISMATCH: sizes ${trainTables.map(_.size)} " +
-          "(want identical piece tables, alphabet mass >= 1, lp9 < 0, <= 40 multi-char)")
-        val warmVit = timeOf(vitJson, "unigram_viterbi_1m_warm")
-        val warmTrain = timeOf(trainJson, "unigram_train_1m_warm")
-        if (warmVit < 0 || warmTrain < 0) throw new GoldenMismatch(
-          s"unigram flatness inputs unparsed: vit=$warmVit train=$warmTrain")
-        // Timing-ratio gate WARNS instead of throwing (round 15,
-        // advisor): with warmReps=1 a single contended rep would have
-        // converted a perf flake into a correctness-mismatch abort of
-        // the whole BIG tier. The ratio is always in the artifact
-        // (unigram_train_scale_ratio) so a real shape regression is
-        // still machine-readable; correctness mismatches above still
-        // throw.
-        val trainScale = warmTrain / math.max(warmVit, 0.05)
-        if (trainScale > 12.0)
-          System.err.println(
-            f"[bench] WARNING unigram EM cost ratio $trainScale%.1fx over the 12x " +
-            "vocab-bounded bar (3 flat EM rounds predict ~3-4x) — perf flake or " +
-            "shape regression; see unigram_train_scale_ratio in the artifact")
-        // wordpiece_train_1m (round 15): the LAST tokenizer trainer —
-        // the q118 merge loop scored by the exact scaled-integer
-        // likelihood. Same scale contract as BPE training (one corpus
-        // scan + vocab-bounded iterations); per iteration it runs TWO
-        // vocab-bounded aggregations (pairs + unigrams) instead of
-        // one, so warm cost should sit at ~2-3x the 8-merge BPE
-        // anchor; a trainer that re-scans the corpus per merge blows
-        // the recorded ratio. The merge table must be well-formed and
-        // every score positive (cnt(ab) <= cnt(a), cnt(b) bounds
-        // score18 at (0, 1e18]).
-        var wpTables = Vector.empty[Seq[(Long, String, String, String, Long, Long)]]
-        val wpJson = coldWarm("reference_tok_1m", "wordpiece_train_1m", warmReps = 1) {
-          wpTables = wpTables :+ graft.ops.Text.wordpieceTrain(docs, nMerges = 8)
-            .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getString(2),
-              r.getString(3), r.getLong(4), r.getLong(5))) }
-        val wpBad = wpTables.exists { t =>
-          t.size != 8 || t.exists { case (_, l, r2, m, c, s18) =>
-            m != l + r2 || c <= 0L || s18 <= 0L || s18 > 1000000000000000000L } } ||
-          wpTables.distinct.size != 1
-        if (wpBad) throw new GoldenMismatch(
-          s"wordpiece 1M anchor MISMATCH: ${wpTables.map(_.take(2)).mkString(" | ")} " +
-          "(want 8 stable merges, merged = lhs+rhs, cnt > 0, score18 in (0, 1e18])")
-        val warmWp = timeOf(wpJson, "wordpiece_train_1m_warm")
-        if (warmWp < 0) throw new GoldenMismatch(
-          s"wordpiece flatness input unparsed: warmWp=$warmWp")
-        val wpScale = warmWp / math.max(warm8, 0.05)
-        if (wpScale > 12.0)
-          System.err.println(
-            f"[bench] WARNING wordpiece train cost ratio $wpScale%.1fx the 8-merge " +
-            "BPE anchor (two vocab-bounded aggs/iter predict ~2-3x, bar 12x) — " +
-            "perf flake or a corpus re-scan crept into the loop")
-        s""","reference_tok_1m":{$bpeJson,$bpe256Json,$bpe4kJson,$infer4kJson,$bmJson,$qlJson,$vitJson,$trainJson,$wpJson,""" +
-          f""""bpe_merge_scale_ratio":$mergeScale%.2f,""" +
-          f""""unigram_train_scale_ratio":$trainScale%.2f,""" +
-          f""""wordpiece_train_scale_ratio":$wpScale%.2f,""" +
-          f""""bpe_merge_scale_ratio_4k":$mergeScale4k%.2f,"bpe_infer_chunks":64}"""
-      } finally { docs.unpersist(); graft.core.InternalCaches.release(spark) }
-    } else ""
-    // reference_vec_1m (opt-in: SPARK_GRAFT_BIG=1): the similarity-search /
-    // clustering layer at 1M vectors (500x the gate corpus) with cluster
-    // membership as ground truth by construction (SyntheticVectors): the
-    // seeded KMeans assignment must recover EVERY vector's planted center
-    // (the 64 lowest ids are one seed per center), and IVF top-10 must
-    // agree with the brute-force exact top-10 on the probe queries at
-    // recall >= 0.9. A quantizer regression, an argmin tie-break change,
-    // or a bucket-probe bug fails the bench loudly at 1M scale.
-    val refVec1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1")) section("reference_vec_1m") {
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val vecs = graft.sources.SyntheticVectors.clustered(spark, 1000000L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        vecs.count()
-        var wrong = -1L
-        val j1 = coldWarm("reference_vec_1m", "kmeans_assign_1m", warmReps = 3) {
-          wrong = graft.ops.Clustering.assignSeeded(vecs, 64)
-            .filter(col("cidx") =!= pmod(col("vec_id"), lit(64)).cast("int"))
-            .count() }
-        if (wrong != 0L) throw new GoldenMismatch(
-          s"kmeans 1M anchor MISMATCH: $wrong vectors off their planted center (want 0)")
-        val exact = graft.ops.Embeddings.bruteForceKnn(vecs, col("vec_id") < 8, 10)
-          .select("qid", "nid").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        var recall = -1.0
-        val j2 = coldWarm("reference_vec_1m", "ivf_knn_1m", warmReps = 3) {
-          val approx = graft.ops.Ann.ivfKnn(vecs, col("vec_id") < 8, k = 10)
-            .select("qid", "nid").collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet
-          recall = (approx & exact).size.toDouble / exact.size }
-        if (recall < 0.9) throw new GoldenMismatch(
-          f"IVF 1M recall MISMATCH: $recall%.3f < 0.9 vs brute force")
-        addCompact("reference_vec_1m", "ivf_recall_1m", f"$recall%.3f")
-        // int8 quantization at the full 1M: label = planted center id, so
-        // every label holds EXACTLY 1M/64 = 15625 vectors, and since no
-        // synthetic vector is the zero vector, its max-|x| element
-        // saturates — n_sat >= n_vecs per label, first principles both.
-        // Input-split guard (round 15, after the r14 7.4 s regression):
-        // the quantize row stage is a pure projection, so its
-        // parallelism IS the input partition count — a collapse of the
-        // persisted frame would run it near-single-threaded. Assert it
-        // so that failure mode can't return silently. (The r14 6.6×
-        // itself was NOT a collapse — loadavg_post 13 showed parallel
-        // tasks — but interpreted-HOF eval going megamorphic in the
-        // long-lived JVM; the row stage is now the native codegen'd
-        // graft_int8, immune to both.)
-        // WARN, don't throw (round 16, advisor): a partition collapse is
-        // an environmental/perf condition like the timing-ratio gates,
-        // not a wrong answer — the artifact carries the count either
-        // way, so a slow-because-collapsed reading is attributable
-        // without aborting the whole BIG tier over it.
-        val vecParts = vecs.rdd.getNumPartitions
-        if (vecParts < spark.sparkContext.defaultParallelism / 2)
-          System.err.println(
-            s"[bench] WARNING: quantize 1M input collapsed to $vecParts " +
-              s"partitions (want >= ${spark.sparkContext.defaultParallelism / 2}) " +
-              "— the quantize_1m reading is near-single-threaded")
-        addCompact("reference_vec_1m", "quantize_1m_input_partitions", vecParts.toString)
-        var qBad = -1L
-        val j3 = coldWarm("reference_vec_1m", "quantize_1m", warmReps = 3) {
-          val rep = graft.ops.Embeddings.quantizeInt8Report(
-              vecs.withColumn("label", pmod(col("vec_id"), lit(64)).cast("int")))
-            .collect()
-          qBad = rep.count(r => r.getLong(1) != 15625L || r.getLong(3) < r.getLong(1)) +
-            (64 - rep.length) }
-        if (qBad != 0L) throw new GoldenMismatch(
-          s"quantize 1M anchor MISMATCH: $qBad labels off (want 64 x n_vecs=15625, n_sat>=n_vecs)")
-        // covariance on a 100k slice (20x the gate corpus): the full
-        // upper triangle must materialize (2080 cells, n_vecs = 100000
-        // each) and every diagonal variance must be positive — the
-        // planted noise guarantees spread in every dimension.
-        var cBad = -1L
-        val j4 = coldWarm("reference_vec_1m", "covariance_100k", warmReps = 3) {
-          val cov = graft.ops.Embeddings.covarianceReport(
-              vecs.filter(col("vec_id") < 100000L)).collect()
-          cBad = cov.count(r => r.getLong(2) != 100000L ||
-              (r.getLong(0) == r.getLong(1) && r.getDouble(3) <= 0.0)) +
-            (2080 - cov.length) }
-        if (cBad != 0L) throw new GoldenMismatch(
-          s"covariance 100k anchor MISMATCH: $cBad cells off (want 2080 cells, n=100000, diag>0)")
-        // logreg training at 1M (2000x the gate corpus): 3 full-batch
-        // epochs; the decimal gradient sums make the trained model
-        // bit-identical across reps regardless of partitioning — every
-        // warm rep must produce the same 65 coefficients, and the model
-        // must have moved off the zero start.
-        var models = List.empty[(Seq[Double], Double)]
-        val j5 = coldWarm("reference_vec_1m", "logreg_train_1m", warmReps = 3) {
-          val (w, b) = graft.ops.Embeddings.logregTrainWeights(
-            vecs.withColumn("label", pmod(col("vec_id"), lit(64)).cast("int")))
-          models = (w.toSeq, b) :: models }
-        if (models.distinct.size != 1 || models.head._1.forall(_ == 0.0))
-          throw new GoldenMismatch(
-            s"logreg 1M anchor MISMATCH: ${models.distinct.size} distinct models " +
-              "across reps (want 1, nonzero)")
-        // PQ encoding at 1M: every vector must yield exactly m=4 codes
-        // (counts conserve 4M) with nonnegative reconstruction errors in
-        // every populated cell.
-        var pqBad = -1L
-        val j6 = coldWarm("reference_vec_1m", "pq_encode_1m", warmReps = 3) {
-          val rep = graft.ops.Ann.pqReport(vecs).collect()
-          pqBad = math.abs(rep.map(_.getLong(2)).sum - 4000000L) +
-            rep.count(r => r.getDouble(3) < 0.0 || r.getDouble(4) < r.getDouble(3)) }
-        if (pqBad != 0L) throw new GoldenMismatch(
-          s"pq 1M anchor MISMATCH: $pqBad (want 4x1M codes, 0 <= avg <= max)")
-        s""","reference_vec_1m":{$j1,$j2,$j3,$j4,$j5,$j6,"ivf_recall_1m":$recall,""" +
-          s""""quantize_1m_input_partitions":$vecParts}"""
-      } finally { vecs.unpersist(); graft.core.InternalCaches.release(spark) }
-    } else ""
-    // reference_100m (opt-in: SPARK_GRAFT_BIG=1, needs SPARK_DRIVER_MEM
-    // >= 48g): the artificial100M scalability workload — BASELINE.md
-    // TEST 1 publishes, for 16 executors, MRFFT R1+R2+R3 ≈ 15.9 s and
-    // MRApproxOutliers ≈ 2.95 s at M=10 K=110 L=16. Off by default so the
-    // per-round bench stays fast; one warm rep keeps the opt-in run bounded.
-    val ref100m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1"))
-      syntheticAnchors("100m", nClusterPts = 100000008L,
-        numPartitions = 256, k = 110, l = 16, withExact = true, warmReps = 3)
-    else ""
-    // reference_graph_1m (opt-in: SPARK_GRAFT_BIG=1): the graph layer at
-    // scale — 3 PageRank iterations over a deterministic 6-regular graph
-    // (1M nodes: ring + chords at offsets 7919 and 104729, symmetrized to
-    // 6M directed edges). Vertex transitivity gives a FIRST-PRINCIPLES
-    // golden: every node computes the identical integer sequence, which
-    // reaches the exact fixed point r = 150000 + (85 * 6*(r div 6)) div
-    // 100 = 999996 units — so the anchor asserts rank spread EXACTLY 0
-    // and the closed-form value, proving the fixed-point arithmetic does
-    // not drift at 1000x the gate's graph size.
-    val refGraph1m = if (sys.env.get("SPARK_GRAFT_BIG").contains("1")) section("reference_graph_1m") {
-      import org.apache.spark.sql.functions.{col, max, min, sum}
-      val n = 1000000L
-      val base = spark.range(n).toDF("i")
-      def chord(k: Long) =
-        base.select(col("i").as("d1"), ((col("i") + k) % n).as("d2"))
-      val edgesP = graft.core.InternalCaches.persist(
-        chord(1L).union(chord(7919L)).union(chord(104729L)))
-      try {
-        var spread = -1L; var rank = -1L
-        val j1 = coldWarm("reference_graph_1m", "pagerank_1m", warmReps = 3) {
-          val agg = graft.ops.Embeddings.pageRank(edgesP, iters = 3)
-            .agg(min(col("rank_units")).as("mn"), max(col("rank_units")).as("mx"),
-                 sum(col("rank_units"))).head
-          spread = agg.getLong(1) - agg.getLong(0)
-          rank = agg.getLong(0)
-        }
-        if (spread != 0L || rank != 999996L) throw new GoldenMismatch(
-          s"pagerank 1M anchor MISMATCH: spread=$spread (want 0), rank=$rank (want 999996)")
-        addCompact("reference_graph_1m", "pagerank_rank", "999996")
-        // round 14 — the graph FAMILY at the same 1M scale, over a
-        // second circulant with chords {1, 2, 7919}: 1+1=2 is the ONLY
-        // chord identity (checked over ±K sums/differences), so each
-        // node closes exactly ONE directed triangle and the family has
-        // first-principles goldens:
-        //  - HITS: 3-in/3-out regular → every half-step normalizes
-        //    (3·scale·scale) div (3·scale) = scale exactly; hub = auth
-        //    = scale at every node (the q94 zero-spread contract).
-        //  - assortativity: 6-regular → denominator EXACTLY 0 → the
-        //    0.0 guard at scale, n_edges 3M, max_degree 6.
-        //  - k-core: every node sits in the 6-core (k=6 peels are the
-        //    identity); k=7 empties the graph in ONE peel — the
-        //    negative control, timed inside the same anchor.
-        //  - transitivity: exactly n triangles and 15M wedges →
-        //    C = 3·1M/15M = 0.2 exactly (0.2 is twice double(0.1) —
-        //    bit-exact).
-        val edges2 = graft.core.InternalCaches.persist(
-          chord(1L).union(chord(2L)).union(chord(7919L)))
-        var hitsRow: org.apache.spark.sql.Row = null
-        val jh = coldWarm("reference_graph_1m", "hits_1m", warmReps = 2) {
-          hitsRow = graft.ops.Embeddings.hits(edges2, iters = 3)
-            .agg(min(col("hub_units")), max(col("hub_units")),
-              min(col("auth_units")), max(col("auth_units")),
-              org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1))).head
-        }
-        if ((0 to 3).exists(i => hitsRow.getLong(i) != 1000000L) ||
-            hitsRow.getLong(4) != n) throw new GoldenMismatch(
-          s"hits 1M anchor MISMATCH: $hitsRow (want hub=auth=1000000 uniform at $n nodes)")
-        var asRow: org.apache.spark.sql.Row = null
-        val ja = coldWarm("reference_graph_1m", "assortativity_1m", warmReps = 2) {
-          asRow = graft.ops.Embeddings.assortativity(edges2).head
-        }
-        if (asRow.getLong(0) != n || asRow.getLong(1) != 3000000L ||
-            asRow.getLong(2) != 6L || asRow.getDouble(3) != 0.0)
-          throw new GoldenMismatch(
-            s"assortativity 1M anchor MISMATCH: $asRow " +
-            s"(want $n nodes, 3M edges, max_degree 6, regular-graph guard 0.0)")
-        var kRow: org.apache.spark.sql.Row = null
-        var k7 = -1L
-        val jk = coldWarm("reference_graph_1m", "kcore_1m", warmReps = 2) {
-          kRow = graft.ops.Embeddings.kCore(edges2, k = 6, iters = 3)
-            .agg(org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)),
-              min(col("deg")), max(col("deg"))).head
-          k7 = graft.ops.Embeddings.kCore(edges2, k = 7, iters = 1).count()
-        }
-        if (kRow.getLong(0) != n || kRow.getLong(1) != 6L ||
-            kRow.getLong(2) != 6L || k7 != 0L) throw new GoldenMismatch(
-          s"kcore 1M anchor MISMATCH: $kRow k7=$k7 " +
-          s"(want all $n nodes at degree 6 in the 6-core; empty 7-core)")
-        var tRow: org.apache.spark.sql.Row = null
-        val jt = coldWarm("reference_graph_1m", "transitivity_1m", warmReps = 2) {
-          tRow = graft.ops.Embeddings.transitivity(edges2).head
-        }
-        if (tRow.getLong(0) != n || tRow.getLong(1) != 3000000L ||
-            tRow.getLong(2) != 1000000L || tRow.getLong(3) != 15000000L ||
-            tRow.getDouble(4) != 0.2) throw new GoldenMismatch(
-          s"transitivity 1M anchor MISMATCH: $tRow " +
-          s"(want $n nodes, 3M edges, 1M triangles, 15M wedges, C=0.2)")
-        // hits_1m's honest target is RELATIVE (round 18, verdict item 6):
-        // the old <= 5 s absolute bar predates the environment shift.
-        // HITS runs two normalized half-steps per iteration where
-        // PageRank runs one, plus two bounded collects — <= 3x
-        // pagerank_1m measured in the SAME window is the defensible bar
-        // (r17: 8.74/3.05 = 2.9x, inside it). Recorded, and warned on
-        // breach rather than thrown (a timing ratio is a perf signal,
-        // not a wrong answer).
-        val warmPr1m = timeOf(j1, "pagerank_1m_warm")
-        val warmHits1m = timeOf(jh, "hits_1m_warm")
-        val hitsRatio =
-          if (warmPr1m > 0 && warmHits1m > 0) warmHits1m / warmPr1m else -1.0
-        if (hitsRatio > 3.0)
-          System.err.println(
-            f"[bench] WARNING hits_1m at $hitsRatio%.2fx pagerank_1m in the same " +
-            "window (two half-steps per iteration predict ~2-3x) — perf flake " +
-            "or a HITS-loop regression; see hits_vs_pagerank_ratio")
-        s""","reference_graph_1m":{$j1,$jh,$ja,$jk,$jt,"pagerank_spread":$spread,"pagerank_rank":$rank,""" +
-          f""""hits_vs_pagerank_ratio":$hitsRatio%.2f,""" +
-          s""""hits_spread":0,"kcore7_survivors":$k7,"transitivity_value":${tRow.getDouble(4)}}"""
-      } finally { edgesP.unpersist(); graft.core.InternalCaches.release(spark) }
-    } else ""
-    // Two output lines + a detail file. The round driver keeps only the last
-    // ~2000 chars of stdout, so the LAST line is the compact contract line
-    // (metric/value/queries medians/warm reference medians — everything the
-    // BASELINE.md comparison grades) and MUST fit that window. The full
-    // record (per-run values, cold times, radii) goes on an earlier line and
-    // into BENCH_DETAIL.json in the working directory for human inspection.
-    val loadsJson = roundLoads.map { case (k, v) => f""""$k":$v%.2f""" }
-      .mkString("{", ",", "}")
-    // Median provenance (round 15, verdict/advisor): the published median
-    // mixes two methodologies (interleaved sweep vs isolated-steady
-    // re-measure for over-probe-bar queries); the artifact now states per
-    // query which one it published instead of requiring a cross-reference
-    // against the isolated_steady block. compare_probe consumes this map.
-    val provenanceJson = {
-      val entries = results.map { case (k, _) =>
-        val src = if (resumedClean.contains(k)) "manifest"
-          else if (isolatedMedian.contains(k)) "isolated" else "interleaved"
-        s""""$k":"$src""""
-      }.mkString(",")
-      s""","published_source":{$entries}"""
-    }
-    // resume provenance in the detail artifact: how much of this run was
-    // served from the manifest vs measured in this window
-    val resumeJson = if (resumedClean.nonEmpty || resumedPartial.nonEmpty)
-      s""","resume":{"file":"$resumeFile","key":"$manifestKey",""" +
-        s""""served_clean":${resumedClean.size},"resumed_partial":${resumedPartial.size}}"""
-    else ""
-    val budgetMark = if (Bench.budgetTripped)
-      f""","budget_exhausted":true,"budget_sec":${Bench.wallBudgetSec()}%d,"elapsed_sec":${(System.nanoTime() - Bench.wallStartNs) / 1e9}%.0f"""
-    else ""
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runsJson,"round_loadavg":$loadsJson$isolatedJson$provenanceJson$resumeJson$budgetMark,"sf":"$sfDir"$ref$ref1m$ref10m$refText$refTextSkew$refText1m$refPipe1m$refTok1m$refVec1m$refGraph1m$ref100m}"""
-    try {
-      val p = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (detail + "\n").getBytes("UTF-8"))
-    } catch { case e if scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] detail file not written: $e") }
-    val (compact, qShed, sectionsShed) = compactContractLine(
-      total, sfDir,
-      results.toVector.map { case (k, v) => k -> publishedMedian(k, v) },
-      compactRef.toSeq, nIsolated = isolatedMedian.size,
-      budgetExhausted = Bench.budgetTripped,
-      nExcluded = results.count { case (k, v) => publishedMedian(k, v) < 0 },
-      nResumed = resumedClean.size)
-    if (qShed > 0)
-      System.err.println(s"[bench] compact line over budget; shed the $qShed cheapest per-query medians (all ${results.size} remain in BENCH_DETAIL.json)")
-    for (victim <- sectionsShed)
-      System.err.println(s"[bench] compact line over budget; shed section '$victim' (see BENCH_DETAIL.json)")
-    if (compact.length > ContractBudget)
-      System.err.println(s"[bench] compact line STILL ${compact.length} chars — driver tail may truncate it")
-    // Stop Spark BEFORE printing the two output lines: nothing Spark-side
-    // (shutdown-hook warnings relayed through sbt's logger) can then land
-    // after the contract line, which must be the literal last stdout line
-    // for the driver's `parsed` field to populate. A stop()-time exception
-    // must not discard hours of validated timings — degrade to stderr.
-    try spark.stop()
-    catch { case e if scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] spark.stop() failed (timings unaffected): $e") }
-    println(detail)
-    // stand the emergency hook down BEFORE the contract line prints: a
-    // SIGTERM landing between the println and a later flag assignment used
-    // to append the stale sigterm-marked stash AFTER the real line, and
-    // the driver parses the literal last stdout line (round 19, advisor)
-    Bench.contractPrinted = true
-    println(compact)
+    val run = new Run(spark, sfDir, cpus)
+    contractPrinted = false // re-arm for an in-session re-run
+    registerEmergencyHook()
+    run.stash()
+    run.warmAndSettle()
+    run.measuredRounds()
+    run.isolate(run.requeue())
+    run.blessForResume()
+    run.publish(run.anchors())
   }
 }

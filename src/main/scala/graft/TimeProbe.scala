@@ -104,8 +104,7 @@ object TimeProbe {
       ts
     }
     for (name <- names) {
-      def overRef(v: Seq[Double]): Boolean = ref.get(name).exists { st =>
-        v.min > 0.5 && v.min > 1.5 * math.max(st, 0.01) }
+      def overRef(v: Seq[Double]): Boolean = ref.get(name).exists(Bench.overBar(v.min, _))
       var vecs = List(vector(name))
       while (vecs.size < 3 && (dispersed(vecs.minBy(_.min)) || overRef(vecs.minBy(_.min)))) {
         System.err.println(f"[probe] $name flagged (dispersed=${dispersed(vecs.head)} " +

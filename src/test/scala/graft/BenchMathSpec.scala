@@ -226,4 +226,52 @@ class BenchMathSpec extends AnyFunSuite {
     // meter must at minimum come back finite and >= -1
     assert(m.foreign >= -1.0 && m.iowaitCores >= -1.0)
   }
+
+  test("overBar: over 0.5 s and over 1.5x the steady state") {
+    assert(Bench.overBar(0.76, 0.5))
+    assert(!Bench.overBar(0.74, 0.5))
+    assert(!Bench.overBar(0.49, 0.01), "sub-0.5 s medians never trip the bar")
+    assert(Bench.overBar(0.6, 0.0), "a zero steady is floored at 0.01, not divided by")
+  }
+
+  test("printEmergencyLine: relabels an unsignalled stash, prints at most once") {
+    val saved = (Bench.contractPrinted, Bench.sigtermSeen, Bench.emergencyLine.get)
+    val out = System.out
+    val buf = new java.io.ByteArrayOutputStream
+    def printed(): String = { System.out.flush(); val s = buf.toString("UTF-8"); buf.reset(); s }
+    try {
+      System.setOut(new java.io.PrintStream(buf, true, "UTF-8"))
+      Bench.contractPrinted = false
+      Bench.sigtermSeen = false
+      Bench.emergencyLine.set("""{"metric":"total","sigterm":true}""")
+      Bench.printEmergencyLine()
+      // no signal was seen: the line must not claim one
+      assert(printed().trim == """{"metric":"total","emergency":true}""")
+      Bench.printEmergencyLine()
+      assert(printed().isEmpty, "a second call must print nothing")
+      // once main() printed its own contract line, the stash stays unprinted
+      Bench.contractPrinted = true
+      Bench.emergencyLine.set("""{"metric":"total","sigterm":true,"late":1}""")
+      Bench.printEmergencyLine()
+      assert(printed().isEmpty)
+    } finally {
+      System.setOut(out)
+      Bench.contractPrinted = saved._1
+      Bench.sigtermSeen = saved._2
+      Bench.emergencyLine.set(saved._3)
+    }
+  }
+
+  test("section: a golden mismatch propagates, any other failure drops the section") {
+    val compact = scala.collection.mutable.LinkedHashMap(
+      "reference_1m" -> Vector("mrfft_k200_1m" -> "0.50"),
+      "reference_10m" -> Vector("mrfft_k110_10m" -> "1.48"))
+    assert(Bench.section(compact, "reference_1m")(""","reference_1m":{}""") == ""","reference_1m":{}""")
+    intercept[Bench.GoldenMismatch] {
+      Bench.section(compact, "reference_1m") { Bench.golden(ok = false, "want 100"); "unreached" }
+    }
+    assert(compact.contains("reference_1m"), "a mismatch is not a dropped section")
+    assert(Bench.section(compact, "reference_1m")(throw new IllegalStateException("infra")) == "")
+    assert(compact.keySet == Set("reference_10m"))
+  }
 }

@@ -3,16 +3,14 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Dev scratchpad for optimization-round A/B experiments: times named
-  * query variants with the noop sink (5 runs) and prints a result
-  * fingerprint (count + xxhash over the stringified sorted rows) so a
-  * candidate rewrite proves result-identity before it touches the real
-  * operator. NOT part of any graded surface, and — round 20, advisor —
-  * lives in src/test so lab churn never invalidates the resumable bench
-  * manifest (keyed on src/main/scala only). `_base` variants call the
-  * SHIPPED operators via SparkEntry; only not-yet-shipped candidate
-  * bodies are inlined, and they are deleted once a candidate ships.
-  * Usage: sbt "Test/runMain graft.OptLab [variant ...]"  (default: all)
+/** Dev scratchpad for optimization-round A/B experiments: times named gate
+  * queries with the noop sink (5 runs) and prints a result fingerprint
+  * (count + xxhash over the stringified sorted rows), so a candidate rewrite
+  * proves result-identity against the shipped operator before it replaces
+  * it. NOT part of any graded surface, and lives in src/test so lab churn
+  * never invalidates the resumable bench manifest (keyed on src/main/scala
+  * only). Names are SparkEntry query names, as in TimeProbe.
+  * Usage: sbt "Test/runMain graft.OptLab <query name> [...]"
   */
 object OptLab {
   private def fingerprint(df: DataFrame): String = {
@@ -24,6 +22,11 @@ object OptLab {
   }
 
   def main(args: Array[String]): Unit = {
+    if (args.isEmpty) {
+      System.err.println("usage: Test/runMain graft.OptLab <query name>...\n  queries: " +
+        SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
+      return
+    }
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.Sessions.local("optlab")
     spark.sparkContext.setLogLevel("WARN")
@@ -39,36 +42,9 @@ object OptLab {
       spark.sparkContext.setJobDescription(null)
     }
 
-    val variants: Map[String, () => DataFrame] = Map(
-      "q188_base" -> (() => SparkEntry.queries("q188_wordpiece_inference")(spark, dir)),
-      "q122_base" -> (() => SparkEntry.queries("q122_trigram_score")(spark, dir)),
-      "q130_base" -> (() => SparkEntry.queries("q130_dsir_weights")(spark, dir)),
-      "q145_base" -> (() => SparkEntry.queries("q145_phrase_search")(spark, dir)),
-      "q187_base" -> (() => SparkEntry.queries("q187_wordpiece_train")(spark, dir)),
-      "q133_base" -> (() => SparkEntry.queries("q133_duplicated_spans")(spark, dir)),
-      "q91_base" -> (() => SparkEntry.queries("q91_grouping_sets")(spark, dir)),
-      "q159_base" -> (() => SparkEntry.queries("q159_oov_rate")(spark, dir)),
-      "q127_base" -> (() => SparkEntry.queries("q127_fivegram_score")(spark, dir)),
-      "q121_base" -> (() => SparkEntry.queries("q121_containment")(spark, dir)),
-      "q185_base" -> (() => SparkEntry.queries("q185_unigram_train")(spark, dir)),
-      "q186_base" -> (() => SparkEntry.queries("q186_unigram_apply")(spark, dir)),
-      "q140_base" -> (() => SparkEntry.queries("q140_unigram_viterbi")(spark, dir)),
-      "q136_base" -> (() => SparkEntry.queries("q136_tokenizer_fertility")(spark, dir)),
-      "q124_base" -> (() => SparkEntry.queries("q124_bpe_inference")(spark, dir)),
-      "q75_base" -> (() => SparkEntry.queries("q75_range_join")(spark, dir)),
-      "q84_base" -> (() => SparkEntry.queries("q84_inverted_index")(spark, dir)),
-      "q113_base" -> (() => SparkEntry.queries("q113_bm25")(spark, dir)),
-      "q125_base" -> (() => SparkEntry.queries("q125_rrf_fusion")(spark, dir)),
-      "q157_base" -> (() => SparkEntry.queries("q157_rm3_expansion")(spark, dir)),
-      "q161_base" -> (() => SparkEntry.queries("q161_ndcg")(spark, dir)),
-      "q169_base" -> (() => SparkEntry.queries("q169_dirichlet_ql")(spark, dir)),
-      "q177_base" -> (() => SparkEntry.queries("q177_mrr")(spark, dir)),
-    )
-
-    val chosen = if (args.isEmpty) variants.keys.toSeq.sorted else args.toSeq
-    for (name <- chosen) variants.get(name) match {
-      case Some(f) => bench(name)(f())
-      case None => System.err.println(s"unknown variant $name")
+    for (name <- args) SparkEntry.queries.get(name) match {
+      case Some(q) => bench(name)(q(spark, dir))
+      case None => System.err.println(s"unknown query $name")
     }
     spark.stop()
   }
