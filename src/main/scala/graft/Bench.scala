@@ -310,12 +310,28 @@ object Bench {
   private[graft] def probeConfigLine(sfDir: String, cpus: Int): String =
     s"PROBE_CONFIG sf=$sfDir cpus=$cpus"
 
+  /** Steady states of the probe sweep in `file` when its `PROBE_CONFIG`
+    * header names this data dir and core count: an sf0.1 steady is no bar
+    * for an sf0.01 run. A missing or other header logs one stderr line
+    * and yields None. */
+  private[graft] def probeSteadyOf(file: java.io.File, sfDir: String,
+                                   cpus: Int): Option[Map[String, Double]] = {
+    val src = scala.io.Source.fromFile(file)
+    val lines = try src.getLines().toVector finally src.close()
+    val want = probeConfigLine(sfDir, cpus)
+    val header = lines.map(_.trim).find(_.contains("PROBE_CONFIG "))
+    if (header.exists(_.endsWith(want))) Some(parseProbeSteady(lines.iterator))
+    else {
+      System.err.println(s"[probe] ${file.getName} has ${header.getOrElse("no PROBE_CONFIG header")}, " +
+        s"this run needs $want: not used as a bar")
+      None
+    }
+  }
+
   /** The committed probe sweep to requeue against: SPARK_GRAFT_PROBE_FILE
     * if set, else the newest PROBE_r<N>.txt in `dir`. Empty map (requeue
     * disabled) when neither exists — a fresh clone has no probe history
-    * yet — and, with one stderr line, when the sweep's
-    * `PROBE_CONFIG` header is missing or names another data dir or core
-    * count than this run's: an sf0.1 steady is no bar for an sf0.01 run. */
+    * yet — or when [[probeSteadyOf]] rejects the sweep's configuration. */
   private[graft] def loadProbeSteady(sfDir: String, cpus: Int,
                                      dir: java.io.File = new java.io.File(".")): Map[String, Double] = try {
     val f = sys.env.get("SPARK_GRAFT_PROBE_FILE").map(new java.io.File(_))
@@ -325,18 +341,7 @@ object Bench {
           .filter(_.getName.matches("PROBE_r\\d+\\.txt"))
           .sortBy(f => f.getName.replaceAll("\\D", "").toInt).lastOption
       }
-    f.filter(_.isFile).map { file =>
-      val src = scala.io.Source.fromFile(file)
-      val lines = try src.getLines().toVector finally src.close()
-      val want = probeConfigLine(sfDir, cpus)
-      val header = lines.map(_.trim).find(_.contains("PROBE_CONFIG "))
-      if (header.exists(_.endsWith(want))) parseProbeSteady(lines.iterator)
-      else {
-        System.err.println(s"[bench] ${file.getName} has ${header.getOrElse("no PROBE_CONFIG header")}, " +
-          s"this run needs $want: probe bar disabled")
-        Map.empty[String, Double]
-      }
-    }.getOrElse(Map.empty)
+    f.filter(_.isFile).flatMap(probeSteadyOf(_, sfDir, cpus)).getOrElse(Map.empty)
   } catch { case e if scala.util.control.NonFatal(e) =>
     System.err.println(s"[bench] probe sweep not loaded (requeue disabled): $e")
     Map.empty
@@ -525,6 +530,15 @@ object Bench {
       s""""${prefix}iowait_cores":[${reps.map(r => f"${r.iowaitCores}%.2f").mkString(",")}],""" +
       s""""${prefix}procs_blocked":[${reps.map(_.blocked).mkString(",")}]"""
 
+  /** An anchor earns one more rep while its warm reps spread over the
+    * probe bar ([[overBar]]: slowest over 0.5 s and over 1.5x the fastest)
+    * or every rep ran against gate-breaching contention. */
+  private[graft] def requeueAnchor(reps: Seq[RepMeter]): Boolean = {
+    val warms = reps.map(_.sec)
+    warms.length > 1 && warms.min > 0 &&
+      (overBar(warms.max, warms.min) || reps.forall(contendedRep))
+  }
+
   /** Times one anchor: a cold run and `warmReps` warm runs of `f`, each
     * under [[timeWithForeign]] meters. The BASELINE.md numbers are one-shot
     * runs that include JIT, so the cold figure keeps the comparison honest;
@@ -533,10 +547,10 @@ object Bench {
     *  - Past the wall budget the anchor runs ONE rep in total: the cold
     *    run doubles as the warm one, so `f` still ran for the goldens. The
     *    budget is re-checked between reps.
-    *  - Anchors run back-to-back, so their dispersion bar is 1.5x (the
-    *    sweep's is 4x): a wider vector, or one where every rep breached a
-    *    contention gate, earns up to 2 re-gated extra reps. Honest-work
-    *    anchors sit well under 1.3x, so the bar does not flap.
+    *  - A vector over the probe bar ([[requeueAnchor]]), or one where
+    *    every rep breached a contention gate, earns up to 2 re-gated
+    *    extra reps. Honest-work anchors sit well under 1.3x, and
+    *    sub-0.5 s ones never trip it on scheduling jitter.
     *  - The published warm is the median of the steady cluster: the clean
     *    reps (all reps if none is clean) within 1.5x of their min. When
     *    that excludes reps, `*_warm_full` and `*_warm_excluded` publish
@@ -556,16 +570,14 @@ object Bench {
       reps = reps :+ timeWithForeign(f)
     def warms = reps.map(_.sec)
     var extra = 0
-    while (extra < 2 && warms.length > 1 && warms.min > 0 &&
-        (warms.max / warms.min > 1.5 || reps.forall(contendedRep)) &&
-        !budgetExhausted()) {
+    while (extra < 2 && requeueAnchor(reps) && !budgetExhausted()) {
       if (reps.forall(contendedRep))
         System.err.println(f"[bench] $name%s: every warm rep ran against " +
           "gate-breaching contention (foreign CPU / iowait / D-state) — " +
           "re-gating and requeueing one rep")
       else
         System.err.println(f"[bench] $name%s anchor dispersion " +
-          f"${warms.max / warms.min}%.2f > 1.5 — requeueing one rep")
+          f"${warms.max / warms.min}%.2f over the probe bar — requeueing one rep")
       awaitQuietLoad(s"$name(requeue)")
       reps = reps :+ timeWithForeign(f)
       extra += 1

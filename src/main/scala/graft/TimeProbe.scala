@@ -54,9 +54,12 @@ object TimeProbe {
   } catch { case e if scala.util.control.NonFatal(e) => 0 }
 
   /** Best-known steady per query: the MIN across every committed
-    * PROBE_r*.txt at or after the environment epoch — the strictest
-    * "this box, in its CURRENT regime, has run it this fast" bar. */
-  private[graft] def bestKnownSteady(dir: java.io.File = new java.io.File(".")): Map[String, Double] = try {
+    * PROBE_r*.txt at or after the environment epoch whose `PROBE_CONFIG`
+    * header names this data dir and core count ([[Bench.probeSteadyOf]])
+    * — the strictest "this box, in its CURRENT regime and configuration,
+    * has run it this fast" bar. */
+  private[graft] def bestKnownSteady(sfDir: String, cpus: Int,
+                                     dir: java.io.File = new java.io.File(".")): Map[String, Double] = try {
     val epoch = probeEpoch(dir)
     val files = Option(dir.listFiles())
       .map(_.toSeq).getOrElse(Seq.empty)
@@ -64,10 +67,8 @@ object TimeProbe {
         f.getName.matches("PROBE_r\\d+\\.txt") &&
           f.getName.replaceAll("\\D", "").toInt >= epoch
       }
-    files.flatMap { f =>
-      val src = scala.io.Source.fromFile(f)
-      try Bench.parseProbeSteady(src.getLines()).toSeq finally src.close()
-    }.groupMapReduce(_._1)(_._2)(math.min)
+    files.flatMap(Bench.probeSteadyOf(_, sfDir, cpus).toSeq.flatten)
+      .groupMapReduce(_._1)(_._2)(math.min)
   } catch { case e if scala.util.control.NonFatal(e) =>
     System.err.println(s"[probe] reference steadies not loaded (guard on dispersion only): $e")
     Map.empty
@@ -96,7 +97,7 @@ object TimeProbe {
     val names: Seq[String] =
       if (args.sameElements(Array("all"))) SparkEntry.queries.keys.toSeq.sorted
       else args.toSeq
-    val ref = bestKnownSteady()
+    val ref = bestKnownSteady(dir, graft.core.Sessions.cpus)
     var suspects = 0
     def vector(name: String): Seq[Double] = {
       val ts = (1 to 5).map(_ => Bench.timeNoop(SparkEntry.queries(name)(spark, dir)))
@@ -114,11 +115,8 @@ object TimeProbe {
         // advisor): back-to-back vectors all sit inside one multi-minute
         // noise window, reproduce within the 1.25x mins band, and print a
         // contaminated steady as REGRESSION? — the exact PROBE_r16 failure
-        // the guard was built to withhold. Default 75 s between vectors;
-        // SPARK_GRAFT_PROBE_RESLEEP (seconds, 0 disables for tests).
-        val sleepS = sys.env.get("SPARK_GRAFT_PROBE_RESLEEP")
-          .flatMap(_.toLongOption).getOrElse(75L)
-        if (sleepS > 0) Thread.sleep(sleepS * 1000L)
+        // the guard was built to withhold. 75 s between vectors.
+        Thread.sleep(75000L)
         vecs = vector(name) :: vecs
       }
       val best = vecs.minBy(_.min)

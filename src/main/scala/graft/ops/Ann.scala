@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.plans.TopK
 
 /** IVF (inverted-file) approximate nearest neighbor: a coarse quantizer
   * partitions the vector space into nlist cells; queries probe only the
@@ -85,14 +86,14 @@ object Ann {
   }
 
   /** IVF top-k: probe the `nprobe` nearest cells per query, rank candidates
-    * by cosine (same scoring as the brute-force baseline). No caching: the
+    * through the brute-force baseline's cosine kernel
+    * ([[Embeddings.cosineTopK]]). No caching: the
     * argmin assignment is a cheap projection, so recomputing it on the two
     * branches beats holding executor storage memory across invocations (a
     * production index would persist `assigned` as a table bucketed by
     * centroid_id instead — see graft.sources.Bucketed). */
   def ivfKnn(emb: DataFrame, queryPred: Column, k: Int,
              nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (assigned, centroids) = ivfIndex(emb, nlist)
     val probeN = math.min(nprobe, centroids.length) // small corpora: fewer cells than nprobe
     val indexed = assigned
@@ -104,13 +105,8 @@ object Ann {
     val cand = indexed
       .select(col("vec_id").as("nid"), col("embedding").as("nv"),
               col("nrm").as("nn"), col("centroid_id"))
-    val scored = broadcast(q)
-      .join(cand, col("probe") === col("centroid_id") && col("qid") =!= col("nid"))
-      .withColumn("sim", round(expr("graft_dot(qv, nv)") / (col("qn") * col("nn")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("nid"), col("sim"))
+    Embeddings.cosineTopK(q, cand,
+      col("probe") === col("centroid_id") && col("qid") =!= col("nid"), k)
   }
 
   /** Production index path promised by [[ivfKnn]]'s doc: persist the
@@ -152,7 +148,6 @@ object Ann {
   def ivfServeKnn(spark: SparkSession, table: String, centroids: Array[Array[Double]],
                   queries: DataFrame, k: Int, nprobe: Int = 4,
                   maxBroadcastRows: Long = 1L << 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.register(spark)
     val probeN = math.min(nprobe, centroids.length)
     // qp feeds BOTH the probe-id collect and the broadcast join — route it
@@ -175,13 +170,8 @@ object Ann {
               col("nrm").as("nn"), col("centroid_id"))
     val q = qp.select(col("vec_id").as("qid"), col("embedding").as("qv"),
                       col("qn"), col("probe"))
-    val scored = broadcast(q)
-      .join(cand, col("probe") === col("centroid_id") && col("qid") =!= col("nid"))
-      .withColumn("sim", round(expr("graft_dot(qv, nv)") / (col("qn") * col("nn")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("nid"), col("sim"))
+    Embeddings.cosineTopK(q, cand,
+      col("probe") === col("centroid_id") && col("qid") =!= col("nid"), k)
   }
 
   def qIvfKnn(s: SparkSession, dir: String): DataFrame =
@@ -287,7 +277,6 @@ object Ann {
     * is engine-exact. */
   def pqAdcRecall(emb: DataFrame, queryPred: Column, k: Int = 5,
                   m: Int = 4, ksub: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sub = 64 / m
     val books = pqCodebooks(emb, m, ksub)
     val coded = graft.core.InternalCaches.persist(
@@ -302,30 +291,16 @@ object Ann {
         "(a, b) -> CAST(a AS DOUBLE) - b)"
       s"graft_dot($diff, $diff)"
     }.mkString(" + ")
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("nid").asc)
-    val adcTop = broadcast(q).join(coded, col("qid") =!= col("nid"))
-      .withColumn("d2", round(expr(adcExpr), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid").as("anid"))
+    // the recall join reads only (qid, nid), so no rank column is needed
+    def nearest(cand: DataFrame, d2: String): DataFrame =
+      TopK.perKey(broadcast(q).join(cand, col("qid") =!= col("nid"))
+          .select(col("qid"), col("nid"), round(expr(d2), 6).as("d2")),
+        Seq("qid"), Seq(TopK.asc("d2"), TopK.asc("nid")), k)
     val full = emb.select(col("vec_id").as("nid"), col("embedding").as("nv"))
-    val exactTop = broadcast(q).join(full, col("qid") =!= col("nid"))
-      .withColumn("d2", round(expr(
-        "graft_dot(zip_with(qv, nv, (a, b) -> CAST(a AS DOUBLE) - b), " +
-          "zip_with(qv, nv, (a, b) -> CAST(a AS DOUBLE) - b))"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"))
-    exactTop
-      .join(adcTop, exactTop("qid") === adcTop("qid") &&
-        col("nid") === col("anid"), "left_outer")
-      .groupBy(exactTop("qid"))
-      .agg(count(lit(1)).cast(org.apache.spark.sql.types.LongType).as("n_exact"),
-        sum(when(col("anid").isNotNull, 1L).otherwise(0L))
-          .cast(org.apache.spark.sql.types.LongType).as("n_hit"))
-      .withColumn("recall", col("n_hit").cast(
-        org.apache.spark.sql.types.DoubleType) / col("n_exact"))
-      .select(col("qid"), col("n_exact"), col("n_hit"), col("recall"))
+    Embeddings.hitRecall(
+      nearest(full, "graft_dot(zip_with(qv, nv, (a, b) -> CAST(a AS DOUBLE) - b), " +
+        "zip_with(qv, nv, (a, b) -> CAST(a AS DOUBLE) - b))"),
+      nearest(coded, adcExpr))
   }
 
   def qPqAdcRecall(s: SparkSession, dir: String): DataFrame =

@@ -4,12 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
+import graft.plans.TopK
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
   * - Brute-force cosine top-k: the correctness baseline. Declarative
-  *   (crossJoin pruned by a broadcast of the small query side + window
-  *   top-k), all math in codegen'd array expressions — no UDFs.
+  *   (crossJoin pruned by a broadcast of the small query side, ranked per
+  *   query by the bounded-heap [[graft.plans.TopK.ranked]] primitive
+  *   through [[cosineTopK]]), all math in codegen'd array expressions —
+  *   no UDFs.
   * - LSH (random hyperplane) bucketed ANN: the 100 TB path — candidates come
   *   from a bucket equi-join instead of the full cross product.
   * - Label centroids via exact decimal sums (order-independent → identical
@@ -39,20 +42,29 @@ object Embeddings {
     emb.withColumn("nrm", normExpr("embedding"))
   }
 
+  /** The one cosine ranking kernel behind every per-query vector search:
+    * the bounded query side (qid, qv, qn) broadcasts onto the candidates
+    * (nid, nv, nn) under `on`, sim = round(dot / (qn·nn), 6), and
+    * [[graft.plans.TopK.ranked]] keeps the top k per query by (sim desc,
+    * nid asc), so at most k rows per query per partition cross the
+    * exchange. Output: qid, rk (int), nid, `keep`…, sim. */
+  private[ops] def cosineTopK(q: DataFrame, cand: DataFrame, on: Column, k: Int,
+                              keep: String*): DataFrame = {
+    val scored = broadcast(q).join(cand, on)
+      .select((Seq(col("qid"), col("nid")) ++ keep.map(col) :+
+        round(dotExpr("qv", "nv") / (col("qn") * col("nn")), 6).as("sim")): _*)
+    TopK.ranked(scored, Seq("qid"), Seq(TopK.desc("sim"), TopK.asc("nid")), k, "rk")
+      .select((Seq(col("qid"), col("rk"), col("nid")) ++ keep.map(col) :+ col("sim")): _*)
+  }
+
   /** Brute-force cosine top-k neighbors for a bounded query set.
     * The query side is tiny → broadcast; ranking ties broken by vec_id. */
   def bruteForceKnn(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val n = withNorm(emb)
     val q = n.filter(queryPred)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
     val cand = n.select(col("vec_id").as("nid"), col("embedding").as("nv"), col("nrm").as("nn"))
-    val scored = broadcast(q).join(cand, col("qid") =!= col("nid"))
-      .withColumn("sim", round(dotExpr("qv", "nv") / (col("qn") * col("nn")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("nid"), col("sim"))
+    cosineTopK(q, cand, col("qid") =!= col("nid"), k)
   }
 
   /** All-pairs cosine near-duplicates above a threshold, as a *block outer
@@ -208,18 +220,11 @@ object Embeddings {
     * the full bucket only — recall traded for a bucket equi-join that scales;
     * brute-force above is the exactness baseline). */
   def annKnn(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val bucketed = withNorm(lshBuckets(emb, nPlanes = 8))
     val q = bucketed.filter(queryPred)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("bucket").as("qb"), col("nrm").as("qn"))
     val cand = bucketed.select(col("vec_id").as("nid"), col("embedding").as("nv"), col("bucket").as("nb"), col("nrm").as("nn"))
-    val scored = broadcast(q)
-      .join(cand, col("qb") === col("nb") && col("qid") =!= col("nid"))
-      .withColumn("sim", round(dotExpr("qv", "nv") / (col("qn") * col("nn")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("nid"), col("sim"))
+    cosineTopK(q, cand, col("qb") === col("nb") && col("qid") =!= col("nid"), k)
   }
 
   /** Triangle participation counts on the cosine similarity graph — the
@@ -1098,22 +1103,28 @@ object Embeddings {
     * construction. n_approx can fall short of k (sparse bucket) and a
     * query with an empty bucket still reports, with n_approx = 0. */
   def annRecallReport(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    val exact = bruteForceKnn(emb, queryPred, k).select(col("qid"), col("nid"))
     val approx = annKnn(emb, queryPred, k)
-      .select(col("qid").as("aqid"), col("nid").as("anid"))
-    val nap = approx.groupBy(col("aqid"))
+    val nap = approx.groupBy(col("qid"))
       .agg(count(lit(1)).cast(LongType).as("n_approx"))
-    exact
-      .join(approx, col("qid") === col("aqid") && col("nid") === col("anid"),
-        "left_outer")
+    hitRecall(bruteForceKnn(emb, queryPred, k), approx)
+      .join(nap, Seq("qid"), "left_outer")
+      .withColumn("n_approx", coalesce(col("n_approx"), lit(0L)))
+      .select(col("qid"), col("n_exact"), col("n_approx"), col("n_hit"), col("recall"))
+  }
+
+  /** The hit-recall finish shared by the ANN evaluations: per query of the
+    * exact top-k `exact` (qid, nid), n_exact, how many of those neighbours
+    * the approximate top-k `approx` (qid, nid) also returned (n_hit), and
+    * recall = n_hit / n_exact. One left-outer equi-join on (qid, nid) over
+    * k-row-per-query frames. */
+  private[ops] def hitRecall(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.select(col("qid"), col("nid"))
+      .join(approx.select(col("qid").as("aqid"), col("nid").as("anid")),
+        col("qid") === col("aqid") && col("nid") === col("anid"), "left_outer")
       .groupBy(col("qid"))
       .agg(count(lit(1)).cast(LongType).as("n_exact"),
         sum(when(col("anid").isNotNull, 1L).otherwise(0L)).cast(LongType).as("n_hit"))
-      .join(nap.withColumnRenamed("aqid", "qid"), Seq("qid"), "left_outer")
-      .withColumn("n_approx", coalesce(col("n_approx"), lit(0L)))
       .withColumn("recall", col("n_hit").cast(DoubleType) / col("n_exact"))
-      .select(col("qid"), col("n_exact"), col("n_approx"), col("n_hit"), col("recall"))
-  }
 
   def qAnnRecall(s: SparkSession, dir: String): DataFrame =
     annRecallReport(Tables.embeddings(s, dir), col("vec_id") < 8, k = 5)
@@ -1130,13 +1141,12 @@ object Embeddings {
     * Scale shape: corpus-sized work stays inside the audited kNN
     * operator; everything here runs on ≤ nCand rows per query — the
     * pairwise candidate-similarity join is nCand² per query (a constant),
-    * and each of the k−1 greedy stages is one bounded join + one argmax
-    * window over per-query partitions. The greedy loop is a fixed k, so
-    * lineage stays bounded. */
+    * and each of the k−1 greedy stages is one bounded join + one per-query
+    * argmax, the bounded-heap [[graft.plans.TopK.perKey]] at k = 1. The
+    * greedy loop is a fixed k, so lineage stays bounded. */
   def mmrRerank(emb: DataFrame, queryPred: Column, k: Int = 3,
                 nCand: Int = 10, lambda: Double = 0.7,
                 oneMinusLambda: Double = 0.3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1 && k <= nCand, s"need 1 <= k <= nCand, got $k vs $nCand")
     val cands = graft.core.InternalCaches.persist(
       bruteForceKnn(emb, queryPred, nCand)
@@ -1152,10 +1162,7 @@ object Embeddings {
       left.join(right, col("qid") === col("q2") && col("d") =!= col("s"))
         .select(col("qid"), col("d"), col("s"),
           round(expr("graft_dot(dv, sv)") / (col("dn") * col("sn")), 6).as("dd")))
-    var out = cands
-      .withColumn("rk", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("rel").desc, col("nid").asc)))
-      .filter(col("rk") === 1)
+    var out = TopK.perKey(cands, Seq("qid"), Seq(TopK.desc("rel"), TopK.asc("nid")), 1)
       .select(col("qid"), col("nid"), lit(1L).as("sel_rank"), col("rel").as("mmr"))
     for (t <- 2 to k) {
       val sel = out.select(col("qid").as("sq"), col("nid").as("sel"))
@@ -1163,13 +1170,11 @@ object Embeddings {
         .groupBy(col("qid"), col("d")).agg(max(col("dd")).as("pen"))
       val rem = cands.join(sel,
         cands("qid") === col("sq") && cands("nid") === col("sel"), "left_anti")
-      val next = rem
+      val scored = rem
         .join(pen, rem("qid") === pen("qid") && rem("nid") === pen("d"))
         .select(rem("qid"), col("nid"),
           (lit(lambda) * col("rel") - lit(oneMinusLambda) * col("pen")).as("mmrraw"))
-        .withColumn("rk", row_number().over(Window.partitionBy(col("qid"))
-          .orderBy(col("mmrraw").desc, col("nid").asc)))
-        .filter(col("rk") === 1)
+      val next = TopK.perKey(scored, Seq("qid"), Seq(TopK.desc("mmrraw"), TopK.asc("nid")), 1)
         .select(col("qid"), col("nid"), lit(t.toLong).as("sel_rank"),
           round(col("mmrraw"), 6).as("mmr"))
       out = out.union(next)
@@ -1335,14 +1340,20 @@ object Embeddings {
   def truncationRecall(emb: DataFrame, dPrime: Int = 16, k: Int = 10,
                        queryPred: Column = expr("vec_id % 50 = 0")): DataFrame = {
     require(dPrime >= 1 && k >= 1, s"bad params ($dPrime, $k)")
-    val full = bruteForceKnn(emb, queryPred, k)
-      .select(col("qid"), col("nid"))
-    val trunc = bruteForceKnn(
-      emb.withColumn("embedding", slice(col("embedding"), 1, dPrime)),
-      queryPred, k).select(col("qid"), col("nid"))
-    val overlap = full.join(trunc, Seq("qid", "nid"))
+    overlapAtK(bruteForceKnn(emb, queryPred, k),
+      bruteForceKnn(emb.withColumn("embedding", slice(col("embedding"), 1, dPrime)),
+        queryPred, k), k)
+  }
+
+  /** The overlap-at-k finish shared by the dimensionality-reduction
+    * recalls: per query of the full-dimension top-k `full` (qid, nid), how
+    * many of its neighbours the reduced ranking `reduced` (qid, nid) kept
+    * (n_overlap, 0 when none) and recall = n_overlap / k, ordered by qid. */
+  private def overlapAtK(full: DataFrame, reduced: DataFrame, k: Int): DataFrame = {
+    val pairs = full.select(col("qid"), col("nid"))
+    val overlap = pairs.join(reduced.select(col("qid"), col("nid")), Seq("qid", "nid"))
       .groupBy(col("qid")).agg(count(lit(1)).cast(LongType).as("n_overlap"))
-    full.select(col("qid")).distinct()
+    pairs.select(col("qid")).distinct()
       .join(overlap, Seq("qid"), "left")
       .select(col("qid"),
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
@@ -1382,20 +1393,8 @@ object Embeddings {
       r.map(v => s"CAST($v AS DOUBLE)").mkString("array(", ", ", ")"))
     val projExpr = expr(rows.map(r => s"graft_dot(embedding, $r)")
       .mkString("array(", ", ", ")"))
-    val full = bruteForceKnn(emb, queryPred, k)
-      .select(col("qid"), col("nid"))
-    val proj = bruteForceKnn(
-      emb.withColumn("embedding", projExpr), queryPred, k)
-      .select(col("qid"), col("nid"))
-    val overlap = full.join(proj, Seq("qid", "nid"))
-      .groupBy(col("qid")).agg(count(lit(1)).cast(LongType).as("n_overlap"))
-    full.select(col("qid")).distinct()
-      .join(overlap, Seq("qid"), "left")
-      .select(col("qid"),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-        round(coalesce(col("n_overlap"), lit(0L)).cast(DoubleType) /
-          lit(k).cast(DoubleType), 6).as("recall"))
-      .orderBy(col("qid"))
+    overlapAtK(bruteForceKnn(emb, queryPred, k),
+      bruteForceKnn(emb.withColumn("embedding", projExpr), queryPred, k), k)
   }
 
   /** The seeded ±1 sign matrix (splitmix64 parity) shared by the
@@ -1421,23 +1420,17 @@ object Embeddings {
     * [[bruteForceKnn]] shape with the label-mismatch predicate folded into
     * the broadcast join condition, so disagreeing labels are the join
     * output and no post-filter re-ranks: candidates shrink BEFORE the
-    * window. Same scale contract as q40 — the query side is bounded and
+    * ranking. Same scale contract as q40 — the query side is bounded and
     * broadcast; at 100 TB the candidate side swaps in [[annKnn]]'s
     * bucketed candidates with the same predicate, unchanged downstream. */
   def hardNegatives(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val n = withNorm(emb)
     val q = n.filter(queryPred)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("embedding").as("qv"), col("nrm").as("qn"))
     val cand = n.select(col("vec_id").as("nid"), col("label").as("nlabel"),
       col("embedding").as("nv"), col("nrm").as("nn"))
-    val scored = broadcast(q).join(cand, col("qlabel") =!= col("nlabel"))
-      .withColumn("sim", round(dotExpr("qv", "nv") / (col("qn") * col("nn")), 6))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("nid"), col("nlabel"), col("sim"))
+    cosineTopK(q, cand, col("qlabel") =!= col("nlabel"), k, "nlabel")
   }
 
   def qHardNegatives(s: SparkSession, dir: String): DataFrame =

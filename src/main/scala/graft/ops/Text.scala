@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
+import graft.plans.TopK
 
 /** Text-analysis and deduplication operators for a training-data pipeline,
   * over the `documents` table: token counting (whitespace + BPE-ish regex),
@@ -232,6 +233,17 @@ object Text {
       .select(col("d1"), col("d2"), col("jaccard"))
   }
 
+  /** Hash number `i` of the cross-engine sketch family over the string
+    * `s` (both SQL names in the caller's lambda): the affine map
+    * ((2i+1)·h + 1000i+7) mod the prime 1048573 over h = graft_hash31(s,
+    * 2²⁰), the q130 31-ary code-point polynomial that both engines
+    * evaluate exactly. Registers graft_hash31 on the session. */
+  private def sketchHash(spark: SparkSession, i: String, s: String): String = {
+    graft.functions.GraftFunctions.register(spark)
+    s"((2 * CAST($i AS BIGINT) + 1) * graft_hash31($s, ${1 << 20}) + " +
+      s"(1000 * CAST($i AS BIGINT) + 7)) % 1048573"
+  }
+
   /** MinHash Jaccard-ESTIMATOR error report — the sketch-calibration gate
     * a fuzzy-dedup deployment runs before trusting banded MinHash at a new
     * band/row setting: for every LSH candidate pair, the k-hash signature
@@ -250,13 +262,8 @@ object Text {
     * ships two k-long arrays per candidate pair, constant work per pair. */
   def minhashErrorReport(docs: DataFrame, k: Int = 16): DataFrame = {
     require(k >= 2 && k <= 64, s"k must be in [2,64], got $k")
-    val m = 1 << 20
-    val p = 1048573L
-    val ph = "aggregate(transform(sequence(1, length(s)), j -> ascii(substring(s, j, 1))), " +
-      s"0L, (acc, c) -> (acc * 31L + c) % $m)"
-    val sigExpr = expr(
-      s"transform(sequence(0, ${k - 1}), i -> array_min(transform(sh, s -> " +
-        s"((2 * CAST(i AS BIGINT) + 1) * ($ph) + (1000 * CAST(i AS BIGINT) + 7)) % $p)))")
+    val sigExpr = expr(s"transform(sequence(0, ${k - 1}), i -> " +
+      s"array_min(transform(sh, s -> ${sketchHash(docs.sparkSession, "i", "s")})))")
     val sigs = graft.core.InternalCaches.persist(
       withShingles(docs).select(col("doc_id"), sigExpr.as("sig")))
     minHashLshPairs(docs)
@@ -293,14 +300,8 @@ object Text {
   def cmsErrorReport(docs: DataFrame, depth: Int = 4, width: Int = 256,
                      topK: Int = 20): DataFrame = {
     require(depth >= 1 && depth <= 8 && width >= 1, s"bad CMS ($depth x $width)")
-    val m = 1 << 20
-    val p = 1048573L
-    val ph = "aggregate(transform(sequence(1, length(w)), j -> ascii(substring(w, j, 1))), " +
-      s"0L, (acc, c) -> (acc * 31L + c) % $m)"
-    val bucketsExpr = expr(
-      s"transform(sequence(0, ${depth - 1}), i -> " +
-        s"struct(CAST(i AS BIGINT) AS d, " +
-        s"(((2 * CAST(i AS BIGINT) + 1) * ($ph) + (1000 * CAST(i AS BIGINT) + 7)) % $p) % $width AS b))")
+    val bucketsExpr = expr(s"transform(sequence(0, ${depth - 1}), i -> " +
+      s"struct(CAST(i AS BIGINT) AS d, (${sketchHash(docs.sparkSession, "i", "w")}) % $width AS b))")
     val counts = graft.core.InternalCaches.persist(
       withTokens(docs).select(explode(col("t")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("c")))
@@ -308,9 +309,8 @@ object Text {
       .select(col("c"), explode(bucketsExpr).as("db"))
       .groupBy(col("db.d").as("d"), col("db.b").as("b"))
       .agg(sum(col("c")).cast(LongType).as("cell"))
-    val top = graft.plans.TopK.perKey(
-        counts.withColumn("g", lit(1)), Seq("g"),
-        Seq(graft.plans.TopK.desc("c"), graft.plans.TopK.asc("w")), topK)
+    val top = TopK.perKey(counts.withColumn("g", lit(1)), Seq("g"),
+        Seq(TopK.desc("c"), TopK.asc("w")), topK)
       .select(col("w"), col("c"))
     top
       .select(col("w"), col("c"), explode(bucketsExpr).as("db"))
@@ -347,13 +347,8 @@ object Text {
   def bloomFprReport(train: DataFrame, probe: DataFrame,
                      mBits: Int = 1024, k: Int = 4): DataFrame = {
     require(mBits >= 2 && k >= 1 && k <= 16, s"bad Bloom ($mBits bits, $k hashes)")
-    val m = 1 << 20
-    val p = 1048573L
-    val ph = "aggregate(transform(sequence(1, length(s)), j -> ascii(substring(s, j, 1))), " +
-      s"0L, (acc, c) -> (acc * 31L + c) % $m)"
-    val bucketsExpr = expr(
-      s"transform(sequence(0, ${k - 1}), i -> " +
-        s"(((2 * CAST(i AS BIGINT) + 1) * ($ph) + (1000 * CAST(i AS BIGINT) + 7)) % $p) % $mBits)")
+    val bucketsExpr = expr(s"transform(sequence(0, ${k - 1}), i -> " +
+      s"(${sketchHash(train.sparkSession, "i", "s")}) % $mBits)")
     val members = graft.core.InternalCaches.persist(
       train.select(md5(col("text")).as("s")).distinct())
     val bits = graft.core.InternalCaches.persist(
@@ -1839,9 +1834,9 @@ object Text {
     *    DECIMAL(28,12) (order-free, the q88 recipe), round 6; top-k is
     *    orderBy+limit ⇒ TakeOrderedAndProject (bounded per-partition
     *    heaps, no global sort). Ties break by doc_id.
-    *  - [[rankPerTerm]]: the per-term top-k cut as the bounded-heap
-    *    TopKPerKey operator (no posting-sized window partitions), then
-    *    `rk` over ≤ k rows per term. */
+    *  - the per-term top-k cut is [[graft.plans.TopK.ranked]]: bounded
+    *    heaps (no posting-sized window partitions), then `rk` over ≤ k
+    *    rows per term. */
   private def postings(tok: DataFrame, terms: Seq[String]): DataFrame =
     graft.core.InternalCaches.persist(tok
       .withColumn("dl", size(col("t")).cast(LongType))
@@ -1884,14 +1879,6 @@ object Text {
         round(sum(col("score").cast(DecimalType(28, 12))).cast(DoubleType), 6).as(name))
       .orderBy(col(name).desc, col("doc_id").asc)
       .limit(k)
-
-  private def rankPerTerm(scored: DataFrame, by: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.plans.TopK.perKey(scored, Seq("term"),
-        Seq(graft.plans.TopK.desc(by), graft.plans.TopK.asc("doc_id")), k)
-      .withColumn("rk", row_number().over(Window.partitionBy(col("term"))
-        .orderBy(col(by).desc, col("doc_id").asc)).cast(LongType))
-  }
 
   /** Okapi BM25 retrieval (Robertson et al., TREC-3) for a bounded query
     * term set — the ranking function behind every lexical retrieval /
@@ -1982,8 +1969,8 @@ object Text {
     *   AP@k   = Σ_{r≤k, rel_r binary} P@r / min(R, k)
     *
     * Plan: the BM25 posting kernel; BOTH the system and ideal top-k cuts
-    * are its [[rankPerTerm]] bounded heap, and every downstream frame
-    * (ranked lists, per-term rollups) is ≤ k rows per term. Floats
+    * are [[graft.plans.TopK.ranked]] bounded heaps, and every downstream
+    * frame (ranked lists, per-term rollups) is ≤ k rows per term. Floats
     * pinned: per-rank gains are exact small integers via CASE (no pow),
     * discounts round to 9, DCG/AP sums run in DECIMAL(28,12)
     * (order-free), finals round to 6. */
@@ -1997,13 +1984,15 @@ object Text {
       .select(col("tok").as("term"), col("doc_id"), round(col("ts"), 9).as("score"),
         least(col("tf"), lit(3L)).cast(LongType).as("rel"),
         (col("tf") >= 2L).cast(LongType).as("relb")))
-    val sys = rankPerTerm(scored, "score", k)
+    val sys = TopK.ranked(scored, Seq("term"), Seq(TopK.desc("score"), TopK.asc("doc_id")),
+      k, "rk").withColumn("rk", col("rk").cast(LongType))
     val dcg = sys
       .withColumn("g", expr(gainSql))
       .groupBy(col("term"))
       .agg(sum(round(col("g") / log(col("rk").cast(DoubleType) + lit(1.0)), 9)
         .cast(dec)).as("dcg_d"))
-    val ideal = rankPerTerm(scored.select(col("term"), col("doc_id"), col("rel")), "rel", k)
+    val ideal = TopK.ranked(scored.select(col("term"), col("doc_id"), col("rel")),
+        Seq("term"), Seq(TopK.desc("rel"), TopK.asc("doc_id")), k, "rk")
       .withColumn("g", expr(gainSql))
       .groupBy(col("term"))
       .agg(sum(round(col("g") / log(col("rk").cast(DoubleType) + lit(1.0)), 9)
@@ -2043,17 +2032,18 @@ object Text {
     * (tf ≥ 2), same bounded-heap cuts, so the three metrics are
     * computed over the IDENTICAL ranking and publishable side by side.
     *
-    * Plan: the BM25 posting kernel through its [[rankPerTerm]] bounded
-    * heap; everything after it runs on ≤ k rows per term. rr is a max
-    * over the k-row frame (1/rk is monotone — the first relevant row has
-    * the largest reciprocal), never a scan-order dependency. */
+    * Plan: the BM25 posting kernel through the
+    * [[graft.plans.TopK.ranked]] bounded heap; everything after it runs on
+    * ≤ k rows per term. rr is a max over the k-row frame (1/rk is
+    * monotone — the first relevant row has the largest reciprocal), never
+    * a scan-order dependency. */
   def mrrEval(docs: DataFrame, terms: Seq[String], k: Int = 10,
               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "mrrEval needs at least one query term")
     val scored = bm25Scored(docs, terms, k1, b)
       .select(col("tok").as("term"), col("doc_id"), round(col("ts"), 9).as("score"),
         (col("tf") >= 2L).cast(LongType).as("relb"))
-    rankPerTerm(scored, "score", k)
+    TopK.ranked(scored, Seq("term"), Seq(TopK.desc("score"), TopK.asc("doc_id")), k, "rk")
       .groupBy(col("term"))
       .agg(sum(col("relb")).cast(LongType).as("n_rel_topk"),
         coalesce(min(when(col("relb") === 1L, col("rk"))), lit(0L))
@@ -2948,18 +2938,14 @@ object Text {
     * to 9 and sum as decimals (order-free), the slope/intercept/R²
     * finish is one double chain per source rounded to 6. */
   def zipfSlope(docs: DataFrame, topR: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dec = DecimalType(28, 12)
     val freqs = withTokens(docs)
       .select(col("source"), explode(col("t")).as("w"))
       .groupBy(col("source"), col("w"))
       .agg(count(lit(1)).cast(LongType).as("freq"))
-    val top = graft.plans.TopK.perKey(freqs, Seq("source"),
-      Seq(graft.plans.TopK.desc("freq"), graft.plans.TopK.asc("w")), topR)
-    val ranked = top.withColumn("rank", row_number().over(
-      Window.partitionBy(col("source"))
-        .orderBy(col("freq").desc, col("w").asc)).cast(LongType))
-    val xy = ranked.select(col("source"), col("freq"), col("rank"),
+    val ranked = TopK.ranked(freqs, Seq("source"), Seq(TopK.desc("freq"), TopK.asc("w")),
+      topR, "rank")
+    val xy = ranked.select(col("source"), col("freq"), col("rank").cast(LongType).as("rank"),
       round(log(col("rank").cast(DoubleType)), 9).as("x"),
       round(log(col("freq").cast(DoubleType)), 9).as("y"))
     val sums = xy.groupBy(col("source"))

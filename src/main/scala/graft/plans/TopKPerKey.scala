@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrd
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Per-key top-k as a first-class operator: LogicalPlan + Strategy +
@@ -129,5 +129,26 @@ object TopK {
         if (o.ascending) Ascending else Descending)
     }
     Bridge.ofRows(spark, TopKPerKeyNode(keyExprs, order, k, plan))
+  }
+
+  /** Ranked top-k per key: [[perKey]]'s partial and final heaps, then a
+    * `row_number` (int) column `rankCol` over the at most k survivors per
+    * key in `orderBy` order. Same rows and schema as the window
+    * formulation (`rankCol` = `row_number() over (partition by keys order
+    * by orderBy)`, filtered to `rankCol <= k`), but the sort runs on ≤ k
+    * rows per key instead of every row.
+    *
+    * Bounded-keys contract: heap state is distinct keys × k rows per task
+    * with no spill path, so this is for key sets bounded by construction
+    * (query ids, query terms, sources). Windows whose keys grow with the
+    * data (per user, per customer, per document) stay windows, which can
+    * spill. */
+  def ranked(df: DataFrame, keys: Seq[String], orderBy: Seq[Ord], k: Int,
+             rankCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(orderBy.map(o => if (o.ascending) col(o.name).asc else col(o.name).desc): _*)
+    perKey(df, keys, orderBy, k).withColumn(rankCol, row_number().over(w))
   }
 }

@@ -120,17 +120,22 @@ class BenchMathSpec extends AnyFunSuite {
     def write(name: String, body: String): Unit =
       java.nio.file.Files.write(new java.io.File(dir, name).toPath,
         body.getBytes("UTF-8"))
+    val header = Bench.probeConfigLine("/data/sf0.1", 4)
     // r15: the unreachable-era steady the r17 judge's code A/B retired;
     // r17: the current regime's bar
-    write("PROBE_r15.txt", "PROBE q94_pagerank 1.20 1.07 1.10\nPROBE q01_agg 0.10 0.08\n")
-    write("PROBE_r17.txt", "PROBE q94_pagerank 2.30 2.15 2.20\nPROBE q01_agg 0.10 0.09\n")
+    write("PROBE_r15.txt", s"$header\nPROBE q94_pagerank 1.20 1.07 1.10\nPROBE q01_agg 0.10 0.08\n")
+    write("PROBE_r17.txt", s"$header\nPROBE q94_pagerank 2.30 2.15 2.20\nPROBE q01_agg 0.10 0.09\n")
+    // another configuration's sweep and a headerless one never lower the bar
+    write("PROBE_r18.txt", s"${Bench.probeConfigLine("/data/sf0.01", 4)}\n" +
+      "PROBE q94_pagerank 0.30 0.20 0.25\nPROBE q01_agg 0.02 0.01\n")
+    write("PROBE_r19.txt", "PROBE q94_pagerank 0.40 0.30 0.35\nPROBE q01_agg 0.03 0.02\n")
     // no epoch file -> all probes count (the historical MIN)
     assert(TimeProbe.probeEpoch(dir) == 0)
-    assert(TimeProbe.bestKnownSteady(dir)("q94_pagerank") == 1.07)
+    assert(TimeProbe.bestKnownSteady("/data/sf0.1", 4, dir)("q94_pagerank") == 1.07)
     // epoch 17 (comment lines tolerated) -> r15 is retired, r17's min rules
     write("PROBE_EPOCH", "# environment epoch\n17\n# evidence: judge A/B\n")
     assert(TimeProbe.probeEpoch(dir) == 17)
-    val bar = TimeProbe.bestKnownSteady(dir)
+    val bar = TimeProbe.bestKnownSteady("/data/sf0.1", 4, dir)
     assert(bar("q94_pagerank") == 2.15)
     assert(bar("q01_agg") == 0.09)
     // a malformed epoch file degrades to 0, never throws
@@ -232,6 +237,17 @@ class BenchMathSpec extends AnyFunSuite {
     assert(!Bench.overBar(0.74, 0.5))
     assert(!Bench.overBar(0.49, 0.01), "sub-0.5 s medians never trip the bar")
     assert(Bench.overBar(0.6, 0.0), "a zero steady is floored at 0.01, not divided by")
+  }
+
+  test("requeueAnchor: dispersion requeues only over the probe bar") {
+    def reps(secs: Double*) = secs.map(Bench.RepMeter(_, 0.0, 0.0, 0L))
+    assert(!Bench.requeueAnchor(reps(0.13, 0.208)), "a 1.6x spread under 0.5 s is jitter")
+    assert(Bench.requeueAnchor(reps(1.0, 1.6)), "a 1.6x spread over 0.5 s requeues")
+    assert(!Bench.requeueAnchor(reps(1.0, 1.4)))
+    assert(!Bench.requeueAnchor(reps(1.0)), "one rep has no dispersion")
+    // every rep contended requeues whatever the spread
+    assert(Bench.requeueAnchor(Seq(Bench.RepMeter(0.1, 10.0, 0.0, 0L),
+      Bench.RepMeter(0.1, 10.0, 0.0, 0L))))
   }
 
   test("printEmergencyLine: relabels an unsignalled stash, prints at most once") {

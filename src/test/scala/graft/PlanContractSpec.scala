@@ -692,6 +692,27 @@ class PlanContractSpec extends SparkSpec {
     } finally graft.core.InternalCaches.release(spark)
   }
 
+  test("q40/q43/q68/q116/q152: per-query top-k is the bounded heap") {
+    // every per-query ranking is partial + final TopKPerKey around the qid
+    // exchange; a published rank is a Window above them on <= k rows per
+    // query (the q139 shape). q152's exact and ADC rankings feed only its
+    // recall join, so they are the two heap pairs with no rank Window.
+    val heaps = Seq("TopKPerKey", "TopKPerKey")
+    val ranked = "Window" +: heaps
+    val want = Map("q40_knn_bruteforce" -> ranked, "q43_ann_lsh" -> ranked,
+      "q68_ann_ivf" -> ranked, "q116_hard_negatives" -> ranked,
+      "q152_pq_adc_recall" -> (heaps ++ heaps))
+    try {
+      for ((q, ops) <- want) {
+        val p = plan(q)
+        val got = raw"\bWindow \[|TopKPerKey".r.findAllIn(p).map(_.takeWhile(_ != ' ')).toSeq
+        assert(got == ops, s"$q expected $ops top to bottom, got $got:\n$p")
+        assert(!p.toLowerCase.contains("singlepartition"),
+          s"$q planned a single-partition exchange:\n$p")
+      }
+    } finally graft.core.InternalCaches.release(spark)
+  }
+
   test("q141: DoReMi model joins all broadcast — eval rows never shuffle by n-gram") {
     // the q120/q122 LM contract at DoReMi shape: unigram/bigram model
     // tables broadcast onto the eval explodes, the K-row update side

@@ -39,6 +39,27 @@ class TopKPerKeySpec extends SparkSpec {
     assert(!rendered.contains("Sort "), s"bounded heaps should not sort:\n$rendered")
   }
 
+  test("ranked equals the row_number window formulation, schema included") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val nan = 0.0 / 0.0 // a zero vector's cosine
+    // qid 1: ties on sim broken by nid; qid 2: a NaN sim and fewer than k
+    // rows; qid 3: one row
+    val rows = Seq((1L, 0.5, 3L), (1L, 0.5, 1L), (1L, 0.9, 7L), (1L, 0.5, 2L),
+      (1L, 0.1, 9L), (2L, nan, 4L), (2L, 0.2, 5L), (3L, -0.3, 6L))
+    for (parts <- Seq(1, 4)) {
+      val df = rows.toDF("qid", "sim", "nid").repartition(parts)
+      val got = TopK.ranked(df, Seq("qid"), Seq(TopK.desc("sim"), TopK.asc("nid")), 3, "rk")
+      val want = df.withColumn("rk", row_number().over(
+          Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)))
+        .filter(col("rk") <= 3)
+      assert(got.schema == want.schema, s"$parts partitions")
+      val (g, w) = (got.collect().map(_.toString).sorted, want.collect().map(_.toString).sorted)
+      assert(g.sameElements(w), s"$parts partitions: ${g.mkString(" ")} vs ${w.mkString(" ")}")
+      assert(g.contains("[2,NaN,4,1]") && g.contains("[1,0.5,1,2]"))
+    }
+  }
+
   test("k larger than group size returns whole groups") {
     import spark.implicits._
     val df = Seq((1L, 10.0), (1L, 20.0), (2L, 5.0)).toDF("k", "v")
