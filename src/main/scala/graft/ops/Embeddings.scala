@@ -1167,12 +1167,12 @@ object Embeddings {
     for (t <- 2 to k) {
       val sel = out.select(col("qid").as("sq"), col("nid").as("sel"))
       val pen = pair.join(sel, col("qid") === col("sq") && col("s") === col("sel"))
-        .groupBy(col("qid"), col("d")).agg(max(col("dd")).as("pen"))
+        .groupBy(col("qid").as("pq"), col("d")).agg(max(col("dd")).as("pen"))
       val rem = cands.join(sel,
         cands("qid") === col("sq") && cands("nid") === col("sel"), "left_anti")
       val scored = rem
-        .join(pen, rem("qid") === pen("qid") && rem("nid") === pen("d"))
-        .select(rem("qid"), col("nid"),
+        .join(pen, col("qid") === col("pq") && col("nid") === col("d"))
+        .select(col("qid"), col("nid"),
           (lit(lambda) * col("rel") - lit(oneMinusLambda) * col("pen")).as("mmrraw"))
       val next = TopK.perKey(scored, Seq("qid"), Seq(TopK.desc("mmrraw"), TopK.asc("nid")), 1)
         .select(col("qid"), col("nid"), lit(t.toLong).as("sel_rank"),

@@ -4,7 +4,11 @@ import java.util.concurrent.{Semaphore, TimeUnit}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.expressions.{NamedExpression, UnsafeProjection}
+import org.apache.spark.sql.execution.{InputAdapter, LogicalRDD, ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStreamBase, StreamExecution, StreamingQueryWrapper}
+import org.apache.spark.sql.execution.streaming.sources.TextSocketMicroBatchStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -21,15 +25,27 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    would only add a second action on the same batch;
   *  - semaphore + `ssc.stop` → semaphore + `query.stop()` from the main
   *    thread (T2);
-  *  - the n-item cutoff truncates the final batch in arrival order; with a
-  *    file/socket source a micro-batch arrives as a single ordered
-  *    partition, matching the reference's `zipWithIndex().filter` cut.
+  *  - the n-item cutoff truncates the final batch in partition order, the
+  *    reference's `zipWithIndex().filter` cut. A `MemoryStream` keeps one
+  *    partition per `addData` block, so that is arrival order; the socket
+  *    source deals a batch's lines round-robin over its `numPartitions`
+  *    slices, so there it is arrival order only with one slice.
   *
-  * Each batch reaches the driver as one `long[]` per partition, taken from
-  * the Tungsten rows in one job, and folds into primitive sketch state. The
+  * Each batch reaches the driver as one `long[]` per partition, in
+  * partition order, and folds into primitive sketch state. The
   * reservoir/sticky updates are inherently sequential driver state
   * (SURVEY §7.4 risk 3) — by design, like the reference; the distributed
   * order-relaxed variants live in [[DistributedSketches]].
+  *
+  * Where the batch already sits in the driver heap — a `MemoryStream` or
+  * the socket source, both of which buffer every batch on the driver — and
+  * the batch's physical plan is a bare projection of the scan, the
+  * partitions are read on the driver through the source's own readers and
+  * Spark's projection, with no job: a job would serialize the rows into a
+  * task only to collect them back into the same JVM. The rows read are
+  * added to the scan's `numOutputRows`, so the progress events still count
+  * them. Any other source or plan (a filter, join or aggregate; Kafka,
+  * file, rate) is read with one job over the planned rows.
   */
 object FrequentItemsJob {
 
@@ -61,15 +77,19 @@ object FrequentItemsJob {
       .trigger(Trigger.ProcessingTime("10 milliseconds"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (processed < n) {
-          // foreachBatch hands the batch over as a LogicalRDD over rows that
-          // are already planned: read them without planning a second time
-          val rows = batch.queryExecution.logical match {
-            case l: LogicalRDD => l.rdd
-            case _ => batch.queryExecution.toRdd
+          val parts = driverScan(spark) match {
+            case Some((list, scan)) => readOnDriver(list, scan)
+            case None =>
+              // foreachBatch hands the batch over as a LogicalRDD over rows
+              // that are already planned: read them without planning again
+              val rows = batch.queryExecution.logical match {
+                case l: LogicalRDD => l.rdd
+                case _ => batch.queryExecution.toRdd
+              }
+              spark.sparkContext.runJob(rows, longs _).toIndexedSeq
           }
-          // partitions in order = arrival order; truncate the final batch
-          // like the reference's zipWithIndex().filter (G016HW3.java:84-87)
-          val parts = spark.sparkContext.runJob(rows, longs _)
+          // fold the partitions in order; truncate the final batch like the
+          // reference's zipWithIndex().filter (G016HW3.java:84-87)
           var p = 0
           while (p < parts.length && processed < n) {
             val items = parts(p)
@@ -107,6 +127,43 @@ object FrequentItemsJob {
       reservoirEstimate = reservoir.estimate,
       stickyTableSize = sticky.table.size,
       stickyEstimate = sticky.estimate)
+  }
+
+  /** The running batch's projection list and scan, when its plan is only a
+    * projection of a scan whose source holds the batch in the driver heap.
+    * Called on the stream execution thread, whose local properties name the
+    * query and whose `lastExecution` is the batch being added. */
+  private def driverScan(spark: SparkSession): Option[(Seq[NamedExpression], MicroBatchScanExec)] = {
+    def inHeap(s: MicroBatchScanExec) = s.stream match {
+      case _: MemoryStreamBase[_] | _: TextSocketMicroBatchStream => true
+      case _ => false
+    }
+    Option(spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY))
+      .flatMap(id => Option(spark.streams.get(id)))
+      .flatMap {
+        case q: StreamingQueryWrapper => Option(q.streamingQuery.lastExecution)
+        case _ => None
+      }
+      .map(_.executedPlan)
+      .collect {
+        case WholeStageCodegenExec(ProjectExec(list, InputAdapter(s: MicroBatchScanExec))) if inHeap(s) => (list, s)
+        case ProjectExec(list, s: MicroBatchScanExec) if inHeap(s) => (list, s)
+        case s: MicroBatchScanExec if inHeap(s) => (s.output, s)
+      }
+  }
+
+  /** Every partition of a driver-resident batch, in order, through the
+    * source's readers and the plan's own projection. */
+  private def readOnDriver(list: Seq[NamedExpression], scan: MicroBatchScanExec): IndexedSeq[Array[Long]] = {
+    val project = UnsafeProjection.create(list, scan.output)
+    val parts = scan.inputPartitions.toIndexedSeq.zipWithIndex.map { case (p, i) =>
+      project.initialize(i)
+      val reader = scan.readerFactory.createReader(p)
+      try longs(Iterator.continually(reader).takeWhile(_.next()).map(r => project(r.get())))
+      finally reader.close()
+    }
+    scan.metrics("numOutputRows").add(parts.map(_.length.toLong).sum)
+    parts
   }
 
   /** One partition's `item` column as a single array. */

@@ -52,36 +52,11 @@ class StreamingSpec extends SparkSpec {
     // a real TCP feeder, not MemoryStream: the reference consumed
     // algo.dei.unipd.it ports — this exercises the exact readStream
     // .format("socket") path cli.StreamApp uses, on an ephemeral port
-    val server = new java.net.ServerSocket(0)
-    val port = server.getLocalPort
-    @volatile var stop = false
-    val feeder = new Thread(() => {
-      try {
-        val sock = server.accept() // blocks until the socket source connects
-        val out = new java.io.PrintWriter(sock.getOutputStream, true)
-        val rng = new scala.util.Random(3)
-        var i = 0
-        while (!stop && !out.checkError()) {
-          val v = if (rng.nextDouble() < 0.5) (rng.nextInt(5) + 1).toLong
-                  else 1000L + rng.nextInt(1000000)
-          out.println(v)
-          i += 1
-          if (i % 2000 == 0) Thread.sleep(1)
-        }
-        sock.close()
-      } catch { case _: Throwable => () } finally {
-        try server.close() catch { case _: Throwable => () }
-      }
-    })
-    feeder.setDaemon(true)
-    feeder.start()
-    val stream = spark.readStream.format("socket")
-      .option("host", "127.0.0.1").option("port", port).load()
-      .selectExpr("CAST(value AS LONG) AS item")
-    val rep = FrequentItemsJob.run(spark, stream, n = 20000, phi = 0.05,
-      epsilon = 0.02, delta = 0.1, seed = 8)
-    stop = true
-    feeder.join(5000)
+    val rng = new scala.util.Random(3)
+    val feeder = new LineFeeder(Int.MaxValue, _ =>
+      (if (rng.nextDouble() < 0.5) (rng.nextInt(5) + 1).toLong else 1000L + rng.nextInt(1000000)).toString)
+    val rep = try FrequentItemsJob.run(spark, feeder.stream, n = 20000, phi = 0.05,
+      epsilon = 0.02, delta = 0.1, seed = 8) finally feeder.stop()
     assert(rep.n == 20000)
     // 5 planted heavies at ~10% each vs threshold ceil(0.05*20000) = 1000;
     // tail ids are ~unique, so the true-frequent set is exactly the plant
@@ -172,16 +147,28 @@ class StreamingSpec extends SparkSpec {
     out.toSeq
   }
 
+  /** 30000 planted items (six at about 4 % each) in five blocks of
+    * unequal size, one MemoryStream partition each. */
+  private def blocks(seed: Long): Seq[Seq[Long]] = {
+    val items = planted(30000, 6, seed)
+    Seq(items.take(7000), items.slice(7000, 8000), items.slice(8000, 19000),
+      items.slice(19000, 26000), items.drop(26000))
+  }
+
+  /** Runs `body` while `mem` is fed `bs`: the first two blocks at once, the
+    * rest 200 ms apart from another thread. */
+  private def feeding[T](mem: MemoryStream[Long], bs: Seq[Seq[Long]])(body: => T): T = {
+    bs.take(2).foreach(mem.addData(_))
+    val feeder = new Thread(() => bs.drop(2).foreach { b => Thread.sleep(200); mem.addData(b) })
+    feeder.start()
+    try body finally feeder.join()
+  }
+
   test("FrequentItemsJob: Report bit-identical to the boxed Row fold") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // six planted items at about 4 % each clear phi = 3 %
     val (phi, eps, delta) = (0.03, 0.01, 0.1)
-    def blocks(seed: Long): Seq[Seq[Long]] = {
-      val items = planted(30000, 6, seed)
-      Seq(items.take(7000), items.slice(7000, 8000), items.slice(8000, 19000),
-        items.slice(19000, 26000), items.drop(26000))
-    }
     def stream(mem: MemoryStream[Long]) = mem.toDF().select(col("value").as("item"))
     // one partition per block, fed while the job runs: several batches, the
     // first spanning several partitions, n cut inside the fourth block
@@ -191,11 +178,7 @@ class StreamingSpec extends SparkSpec {
       bs.foreach(twin.addData(_))
       val expected = boxedReport(arrivalOrder(stream(twin)), 23456, phi, eps, delta, seed)
       val mem = MemoryStream[Long]
-      bs.take(2).foreach(mem.addData(_))
-      val feeder = new Thread(() => bs.drop(2).foreach { b => Thread.sleep(200); mem.addData(b) })
-      feeder.start()
-      val rep = FrequentItemsJob.run(spark, stream(mem), n = 23456, phi, eps, delta, seed)
-      feeder.join()
+      val rep = feeding(mem, bs)(FrequentItemsJob.run(spark, stream(mem), n = 23456, phi, eps, delta, seed))
       assert(rep == expected, s"seed $seed")
       assert(rep.trueFrequent.size == 6 && rep.stickyTableSize > 6 && rep.reservoirSample.size == 34)
     }
@@ -204,6 +187,153 @@ class StreamingSpec extends SparkSpec {
     def partitioned() = { val m = MemoryStream[Long](3); bs.foreach(m.addData(_)); m }
     val expected = boxedReport(arrivalOrder(stream(partitioned())), 29999, phi, eps, delta, 103L)
     assert(FrequentItemsJob.run(spark, stream(partitioned()), n = 29999, phi, eps, delta, 103L) == expected)
+  }
+
+  /** A TCP server on an ephemeral port that writes `line(0)`, `line(1)`, …
+    * to the first client, `lines` of them, pausing 1 ms every 2000; then it
+    * holds the connection open until [[stop]]. */
+  private final class LineFeeder(lines: Int, line: Int => String) {
+    private val server = new java.net.ServerSocket(0)
+    @volatile private var stopped = false
+    private val thread = new Thread(() => {
+      try {
+        val sock = server.accept() // blocks until the socket source connects
+        val out = new java.io.PrintWriter(sock.getOutputStream, true)
+        var i = 0
+        while (!stopped && !out.checkError()) {
+          if (i < lines) {
+            out.println(line(i))
+            i += 1
+            if (i % 2000 == 0) Thread.sleep(1)
+          } else Thread.sleep(5)
+        }
+        sock.close()
+      } catch { case _: Throwable => () } finally {
+        try server.close() catch { case _: Throwable => () }
+      }
+    })
+    thread.setDaemon(true)
+    thread.start()
+
+    /** The `cli.StreamApp` stream: each line cast to a long `item`. */
+    def stream: org.apache.spark.sql.DataFrame = spark.readStream.format("socket")
+      .option("host", "127.0.0.1").option("port", server.getLocalPort).load()
+      .selectExpr("CAST(value AS LONG) AS item")
+
+    def stop(): Unit = {
+      stopped = true
+      server.close()
+      thread.join(5000)
+    }
+  }
+
+  /** One micro-batch of a query: its source offsets (-1 before the first),
+    * its progress `numInputRows` and the Spark jobs it started. */
+  private final case class Batch(id: Long, start: Long, end: Long, rows: Long, jobs: Int) {
+    /** The rows a MemoryStream fed `bs` delivered in this batch: its
+      * offsets count `addData` blocks. */
+    def blocks(bs: Seq[Seq[Long]]): Long = bs.slice((start + 1).toInt, (end + 1).toInt).map(_.size.toLong).sum
+  }
+
+  /** Runs `body`, which starts and stops one streaming query, and returns
+    * that query's batches. Jobs are matched to batches through the query
+    * and batch ids the stream thread sets as local properties, with the
+    * listener pattern of PlanContractSpec's `jobsOf`: a marker job submitted
+    * afterwards shows every earlier job start has been seen, and the query's
+    * termination event does the same for its progress events. */
+  private def batchesOf[T](body: => T): (T, Seq[Batch]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.streaming.StreamingQueryProgress
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    val sc = spark.sparkContext
+    val markerKey = "graft.spec.marker"
+    val marker = java.util.UUID.randomUUID().toString
+    val markerSeen = new CountDownLatch(1)
+    val jobStarts = new ConcurrentLinkedQueue[(String, String)]
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        if (p.getProperty(markerKey) == marker) markerSeen.countDown()
+        else jobStarts.add(p.getProperty("sql.streaming.queryId") -> p.getProperty("streaming.sql.batchId"))
+      }
+    }
+    @volatile var id: java.util.UUID = null
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]
+    val terminated = new CountDownLatch(1)
+    val streams = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = if (id == null) id = e.id
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.id == id) progress.add(e.progress)
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == id) terminated.countDown()
+    }
+    sc.addSparkListener(jobs)
+    spark.streams.addListener(streams)
+    try {
+      val out = body
+      sc.setLocalProperty(markerKey, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(markerKey, null)
+      assert(markerSeen.await(60, TimeUnit.SECONDS) && terminated.await(60, TimeUnit.SECONDS))
+      val started = jobStarts.asScala.toSeq
+      def offset(o: String) = Option(o).flatMap(_.trim.toLongOption).getOrElse(-1L)
+      out -> progress.asScala.toSeq.map { p =>
+        Batch(p.batchId, offset(p.sources(0).startOffset), offset(p.sources(0).endOffset), p.numInputRows,
+          started.count(_ == (id.toString, p.batchId.toString)))
+      }.sortBy(_.id)
+    } finally {
+      sc.removeSparkListener(jobs)
+      spark.streams.removeListener(streams)
+    }
+  }
+
+  test("FrequentItemsJob reads driver-resident batches with no job and keeps their progress row count") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the plan-shape contract: a Spark upgrade that changes the batch plan
+    // of these sources shows here as jobs, not as a silently slower path
+    val bs = blocks(104L)
+    for (parts <- Seq(None, Some(3))) {
+      val mem = parts.fold(MemoryStream[Long])(MemoryStream[Long](_))
+      val (rep, batches) = feeding(mem, bs)(batchesOf(FrequentItemsJob.run(spark,
+        mem.toDF().select(col("value").as("item")), n = 30000, phi = 0.03, epsilon = 0.01, delta = 0.1)))
+      assert(rep.n == 30000)
+      val data = batches.filter(b => b.end > b.start)
+      assert(data.nonEmpty && data.map(_.rows).sum == 30000, s"$parts: $batches")
+      for (b <- batches) {
+        assert(b.rows == b.blocks(bs), s"$parts: $b")
+        assert(b.jobs == 0, s"$parts: $b")
+      }
+    }
+    // the socket source: offsets count lines, and the feeder sends exactly n
+    val feeder = new LineFeeder(20000, i => (i % 7).toString)
+    val (rep, batches) = try batchesOf(FrequentItemsJob.run(spark, feeder.stream, n = 20000,
+      phi = 0.05, epsilon = 0.02, delta = 0.1)) finally feeder.stop()
+    assert(rep.n == 20000 && rep.trueFrequent == (0L to 6L))
+    assert(batches.exists(_.end > -1L) && batches.map(_.rows).sum == 20000, s"$batches")
+    for (b <- batches) assert(b.rows == b.end - b.start && b.jobs == 0, s"socket: $b")
+  }
+
+  test("FrequentItemsJob keeps one job per batch for any other plan, with the boxed fold's Report") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val (phi, eps, delta) = (0.03, 0.01, 0.1)
+    val bs = blocks(105L)
+    // a filter in the batch plan: the rows no longer are the scan's
+    def stream(mem: MemoryStream[Long]) =
+      mem.toDF().where(col("value") % 7 =!= 3).select(col("value").as("item"))
+    val twin = MemoryStream[Long]
+    bs.foreach(twin.addData(_))
+    val arrival = arrivalOrder(stream(twin))
+    val n = arrival.size
+    val expected = boxedReport(arrival, n, phi, eps, delta, 106L)
+    val mem = MemoryStream[Long]
+    val (rep, batches) = feeding(mem, bs)(batchesOf(FrequentItemsJob.run(spark, stream(mem), n, phi, eps, delta, 106L)))
+    assert(rep == expected)
+    val data = batches.filter(b => b.end > b.start)
+    assert(data.nonEmpty && data.map(_.rows).sum == bs.map(_.size).sum, s"$batches")
+    for (b <- batches) {
+      assert(b.rows == b.blocks(bs), s"$b")
+      if (b.end > b.start) assert(b.jobs >= 1, s"$b")
+    }
   }
 
   test("FrequentItemsJob.run throws instead of hanging when its query dies") {
@@ -220,6 +350,17 @@ class StreamingSpec extends SparkSpec {
       val e = intercept[StreamingQueryException](Await.result(job, 60.seconds))
       assert(e.getMessage.contains(cause))
     }
+  }
+
+  test("FrequentItemsJob.run throws when a live socket sends a line that is not a number") {
+    val feeder = new LineFeeder(Int.MaxValue, i => if (i == 5000) "not-a-number" else (i % 11).toString)
+    try {
+      val job = Future(FrequentItemsJob.run(spark, feeder.stream, n = 1000000,
+        phi = 0.1, epsilon = 0.05, delta = 0.1))(ExecutionContext.global)
+      val e = intercept[StreamingQueryException](Await.result(job, 60.seconds))
+      // an ANSI cast error, or a null item where the cast is lenient
+      assert(Seq("CAST_INVALID_INPUT", "null item").exists(e.getMessage.contains), e.getMessage)
+    } finally feeder.stop()
   }
 
   test("HW3 steady batches fork no process on the stream execution thread") {
