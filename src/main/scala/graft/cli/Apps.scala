@@ -94,8 +94,10 @@ object StreamApp {
     val (host, port) = (args(4), args(5))
     val spark = CliSession.make("StreamApp")
     spark.sparkContext.setLogLevel("WARN")
+    // one partition: the source deals a batch's lines round-robin over
+    // `numPartitions` slices, and the fold reads partition after partition
     val stream = spark.readStream.format("socket")
-      .option("host", host).option("port", port).load()
+      .option("host", host).option("port", port).option("numPartitions", 1).load()
       .selectExpr("CAST(value AS LONG) AS item")
     val rep = graft.streaming.FrequentItemsJob.run(spark, stream, n, phi, eps, delta)
     println(s"Number of items processed = ${rep.n}")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.functions.BitMix
 import java.util.Arrays
+import scala.collection.mutable.ArrayBuilder
 import scala.jdk.CollectionConverters._
 
 /** Geometric operators from the reference, Spark-first.
@@ -44,8 +45,13 @@ import scala.jdk.CollectionConverters._
   *    cells — the join formulation survives that; a `collect()` does not.
   *  - MRFFT keeps the reference's 3-round shape (it is optimal): R1
   *    per-partition FFT coreset, R2 driver FFT on ≤ K·L points, R3
-  *    broadcast centers + max-reduce of min distances. R1 and R3 share one
-  *    cached primitive (xs, ys) array pair per partition.
+  *    broadcast centers + max-reduce of min distances. The points reach
+  *    their L partitions through one shuffle of primitive (xs, ys) array
+  *    chunks, not of rows, and R1 and R3 share the one cached array pair
+  *    per partition it builds: two jobs in all, R1 (with the shuffle's map
+  *    stage) and R3. The FFT kernel prunes exactly: a new center skips
+  *    every group of points, held by nearest center, that the triangle
+  *    inequality (1e-6 margin, normal-range guard) proves it cannot reach.
   */
 object Geometry {
 
@@ -379,7 +385,23 @@ object Geometry {
     * equivalent to sorting the partition lexicographically and running the
     * first-index-tiebreak FFT (the previous deterministic path), minus the
     * sort. `canonical = false` keeps the reference's arrival-order
-    * semantics (seed = first point, ties to the earliest index). */
+    * semantics (seed = first point, ties to the earliest index).
+    *
+    * Exact pruning: the points are kept in groups by the center that set
+    * their min-dist² last, and each group keeps its argmax under the pick
+    * order (min-dist² desc, then (canonical) x asc, y asc, then index asc),
+    * so the next center is the argmax over the groups. A new center c
+    * skips group g when cc² > 4.000004·gMax, where cc² is g's center to c
+    * and gMax the group's largest min-dist²: then |p−c| ≥ |g−c| − |p−g| >
+    * |p−g| for every member p, and the 1e-6 margin covers the rounding of
+    * all three computed squares, so no member's computed d² from c drops
+    * below its min-dist². The guard gMax ≥ 1e-290 keeps those squares in
+    * the normal range, where rounding is relative. Points no center has
+    * brought below MaxValue (NaN, ±Inf, overflowing squares) never leave
+    * group 0, whose gMax is then MaxValue: it is never skipped and, being
+    * scanned in index order, ties among them resolve as the plain loop
+    * resolves them. Min-dist² values and picks equal the plain O(n·k) loop
+    * (GeometrySpec keeps it as the oracle). */
   private[graft] def fftIndices(xs: Array[Double], ys: Array[Double], k: Int,
                                 canonical: Boolean): Array[Int] = {
     val n = xs.length
@@ -387,40 +409,66 @@ object Geometry {
     val kk = math.min(k, n)
     val centers = new Array[Int](kk)
     val minD2 = Array.fill(n)(Double.MaxValue)
-    var seed = 0
-    if (canonical) {
-      var i = 1
-      while (i < n) {
-        if (xs(i) < xs(seed) || (xs(i) == xs(seed) && ys(i) < ys(seed))) seed = i
-        i += 1
-      }
-    }
-    centers(0) = seed
+    def lexLess(i: Int, j: Int) = xs(i) < xs(j) || (xs(i) == xs(j) && ys(i) < ys(j))
+    // true when i comes before j (j < 0: no pick yet) in the pick order
+    def before(i: Int, j: Int) = j < 0 || minD2(i) > minD2(j) || (minD2(i) == minD2(j) &&
+      (if (canonical) lexLess(i, j) || (!lexLess(j, i) && i < j) else i < j))
+    if (canonical) for (i <- 1 until n) if (lexLess(i, centers(0))) centers(0) = i
+    // group g: members(g)(0 until size(g)) and its argmax best(g); before
+    // step 0 every point sits in group 0 at MaxValue
+    val members = new Array[Array[Int]](kk); val size = new Array[Int](kk)
+    val best = Array.fill(kk)(-1)
+    members(0) = Array.range(0, n); size(0) = n; best(0) = 0
     var c = 0
     while (c < kk - 1) {
       val cx = xs(centers(c)); val cy = ys(centers(c))
-      var best = -1; var bestD = -1.0
-      var i = 0
-      while (i < n) {
-        val dx = xs(i) - cx; val dy = ys(i) - cy
-        val d2 = dx * dx + dy * dy
-        if (d2 < minD2(i)) minD2(i) = d2
-        val m = minD2(i)
-        if (m > bestD || (canonical && m == bestD &&
-            (xs(i) < xs(best) || (xs(i) == xs(best) && ys(i) < ys(best))))) {
-          bestD = m; best = i
-        }
-        i += 1
+      def skip(g: Int) = {
+        val gx = xs(centers(g)) - cx; val gy = ys(centers(g)) - cy
+        val gMax = minD2(best(g))
+        gMax >= 1e-290 && gx * gx + gy * gy > 4.000004 * gMax
       }
+      // step 0 scans group 0 against its own center; a later step moves
+      // the points c brings closer out of groups 0 until c into group c
+      var g = 0
+      while (g < math.max(c, 1)) {
+        if (size(g) > 0 && !skip(g)) {
+          val m = members(g)
+          var kept = 0; best(g) = -1
+          var s = 0
+          while (s < size(g)) {
+            val i = m(s)
+            val dx = xs(i) - cx; val dy = ys(i) - cy
+            val d2 = dx * dx + dy * dy
+            val closer = d2 < minD2(i)
+            if (closer) minD2(i) = d2
+            if (closer && g < c) {
+              if (members(c) == null) members(c) = new Array[Int](64)
+              else if (size(c) == members(c).length) members(c) = Arrays.copyOf(members(c), 2 * size(c))
+              members(c)(size(c)) = i; size(c) += 1
+              if (before(i, best(c))) best(c) = i
+            } else {
+              m(kept) = i; kept += 1
+              if (before(i, best(g))) best(g) = i
+            }
+            s += 1
+          }
+          size(g) = kept
+        }
+        g += 1
+      }
+      var next = -1
+      g = 0
+      while (g <= c) { if (size(g) > 0 && before(best(g), next)) next = best(g); g += 1 }
       c += 1
-      centers(c) = best
+      centers(c) = next
     }
     centers
   }
 
-  /** MRFFT (reference Q4, 3 rounds). `deterministic = true` partitions by
-    * hash of `id` (stable results for the correctness harness); false keeps
-    * the round-robin `repartition(L)` of the reference CLI contract.
+  /** MRFFT (reference Q4, 3 rounds) in two jobs. `deterministic = true`
+    * partitions by hash of `id` (stable results for the correctness
+    * harness); false deals each input partition's rows round-robin over
+    * the L partitions, the reference CLI's `repartition(L)` contract.
     * Returns (radius, centers). */
   def mrFFT(pts: DataFrame, k: Int, l: Int, deterministic: Boolean = true): (Double, Array[(Double, Double)]) = {
     val spark = pts.sparkSession
@@ -429,28 +477,38 @@ object Geometry {
     // RDD id, so partition MEMBERSHIP would depend on execution history
     // (how many RDDs the session created before this one) — hash
     // membership is a pure function of (id, L), reproducible anywhere.
-    val rows = (if (deterministic) pts.repartition(l, col("id")) else pts.repartition(l))
-      .select(col("x").cast(DoubleType), col("y").cast(DoubleType))
-    // R1 and R3 both scan every point: persist ONE primitive (xs, ys) array
-    // pair per partition, built by R1's job straight from the shuffled
-    // rows, so neither round pays a row decode or a separate cache build;
-    // DISK spill keeps this safe when the point set exceeds executor storage
-    val parts = rows.queryExecution.toRdd.mapPartitions { it =>
-      val xb = new scala.collection.mutable.ArrayBuilder.ofDouble
-      val yb = new scala.collection.mutable.ArrayBuilder.ofDouble
-      it.foreach { r =>
-        require(!r.isNullAt(0) && !r.isNullAt(1), "mrFFT: null coordinate")
-        xb += r.getDouble(0); yb += r.getDouble(1)
-      }
-      Iterator.single((xb.result(), yb.result()))
+    // `pmod(hash(id), L)` is HashPartitioning's own partition id (Murmur3,
+    // seed 42), so membership is that of `repartition(L, id)`.
+    val target = pmod(if (deterministic) hash(col("id")) else monotonically_increasing_id(), lit(l))
+    val rows = pts.select(target.cast(IntegerType), col("x").cast(DoubleType), col("y").cast(DoubleType))
+      .queryExecution.toRdd
+    // R1 and R3 both scan every point: the shuffle moves primitive (xs, ys)
+    // chunks of at most 64 Ki points (bounding map-side memory) keyed by
+    // target partition — HashPartitioner maps p in [0, L) to itself — and
+    // persists ONE concatenated array pair per partition, so R1's collect
+    // runs the map stage and R1 in one job, with no row decode on either
+    // side; DISK spill keeps this safe when the point set exceeds storage
+    val parts = rows.mapPartitions { it =>
+      val xb = Array.fill(l)(new ArrayBuilder.ofDouble); val yb = Array.fill(l)(new ArrayBuilder.ofDouble)
+      def chunk(p: Int) = { val c = (p, (xb(p).result(), yb(p).result())); xb(p).clear(); yb(p).clear(); c }
+      it.flatMap { r =>
+        require(!r.isNullAt(1) && !r.isNullAt(2), "mrFFT: null coordinate")
+        val p = r.getInt(0)
+        xb(p) += r.getDouble(1); yb(p) += r.getDouble(2)
+        if (xb(p).length == (1 << 16)) Iterator.single(chunk(p)) else Iterator.empty
+      } ++ (0 until l).iterator.filter(xb(_).length > 0).map(chunk)
+    }.partitionBy(new org.apache.spark.HashPartitioner(l)).mapPartitions { it =>
+      val cs = it.map(_._2).toArray
+      Iterator.single((Array.concat(cs.map(_._1): _*), Array.concat(cs.map(_._2): _*)))
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // R1: per-partition coreset (executors), ≤ K points each, via the
-      // primitive-array kernel. On the deterministic path the kernel runs
-      // in canonical (set-function) mode: hash partitioning fixes WHICH
-      // rows land in a partition but shuffle fetch order varies run to
-      // run, and canonical seeding/tie-breaks make arrival order
-      // irrelevant — same result as sorting first, without the sort.
+      // R1: per-partition coreset (executors, in the job that also runs
+      // the map stage), ≤ K points each, via the primitive-array kernel.
+      // On the deterministic path the kernel runs in canonical
+      // (set-function) mode: hash partitioning fixes WHICH rows land in a
+      // partition but shuffle fetch order varies run to run, and canonical
+      // seeding/tie-breaks make arrival order irrelevant — same result as
+      // sorting first, without the sort.
       val det = deterministic
       val coreset = parts.flatMap { case (xs, ys) =>
         if (xs.isEmpty) Iterator.empty

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{NamedExpression, UnsafeProject
 import org.apache.spark.sql.execution.{InputAdapter, LogicalRDD, ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStreamBase, StreamExecution, StreamingQueryWrapper}
-import org.apache.spark.sql.execution.streaming.sources.TextSocketMicroBatchStream
+import org.apache.spark.sql.execution.streaming.sources.{TextSocketInputPartition, TextSocketMicroBatchStream}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -26,10 +26,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - semaphore + `ssc.stop` → semaphore + `query.stop()` from the main
   *    thread (T2);
   *  - the n-item cutoff truncates the final batch in partition order, the
-  *    reference's `zipWithIndex().filter` cut. A `MemoryStream` keeps one
-  *    partition per `addData` block, so that is arrival order; the socket
-  *    source deals a batch's lines round-robin over its `numPartitions`
-  *    slices, so there it is arrival order only with one slice.
+  *    reference's `zipWithIndex().filter` cut: arrival order for a
+  *    `MemoryStream` (one partition per `addData` block) and for the
+  *    one-partition socket stream of `cli.StreamApp`.
   *
   * Each batch reaches the driver as one `long[]` per partition, in
   * partition order, and folds into primitive sketch state. The
@@ -40,9 +39,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Where the batch already sits in the driver heap — a `MemoryStream` or
   * the socket source, both of which buffer every batch on the driver — and
   * the batch's physical plan is a bare projection of the scan, the
-  * partitions are read on the driver through the source's own readers and
-  * Spark's projection, with no job: a job would serialize the rows into a
-  * task only to collect them back into the same JVM. The rows read are
+  * partitions are read on the driver through the source's own readers (the
+  * socket source's line slices directly, in one pass) and Spark's
+  * projection, with no job: a job would serialize the rows into a task
+  * only to collect them back into the same JVM. The rows read are
   * added to the scan's `numOutputRows`, so the progress events still count
   * them. Any other source or plan (a filter, join or aggregate; Kafka,
   * file, rate) is read with one job over the planned rows.
@@ -158,9 +158,17 @@ object FrequentItemsJob {
     val project = UnsafeProjection.create(list, scan.output)
     val parts = scan.inputPartitions.toIndexedSeq.zipWithIndex.map { case (p, i) =>
       project.initialize(i)
-      val reader = scan.readerFactory.createReader(p)
-      try longs(Iterator.continually(reader).takeWhile(_.next()).map(r => project(r.get())))
-      finally reader.close()
+      p match {
+        // the socket reader fetches row j as `slice(j)` of a ListBuffer, a
+        // walk of j nodes, so a batch's read is quadratic in its size; the
+        // slice is walked once here, into the reader's InternalRow(line, ts)
+        case t: TextSocketInputPartition =>
+          longs(t.slice.iterator.map { case (line, ts) => project(InternalRow(line, ts)) })
+        case _ =>
+          val reader = scan.readerFactory.createReader(p)
+          try longs(Iterator.continually(reader).takeWhile(_.next()).map(r => project(r.get())))
+          finally reader.close()
+      }
     }
     scan.metrics("numOutputRows").add(parts.map(_.length.toLong).sum)
     parts

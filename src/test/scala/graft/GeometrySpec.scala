@@ -298,6 +298,83 @@ class GeometrySpec extends SparkSpec {
       Seq((0.0, 0.0), (-4.0, 3.0), (3.0, 4.0), (4.0, -3.0), (0.0, -5.0)))
   }
 
+  /** The plain O(n·k) farthest-first loop `fftIndices` ran before its
+    * pruning: the oracle its picks must equal, point for point. */
+  private def plainFFT(xs: Array[Double], ys: Array[Double], k: Int, canonical: Boolean): Seq[Int] = {
+    val n = xs.length
+    val centers = new Array[Int](math.min(k, n))
+    val minD2 = Array.fill(n)(Double.MaxValue)
+    if (canonical) for (i <- 1 until n)
+      if (xs(i) < xs(centers(0)) || (xs(i) == xs(centers(0)) && ys(i) < ys(centers(0)))) centers(0) = i
+    for (c <- 0 until centers.length - 1) {
+      val cx = xs(centers(c)); val cy = ys(centers(c))
+      var best = -1; var bestD = -1.0
+      for (i <- 0 until n) {
+        val dx = xs(i) - cx; val dy = ys(i) - cy
+        val d2 = dx * dx + dy * dy
+        if (d2 < minD2(i)) minD2(i) = d2
+        val m = minD2(i)
+        if (m > bestD || (canonical && m == bestD &&
+            (xs(i) < xs(best) || (xs(i) == xs(best) && ys(i) < ys(best))))) { bestD = m; best = i }
+      }
+      centers(c + 1) = best
+    }
+    centers.toSeq
+  }
+
+  /** Near-boundary triples for the pruning margin: g at the origin, p at
+    * a, c within a few ulps of 2a, where rounding puts |c−g|² above 4·|p−g|²
+    * although c lies closer to p than g does. Each becomes five points
+    * (c0 at 3.5a, the first center; g; p; q, the reflection of p with the
+    * same computed |q−g|²; c) on which the traversal picks c0, g, c, then
+    * q — or p, if c skipped g's group. */
+  private def marginCases(rng: scala.util.Random, count: Int): Seq[(Array[Double], Array[Double])] =
+    Iterator.continually {
+      val th = rng.nextDouble() * math.Pi / 2
+      val s = math.pow(2.0, rng.nextInt(20) - 10)
+      val (ax, ay) = (-math.cos(th) * s, -math.sin(th) * s)
+      val cx = 2 * ax + (rng.nextInt(13) - 6) * math.ulp(2 * ax)
+      val cy = 2 * ay + (rng.nextInt(13) - 6) * math.ulp(2 * ay)
+      def sq(x: Double, y: Double) = x * x + y * y
+      val hit = ax < 1.2 * ay && sq(cx, cy) > 4 * sq(ax, ay) && sq(ax - cx, ay - cy) < sq(ax, ay)
+      Option.when(hit)((Array(3.5 * ax, 0.0, ax, ax, cx), Array(3.5 * ay, 0.0, ay, -ay, cy)))
+    }.flatten.take(count).toSeq
+
+  test("fftIndices: the pruned kernel picks exactly what the plain O(n·k) loop picks") {
+    val rng = new scala.util.Random(1401)
+    def gen(n: Int)(f: => Double) = Array.fill(n)(f)
+    val inputs = Seq.newBuilder[(String, Array[Double], Array[Double])]
+    for (_ <- 0 until 3) {
+      inputs += (("uniform", gen(2000)(rng.nextDouble() * 10), gen(2000)(rng.nextDouble() * 10)))
+      val centres = gen(8)(rng.nextDouble() * 100)
+      val which = Array.fill(2000)(rng.nextInt(4))
+      inputs += (("clustered", which.map(w => centres(w) + rng.nextGaussian() * 0.5),
+                  which.map(w => centres(w + 4) + rng.nextGaussian() * 0.5)))
+      // integer grid: equal-distance ties at every step, exact duplicates
+      inputs += (("grid", gen(1500)(rng.nextInt(7).toDouble), gen(1500)(rng.nextInt(7).toDouble)))
+      // squares in the subnormal range, near overflow, and overflowing
+      for (scale <- Seq(1e-160, 1e-155, 1e150, 1e154))
+        inputs += ((s"scale $scale", gen(800)(rng.nextGaussian() * scale), gen(800)(rng.nextGaussian() * scale)))
+      val (xs, ys) = (gen(800)(rng.nextDouble()), gen(800)(rng.nextDouble()))
+      for (_ <- 0 until 12) {
+        val v = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)(rng.nextInt(3))
+        (if (rng.nextBoolean()) xs else ys)(rng.nextInt(800)) = v
+      }
+      inputs += (("NaN and ±Inf", xs, ys))
+      inputs += (("n < k", gen(7)(rng.nextDouble()), gen(7)(rng.nextDouble())))
+    }
+    for ((xs, ys) <- marginCases(rng, 4)) inputs += (("margin", xs, ys))
+    // subnormal squares (units of √MinValue = 2^-537): rounding makes
+    // |c−g|² = 6 > 4·|p−g|² = 4 units although |p−c|² rounds to 0, so
+    // skipping g's group would keep p's stale min-dist²
+    val u = math.pow(2.0, -537)
+    inputs += (("subnormal", Array(-2.9, 0.0, -0.7, -1.4).map(_ * u), Array(1.92, 0.0, 1.22, 1.92).map(_ * u)))
+    for ((name, xs, ys) <- inputs.result(); canonical <- Seq(true, false); k <- Seq(1, 4, 40, 300)) {
+      val got = Geometry.fftIndices(xs, ys, k, canonical).toSeq
+      assert(got == plainFFT(xs, ys, k, canonical), s"$name, canonical = $canonical, k = $k")
+    }
+  }
+
   test("artificial1M anchors: pinned per-L radii, tight cross-L envelope, planted-outlier recall") {
     // the reference's published 1M workload (artificial1M_9_100.csv,
     // 1 000 108 pts, M=10 K=200 — Radius 0.60045445 @16 exec / 0.62610096
@@ -345,5 +422,24 @@ class GeometrySpec extends SparkSpec {
       c1.map { case (cx, cy) => math.hypot(x - cx, y - cy) }.min
     }.max
     assert(math.abs(maxMin - r1) < 1e-9)
+  }
+
+  test("mrFFT round-robin path: min(K, n) centers covering every point, radius within 2× the deterministic one") {
+    import spark.implicits._
+    val rng = new scala.util.Random(1402)
+    val centres = Array.fill(12)((rng.nextDouble() * 100, rng.nextDouble() * 100))
+    val clustered = Seq.tabulate(4000) { i =>
+      val (cx, cy) = centres(i % 12)
+      (i.toLong, cx + rng.nextGaussian(), cy + rng.nextGaussian())
+    }
+    for ((pts, k) <- Seq(clustered -> 24, clustered.take(9) -> 24)) {
+      val df = pts.toDF("id", "x", "y").repartition(3)
+      val (r, centers) = Geometry.mrFFT(df, k, l = 4, deterministic = false)
+      assert(centers.length == math.min(k, pts.size))
+      val cover = pts.map { case (_, x, y) => centers.map { case (cx, cy) => math.hypot(x - cx, y - cy) }.min }.max
+      assert(cover <= r * (1 + 1e-12), s"a point lies $cover from every center, radius $r")
+      val (rd, _) = Geometry.mrFFT(df, k, l = 4)
+      assert(r <= 2 * rd && rd <= 2 * r, s"round-robin radius $r vs deterministic $rd")
+    }
   }
 }

@@ -217,7 +217,7 @@ class StreamingSpec extends SparkSpec {
 
     /** The `cli.StreamApp` stream: each line cast to a long `item`. */
     def stream: org.apache.spark.sql.DataFrame = spark.readStream.format("socket")
-      .option("host", "127.0.0.1").option("port", server.getLocalPort).load()
+      .option("host", "127.0.0.1").option("port", server.getLocalPort).option("numPartitions", 1).load()
       .selectExpr("CAST(value AS LONG) AS item")
 
     def stop(): Unit = {
@@ -310,6 +310,20 @@ class StreamingSpec extends SparkSpec {
     assert(rep.n == 20000 && rep.trueFrequent == (0L to 6L))
     assert(batches.exists(_.end > -1L) && batches.map(_.rows).sum == 20000, s"$batches")
     for (b <- batches) assert(b.rows == b.end - b.start && b.jobs == 0, s"socket: $b")
+  }
+
+  test("socket stream: a mid-batch n cut keeps the first n lines in send order") {
+    // the socket source deals a batch's lines round-robin over its
+    // `numPartitions` slices; with one slice the fold sees the send order,
+    // so the Report is the boxed fold over exactly the first n lines sent
+    val (phi, eps, delta) = (0.03, 0.01, 0.1)
+    val items = planted(40000, 6, seed = 108)
+    val n = 23457
+    val feeder = new LineFeeder(items.size, i => items(i).toString)
+    val (rep, batches) = try batchesOf(FrequentItemsJob.run(spark, feeder.stream, n, phi, eps, delta, 108L))
+      finally feeder.stop()
+    assert(batches.exists(b => b.start < n - 1 && b.end >= n), s"n = $n does not cut a batch: $batches")
+    assert(rep == boxedReport(items, n, phi, eps, delta, 108L))
   }
 
   test("FrequentItemsJob keeps one job per batch for any other plan, with the boxed fold's Report") {
