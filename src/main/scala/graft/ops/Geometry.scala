@@ -217,17 +217,16 @@ object Geometry {
         }
         classes.indices.filter(cells(_) > 0).map(k => Row(classes(k), points(k), cells(k)))
       case None =>
-        val cached = cellHistogram(pts, lambda).cache()
-        try {
-          cellNeighborhoods(cached).select(
-              when(col("n7") <= m, lit("sure"))
-                .when(col("n3") <= m, lit("uncertain"))
-                .otherwise(lit("inlier")).as("cls"),
-              col("sz"))
-            .groupBy(col("cls"))
-            .agg(sum(col("sz")).as("n_points"), count(lit(1)).as("n_cells"))
-            .collect().toSeq
-        } finally cached.unpersist()
+        // cellNeighborhoods persists its own projection of the histogram,
+        // so the aggregation runs once without a second cache here
+        cellNeighborhoods(cellHistogram(pts, lambda)).select(
+            when(col("n7") <= m, lit("sure"))
+              .when(col("n3") <= m, lit("uncertain"))
+              .otherwise(lit("inlier")).as("cls"),
+            col("sz"))
+          .groupBy(col("cls"))
+          .agg(sum(col("sz")).as("n_points"), count(lit(1)).as("n_cells"))
+          .collect().toSeq
     }
     pts.sparkSession.createDataFrame(rows.asJava, ApproxSchema)
   }

@@ -16,6 +16,10 @@ import graft.plans.TopK
   * scales: the LSH path in particular replaces the O(n²) all-pairs Jaccard
   * with band-bucket equi-joins — at 100 TB the all-pairs formulation is
   * infeasible while banding stays linear in candidates.
+  *
+  * The near-dup family (q34, q35, q36, q121, q133, q142, q149; q58/q82
+  * via q35) runs candidate-then-verify on one pair kernel: `sharedKeyPairs`,
+  * `bothSides`, `jaccardVerified`, `cappedShingles` and `minHashBands`.
   */
 object Text {
 
@@ -39,12 +43,66 @@ object Text {
   /** Distinct hashed 3-gram shingles via the native one-pass expression
     * (graft.functions.ShingleHashes) — set-identical to the string form,
     * ~10× cheaper. Used by every count-based consumer (Jaccard, MinHash). */
-  private def withHashedShingles(docs: DataFrame): DataFrame = {
+  private[graft] def withHashedShingles(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     withTokens(docs)
       .filter(size(col("t")) >= 3)
       .withColumn("hs", expr("graft_shingles(t, 3)"))
   }
+
+  // ------------------------------------------------- near-dup pair kernel
+
+  /** The candidate self equi-join: the (d1, d2) pairs, d1 < d2, of `rows`
+    * (doc_id, keys…) that agree on every key, one row per shared key tuple.
+    * Each other column c of `rows` rides along as c1 and c2. */
+  private def sharedKeyPairs(rows: DataFrame, keys: String*): DataFrame = {
+    val carried = rows.columns.filterNot(c => c == "doc_id" || keys.contains(c))
+    rows.as("a")
+      .join(rows.as("b"), keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("d1") +: col("b.doc_id").as("d2") +:
+        carried.flatMap(c => Seq(col(s"a.$c").as(s"${c}1"), col(s"b.$c").as(s"${c}2"))): _*)
+  }
+
+  /** `pairs` (d1, d2, …) with column `c` of `per` (doc_id, c) as c1 and c2. */
+  private def bothSides(pairs: DataFrame, per: DataFrame, c: String): DataFrame =
+    pairs
+      .join(per.select(col("doc_id").as("d1"), col(c).as(s"${c}1")), "d1")
+      .join(per.select(col("doc_id").as("d2"), col(c).as(s"${c}2")), "d2")
+
+  /** The exact J ≥ 0.5 check of candidates `cands` (d1, d2) over the hashed
+    * shingle sets `sets` (doc_id, hs): (d1, d2, jaccard). */
+  private def jaccardVerified(cands: DataFrame, sets: DataFrame): DataFrame =
+    bothSides(cands, sets, "hs")
+      .withColumn("jaccard",
+        size(array_intersect(col("hs1"), col("hs2"))).cast(DoubleType) /
+        size(array_union(col("hs1"), col("hs2"))))
+      .filter(col("jaccard") >= 0.5)
+      .select(col("d1"), col("d2"), col("jaccard"))
+
+  /** The rows of `sh` (doc_id, h, …) whose shingle h has df ≤ maxDf,
+    * repartitioned by h and persisted. The cap bounds a boilerplate
+    * shingle's pair work by maxDf², so every h key is skew-safe. The
+    * repartition comes before the persist so that the pair self-join reads
+    * both sides co-partitioned by h: one build-time exchange replaces two
+    * join-side ones, since AQE hides a cached plan's own partitioning
+    * (q133 steady 1.48 → 0.98 s at sf0.1 on 8 cores). At 32 cores AQE
+    * broadcasts the pair join instead and the exchange costs (q133 1.26 →
+    * 2.77 s); a size gate for it belongs here. */
+  private def cappedShingles(sh: DataFrame, maxDf: Long): DataFrame = {
+    val keep = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxDf).select(col("h"))
+    graft.core.InternalCaches.persist(
+      sh.join(keep, Seq("h"), "leftsemi").repartition(col("h")))
+  }
+
+  /** The MinHash banding rule of the batch and streaming LSH paths:
+    * `sig(i)`, i < 32, is the minimum of xxhash64(i, h) over a document's
+    * hashed shingles; band b of 16 is keyed xxhash64(b, sig(2b), sig(2b+1)). */
+  private[graft] def minHashBands(sig: Int => Column): Column =
+    array((0 until MinHashSeeds / 2).map(b => xxhash64(lit(b), sig(2 * b), sig(2 * b + 1))): _*)
+
+  private val MinHashSeeds = 32
 
   // ------------------------------------------------------------ token stats
 
@@ -165,13 +223,9 @@ object Text {
     import org.apache.spark.sql.expressions.Window
     // 64-bit shingle hashes, not strings: same set identity modulo a ~2^-40
     // collision chance, far cheaper to compute, shuffle and compare.
-    // Persisted: the frame is consumed three times (the explode feeding
-    // dfreq+prefix, and both sides of the re-verify join) — like the LSH
-    // aggregate, self-join subtrees are not deduplicated by Catalyst, so
-    // without the persist one invocation re-scans and re-shingles the
-    // corpus four times. Linear in the corpus, memory-and-disk, lazy (fuses
-    // into the first consuming job), plan-keyed; registered with
-    // InternalCaches so the session's batch owner can release it.
+    // Persisted: the explode and both sides of the re-verify join consume
+    // it, and Catalyst does not deduplicate self-join subtrees, so without
+    // the persist one invocation re-scans and re-shingles the corpus 4×.
     val sh = graft.core.InternalCaches.persist(
       withHashedShingles(docs).select(col("doc_id"), col("hs")))
     // n (distinct shingles per doc) rides along from size(hs): no second
@@ -187,18 +241,7 @@ object Text {
         .withColumn("rn", row_number().over(byRarity))
         .filter(col("rn") <= floor(col("n") / 2) + 1) // t = 0.5 ⇒ n − ⌈n/2⌉ + 1
         .select(col("doc_id"), col("h")))
-    val cands = prefix.as("a")
-      .join(prefix.as("b"), col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-    cands
-      .join(sh.select(col("doc_id").as("d1"), col("hs").as("hs1")), "d1")
-      .join(sh.select(col("doc_id").as("d2"), col("hs").as("hs2")), "d2")
-      .withColumn("jaccard",
-        size(array_intersect(col("hs1"), col("hs2"))).cast(DoubleType) /
-        size(array_union(col("hs1"), col("hs2"))))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("d1"), col("d2"), col("jaccard"))
+    jaccardVerified(sharedKeyPairs(prefix, "h").distinct(), sh)
   }
 
   /** MinHash + LSH near-dup: 32 xxhash64 min-hashes, 16 bands × 2 rows,
@@ -216,21 +259,7 @@ object Text {
     * re-tokenizing the source table per stage. */
   def minHashLshPairs(docs: DataFrame): DataFrame = {
     val (agg, banded) = lshAggAndBanded(docs)
-    val cands = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-    // exact Jaccard re-verification on candidates only, over hashed sets
-    cands
-      .join(agg.select(col("doc_id").as("d1"), col("hs").as("hs1")), "d1")
-      .join(agg.select(col("doc_id").as("d2"), col("hs").as("hs2")), "d2")
-      .withColumn("jaccard",
-        size(array_intersect(col("hs1"), col("hs2"))).cast(DoubleType) /
-        size(array_union(col("hs1"), col("hs2"))))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("d1"), col("d2"), col("jaccard"))
+    jaccardVerified(sharedKeyPairs(banded, "band", "bkey").distinct(), agg)
   }
 
   /** Hash number `i` of the cross-engine sketch family over the string
@@ -266,9 +295,7 @@ object Text {
       s"array_min(transform(sh, s -> ${sketchHash(docs.sparkSession, "i", "s")})))")
     val sigs = graft.core.InternalCaches.persist(
       withShingles(docs).select(col("doc_id"), sigExpr.as("sig")))
-    minHashLshPairs(docs)
-      .join(sigs.select(col("doc_id").as("d1"), col("sig").as("sig1")), "d1")
-      .join(sigs.select(col("doc_id").as("d2"), col("sig").as("sig2")), "d2")
+    bothSides(minHashLshPairs(docs), sigs, "sig")
       .withColumn("n_agree", expr(
         "size(filter(zip_with(sig1, sig2, (x, y) -> x = y), b -> b))").cast(LongType))
       .withColumn("est_jaccard", col("n_agree").cast(DoubleType) / lit(k.toDouble))
@@ -401,9 +428,7 @@ object Text {
     val txt = docs.select(col("doc_id"),
       regexp_replace(substring(col("text"), 1, prefixLen),
         "[^\\x00-\\x7F]", "?").as("p"))
-    minHashLshPairs(docs)
-      .join(txt.select(col("doc_id").as("d1"), col("p").as("p1")), "d1")
-      .join(txt.select(col("doc_id").as("d2"), col("p").as("p2")), "d2")
+    bothSides(minHashLshPairs(docs), txt, "p")
       .withColumn("lev_dist", levenshtein(col("p1"), col("p2")).cast(LongType))
       .withColumn("lev_sim", round(lit(1.0) -
         col("lev_dist").cast(DoubleType) /
@@ -421,30 +446,22 @@ object Text {
     * sizes without duplicating the banding arithmetic.
     *
     * ONE explode + shuffle + aggregation computes BOTH the 32 min-hash
-    * signature columns AND the per-doc hashed-shingle set, materialized by
-    * a lazy plan-keyed persist (NOT an eager localCheckpoint — its extra
-    * job barrier measured ~1 s/query; see PLANS.md round-4 persist
-    * policy): the three downstream consumers (the
-    * two sides of the banded self-join and the two re-verify joins) read
-    * the materialized frame instead of each re-deriving it — the previous
-    * shape re-scanned the corpus and re-shingled FOUR times per
-    * invocation (self-join subtrees are not deduplicated by Catalyst, and
-    * the differing partial aggregates defeat exchange reuse). The
-    * materialization is linear in the corpus (shingle set + 32 longs per
-    * doc, memory-and-disk), against four full recomputes at 100 TB. */
+    * signature columns AND the per-doc hashed-shingle set, under a lazy
+    * plan-keyed persist (an eager localCheckpoint's job barrier measured
+    * ~1 s/query; PLANS.md round-4 persist policy): both sides of the
+    * banded self-join and the two re-verify joins read it instead of
+    * re-scanning and re-shingling the corpus four times (Catalyst does not
+    * deduplicate self-join subtrees). Linear in the corpus: the shingle
+    * set + 32 longs per doc, memory-and-disk. */
   private[graft] def lshAggAndBanded(docs: DataFrame): (DataFrame, DataFrame) = {
-    val nHashes = 32; val bands = 16; val rows = 2
     // native hashed shingles; all downstream work is on longs
     val exploded = withHashedShingles(docs)
       .select(col("doc_id"), explode(col("hs")).as("h"))
     val agg = graft.core.InternalCaches.persist(
       exploded.groupBy(col("doc_id")).agg(
         collect_set(col("h")).as("hs"),
-        (0 until nHashes).map(i => min(xxhash64(lit(i), col("h"))).as(s"h$i")): _*))
-    // band key = hash of the band's signature rows; candidates share a band
-    val banded = agg.select(col("doc_id"), posexplode(array(
-      (0 until bands).map(b =>
-        xxhash64(lit(b) +: (0 until rows).map(r => col(s"h${b * rows + r}")): _*)): _*)))
+        (0 until MinHashSeeds).map(i => min(xxhash64(lit(i), col("h"))).as(s"h$i")): _*))
+    val banded = agg.select(col("doc_id"), posexplode(minHashBands(i => col(s"h$i"))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
     (agg, banded)
   }
@@ -524,12 +541,9 @@ object Text {
       docs.select(col("doc_id"), col("simhash"), posexplode(array(
         (0 until 4).map(q => shiftrightunsigned(col("simhash"), q * 15).bitwiseAND(lit(0x7fffL))): _*)))
       .withColumnRenamed("pos", "q").withColumnRenamed("col", "qv"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.q") === col("b.q") && col("a.qv") === col("b.qv") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
+    sharedKeyPairs(banded, "q", "qv")
+      .select(col("d1"), col("d2"),
+        bit_count(col("simhash1").bitwiseXOR(col("simhash2"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= 3)
   }
@@ -3800,11 +3814,9 @@ object Text {
     * symmetric q34/q35 family is blind to (the Lee-et-al substring
     * signal at document granularity).
     *
-    * Scale contract: candidate pairs come from the shingle equi-join
-    * AFTER a document-frequency cap drops boilerplate shingles
-    * (df > maxDf — the same hot-shingle discipline as q104), so fan-out
-    * per shingle is ≤ maxDf docs and pair work is ≤ maxDf² per shingle —
-    * a viral header can never go quadratic in the corpus. Cardinalities
+    * Scale contract: candidate pairs come from the shingle equi-join over
+    * [[cappedShingles]], so pair work is ≤ maxDf² per shingle and a viral
+    * header never goes quadratic in the corpus. Cardinalities
     * are the CAPPED per-doc counts, making the score "containment over
     * non-boilerplate shingles" — the semantics a dedup pass wants anyway.
     * Shingles are 64-bit hashes (the q34 contract: set identity modulo
@@ -3814,26 +3826,14 @@ object Text {
     require(maxDf >= 1L, s"maxDf must be >= 1, got $maxDf")
     val sh = graft.core.InternalCaches.persist(
       withHashedShingles(docs).select(col("doc_id"), explode(col("hs")).as("h")))
-    val keep = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("h"))
-    // repartition(h) before the persist: the q133 round-20 recipe — the
-    // common-shingle self-join consumes this cache on both sides keyed by
-    // h, so one build-time exchange replaces two join-side ones (the
-    // cards rollup pays one extra doc_id exchange it previously shared
-    // with the scan layout, a strictly smaller frame). df cap bounds
-    // every h key, so the partitioning is skew-safe.
-    val ex = graft.core.InternalCaches.persist(
-      sh.join(keep, Seq("h"), "leftsemi").repartition(col("h")))
+    val ex = cappedShingles(sh, maxDf)
     val cards = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val common = ex.as("a")
-      .join(ex.as("b"), col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+    val common = sharedKeyPairs(ex, "h")
+      .groupBy(col("d1"), col("d2"))
       .agg(count(lit(1)).as("n_common"))
-    common
-      .join(cards.select(col("doc_id").as("d1"), col("n").as("na")), "d1")
-      .join(cards.select(col("doc_id").as("d2"), col("n").as("nb")), "d2")
-      .withColumn("cont_a", round(col("n_common").cast(DoubleType) / col("na"), 6))
-      .withColumn("cont_b", round(col("n_common").cast(DoubleType) / col("nb"), 6))
+    bothSides(common, cards, "n")
+      .withColumn("cont_a", round(col("n_common").cast(DoubleType) / col("n1"), 6))
+      .withColumn("cont_b", round(col("n_common").cast(DoubleType) / col("n2"), 6))
       .filter(col("cont_a") >= tau || col("cont_b") >= tau)
       .select(col("d1"), col("d2"), col("n_common"), col("cont_a"), col("cont_b"))
   }
@@ -4205,19 +4205,18 @@ object Text {
     * `minSpanTokens` verbatim tokens, report the alignment count, span
     * count, and longest span.
     *
-    * Alignment is the classic DIAGONAL trick: a matched shingle pair
-    * (p1, p2) lies on diagonal p1 − p2, and a verbatim run of length L
-    * yields L − n + 1 CONSECUTIVE p1 values on ONE diagonal — so runs are
-    * islands (p1 − row_number constant) within (d1, d2, diag) groups, and
-    * the longest span is max run + n − 1 tokens.
+    * Alignment is the classic DIAGONAL trick: a matched shingle pair at
+    * positions (pos1, pos2) lies on diagonal pos1 − pos2, and a verbatim
+    * run of length L yields L − n + 1 CONSECUTIVE pos1 values on ONE
+    * diagonal — so runs are islands (pos1 − row_number constant) within
+    * (d1, d2, diag) groups, and the longest span is max run + n − 1 tokens.
     *
     * Scale shape: the q121 contract end-to-end — positional shingles
-    * hashed to 64 bits, a df ≤ maxDf cap BEFORE the pair join (a viral
-    * boilerplate shingle can never go quadratic), pair work bounded by
-    * maxDf²·positions per shingle; the islands window partitions by
-    * (pair, diagonal) — bounded by the shorter doc, never global. Spans
-    * whose every shingle is boilerplate-capped are invisible by contract
-    * (the q121 "containment over non-boilerplate shingles" semantics). */
+    * hashed to 64 bits and capped by [[cappedShingles]] before the pair
+    * join, pair work ≤ maxDf²·positions per shingle; the islands window
+    * partitions by (pair, diagonal) — bounded by the shorter doc, never
+    * global. Spans whose every shingle is boilerplate-capped are invisible
+    * by contract (q121's "containment over non-boilerplate shingles"). */
   def duplicatedSpans(docs: DataFrame, n: Int = 3, maxDf: Long = 64L,
                       minSpanTokens: Long = 5L): DataFrame = {
     require(n >= 1, s"shingle width must be >= 1, got $n")
@@ -4228,27 +4227,10 @@ object Text {
       withTokens(docs).filter(size(col("t")) >= n)
         .select(col("doc_id"), explode(posShingleExpr(n)).as("g"))
         .select(col("doc_id"), col("g.pos"), col("g.h")))
-    val keep = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("h"))
-    // hash-repartitioned by h BEFORE the persist (round 20, guide §2.4
-    // "two operations keyed the same way can share one exchange"): the
-    // pair self-join below consumes this cache on BOTH sides keyed by h,
-    // and without the explicit partitioning each side re-exchanged the
-    // cached frame (AQE hides a cached plan's incidental partitioning).
-    // One build-time shuffle replaces two join-side shuffles — strictly
-    // fewer bytes moved at any scale, and skew-safe by construction (the
-    // df ≤ maxDf cap bounds every h key). Steady 1.48 → 0.98 s at sf0.1;
-    // fingerprint + oracle hash-matched.
-    val ex = graft.core.InternalCaches.persist(
-      sh.join(keep, Seq("h"), "leftsemi").repartition(col("h")))
-    val pairs = ex.as("a")
-      .join(ex.as("b"), col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        col("a.pos").as("p1"), col("b.pos").as("p2"))
-    val byDiag = Window.partitionBy(col("d1"), col("d2"), col("diag")).orderBy(col("p1"))
-    pairs
-      .withColumn("diag", col("p1") - col("p2"))
-      .withColumn("grp", col("p1") - row_number().over(byDiag))
+    val byDiag = Window.partitionBy(col("d1"), col("d2"), col("diag")).orderBy(col("pos1"))
+    sharedKeyPairs(cappedShingles(sh, maxDf), "h")
+      .withColumn("diag", col("pos1") - col("pos2"))
+      .withColumn("grp", col("pos1") - row_number().over(byDiag))
       .groupBy(col("d1"), col("d2"), col("diag"), col("grp"))
       .agg(count(lit(1)).cast(LongType).as("run"))
       .groupBy(col("d1"), col("d2"))
@@ -5182,19 +5164,33 @@ object Text {
            round(CAST(sum(CAST(lp AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS avg_lp
          FROM lp GROUP BY doc_id"""
 
-  /** Shared CTE chain for the q58/q82 oracles: the EXACT J >= 0.5 pair
-    * graph (LSH's false-negative caveat is q58's documented contract) and
-    * its transitive closure — `reach(n, m)` holds every ordered reachable
-    * pair. Components follow as least(n, min(m)) per node. */
-  private val ComponentsOracleCtes: String =
-    """WITH RECURSIVE tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+  /** The oracles' exact-Jaccard CTE chain (q34, q35, q142, q58, q82):
+    * `sh` holds each document's distinct string 3-gram shingles, `card`
+    * their count per document and `common` every pair's shared count. */
+  private val JaccardOracleChain: String =
+    """tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
          sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 1),
                   i -> concat_ws(' ', t[i], t[i+1], t[i+2])))) AS s
                 FROM tok WHERE len(t) >= 3),
          card AS (SELECT doc_id AS cid, count(*) AS n FROM sh GROUP BY doc_id),
          common AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
                     FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2),
+                    GROUP BY 1, 2)"""
+
+  /** The exact J >= 0.5 pairs: q34's oracle, and q35's (its LSH output
+    * equals them on separated corpora, verified at the harness SF). */
+  private val JaccardPairsOracle: String =
+    s"""WITH $JaccardOracleChain
+         SELECT d1, d2, CAST(c AS DOUBLE) / (ca.n + cb.n - c) AS jaccard
+         FROM common JOIN card ca ON d1 = ca.cid JOIN card cb ON d2 = cb.cid
+         WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= 0.5"""
+
+  /** Shared CTE chain for the q58/q82 oracles: the EXACT J >= 0.5 pair
+    * graph (LSH's false-negative caveat is q58's documented contract) and
+    * its transitive closure — `reach(n, m)` holds every ordered reachable
+    * pair. Components follow as least(n, min(m)) per node. */
+  private val ComponentsOracleCtes: String =
+    s"""WITH RECURSIVE $JaccardOracleChain,
          edges AS (SELECT d1, d2 FROM common
                    JOIN card ca ON d1 = ca.cid JOIN card cb ON d2 = cb.cid
                    WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= 0.5),
@@ -5731,14 +5727,7 @@ object Text {
     // over ASCII-folded 256-char prefixes; the sim filter compares the
     // ROUNDED value on both engines
     "q142_edit_verified" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 1),
-                  i -> concat_ws(' ', t[i], t[i+1], t[i+2])))) AS s
-                FROM tok WHERE len(t) >= 3),
-         card AS (SELECT doc_id AS cid, count(*) AS n FROM sh GROUP BY doc_id),
-         common AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-                    FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2),
+      raw"""WITH $JaccardOracleChain,
          cand AS (SELECT d1, d2,
              CAST(c AS DOUBLE) / (ca.n + cb.n - c) AS jaccard
            FROM common JOIN card ca ON d1 = ca.cid JOIN card cb ON d2 = cb.cid
@@ -6914,18 +6903,7 @@ object Text {
            FROM documents GROUP BY md5(text))
          SELECT n_copies, count(*) AS n_groups, min(canonical_id) AS min_canonical
          FROM groups GROUP BY n_copies""",
-    "q34_ngram_jaccard" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 1),
-                  i -> concat_ws(' ', t[i], t[i+1], t[i+2])))) AS s
-                FROM tok WHERE len(t) >= 3),
-         card AS (SELECT doc_id AS cid, count(*) AS n FROM sh GROUP BY doc_id),
-         common AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-                    FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2)
-         SELECT d1, d2, CAST(c AS DOUBLE) / (ca.n + cb.n - c) AS jaccard
-         FROM common JOIN card ca ON d1 = ca.cid JOIN card cb ON d2 = cb.cid
-         WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= 0.5""",
+    "q34_ngram_jaccard" -> JaccardPairsOracle,
     // rolling fingerprint verified via HUGEINT modular reduce (fresh hash
     // of each 8-gram equals the rolling form by modular identity)
     "q37_fingerprint" ->
@@ -7640,19 +7618,6 @@ object Text {
            CAST(a.n_agree AS DOUBLE) / 16.0 AS est_jaccard,
            round(abs(CAST(a.n_agree AS DOUBLE) / 16.0 - p.jaccard), 6) AS abs_err
          FROM pairs p JOIN agr a ON a.d1 = p.d1 AND a.d2 = p.d2""",
-    // q35 minhash: same output contract as q34 on separated corpora — verified
-    // empirically at the harness SF; recorded as the all-pairs Jaccard SQL.
-    "q35_minhash_lsh" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 1),
-                  i -> concat_ws(' ', t[i], t[i+1], t[i+2])))) AS s
-                FROM tok WHERE len(t) >= 3),
-         card AS (SELECT doc_id AS cid, count(*) AS n FROM sh GROUP BY doc_id),
-         common AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-                    FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2)
-         SELECT d1, d2, CAST(c AS DOUBLE) / (ca.n + cb.n - c) AS jaccard
-         FROM common JOIN card ca ON d1 = ca.cid JOIN card cb ON d2 = cb.cid
-         WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= 0.5""",
+    "q35_minhash_lsh" -> JaccardPairsOracle,
   )
 }

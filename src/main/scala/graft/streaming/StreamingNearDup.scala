@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.ops.Text
 
 /** Streaming near-duplicate detection at ingest time: MinHash band keys per
   * document, first-seen state per band bucket, candidate-pair stream out.
@@ -10,10 +11,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Batch near-dup (graft.ops.Text.qMinHashLsh) re-scans the corpus; at
   * training-data ingest rates you want the dedup decision as documents
   * arrive. Design constraints that shape this pipeline:
-  *  - signatures are computed as per-row projections (native
-  *    graft_shingles + per-row HOF mins), NOT as a groupBy aggregation —
-  *    append-mode streams forbid unwatermarked aggregations, projections
-  *    are free;
+  *  - band keys are the batch near-dup kernel's (`Text.withHashedShingles`
+  *    and the `Text.minHashBands` rule: 32 xxhash64 seeds, 16 bands × 2
+  *    rows), so a document lands in the buckets `Text.lshAggAndBanded`
+  *    gives it; its signature is a per-row projection (per-row HOF mins),
+  *    NOT a groupBy aggregation — append-mode streams forbid unwatermarked
+  *    aggregations, projections are free;
   *  - band buckets are the grouping key for flatMapGroupsWithState, so
   *    state is partitioned/checkpointed by the state store and scales
   *    horizontally — nothing driver-held;
@@ -26,23 +29,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingNearDup {
 
-  val NumHashes = 32
-  val Bands = 16
-  val Rows = 2
-
   /** doc stream (doc_id, text) → banded stream (doc_id, band, bkey). */
-  def bandKeys(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val sig = docs
-      .withColumn("t", split(col("text"), " "))
-      .filter(size(col("t")) >= 3)
-      .withColumn("hs", expr("graft_shingles(t, 3)"))
-      .withColumn("sig", array((0 until NumHashes).map(i =>
-        array_min(expr(s"transform(hs, h -> xxhash64($i, h))"))): _*))
-    sig.select(col("doc_id"), posexplode(array((0 until Bands).map(b =>
-        xxhash64(lit(b) +: (0 until Rows).map(r => col("sig").getItem(b * Rows + r)): _*)): _*)))
+  def bandKeys(docs: DataFrame): DataFrame =
+    Text.withHashedShingles(docs)
+      .select(col("doc_id"), posexplode(Text.minHashBands(i =>
+        array_min(expr(s"transform(hs, h -> xxhash64($i, h))")))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-  }
 
   final case class CandidatePair(canonical_id: Long, duplicate_id: Long, band: Int)
 

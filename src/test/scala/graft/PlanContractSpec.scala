@@ -954,16 +954,18 @@ class PlanContractSpec extends SparkSpec {
     } finally graft.core.InternalCaches.release(spark)
   }
 
-  test("q133: duplicated spans — capped pair join, per-diagonal windows only") {
-    // the q121 contract with the islands window on top: the pair join runs
-    // AFTER the df cap (never a cartesian), and the only window partitions
-    // by (pair, diagonal) — no single-partition exchange anywhere
+  test("q121/q133: capped pair joins, no single-partition exchange") {
+    // both pair joins run AFTER the df cap (never a cartesian); q133's only
+    // window partitions by (pair, diagonal) — no single-partition exchange
+    // anywhere in either query
     try {
-      val p = plan("q133_duplicated_spans")
-      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-        s"q133 pair join degenerated:\n$p")
-      assert(!p.toLowerCase.contains("singlepartition"),
-        s"q133 planned a single-partition exchange:\n$p")
+      for (q <- Seq("q121_containment", "q133_duplicated_spans")) {
+        val p = plan(q)
+        assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+          s"$q pair join degenerated:\n$p")
+        assert(!p.toLowerCase.contains("singlepartition"),
+          s"$q planned a single-partition exchange:\n$p")
+      }
     } finally graft.core.InternalCaches.release(spark)
   }
 }

@@ -26,4 +26,20 @@ class StreamingNearDupSpec extends SparkSpec {
     assert(found.contains((1L, 4L)), s"cross-batch dup missed: $found")
     assert(!found.exists(p => p._1 == 3L || p._2 == 3L), s"false positive on distinct doc: $found")
   }
+
+  test("streaming band keys equal the batch LSH banding") {
+    import spark.implicits._
+    val twin = "two identical texts share every band key of the batch banding"
+    val extra = Seq((-1L, "two tokens"), (-2L, twin), (-3L, twin)).toDF("doc_id", "text")
+    val docs = graft.core.Tables.documents(spark, sfDir).select("doc_id", "text").union(extra)
+    def keys(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long)] =
+      df.select("doc_id", "band", "bkey").as[(Long, Int, Long)].collect().toSet
+    try {
+      val batch = keys(graft.ops.Text.lshAggAndBanded(docs)._2)
+      assert(keys(StreamingNearDup.bandKeys(docs)) == batch)
+      assert(!batch.exists(_._1 == -1L), "a document under 3 tokens was banded")
+      assert(batch.filter(_._1 == -2L).map(k => (k._2, k._3)) ==
+        batch.filter(_._1 == -3L).map(k => (k._2, k._3)))
+    } finally graft.core.InternalCaches.release(spark)
+  }
 }
