@@ -33,8 +33,7 @@ object Pipeline {
     * same dir reuses the same cache entry (identical plan); registered
     * with InternalCaches so the session's batch owner can release it. */
   private[graft] def tokenizedDocs(s: SparkSession, dir: String): DataFrame =
-    graft.core.InternalCaches.persist(
-      Tables.documents(s, dir).withColumn("t", split(col("text"), " ")))
+    graft.core.InternalCaches.persist(Text.withTokens(Tables.documents(s, dir)))
 
   /** Documents surviving quality + exact-dup + near-dup filtering. */
   def cleanCorpus(s: SparkSession, dir: String, cfg: Config = Config()): DataFrame =
@@ -108,12 +107,11 @@ object Pipeline {
   /** Pipeline yield summary over ANY (doc_id, text, lang, …) corpus frame:
     * the gate runs it on the documents table (via the shared tokenized
     * cache); the Bench 1M-doc anchor runs it on the SyntheticDocs corpus,
-    * whose per-language goldens are exact by construction. The caller owns
-    * tokenization caching — pass a frame whose `t` column exists, or use
-    * [[summaryOver]] to tokenize + register with InternalCaches. */
+    * whose per-language goldens are exact by construction. `raw` is
+    * tokenized by [[Text.withTokens]] (a frame that already has `t` keeps
+    * it) and the tokenized frame is registered with InternalCaches. */
   def summaryOver(raw: DataFrame, cfg: Config = Config()): DataFrame =
-    summaryFrom(graft.core.InternalCaches.persist(
-      raw.withColumn("t", split(col("text"), " "))), cfg)
+    summaryFrom(graft.core.InternalCaches.persist(Text.withTokens(raw)), cfg)
 
   private def summaryFrom(docs: DataFrame, cfg: Config = Config()): DataFrame = {
     val total = docs.groupBy(col("lang"))

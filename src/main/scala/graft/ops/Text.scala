@@ -20,18 +20,32 @@ import graft.plans.TopK
   * The near-dup family (q34, q35, q36, q121, q133, q142, q149; q58/q82
   * via q35) runs candidate-then-verify on one pair kernel: `sharedKeyPairs`,
   * `bothSides`, `jaccardVerified`, `cappedShingles` and `minHashBands`.
+  *
+  * Tokens come from one split rule, `withTokens` (also called by Pipeline
+  * and StreamJoins), and every per-token occurrence count is one
+  * `tokenCounts` call.
   */
 object Text {
 
   private val Stopwords = Seq("the", "a", "and", "of", "to", "in", "is", "it")
 
-  /** tokens + shingle (3-gram) array per document. Idempotent: a frame that
+  /** The one tokenization rule: `t` = `text` split on single spaces, empty
+    * tokens kept (`"a  b"` → `a`, `""`, `b`). Idempotent: a frame that
     * already carries a `t` column (e.g. the pipeline's cached tokenized
-    * corpus) is passed through untouched, so composed operators never
-    * re-tokenize work a caller has already done/cached. */
+    * corpus, or a shingle stream) is passed through untouched, so composed
+    * operators never re-tokenize work a caller has already done/cached.
+    * Per-token counts over it go through [[tokenCounts]]. */
   private[graft] def withTokens(docs: DataFrame): DataFrame =
     if (docs.columns.contains("t")) docs
     else docs.withColumn("t", split(col("text"), " "))
+
+  /** The one per-token count: (keys…, w, `name`), one row per distinct
+    * (keys…, token w) of `docs`' tokens with its occurrence count. Grouping
+    * is by the selected names, so a key may be an aliased expression. */
+  private def tokenCounts(docs: DataFrame, keys: Column*)(name: String): DataFrame = {
+    val ex = withTokens(docs).select(keys :+ explode(col("t")).as("w"): _*)
+    ex.groupBy(ex.columns.map(col): _*).agg(count(lit(1)).as(name))
+  }
 
   private def withShingles(docs: DataFrame): DataFrame =
     withTokens(docs)
@@ -329,9 +343,7 @@ object Text {
     require(depth >= 1 && depth <= 8 && width >= 1, s"bad CMS ($depth x $width)")
     val bucketsExpr = expr(s"transform(sequence(0, ${depth - 1}), i -> " +
       s"struct(CAST(i AS BIGINT) AS d, (${sketchHash(docs.sparkSession, "i", "w")}) % $width AS b))")
-    val counts = graft.core.InternalCaches.persist(
-      withTokens(docs).select(explode(col("t")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("c")))
+    val counts = graft.core.InternalCaches.persist(tokenCounts(docs)("c"))
     val cells = counts
       .select(col("c"), explode(bucketsExpr).as("db"))
       .groupBy(col("db.d").as("d"), col("db.b").as("b"))
@@ -618,15 +630,12 @@ object Text {
     * round structures (Catalyst's partial+final HashAggregate IS the
     * map-side combine the reference builds manually). */
   def qWordCount(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(explode(split(col("text"), " ")).as("word"))
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("cnt"))
+    tokenCounts(Tables.documents(s, dir))("cnt").select(col("w").as("word"), col("cnt"))
 
   /** Reference A4: distinct words + average word length. */
   def qWordStats(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(explode(split(col("text"), " ")).as("word"))
+    withTokens(Tables.documents(s, dir))
+      .select(explode(col("t")).as("word"))
       .agg(countDistinct(col("word")).as("n_distinct"),
            count(lit(1)).as("n_words"),
            (sum(length(col("word"))).cast(DoubleType) / count(lit(1))).as("avg_len"))
@@ -637,21 +646,19 @@ object Text {
   def qTfIdf(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val n = docs.count()
-    val words = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
     // df cascades FROM tf: tf already has exactly one row per (doc_id,
     // word), so document frequency is a row count per word over tf — the
     // previous shape re-scanned and re-exploded the corpus for a
     // distinct + count. One corpus pass total; tf is persisted because
     // both the df aggregation and the final join consume it.
-    val tf = graft.core.InternalCaches.persist(
-      words.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf")))
-    val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
+    val tf = graft.core.InternalCaches.persist(tokenCounts(docs, col("doc_id"))("tf"))
+    val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
     // no forced broadcast: the term dictionary is NOT bounded at web scale
     // (open vocabulary); AQE picks a broadcast at runtime when df is small
-    tf.join(df, "word")
+    tf.join(df, "w")
       .withColumn("tfidf", round(col("tf") * log(lit(n.toDouble) / col("df")), 6))
       .filter(col("tfidf") >= 3.0)
-      .select(col("doc_id"), col("word"), col("tf"), col("df"), col("tfidf"))
+      .select(col("doc_id"), col("w").as("word"), col("tf"), col("df"), col("tfidf"))
   }
 
   /** Near-duplicate clustering: connected components over the **MinHash-LSH
@@ -961,14 +968,11 @@ object Text {
     * here and nowhere else in this codebase. */
   def buildVocab(docs: DataFrame, cap: Int, minFreq: Long = 1L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val counts = withTokens(docs)
-      .select(explode(col("t")).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
-      .filter(col("freq") >= minFreq)
-    counts.orderBy(col("freq").desc, col("tok").asc).limit(cap)
+    val counts = tokenCounts(docs)("freq").filter(col("freq") >= minFreq)
+    counts.orderBy(col("freq").desc, col("w").asc).limit(cap)
       .withColumn("id", row_number().over(
-        Window.orderBy(col("freq").desc, col("tok").asc)).cast(LongType))
-      .select(col("id"), col("tok"), col("freq"))
+        Window.orderBy(col("freq").desc, col("w").asc)).cast(LongType))
+      .select(col("id"), col("w").as("tok"), col("freq"))
   }
 
   def qVocab(s: SparkSession, dir: String): DataFrame =
@@ -1010,9 +1014,7 @@ object Text {
   def phraseScores(docs: DataFrame, delta: Long = 5L): DataFrame = {
     val toks = graft.core.InternalCaches.persist(
       withTokens(docs).select(col("t")))
-    val uni = graft.core.InternalCaches.persist(
-      toks.select(explode(col("t")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("c")))
+    val uni = graft.core.InternalCaches.persist(tokenCounts(toks)("c"))
     val total = uni.agg(sum(col("c")).cast(LongType).as("n"))
     val pairs = ngrams(toks, 2)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
@@ -1276,9 +1278,7 @@ object Text {
       (size(col("t")) - 1).cast(LongType).as("n_bigrams"),
       size(expr("graft_shingles(t, 2)")).cast(LongType).as("n_distinct_bigrams"),
       size(col("t")).cast(LongType).as("n_tok"))
-    val topTok = tok
-      .select(col("doc_id"), explode(col("t")).as("w"))
-      .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
+    val topTok = tokenCounts(tok, col("doc_id"))("c")
       .groupBy(col("doc_id")).agg(max(col("c")).as("max_tok_cnt"))
     bigrams.join(topTok, Seq("doc_id"))
   }
@@ -1852,12 +1852,10 @@ object Text {
     *    heaps (no posting-sized window partitions), then `rk` over ≤ k
     *    rows per term. */
   private def postings(tok: DataFrame, terms: Seq[String]): DataFrame =
-    graft.core.InternalCaches.persist(tok
-      .withColumn("dl", size(col("t")).cast(LongType))
-      .select(col("doc_id"), col("dl"), explode(col("t")).as("tok"))
-      .filter(col("tok").isin(terms: _*))
-      .groupBy(col("doc_id"), col("dl"), col("tok"))
-      .agg(count(lit(1)).cast(LongType).as("tf")))
+    graft.core.InternalCaches.persist(
+      tokenCounts(tok.withColumn("dl", size(col("t")).cast(LongType)),
+          col("doc_id"), col("dl"))("tf")
+        .filter(col("w").isin(terms: _*)).withColumnRenamed("w", "tok"))
 
   /** `docLens`: one (doc_id, dl) row per document. */
   private def corpusStats(docLens: DataFrame): DataFrame =
@@ -2108,11 +2106,9 @@ object Text {
     val fbTot = fb.agg(sum(col("bm25").cast(dec)).as("tot"))
     val wd = fb.crossJoin(broadcast(fbTot))
       .select(col("doc_id"), (col("bm25") / col("tot").cast(DoubleType)).as("wd"))
-    val rm = tok.join(broadcast(wd), "doc_id")
-      .withColumn("dl", size(col("t")).cast(LongType))
-      .select(col("doc_id"), col("wd"), col("dl"), explode(col("t")).as("w"))
-      .groupBy(col("doc_id"), col("wd"), col("dl"), col("w"))
-      .agg(count(lit(1)).cast(LongType).as("tfw"))
+    val rm = tokenCounts(
+        tok.join(broadcast(wd), "doc_id").withColumn("dl", size(col("t")).cast(LongType)),
+        col("doc_id"), col("wd"), col("dl"))("tfw")
       .withColumn("contrib",
         round(col("wd") * (col("tfw").cast(DoubleType) / col("dl")), 9))
       .groupBy(col("w"))
@@ -2256,8 +2252,7 @@ object Text {
       .select(col("p.w1"), col("p.w2"))
     val c12 = pairs.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).cast(LongType).as("c12"))
-    val uni = tok.select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("c"))
+    val uni = tokenCounts(tok)("c")
     // both rollups are vocab-bounded: persist so the totals agg below does
     // not re-run the corpus scans
     val c12P = graft.core.InternalCaches.persist(c12)
@@ -2549,8 +2544,7 @@ object Text {
     * small constant (no shuffle; a 1M-word vocab in 4 partitions is still
     * ~250k short rows each). */
   private def anchoredWords(docs: DataFrame, keys: Column*): DataFrame =
-    withTokens(docs).select(keys :+ explode(col("t")).as("w"): _*)
-      .groupBy(keys :+ col("w"): _*).agg(count(lit(1)).cast(LongType).as("freq"))
+    tokenCounts(docs, keys: _*)("freq")
       .withColumn("s", concat(lit(" "),
         expr("array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '  ')"),
         lit(" ")))
@@ -2953,10 +2947,7 @@ object Text {
     * finish is one double chain per source rounded to 6. */
   def zipfSlope(docs: DataFrame, topR: Int = 1000): DataFrame = {
     val dec = DecimalType(28, 12)
-    val freqs = withTokens(docs)
-      .select(col("source"), explode(col("t")).as("w"))
-      .groupBy(col("source"), col("w"))
-      .agg(count(lit(1)).cast(LongType).as("freq"))
+    val freqs = tokenCounts(docs, col("source"))("freq")
     val ranked = TopK.ranked(freqs, Seq("source"), Seq(TopK.desc("freq"), TopK.asc("w")),
       topR, "rank")
     val xy = ranked.select(col("source"), col("freq"), col("rank").cast(LongType).as("rank"),
@@ -3013,12 +3004,8 @@ object Text {
     * pinned double divisions (TTR, hapax, K) rounding to 6 at the end.
     * N² in Yule's K is computed in DOUBLE (N·N overflows Long at
     * ~3·10⁹ tokens; both engines run the identical double chain). */
-  def lexicalDiversity(docs: DataFrame): DataFrame = {
-    val counts = withTokens(docs)
-      .select(col("source"), explode(col("t")).as("w"))
-      .groupBy(col("source"), col("w"))
-      .agg(count(lit(1)).cast(LongType).as("c"))
-    counts.groupBy(col("source"))
+  def lexicalDiversity(docs: DataFrame): DataFrame =
+    tokenCounts(docs, col("source"))("c").groupBy(col("source"))
       .agg(sum(col("c")).cast(LongType).as("n_tokens"),
         count(lit(1)).cast(LongType).as("n_types"),
         sum(when(col("c") === 1L, 1L).otherwise(0L)).cast(LongType).as("n_hapax"),
@@ -3030,7 +3017,6 @@ object Text {
           .as("hapax_frac"),
         round(lit(10000.0) * (col("s2").cast(DoubleType) - col("nd"))
           / (col("nd") * col("nd")), 6).as("yule_k"))
-  }
 
   def qLexicalDiversity(s: SparkSession, dir: String): DataFrame =
     lexicalDiversity(Tables.documents(s, dir))
@@ -3526,9 +3512,7 @@ object Text {
     * rows never shuffle before the per-source partial-agg rollup. */
   def oovRate(train: DataFrame, eval: DataFrame, cap: Int = 100): DataFrame = {
     require(cap >= 1, s"cap must be >= 1, got $cap")
-    val vocab = withTokens(train)
-      .select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("freq"))
+    val vocab = tokenCounts(train)("freq")
       .orderBy(col("freq").desc, col("w").asc)
       .limit(cap)
       .select(col("w"), lit(1).as("in_vocab"))
@@ -3563,10 +3547,7 @@ object Text {
     // excluded from BOTH halves, exactly as the pre-fused two-filter form
     // behaved (round 20, advisor) — same single scan, same aggregation
     val counts = graft.core.InternalCaches.persist(
-      sh.select(col("source"), (col("doc_id") % 2).as("parity"),
-          explode(col("t")).as("w"))
-        .groupBy(col("source"), col("parity"), col("w"))
-        .agg(count(lit(1)).cast(LongType).as("cnt")))
+      tokenCounts(sh, col("source"), (col("doc_id") % 2).as("parity"))("cnt"))
     val vocab = counts.filter(col("parity") === 0)
       .groupBy(col("w")).agg(sum(col("cnt")).cast(LongType).as("freq"))
       .orderBy(col("freq").desc, col("w").asc).limit(500)
@@ -3597,9 +3578,7 @@ object Text {
   def negSamplingTable(docs: DataFrame, topK: Int = 50): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val freqs = graft.core.InternalCaches.persist(
-      withTokens(docs)
-        .select(explode(col("t")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("freq"))
+      tokenCounts(docs)("freq")
         .withColumn("s_scaled", floor(
           sqrt(col("freq").cast(DoubleType) * sqrt(col("freq").cast(DoubleType)))
             * lit(1000000.0)).cast(LongType)))
@@ -3633,12 +3612,8 @@ object Text {
     * divisions. */
   def goodTuring(docs: DataFrame, maxR: Int = 10): DataFrame = {
     require(maxR >= 1 && maxR <= 1000, s"maxR must be in [1,1000], got $maxR")
-    val freqs = withTokens(docs)
-      .select(col("source"), explode(col("t")).as("w"))
-      .groupBy(col("source"), col("w"))
-      .agg(count(lit(1)).cast(LongType).as("r"))
     val cc = graft.core.InternalCaches.persist(
-      freqs.filter(col("r") <= maxR + 1)
+      tokenCounts(docs, col("source"))("r").filter(col("r") <= maxR + 1)
         .groupBy(col("source"), col("r"))
         .agg(count(lit(1)).cast(LongType).as("n_r")))
     val nxt = cc.select(col("source").as("s2"), (col("r") - 1).as("r2"),
@@ -4123,8 +4098,7 @@ object Text {
     // this is consistency with q130's kernel more than a hot-path fix
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val h = s"graft_hash31(w, ${1 << 20})"
-    withTokens(docs).select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("c"))
+    tokenCounts(docs)("c")
       .withColumn("h", expr(h))
       .select(expr(s"h % $buckets").as("b"),
         expr(s"1L - 2L * ((h div $buckets) % 2L)").as("sgn"), col("c"))
@@ -4285,9 +4259,7 @@ object Text {
     require(maxPieceLen >= 2, s"maxPieceLen must be >= 2, got $maxPieceLen")
     require(maxWordLen >= 1 && thrDiv >= 1 && topK >= 1,
       s"bad params ($maxWordLen, $thrDiv, $topK)")
-    val words = graft.core.InternalCaches.persist(
-      withTokens(docs).select(explode(col("t")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("cnt")))
+    val words = graft.core.InternalCaches.persist(tokenCounts(docs)("cnt"))
     val thr = words.agg(sum(col("cnt")).cast(LongType)).head.getLong(0) / thrDiv
     def subFreq(l: Int): DataFrame =
       words.filter(length(col("w")) >= l)
@@ -4526,9 +4498,7 @@ object Text {
                      topK: Int = 100): DataFrame = {
     require(maxPieceLen >= 2 && maxWordLen >= 1 && thrDiv >= 1 && topK >= 1,
       s"bad params ($maxPieceLen, $maxWordLen, $thrDiv, $topK)")
-    val words = graft.core.InternalCaches.persist(
-      withTokens(docs).select(explode(col("t")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("cnt")))
+    val words = graft.core.InternalCaches.persist(tokenCounts(docs)("cnt"))
     val kept = seedPieces(words, maxPieceLen, thrDiv)
     val vocab = graft.core.InternalCaches.persist(
       pieceLogProbs(kept, "freq"))
@@ -4641,9 +4611,7 @@ object Text {
     val spark = docs.sparkSession
     import spark.implicits._
     val words = graft.core.InternalCaches.persist(
-      withTokens(docs).select(explode(col("t")).as("w"))
-        .filter(length(col("w")).between(1, maxWordLen))
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("cnt")))
+      tokenCounts(docs)("cnt").filter(length(col("w")).between(1, maxWordLen)))
     var masses: Seq[(String, Long)] = seedPieces(words, maxPieceLen, thrDiv)
       .select(col("p"), col("freq")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -4715,9 +4683,7 @@ object Text {
     val tm = masses.map(_._2).sum
     val vm = masses.map { case (p, m) => p -> lp9Of(m, tm) }.toMap
     val words = graft.core.InternalCaches.persist(
-      withTokens(eval).select(explode(col("t")).as("w"))
-        .filter(length(col("w")) >= 1)
-        .groupBy(col("w")).agg(count(lit(1)).cast(LongType).as("cnt")))
+      tokenCounts(eval)("cnt").filter(length(col("w")) >= 1))
     val seg = viterbiDp(words, Seq(Tuple1(vm)).toDF("vm"), maxPieceLen, maxWordLen)
     val unk = words
       .join(seg.select(col("w")), Seq("w"), "left_anti")
@@ -5176,6 +5142,15 @@ object Text {
          common AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
                     FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
                     GROUP BY 1, 2)"""
+
+  /** The BM25 oracles' corpus CTE chain (q113, q125, q157, q161, q177):
+    * `tok` the token arrays, `st` the 1-row (n_docs, sum_dl) stats and
+    * `ex` one (doc_id, dl, w) row per token occurrence. */
+  private val Bm25OracleChain: String =
+    """tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+         st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+                       CAST(sum(len(t)) AS BIGINT) AS sum_dl FROM tok),
+         ex AS (SELECT doc_id, len(t) AS dl, unnest(t) AS w FROM tok)"""
 
   /** The exact J >= 0.5 pairs: q34's oracle, and q35's (its LSH output
     * equals them on separated corpora, verified at the harness SF). */
@@ -6090,10 +6065,7 @@ object Text {
     // fuse as one DOUBLE-cast division per side (DuckDB decimal literals
     // would otherwise fuse in exact decimal), absent ranks marked 0
     "q125_rrf_fusion" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                       CAST(sum(len(t)) AS BIGINT) AS sum_dl FROM tok),
-         ex AS (SELECT doc_id, len(t) AS dl, unnest(t) AS w FROM tok),
+      s"""WITH $Bm25OracleChain,
          tf AS (SELECT doc_id, CAST(dl AS BIGINT) AS dl, w AS tok,
                        CAST(count(*) AS BIGINT) AS tf
                 FROM ex WHERE w IN ('vector', 'join', 'scan')
@@ -6708,10 +6680,7 @@ object Text {
     // normalized denominator), per-term round 9, per-doc decimal sum
     // (order-free) rounded to 6, ties by doc_id
     "q113_bm25" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                       CAST(sum(len(t)) AS BIGINT) AS sum_dl FROM tok),
-         ex AS (SELECT doc_id, len(t) AS dl, unnest(t) AS w FROM tok),
+      s"""WITH $Bm25OracleChain,
          tf AS (SELECT doc_id, CAST(dl AS BIGINT) AS dl, w AS tok,
                        CAST(count(*) AS BIGINT) AS tf
                 FROM ex WHERE w IN ('vector', 'join', 'scan')
@@ -7274,10 +7243,7 @@ object Text {
     // pre-collect rounding); pass 2 mirrors the q113 chain with the
     // weight multiplied OUTSIDE the idf*tfpart product, same assoc
     "q157_rm3_expansion" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                       CAST(sum(len(t)) AS BIGINT) AS sum_dl FROM tok),
-         ex AS (SELECT doc_id, len(t) AS dl, unnest(t) AS w FROM tok),
+      s"""WITH $Bm25OracleChain,
          tf1 AS (SELECT doc_id, CAST(dl AS BIGINT) AS dl, w AS tok,
                         CAST(count(*) AS BIGINT) AS tf
                  FROM ex WHERE w IN ('vector', 'join', 'scan')
@@ -7339,10 +7305,7 @@ object Text {
     // q177: the q161 scoring CTEs cut to the binary-relevance top-k;
     // rr as max of round-9 reciprocals (monotone in rank)
     "q177_mrr" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                       CAST(sum(len(t)) AS BIGINT) AS sum_dl FROM tok),
-         ex AS (SELECT doc_id, len(t) AS dl, unnest(t) AS w FROM tok),
+      s"""WITH $Bm25OracleChain,
          tf AS (SELECT doc_id, CAST(dl AS BIGINT) AS dl, w AS term,
                        CAST(count(*) AS BIGINT) AS tf
                 FROM ex WHERE w IN ('vector', 'join', 'scan')
@@ -7367,10 +7330,7 @@ object Text {
              THEN round(1.0 / CAST(rk AS DOUBLE), 9) END), 0.0) AS rr
          FROM sys GROUP BY term""",
     "q161_ndcg" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                       CAST(sum(len(t)) AS BIGINT) AS sum_dl FROM tok),
-         ex AS (SELECT doc_id, len(t) AS dl, unnest(t) AS w FROM tok),
+      s"""WITH $Bm25OracleChain,
          tf AS (SELECT doc_id, CAST(dl AS BIGINT) AS dl, w AS term,
                        CAST(count(*) AS BIGINT) AS tf
                 FROM ex WHERE w IN ('vector', 'join', 'scan')

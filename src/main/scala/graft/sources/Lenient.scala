@@ -23,14 +23,6 @@ object Lenient {
       .option("columnNameOfCorruptRecord", CorruptCol)
       .csv(path)
 
-  /** JSON-lines with schema; malformed lines land in [[CorruptCol]]. */
-  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(schema.add(CorruptCol, StringType, nullable = true))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(path)
-
   /** Split a lenient read into (clean rows without the audit column,
     * quarantined raw lines).
     *

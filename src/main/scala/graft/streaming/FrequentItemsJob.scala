@@ -46,6 +46,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * added to the scan's `numOutputRows`, so the progress events still count
   * them. Any other source or plan (a filter, join or aggregate; Kafka,
   * file, rate) is read with one job over the planned rows.
+  *
+  * Limit of that one-job path: a socket plan that is not a bare projection
+  * (a filter, say) is read by Spark's `TextSocketMicroBatchStream` reader,
+  * which fetches row j with `ListBuffer.apply(j)`, a walk of j nodes. One
+  * batch of m lines then costs about m²/(2·numPartitions) node walks, so
+  * m²/2 at `numPartitions` 1, the setting that keeps arrival order. Keep
+  * such socket batches small, or the plan a bare projection.
   */
 object FrequentItemsJob {
 

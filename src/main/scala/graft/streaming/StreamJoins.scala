@@ -3,10 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Stream-stream and stream-static joins — the Structured Streaming join
-  * surface. Stream-stream inner joins need watermarks on both sides plus a
-  * time-range condition so the state store can evict: without the range
-  * bound, state grows without limit at 100 TB/day ingest.
+/** Stream-stream joins and ingest-time decontamination. Stream-stream inner
+  * joins need watermarks on both sides plus a time-range condition so the
+  * state store can evict: without the range bound, state grows without
+  * limit at 100 TB/day ingest.
   */
 object StreamJoins {
 
@@ -43,12 +43,6 @@ object StreamJoins {
       joinType)
   }
 
-  /** Stream-static enrichment: a stream joined to a broadcastable static
-    * dimension — no state store involved; the static side is re-planned
-    * per micro-batch (so a refreshed dim parquet is picked up). */
-  def enrichWithDim(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), key)
-
   /** Streaming decontamination: the ingest-time twin of
     * [[graft.ops.Text.decontaminate]]. Each arriving document (doc_id,
     * text) is flagged `contaminated` iff it shares at least one n-token
@@ -73,8 +67,7 @@ object StreamJoins {
     val spark = docs.sparkSession
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val evalSh = evalDocs
-      .withColumn("t", split(col("text"), " "))
+    val evalSh = graft.ops.Text.withTokens(evalDocs)
       .filter(size(col("t")) >= n)
       .select(explode(expr(s"graft_shingles(t, $n)")).as("h"))
       .distinct().as[Long].collect()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.ops.Text
@@ -62,9 +62,4 @@ object StreamingNearDup {
           out.iterator
       }
   }
-
-  /** Distinct (canonical, duplicate) pairs per micro-batch sink — a doc
-    * hitting several bands of the same canonical collapses to one pair. */
-  def distinctPairs(pairs: Dataset[CandidatePair]): DataFrame =
-    pairs.toDF().select(col("canonical_id"), col("duplicate_id")).dropDuplicates()
 }

@@ -1,15 +1,19 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev scratchpad for optimization-round A/B experiments: times named gate
   * queries with the noop sink (5 runs) and prints a result fingerprint
-  * (count + xxhash over the stringified sorted rows), so a candidate rewrite
-  * proves result-identity against the shipped operator before it replaces
-  * it. NOT part of any graded surface, and lives in src/test so lab churn
-  * never invalidates the resumable bench manifest (keyed on src/main/scala
-  * only). Names are SparkEntry query names, as in TimeProbe.
+  * (count + xxhash over the stringified rows + schema string), so a
+  * candidate rewrite proves result-identity against the shipped operator
+  * before it replaces it. Every run starts from released `InternalCaches`,
+  * so each one is cold in its caches and its Spark job count (printed per
+  * run, construct + noop write) is the operator's own. NOT part of any
+  * graded surface, and lives in src/test so lab churn never invalidates the
+  * resumable bench manifest (keyed on src/main/scala only). Names are
+  * SparkEntry query names, as in TimeProbe.
   * Usage: sbt "Test/runMain graft.OptLab <query name> [...]"
   */
 object OptLab {
@@ -18,7 +22,7 @@ object OptLab {
     val row = df.select(
       count(lit(1)).as("n"),
       sum(xxhash64(concat_ws("|", cols: _*)).cast("decimal(38,0)")).as("h")).collect()(0)
-    s"n=${row.get(0)} h=${row.get(1)}"
+    s"n=${row.get(0)} h=${row.get(1)} schema=${df.schema.simpleString}"
   }
 
   def main(args: Array[String]): Unit = {
@@ -29,17 +33,41 @@ object OptLab {
     }
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.Sessions.local("optlab")
-    spark.sparkContext.setLogLevel("WARN")
+    val sc = spark.sparkContext
+    sc.setLogLevel("WARN")
     spark.read.parquet(s"$dir/lineitem.parquet")
       .limit(10000).groupBy("l_returnflag").count().collect()
 
+    // Jobs are counted per job description; a marker job sent after a run
+    // travels the same listener queue, so once it is seen every job is.
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(d => jobs.merge(d, 1, (a, b) => a + b))
+    })
+    def jobsOf(desc: String): Int = {
+      sc.setJobDescription(s"$desc-marker")
+      sc.parallelize(Seq(1), 1).count()
+      val t0 = System.nanoTime()
+      while (!jobs.containsKey(s"$desc-marker") && System.nanoTime() - t0 < 30e9) Thread.sleep(5)
+      jobs.getOrDefault(desc, 0)
+    }
+
     def bench(name: String)(df: => DataFrame): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      val runs = (1 to 5).map(_ => Bench.timeNoop(df))
+      val runs = (1 to 5).map { i =>
+        graft.core.InternalCaches.release(spark)
+        sc.setJobDescription(s"$name#$i")
+        val secs = Bench.timeNoop(df)
+        (secs, jobsOf(s"$name#$i"))
+      }
+      graft.core.InternalCaches.release(spark)
+      sc.setJobDescription(s"$name#fp")
       val fp = fingerprint(df)
       graft.core.InternalCaches.release(spark)
-      println(f"LAB $name%-28s ${runs.map(v => f"$v%.2f").mkString(" ")}  $fp")
-      spark.sparkContext.setJobDescription(null)
+      sc.setJobDescription(null)
+      println(f"LAB $name%-28s ${runs.map(r => f"${r._1}%.2f").mkString(" ")}  " +
+        s"jobs=${runs.map(_._2).mkString(",")}  $fp")
     }
 
     for (name <- args) SparkEntry.queries.get(name) match {

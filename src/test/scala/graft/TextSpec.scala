@@ -2556,6 +2556,32 @@ class TextSpec extends SparkSpec {
     assert(got("s2") == (((3L, 3L, 3L, 1.0, 1.0, 0.0))), s"$got")
   }
 
+  test("token counts on an edge corpus equal a plain split(\" \", -1) count") {
+    import spark.implicits._
+    // "a  b" holds an empty token between its two spaces, "b " a trailing
+    // one, and an empty text is one empty token; "😀" is one non-BMP token
+    val rows = Seq(
+      (1L, "s1", "a  b"), (2L, "s1", "b "), (3L, "s1", ""),
+      (4L, "s2", "😀 x 😀"), (5L, "s2", "x"), (6L, "s3", ""))
+    val docs = rows.toDF("doc_id", "source", "text")
+    def counts(texts: Seq[String]): Map[String, Long] =
+      texts.flatMap(_.split(" ", -1)).groupBy(identity).map { case (t, xs) => t -> xs.size.toLong }
+    val want = rows.groupBy(_._2).map { case (src, rs) =>
+      val c = counts(rs.map(_._3)).values
+      src -> ((c.sum, c.size.toLong, c.count(_ == 1L).toLong))
+    }
+    val got = Text.lexicalDiversity(docs).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    assert(got == want, s"lexicalDiversity: got $got, want $want")
+    // cap ≥ vocab: every token, ordered (freq desc, token asc); these
+    // tokens order the same by UTF-16 units and by UTF-8 bytes
+    val vocab = Text.buildVocab(docs, cap = 10).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    val wantVocab = counts(rows.map(_._3)).toSeq.sortBy { case (t, f) => (-f, t) }
+      .zipWithIndex.map { case ((t, f), i) => (i + 1L, t, f) }
+    assert(vocab == wantVocab, s"buildVocab: got $vocab, want $wantVocab")
+  }
+
   test("splitLeakage: verbatim, shared-shingle and clean eval docs are tiered exactly") {
     import spark.implicits._
     try {
