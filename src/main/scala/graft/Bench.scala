@@ -985,7 +985,8 @@ object Bench {
       val pipe = opt(big)(pipelineSection())
       val tok = opt(big)(tokSection())
       val vec = opt(big)(vecSection())
-      // BASELINE.md TEST 1 artificial100M (needs SPARK_DRIVER_MEM >= 48g)
+      // BASELINE.md TEST 1 artificial100M (runs in a 12 GB heap on 4 cores,
+      // 1.8 GB live after GC)
       val r100m = opt(big)(geometrySection("100m", nClusterPts = 100000008L,
         numPartitions = 256, k = 110, withExact = true))
       val graph = opt(big)(graphSection())

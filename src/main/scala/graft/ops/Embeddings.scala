@@ -671,6 +671,36 @@ object Embeddings {
   def qLogregTrain(s: SparkSession, dir: String): DataFrame =
     logregTrain(Tables.embeddings(s, dir))
 
+  /** The near-dup graph kernel: the q41 cosine graph and the two frames
+    * the graph operators ([[pageRank]], [[hits]], [[assortativity]],
+    * [[transitivity]], [[kCore]]) derive from it, each written once.
+    *
+    * Persist rule: the q41 block outer product is the expensive subtree,
+    * so it runs once per gate. Whoever reads an edge frame more than once
+    * persists it (`InternalCaches.persist`) or, inside an iteration,
+    * lazily `localCheckpoint`s it: cosineTriangles, hits, assortativity
+    * and transitivity persist their own edge projection, kCore
+    * checkpoints each peel, and pageRank takes its edges persisted
+    * ([[qPageRank]] does it). A derived frame read more than once
+    * (pageRank's degrees and adjacency, assortativity's degrees) is
+    * persisted where it is built. None of the three pieces persists
+    * anything itself. */
+  private def nearDupEdges(s: SparkSession, dir: String): DataFrame =
+    cosineNearDup(Tables.embeddings(s, dir), 0.4).select(col("d1"), col("d2"))
+
+  /** Both orientations of an undirected `(d1, d2)` edge list as `(src, dst)`. */
+  private def symmetrized(edges: DataFrame): DataFrame =
+    edges.select(col("d1").as("src"), col("d2").as("dst"))
+      .union(edges.select(col("d2").as("src"), col("d1").as("dst")))
+
+  /** Per-node degree `(vec_id, deg)` of a `(d1, d2)` edge list: one scan,
+    * each edge row counted at both endpoints, so a repeated edge counts
+    * twice and a self-loop counts 2 at its node — the degree of the
+    * [[symmetrized]] list grouped by `src`. */
+  private def degrees(edges: DataFrame): DataFrame = edges
+    .select(explode(array(col("d1"), col("d2"))).as("vec_id"))
+    .groupBy(col("vec_id")).agg(count(lit(1)).cast(LongType).as("deg"))
+
   /** Fixed-iteration PageRank over an undirected edge list `(d1, d2)` —
     * the importance signal used to pick canonical pages / weight training
     * mixes (the reference has no iterative graph op at all; this is the
@@ -690,17 +720,16 @@ object Embeddings {
     * aggregation) whose width is the edge count — the same
     * edge-partitioned join a 1000-executor cluster runs. The node count
     * is the only driver scalar. Iterations are a constant, so the lineage
-    * stays bounded. */
+    * stays bounded. `edges` is read three times (the kernel's persist
+    * rule): pass it persisted. */
   def pageRank(edges: DataFrame, iters: Int, scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val sym = edges.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(edges.select(col("d2").as("src"), col("d1").as("dst")))
-    val deg = graft.core.InternalCaches.persist(
-      sym.groupBy(col("src")).agg(count(lit(1)).cast(LongType).as("deg")))
-    val adj = graft.core.InternalCaches.persist(sym.join(deg, "src"))
+    val deg = graft.core.InternalCaches.persist(degrees(edges))
+    val adj = graft.core.InternalCaches.persist(
+      symmetrized(edges).join(deg.withColumnRenamed("vec_id", "src"), "src"))
     val n = deg.count()
     val tele = (15L * scale) / (100L * n)
-    var ranks = deg.select(col("src").as("vec_id"), lit(scale / n).as("r"))
+    var ranks = deg.select(col("vec_id"), lit(scale / n).as("r"))
     for (_ <- 1 to iters) {
       ranks = adj.join(ranks, adj("src") === ranks("vec_id"))
         .select(col("dst"), expr("r div deg").as("c"))
@@ -714,9 +743,7 @@ object Embeddings {
 
   /** Gate: 3 PageRank iterations over the q41 cosine near-dup graph. */
   def qPageRank(s: SparkSession, dir: String): DataFrame =
-    pageRank(graft.core.InternalCaches.persist(
-      cosineNearDup(Tables.embeddings(s, dir), 0.4).select(col("d1"), col("d2"))),
-      iters = 3)
+    pageRank(graft.core.InternalCaches.persist(nearDupEdges(s, dir)), iters = 3)
 
   /** Fixed-iteration HITS (Kleinberg 1999, JACM 46(5)) over a DIRECTED
     * edge list `(d1 → d2)` — the hubs-and-authorities decomposition
@@ -768,8 +795,7 @@ object Embeddings {
     * localCheckpoints (the q118 BPE-loop pattern): without the cut the
     * plan QUADRUPLES per iteration, and with it plan depth stays flat
     * by construction. */
-  private[graft] def hitsDeclarative(edges: DataFrame, iters: Int,
-                                     scale: Long = 1000000L): DataFrame = {
+  def hits(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1,20], got $iters")
     // ONE unpartitioned cache (round 16): the r15 double pre-partitioned
     // cache bought nothing — AQE hides a cached plan's partitioning
@@ -843,23 +869,10 @@ object Embeddings {
         coalesce(col("auth_units"), lit(0L)).as("auth_units"))
   }
 
-  /** Production alias — see [[hitsDeclarative]] for the full engine
-    * design and the round-16 measurement record (a co-partitioned RDD
-    * loop was built and rejected: narrow joins on a shared
-    * HashPartitioner do eliminate the per-half-step edge exchanges, but
-    * deserialized boxed-tuple caching plus RDD-lane serialization made
-    * it 2-10× SLOWER than this Tungsten path at 1M nodes and drove the
-    * box into disk-spill collapse on later reps — the r15 adjacency
-    * experiment's lesson again, one layer deeper). */
-  def hits(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame =
-    hitsDeclarative(edges, iters, scale)
-
   /** Gate: 3 HITS iterations over the q41 near-dup graph oriented
     * low-id → high-id (the q86 triangle orientation). */
   def qHits(s: SparkSession, dir: String): DataFrame =
-    hits(graft.core.InternalCaches.persist(
-      cosineNearDup(Tables.embeddings(s, dir), 0.4).select(col("d1"), col("d2"))),
-      iters = 3)
+    hits(nearDupEdges(s, dir), iters = 3)
 
   /** Degree assortativity of an undirected graph (Newman 2002, PRL
     * 89.208701) — the graph-health scalar beside the triangle counts
@@ -884,17 +897,11 @@ object Embeddings {
     * itself is distinct-keyed); the rollup is 1-row. */
   def assortativity(edges: DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
-    // sym feeds the degree agg AND the endpoint join; the edge input
-    // appears twice inside it — persist, or the upstream edge build
-    // (q41's block product at the gate) runs four times
-    val sym = graft.core.InternalCaches.persist(
-      edges.select(col("d1").as("src"), col("d2").as("dst"))
-        .union(edges.select(col("d2").as("src"), col("d1").as("dst"))))
-    val deg = graft.core.InternalCaches.persist(
-      sym.groupBy(col("src")).agg(count(lit(1)).cast(LongType).as("deg")))
-    val ej = sym
-      .join(deg.select(col("src"), col("deg").as("j")), "src")
-      .join(deg.select(col("src").as("dst"), col("deg").as("k")), "dst")
+    val e = graft.core.InternalCaches.persist(edges.select(col("d1"), col("d2")))
+    val deg = graft.core.InternalCaches.persist(degrees(e))
+    val ej = symmetrized(e)
+      .join(deg.select(col("vec_id").as("src"), col("deg").as("j")), "src")
+      .join(deg.select(col("vec_id").as("dst"), col("deg").as("k")), "dst")
     val sums = ej.agg(
       count(lit(1)).cast(LongType).as("m"),
       sum(col("j").cast(dec)).as("sj"),
@@ -915,8 +922,7 @@ object Embeddings {
 
   /** Gate: assortativity of the q41 cosine near-dup graph. */
   def qAssortativity(s: SparkSession, dir: String): DataFrame =
-    assortativity(cosineNearDup(Tables.embeddings(s, dir), 0.4)
-      .select(col("d1"), col("d2")))
+    assortativity(nearDupEdges(s, dir))
 
   /** Global clustering coefficient (transitivity) — C = 3·triangles /
     * wedges, the one-number cohesion summary completing the graph-health
@@ -938,9 +944,7 @@ object Embeddings {
       edges.select(col("d1"), col("d2")))
     val triTotal = triangleCounts(e)
       .agg(coalesce(sum(col("n_tri")), lit(0L)).cast(LongType).as("tri3"))
-    val deg = e.select(explode(array(col("d1"), col("d2"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).cast(LongType).as("deg"))
-    val stats = deg.agg(
+    val stats = degrees(e).agg(
       count(lit(1)).cast(LongType).as("n_nodes"),
       sum(expr("CAST(deg AS DECIMAL(38,0)) * (deg - 1)")).as("wedges2"))
     val edgeCount = e.agg(count(lit(1)).cast(LongType).as("n_edges"))
@@ -956,8 +960,7 @@ object Embeddings {
 
   /** Gate: transitivity of the q41 cosine near-dup graph. */
   def qTransitivity(s: SparkSession, dir: String): DataFrame =
-    transitivity(cosineNearDup(Tables.embeddings(s, dir), 0.4)
-      .select(col("d1"), col("d2")))
+    transitivity(nearDupEdges(s, dir))
 
   /** Bounded k-core peeling (Seidman 1983's coreness, the iterated-peel
     * formulation) — the cohesion filter completing the near-dup-graph
@@ -990,13 +993,9 @@ object Embeddings {
     * survivors' degree table — all integers. */
   def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 1 && iters <= 20, s"bad k=$k/iters=$iters")
-    def degrees(e: DataFrame): DataFrame = e
-      .select(explode(array(col("d1"), col("d2"))).as("vec_id"))
-      .groupBy(col("vec_id")).agg(count(lit(1)).cast(LongType).as("deg"))
     var e = edges.select(col("d1"), col("d2")).localCheckpoint(false)
     var converged = false
     for (_ <- 1 to iters if !converged) {
-      // consumed three times (isEmpty + both anti joins) — checkpoint
       val dropped = degrees(e).filter(col("deg") < k.toLong)
         .select(col("vec_id")).localCheckpoint(false)
       if (dropped.isEmpty) converged = true
@@ -1011,8 +1010,7 @@ object Embeddings {
 
   /** Gate: 3 peels at k = 2 over the q41 near-dup graph. */
   def qKCore(s: SparkSession, dir: String): DataFrame =
-    kCore(cosineNearDup(Tables.embeddings(s, dir), 0.4)
-      .select(col("d1"), col("d2")), k = 2, iters = 3)
+    kCore(nearDupEdges(s, dir), k = 2, iters = 3)
 
   /** Label-centroid affinity matrix — pairwise cosine between the
     * per-label centroids (q42's vectors, carried past the norm): the
@@ -1806,6 +1804,16 @@ object Embeddings {
     sb.toString
   }
 
+  /** The q41 graph as the DuckDB CTE `name`: `(d1, d2)`, d1 < d2, at the
+    * gate threshold — the edge list of the q86, q94, q166, q174, q175 and
+    * q176 oracles. AS MATERIALIZED because each reads it more than once
+    * (the DuckDB CTE-inlining gotcha). */
+  private def nearDupEdgesOracle(name: String): String =
+    s"""$name AS MATERIALIZED (
+          SELECT a.vec_id AS d1, b.vec_id AS d2
+          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+          WHERE round($CosSql, 6) >= 0.4)"""
+
   /** One PageRank power-iteration step in DuckDB — integer fixed-point,
     * mirroring [[pageRank]]'s `div` truncation exactly (all values
     * positive, so `//` floor == `div` truncation). sum(BIGINT) is HUGEINT
@@ -1840,10 +1848,7 @@ object Embeddings {
           FROM hr$k CROSS JOIN hm$k)"""
 
   private def hitsOracle: String =
-    s"""WITH e AS MATERIALIZED (
-          SELECT a.vec_id AS d1, b.vec_id AS d2
-          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE round($CosSql, 6) >= 0.4),
+    s"""WITH ${nearDupEdgesOracle("e")},
         nodesc AS MATERIALIZED (
           SELECT DISTINCT vec_id FROM (
             SELECT d1 AS vec_id FROM e UNION ALL SELECT d2 FROM e)),
@@ -1858,10 +1863,7 @@ object Embeddings {
     * DECIMAL(38,0)), exact integer numerator/denominator, one round-6
     * division with the zero-denominator guard. */
   private def assortativityOracle: String =
-    s"""WITH e AS MATERIALIZED (
-          SELECT a.vec_id AS d1, b.vec_id AS d2
-          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE round($CosSql, 6) >= 0.4),
+    s"""WITH ${nearDupEdgesOracle("e")},
         sym AS (SELECT d1 AS src, d2 AS dst FROM e
                 UNION ALL SELECT d2, d1 FROM e),
         deg AS MATERIALIZED (
@@ -1895,10 +1897,7 @@ object Embeddings {
             AND d2 IN (SELECT vec_id FROM kp$r))"""
 
   private def kCoreOracle: String =
-    s"""WITH e0 AS MATERIALIZED (
-          SELECT a.vec_id AS d1, b.vec_id AS d2
-          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE round($CosSql, 6) >= 0.4),
+    s"""WITH ${nearDupEdgesOracle("e0")},
         ${kCorePeelSql("e0", 1)},
         ${kCorePeelSql("e1", 2)},
         ${kCorePeelSql("e2", 3)}
@@ -1910,10 +1909,7 @@ object Embeddings {
     * Σ per-node participation = 3T so C = 2·Σtri/Σdeg(deg−1), mirrored
     * as the identical double chain. */
   private def transitivityOracle: String =
-    s"""WITH e AS MATERIALIZED (
-          SELECT a.vec_id AS d1, b.vec_id AS d2
-          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE round($CosSql, 6) >= 0.4),
+    s"""WITH ${nearDupEdgesOracle("e")},
         tri AS (SELECT CAST(count(*) AS BIGINT) * 3 AS tri3 FROM (
           SELECT e1.d1 FROM e e1 JOIN e e2 ON e1.d2 = e2.d1
                        JOIN e e3 ON e3.d1 = e1.d1 AND e3.d2 = e2.d2)),
@@ -1974,10 +1970,7 @@ object Embeddings {
   }
 
   private def pageRankOracle: String =
-    s"""WITH e AS MATERIALIZED (
-          SELECT a.vec_id AS d1, b.vec_id AS d2
-          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE round($CosSql, 6) >= 0.4),
+    s"""WITH ${nearDupEdgesOracle("e")},
         adjc AS MATERIALIZED (
           SELECT d1 AS src, d2 AS dst FROM e
           UNION ALL SELECT d2 AS src, d1 AS dst FROM e),
@@ -2209,13 +2202,8 @@ object Embeddings {
       s"""SELECT a.vec_id AS d1, b.vec_id AS d2, round($CosSql, 6) AS sim
           FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
           WHERE round($CosSql, 6) >= 0.4""",
-    // q86: the edge CTE is the q41 graph; AS MATERIALIZED because it is
-    // referenced three times (the DuckDB CTE-inlining gotcha)
     "q86_triangles" ->
-      s"""WITH e AS MATERIALIZED (
-            SELECT a.vec_id AS d1, b.vec_id AS d2
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE round($CosSql, 6) >= 0.4),
+      s"""WITH ${nearDupEdgesOracle("e")},
           tri AS (
             SELECT e1.d1 AS a, e1.d2 AS b, e2.d2 AS c
             FROM e e1 JOIN e e2 ON e1.d2 = e2.d1

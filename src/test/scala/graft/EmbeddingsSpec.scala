@@ -636,6 +636,32 @@ class EmbeddingsSpec extends SparkSpec {
     } finally graft.core.InternalCaches.release(spark)
   }
 
+  test("graph operators share one degree rule on a multigraph input") {
+    import spark.implicits._
+    try {
+      // triangle {1,2,3} + tail 3-4-5, with (1,2) listed twice and (4,5)
+      // also listed as (5,4): 7 edge rows. Every row counts at both of its
+      // endpoints, so deg = 1:3 (1-2 twice, 1-3), 2:3 (2-1 twice, 2-3),
+      // 3:3 (3-1, 3-2, 3-4), 4:3 (4-3, 4-5, 5-4), 5:2 (5-4, 4-5); Σ = 14.
+      //   pageRank: 5 nodes;
+      //   assortativity: n_nodes 5, n_edges 14 div 2 = 7, max_degree 3;
+      //   transitivity: n_nodes 5, n_edges 7 (rows),
+      //     n_wedges = (4·(3·2) + 2·1) / 2 = 13;
+      //   kCore(k = 2): every degree ≥ 2, nothing peels, degrees unchanged
+      //     (a simple-graph rule would give 5 degree 1 and peel 5, then 4).
+      val g = Seq((1L, 2L), (1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 4L))
+        .toDF("d1", "d2")
+      assert(Embeddings.pageRank(g, iters = 3).count() == 5L)
+      val a = Embeddings.assortativity(g).collect().head
+      assert((a.getLong(0), a.getLong(1), a.getLong(2)) == ((5L, 7L, 3L)), s"$a")
+      val t = Embeddings.transitivity(g).collect().head
+      assert((t.getLong(0), t.getLong(1), t.getLong(3)) == ((5L, 7L, 13L)), s"$t")
+      val core = Embeddings.kCore(g, k = 2, iters = 3)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(core == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L, 5L -> 2L), s"$core")
+    } finally graft.core.InternalCaches.release(spark)
+  }
+
   test("brierDecomposition: closed-form plant and the Murphy identity on the corpus") {
     import spark.implicits._
     try {

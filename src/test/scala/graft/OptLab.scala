@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.JobCount.jobsOf
 
 /** Dev scratchpad for optimization-round A/B experiments: times named gate
   * queries with the noop sink (5 runs) and prints a result fingerprint
@@ -33,39 +33,20 @@ object OptLab {
     }
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.Sessions.local("optlab")
-    val sc = spark.sparkContext
-    sc.setLogLevel("WARN")
+    spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$dir/lineitem.parquet")
       .limit(10000).groupBy("l_returnflag").count().collect()
 
-    // Jobs are counted per job description; a marker job sent after a run
-    // travels the same listener queue, so once it is seen every job is.
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    sc.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(d => jobs.merge(d, 1, (a, b) => a + b))
-    })
-    def jobsOf(desc: String): Int = {
-      sc.setJobDescription(s"$desc-marker")
-      sc.parallelize(Seq(1), 1).count()
-      val t0 = System.nanoTime()
-      while (!jobs.containsKey(s"$desc-marker") && System.nanoTime() - t0 < 30e9) Thread.sleep(5)
-      jobs.getOrDefault(desc, 0)
-    }
-
     def bench(name: String)(df: => DataFrame): Unit = {
-      val runs = (1 to 5).map { i =>
+      val runs = (1 to 5).map { _ =>
         graft.core.InternalCaches.release(spark)
-        sc.setJobDescription(s"$name#$i")
-        val secs = Bench.timeNoop(df)
-        (secs, jobsOf(s"$name#$i"))
+        var secs = 0.0
+        val jobs = jobsOf(spark) { secs = Bench.timeNoop(df) }
+        (secs, jobs)
       }
       graft.core.InternalCaches.release(spark)
-      sc.setJobDescription(s"$name#fp")
       val fp = fingerprint(df)
       graft.core.InternalCaches.release(spark)
-      sc.setJobDescription(null)
       println(f"LAB $name%-28s ${runs.map(r => f"${r._1}%.2f").mkString(" ")}  " +
         s"jobs=${runs.map(_._2).mkString(",")}  $fp")
     }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.JobCount.jobsOf
+
 /** Codified physical-plan contracts for the scale-critical queries — the
   * automated twin of PLANS.md. Each test pins the plan property that makes
   * the operator survive a 100 TB scale-up; a Catalyst upgrade, an operator
@@ -36,37 +38,6 @@ class PlanContractSpec extends SparkSpec {
     } finally graft.core.InternalCaches.release(spark)
   }
 
-  /** Spark jobs started while `body` runs, counted by a SparkListener on a
-    * local-property tag. A marker job submitted afterwards travels the
-    * same listener queue, so once it is seen every earlier job start is. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val key = "graft.contract.tag"
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(`tag`) => jobs.add(e.jobId)
-          case Some(t) if t == s"$tag-marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    def tagged(t: String)(f: => Unit): Unit = {
-      sc.setLocalProperty(key, t)
-      try f finally sc.setLocalProperty(key, null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      tagged(tag)(body)
-      tagged(s"$tag-marker")(sc.parallelize(Seq(1), 1).count())
-      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener queue did not drain")
-      jobs.size
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("HW1/HW2 point ops: bounded job counts on the driver paths") {
     // eager-path operators hide their distributed work behind a bare
     // LocalTableScan, so the job count is the contract: the exact outliers
@@ -88,21 +59,21 @@ class PlanContractSpec extends SparkSpec {
       pts.count()
       val radius = Geometry.mrFFT(pts, k = 30, l = 4)._1
       var exact: org.apache.spark.sql.DataFrame = null
-      val exactJobs = jobsOf { exact = Geometry.exactOutliers(pts, radius, 10) }
+      val exactJobs = jobsOf(spark) { exact = Geometry.exactOutliers(pts, radius, 10) }
       val p = exact.queryExecution.executedPlan.toString
       assert(p.contains("LocalTableScan") && !p.contains("Exchange"),
         s"exact outliers left the driver path:\n$p")
       assert(planted.map(_._1).toSet.subsetOf(exact.collect().map(_.getLong(0)).toSet))
       assert(exactJobs <= 2, s"exactOutliers ran $exactJobs jobs")
-      val fftJobs = jobsOf(Geometry.mrFFT(pts, k = 30, l = 4))
+      val fftJobs = jobsOf(spark)(Geometry.mrFFT(pts, k = 30, l = 4))
       assert(fftJobs <= 2, s"mrFFT ran $fftJobs jobs")
       var approx: org.apache.spark.sql.DataFrame = null
-      val approxJobs = jobsOf { approx = Geometry.approxOutliers(pts, radius, 10) }
+      val approxJobs = jobsOf(spark) { approx = Geometry.approxOutliers(pts, radius, 10) }
       assert(approxJobs <= 1, s"approxOutliers ran $approxJobs jobs")
       val ap = approx.queryExecution.executedPlan
       assert(ap.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec],
         s"approx outliers left the driver path:\n$ap")
-      assert(jobsOf(approx.collect()) == 0)
+      assert(jobsOf(spark)(approx.collect()) == 0)
     } finally { pts.unpersist(); graft.core.InternalCaches.release(spark) }
   }
 
@@ -120,10 +91,10 @@ class PlanContractSpec extends SparkSpec {
     try {
       var bpe = 0
       val bound = 18
-      val bpeJobs = jobsOf { bpe = Text.bpeTrain(docs, nMerges = 8).collect().length }
+      val bpeJobs = jobsOf(spark) { bpe = Text.bpeTrain(docs, nMerges = 8).collect().length }
       assert(bpe == 8 && bpeJobs <= bound, s"bpeTrain ran $bpeJobs jobs for $bpe merges")
       var wp = 0
-      val wpJobs = jobsOf { wp = Text.wordpieceTrain(docs, nMerges = 8).collect().length }
+      val wpJobs = jobsOf(spark) { wp = Text.wordpieceTrain(docs, nMerges = 8).collect().length }
       assert(wp == 8 && wpJobs <= bound, s"wordpieceTrain ran $wpJobs jobs for $wp merges")
     } finally graft.core.InternalCaches.release(spark)
   }
@@ -515,7 +486,7 @@ class PlanContractSpec extends SparkSpec {
       }
       // q157 collects its expansion-term weights while it is built: pass 1,
       // the relevance model and the weight collect run here, not at write
-      val rm3Jobs = jobsOf(SparkEntry.queries("q157_rm3_expansion")(spark, sfDir))
+      val rm3Jobs = jobsOf(spark)(SparkEntry.queries("q157_rm3_expansion")(spark, sfDir))
       assert(rm3Jobs == 21, s"q157 construction ran $rm3Jobs jobs")
     } finally graft.core.InternalCaches.release(spark)
   }
@@ -912,6 +883,26 @@ class PlanContractSpec extends SparkSpec {
         s"q175 planned a nested loop:\n$p175")
       assert(p175.contains("Scan ExistingRDD"),
         s"q175 per-peel lineage cut not live:\n$p175")
+    } finally graft.core.InternalCaches.release(spark)
+  }
+
+  test("near-dup graph family: bounded job counts per cold run") {
+    // q94, q166 and q175 iterate eagerly while they are built, which no
+    // plan string shows, so the job count is the contract: one cold run
+    // (released caches, construct + noop write) on this spec's session.
+    // A lost persist re-runs the q41 edge build; an eager checkpoint adds
+    // a job per iteration. q86 and q176 are left out: their count moves
+    // by one in about one cold run in 24.
+    val bounds = Seq("q94_pagerank" -> 26, "q166_hits" -> 44,
+      "q174_assortativity" -> 24, "q175_kcore" -> 23)
+    try {
+      for ((q, bound) <- bounds) {
+        graft.core.InternalCaches.release(spark)
+        val jobs = jobsOf(spark) {
+          SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }
+        assert(jobs <= bound, s"$q ran $jobs jobs per cold run (bound $bound)")
+      }
     } finally graft.core.InternalCaches.release(spark)
   }
 
