@@ -8,9 +8,10 @@ import graft.core.Tables
 /** Event-stream analytics over the `events` table — the batch analogues of
   * the reference's streaming surface (`G016HW3.java`): exact frequent items
   * with a phi·n threshold, time-windowed aggregation, and gap-based
-  * sessionization. The true streaming versions (Structured Streaming +
-  * foreachBatch driver sketches) live in graft.streaming; these batch forms
-  * share the same aggregation logic and are what the DuckDB oracle checks.
+  * sessionization. The true streaming versions (Structured Streaming into
+  * a driver sink that folds each micro-batch into sketches) live in
+  * graft.streaming; these batch forms share the same aggregation logic and
+  * are what the DuckDB oracle checks.
   *
   * Timestamps are compared in epoch milliseconds (unix_millis/epoch_ms):
   * the parquet column is ns-precision, Spark reads µs — both truncate

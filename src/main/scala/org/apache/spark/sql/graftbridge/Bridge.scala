@@ -3,7 +3,9 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Dataset, ExpressionUtils, SparkSession => ClassicSession}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Minimal bridge into `private[sql]` constructors needed to expose a custom
   * LogicalPlan as a DataFrame (the same technique every Spark extension
@@ -24,4 +26,12 @@ object Bridge {
     * the caller needs to inspect what an (unresolved) Column refers to. */
   def catalystExpression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
+
+  /** Starts streaming `df` into the V1 `sink` the way
+    * `writeStream.foreachBatch(f).start()` starts its own sink (append
+    * mode, a temporary checkpoint deleted on stop), so `sink.addBatch`
+    * receives the micro-batch itself, planned, with no re-wrapping. */
+  def startQuery(df: DataFrame, sink: Sink, trigger: Trigger): StreamingQuery =
+    df.sparkSession.asInstanceOf[ClassicSession].streams.startQuery(None, None, df.asInstanceOf[Dataset[Row]],
+      Map.empty, sink, OutputMode.Append(), useTempCheckpointLocation = true, trigger = trigger)
 }

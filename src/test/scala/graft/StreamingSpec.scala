@@ -354,12 +354,18 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val boom = udf((x: Long) => if (x == 13L) throw new IllegalStateException("boom") else x)
-    // a throwing UDF, and a null item (a socket line that is not a number)
-    for ((item, cause) <- Seq(boom(col("value")) -> "boom",
-                              when(col("value") =!= 13L, col("value")) -> "null item")) {
+    val nullItem = when(col("value") =!= 13L, col("value"))
+    // a throwing UDF, and a null item (a socket line that is not a number);
+    // at n = 10 the null lands past the n cut of the one batch, on the
+    // driver path and, behind a filter, on the one-job path
+    for ((stream, n, cause) <- Seq[(MemoryStream[Long] => org.apache.spark.sql.DataFrame, Long, String)](
+           (_.toDF().select(boom(col("value")).as("item")), 1000L, "boom"),
+           (_.toDF().select(nullItem.as("item")), 1000L, "null item"),
+           (_.toDF().select(nullItem.as("item")), 10L, "null item"),
+           (_.toDF().where(col("value") =!= 50L).select(nullItem.as("item")), 10L, "null item"))) {
       val mem = MemoryStream[Long]
       mem.addData(1L to 100L)
-      val job = Future(FrequentItemsJob.run(spark, mem.toDF().select(item.as("item")), n = 1000,
+      val job = Future(FrequentItemsJob.run(spark, stream(mem), n,
         phi = 0.1, epsilon = 0.05, delta = 0.1))(ExecutionContext.global)
       val e = intercept[StreamingQueryException](Await.result(job, 60.seconds))
       assert(e.getMessage.contains(cause))
@@ -426,7 +432,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("Reservoir sketch: size bound and fill behavior") {
-    val r = new Sketches.Reservoir(10, new scala.util.Random(3))
+    // m = ⌈1/0.1⌉ = 10 slots
+    val r = new Sketches.Fold(phi = 0.1, epsilon = 0.05, delta = 0.1, n = 1000, seed = 3)
     (1L to 5L).foreach(r.add)
     assert(r.sample.toSeq == Seq(1L, 2L, 3L, 4L, 5L))
     (6L to 1000L).foreach(r.add)
@@ -434,11 +441,29 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("StickySampling: tracked items always increment") {
-    val s = new Sketches.StickySampling(0.1, 0.05, 0.1, 1000, new scala.util.Random(4))
+    val s = new Sketches.Fold(phi = 0.1, epsilon = 0.05, delta = 0.1, n = 1000, seed = 3)
     // force-track by direct table seed, then verify increments
-    s.table.add(42L, 1L)
+    s.table.add(42L, graft.functions.BitMix.splitmix64(42L), 1L)
     (1 to 99).foreach(_ => s.add(42L))
     assert(s.table.getOrElse(42L, 0L) == 100L)
+  }
+
+  test("Sketches.Lcg draws what java.util.Random draws: nextDouble and nextInt(bound)") {
+    /** The first of 100000 draws where the two generators differ, or -1. */
+    def firstMismatch(seed: Long)(same: (Sketches.Lcg, java.util.Random) => Boolean): Int = {
+      val (ours, theirs) = (new Sketches.Lcg(seed), new java.util.Random(seed))
+      (0 until 100000).find(_ => !same(ours, theirs)).getOrElse(-1)
+    }
+    for (seed <- Seq(0L, 1L, 42L, -1L, Long.MinValue, Long.MaxValue)) {
+      assert(firstMismatch(seed)((o, j) =>
+        java.lang.Double.doubleToRawLongBits(o.nextDouble()) == java.lang.Double.doubleToRawLongBits(j.nextDouble())) == -1,
+        s"nextDouble, seed $seed")
+      for (bound <- Seq(1, 2, 15, 16, 34, 1 << 30, Int.MaxValue))
+        assert(firstMismatch(seed)((o, j) => o.nextInt(bound) == j.nextInt(bound)) == -1, s"nextInt($bound), seed $seed")
+      // interleaved, as the reservoir draws: a double, then a slot
+      assert(firstMismatch(seed)((o, j) => o.nextDouble() == j.nextDouble() && o.nextInt(34) == j.nextInt(34)) == -1,
+        s"interleaved, seed $seed")
+    }
   }
 
   test("DistributedReservoir: deterministic, mergeable, size m") {
