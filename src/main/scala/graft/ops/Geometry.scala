@@ -45,13 +45,18 @@ import scala.jdk.CollectionConverters._
   *    cells — the join formulation survives that; a `collect()` does not.
   *  - MRFFT keeps the reference's 3-round shape (it is optimal): R1
   *    per-partition FFT coreset, R2 driver FFT on ≤ K·L points, R3
-  *    broadcast centers + max-reduce of min distances. The points reach
-  *    their L partitions through one shuffle of primitive (xs, ys) array
+  *    max-reduce of min distances to the centers. An input whose size
+  *    estimate is within Spark's broadcast threshold runs in one job with
+  *    no shuffle: its tasks return primitive (xs, ys) arrays per target
+  *    partition, and the three rounds run on the driver. A larger one
+  *    reaches its L partitions through one shuffle of those array
   *    chunks, not of rows, and R1 and R3 share the one cached array pair
-  *    per partition it builds: two jobs in all, R1 (with the shuffle's map
+  *    per partition it builds: two jobs, R1 (with the shuffle's map
   *    stage) and R3. The FFT kernel prunes exactly: a new center skips
   *    every group of points, held by nearest center, that the triangle
-  *    inequality (1e-6 margin, normal-range guard) proves it cannot reach.
+  *    inequality (1e-6 margin, normal-range guard) proves it cannot reach;
+  *    R3 scans the centers sorted by x outward from each point and stops
+  *    where the x distance alone exceeds the point's best.
   */
 object Geometry {
 
@@ -409,9 +414,11 @@ object Geometry {
     val centers = new Array[Int](kk)
     val minD2 = Array.fill(n)(Double.MaxValue)
     def lexLess(i: Int, j: Int) = xs(i) < xs(j) || (xs(i) == xs(j) && ys(i) < ys(j))
-    // true when i comes before j (j < 0: no pick yet) in the pick order
-    def before(i: Int, j: Int) = j < 0 || minD2(i) > minD2(j) || (minD2(i) == minD2(j) &&
-      (if (canonical) lexLess(i, j) || (!lexLess(j, i) && i < j) else i < j))
+    // the pick order among equal min-dist²: true when i comes before j
+    def tie(i: Int, j: Int) = if (canonical) lexLess(i, j) || (!lexLess(j, i) && i < j) else i < j
+    // true when i, at min-dist² d, comes before j at dj (j < 0: no pick yet)
+    def ahead(i: Int, d: Double, j: Int, dj: Double) = j < 0 || d > dj || (d == dj && tie(i, j))
+    def before(i: Int, j: Int) = j < 0 || ahead(i, minD2(i), j, minD2(j))
     if (canonical) for (i <- 1 until n) if (lexLess(i, centers(0))) centers(0) = i
     // group g: members(g)(0 until size(g)) and its argmax best(g); before
     // step 0 every point sits in group 0 at MaxValue
@@ -427,34 +434,39 @@ object Geometry {
         gMax >= 1e-290 && gx * gx + gy * gy > 4.000004 * gMax
       }
       // step 0 scans group 0 against its own center; a later step moves
-      // the points c brings closer out of groups 0 until c into group c
+      // the points c brings closer out of groups 0 until c into group c.
+      // Each scanned group's argmax and group c's run in locals (index,
+      // min-dist²) and are stored once the scan is done.
+      var cb = -1; var cd = 0.0
       var g = 0
       while (g < math.max(c, 1)) {
         if (size(g) > 0 && !skip(g)) {
           val m = members(g)
-          var kept = 0; best(g) = -1
+          var kept = 0; var gb = -1; var gd = 0.0
           var s = 0
           while (s < size(g)) {
             val i = m(s)
             val dx = xs(i) - cx; val dy = ys(i) - cy
             val d2 = dx * dx + dy * dy
             val closer = d2 < minD2(i)
+            val d = if (closer) d2 else minD2(i)
             if (closer) minD2(i) = d2
             if (closer && g < c) {
               if (members(c) == null) members(c) = new Array[Int](64)
               else if (size(c) == members(c).length) members(c) = Arrays.copyOf(members(c), 2 * size(c))
               members(c)(size(c)) = i; size(c) += 1
-              if (before(i, best(c))) best(c) = i
+              if (ahead(i, d, cb, cd)) { cb = i; cd = d }
             } else {
               m(kept) = i; kept += 1
-              if (before(i, best(g))) best(g) = i
+              if (ahead(i, d, gb, gd)) { gb = i; gd = d }
             }
             s += 1
           }
-          size(g) = kept
+          size(g) = kept; best(g) = gb
         }
         g += 1
       }
+      if (c > 0) best(c) = cb
       var next = -1
       g = 0
       while (g <= c) { if (size(g) > 0 && before(best(g), next)) next = best(g); g += 1 }
@@ -464,11 +476,88 @@ object Geometry {
     centers
   }
 
-  /** MRFFT (reference Q4, 3 rounds) in two jobs. `deterministic = true`
-    * partitions by hash of `id` (stable results for the correctness
-    * harness); false deals each input partition's rows round-robin over
-    * the L partitions, the reference CLI's `repartition(L)` contract.
-    * Returns (radius, centers). */
+  /** Max over the points (xs, ys) of each one's min d² to the centers
+    * (cxs, cys): MRFFT's R3 kernel, equal bit for bit to the plain O(n·k)
+    * loop (each min starts at MaxValue, d² = dx·dx + dy·dy with dx the
+    * point's x minus the center's). The centers are sorted by x once, in
+    * Double's total order; each point scans outward from its own x and
+    * stops in a direction once dx·dx alone exceeds its best d² so far.
+    * That is exact because rounding is monotone: past that center every
+    * computed dx·dx, and so every computed d² ≥ dx·dx, is larger still.
+    * Non-finite values need no guard: the total order puts NaN last, a NaN
+    * dx never stops a scan, and an infinite dx·dx exceeds every best,
+    * which never exceeds MaxValue, as does every d² it skips.
+    * GeometrySpec keeps the plain loop as the oracle. */
+  private[graft] def maxMinD2(xs: Array[Double], ys: Array[Double],
+                              cxs: Array[Double], cys: Array[Double]): Double = {
+    val order = cxs.indices.sortBy(cxs(_))(Ordering.Double.TotalOrdering)
+    val sx = order.map(cxs).toArray; val sy = order.map(cys).toArray
+    var m = 0.0
+    var p = 0
+    while (p < xs.length) {
+      val x = xs(p); val y = ys(p)
+      var best = Double.MaxValue
+      // sx(0 until s) are at most x, sx(s until k) at least x
+      val found = Arrays.binarySearch(sx, x)
+      val s = if (found >= 0) found else -found - 1
+      var i = s
+      while (i < sx.length) {
+        val dx = x - sx(i); val dx2 = dx * dx
+        if (dx2 > best) i = sx.length
+        else { val dy = y - sy(i); val d2 = dx2 + dy * dy; if (d2 < best) best = d2; i += 1 }
+      }
+      i = s - 1
+      while (i >= 0) {
+        val dx = x - sx(i); val dx2 = dx * dx
+        if (dx2 > best) i = -1
+        else { val dy = y - sy(i); val d2 = dx2 + dy * dy; if (d2 < best) best = d2; i -= 1 }
+      }
+      if (best > m) m = best
+      p += 1
+    }
+    m
+  }
+
+  /** The points of (target, x, y) rows as primitive (xs, ys) chunks of at
+    * most 64 Ki points (bounding a task's memory) keyed by target, each
+    * target's last chunk once the rows run out: MRFFT's one array build. */
+  private def targetChunks(it: Iterator[InternalRow], l: Int): Iterator[(Int, (Array[Double], Array[Double]))] = {
+    val xb = Array.fill(l)(new ArrayBuilder.ofDouble); val yb = Array.fill(l)(new ArrayBuilder.ofDouble)
+    def chunk(p: Int) = { val c = (p, (xb(p).result(), yb(p).result())); xb(p).clear(); yb(p).clear(); c }
+    it.flatMap { r =>
+      require(!r.isNullAt(1) && !r.isNullAt(2), "mrFFT: null coordinate")
+      val p = r.getInt(0)
+      xb(p) += r.getDouble(1); yb(p) += r.getDouble(2)
+      if (xb(p).length == (1 << 16)) Iterator.single(chunk(p)) else Iterator.empty
+    } ++ (0 until l).iterator.filter(xb(_).length > 0).map(chunk)
+  }
+
+  /** One target's chunks as one (xs, ys) array pair. */
+  private def joined(cs: Seq[(Array[Double], Array[Double])]): (Array[Double], Array[Double]) =
+    (Array.concat(cs.map(_._1): _*), Array.concat(cs.map(_._2): _*))
+
+  /** MRFFT (reference Q4, 3 rounds). `deterministic = true` partitions by
+    * hash of `id` (stable results for the correctness harness); false
+    * deals each input partition's rows round-robin over the L partitions,
+    * the reference CLI's `repartition(L)` contract. Returns (radius,
+    * centers).
+    *
+    * Job shape: one projection (target, x, y) is planned, and each
+    * target's points become primitive arrays ([[targetChunks]]). When
+    * Spark's size estimate of that projection is within
+    * `spark.sql.autoBroadcastJoinThreshold`, the size at which Spark
+    * itself brings a relation to the driver (−1 turns this path off, as
+    * it turns broadcasts off), ONE job with no shuffle returns every
+    * partition's chunks and R1, R2 and R3 run on the driver. Above it,
+    * TWO jobs: R1 runs in the job of the shuffle that gathers each
+    * target's chunks into one persisted array pair, and R3 runs over
+    * those pairs with the centers broadcast.
+    *
+    * Both paths return the same radius and centers bit for bit: canonical
+    * R1 is a function of each target's point set, the coreset is
+    * concatenated in target order (the order `collect` returns the
+    * partitions in), and R3 takes its max over the same computed values
+    * ([[maxMinD2]]). */
   def mrFFT(pts: DataFrame, k: Int, l: Int, deterministic: Boolean = true): (Double, Array[(Double, Double)]) = {
     val spark = pts.sparkSession
     // Deterministic path partitions by HASH of id, not by range: range
@@ -479,66 +568,46 @@ object Geometry {
     // `pmod(hash(id), L)` is HashPartitioning's own partition id (Murmur3,
     // seed 42), so membership is that of `repartition(L, id)`.
     val target = pmod(if (deterministic) hash(col("id")) else monotonically_increasing_id(), lit(l))
-    val rows = pts.select(target.cast(IntegerType), col("x").cast(DoubleType), col("y").cast(DoubleType))
-      .queryExecution.toRdd
-    // R1 and R3 both scan every point: the shuffle moves primitive (xs, ys)
-    // chunks of at most 64 Ki points (bounding map-side memory) keyed by
-    // target partition — HashPartitioner maps p in [0, L) to itself — and
-    // persists ONE concatenated array pair per partition, so R1's collect
-    // runs the map stage and R1 in one job, with no row decode on either
-    // side; DISK spill keeps this safe when the point set exceeds storage
-    val parts = rows.mapPartitions { it =>
-      val xb = Array.fill(l)(new ArrayBuilder.ofDouble); val yb = Array.fill(l)(new ArrayBuilder.ofDouble)
-      def chunk(p: Int) = { val c = (p, (xb(p).result(), yb(p).result())); xb(p).clear(); yb(p).clear(); c }
-      it.flatMap { r =>
-        require(!r.isNullAt(1) && !r.isNullAt(2), "mrFFT: null coordinate")
-        val p = r.getInt(0)
-        xb(p) += r.getDouble(1); yb(p) += r.getDouble(2)
-        if (xb(p).length == (1 << 16)) Iterator.single(chunk(p)) else Iterator.empty
-      } ++ (0 until l).iterator.filter(xb(_).length > 0).map(chunk)
-    }.partitionBy(new org.apache.spark.HashPartitioner(l)).mapPartitions { it =>
-      val cs = it.map(_._2).toArray
-      Iterator.single((Array.concat(cs.map(_._1): _*), Array.concat(cs.map(_._2): _*)))
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // R1: per-partition coreset (executors, in the job that also runs
-      // the map stage), ≤ K points each, via the primitive-array kernel.
-      // On the deterministic path the kernel runs in canonical
-      // (set-function) mode: hash partitioning fixes WHICH rows land in a
-      // partition but shuffle fetch order varies run to run, and canonical
-      // seeding/tie-breaks make arrival order irrelevant — same result as
-      // sorting first, without the sort.
-      val det = deterministic
-      val coreset = parts.flatMap { case (xs, ys) =>
-        if (xs.isEmpty) Iterator.empty
-        else fftIndices(xs, ys, k, canonical = det).iterator.map(i => (xs(i), ys(i)))
-      }.collect()
-      // R2: driver FFT on ≤ K·L points
+    val planned = pts.select(target.cast(IntegerType), col("x").cast(DoubleType), col("y").cast(DoubleType))
+      .queryExecution
+    val rows = planned.toRdd
+    // R1: ≤ K points per target via the primitive-array kernel. On the
+    // deterministic path the kernel runs in canonical (set-function)
+    // mode: hash partitioning fixes WHICH rows share a target, but the
+    // order they arrive in varies, and canonical seeding/tie-breaks make
+    // arrival order irrelevant — same result as sorting first, without
+    // the sort.
+    val r1 = (xs: Array[Double], ys: Array[Double]) =>
+      if (xs.isEmpty) Iterator.empty
+      else fftIndices(xs, ys, k, canonical = deterministic).iterator.map(i => (xs(i), ys(i)))
+    // R2: driver FFT on ≤ K·L points; R3: the max min d², one sqrt
+    def rounds(coreset: Array[(Double, Double)])(r3: (Array[Double], Array[Double]) => Double) = {
       val centers = sequentialFFT(coreset, k)
-      // R3: broadcast centers as two primitive arrays (a tuple array costs
-      // a pointer chase per center per point — n·k of them), per-point min
-      // dist², max-reduce, single sqrt
-      val bc = spark.sparkContext.broadcast((centers.map(_._1), centers.map(_._2)))
-      val maxMinD2 = parts.map { case (xs, ys) =>
-        val (cxs, cys) = bc.value
-        var m = 0.0
-        var p = 0
-        while (p < xs.length) {
-          var best = Double.MaxValue
-          var i = 0
-          while (i < cxs.length) {
-            val dx = xs(p) - cxs(i); val dy = ys(p) - cys(i)
-            val d2 = dx * dx + dy * dy
-            if (d2 < best) best = d2
-            i += 1
-          }
-          if (best > m) m = best
-          p += 1
-        }
-        m
-      }.reduce(math.max)
-      (math.sqrt(maxMinD2), centers)
-    } finally parts.unpersist()
+      (math.sqrt(r3(centers.map(_._1), centers.map(_._2))), centers)
+    }
+    if (planned.optimizedPlan.stats.sizeInBytes <= spark.sessionState.conf.autoBroadcastJoinThreshold) {
+      val chunks = rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => targetChunks(it, l).toArray).flatten
+      val groups = (0 until l).map(p => joined(chunks.collect { case (`p`, c) => c }.toSeq))
+      rounds(groups.iterator.flatMap(r1.tupled).toArray) { (cxs, cys) =>
+        groups.map { case (xs, ys) => maxMinD2(xs, ys, cxs, cys) }.foldLeft(0.0)(math.max)
+      }
+    } else {
+      // the shuffle moves the chunks keyed by target (HashPartitioner maps
+      // p in [0, L) to itself) and persists ONE array pair per target, so
+      // R1's collect runs the map stage and R1 in one job and R3 reads the
+      // same pairs, with no row decode on either side; DISK spill keeps
+      // this safe when the point set exceeds storage
+      val parts = rows.mapPartitions(targetChunks(_, l))
+        .partitionBy(new org.apache.spark.HashPartitioner(l))
+        .mapPartitions(it => Iterator.single(joined(it.map(_._2).toSeq)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try rounds(parts.flatMap(r1.tupled).collect()) { (cxs, cys) =>
+        // centers as two primitive arrays: a tuple array costs a pointer
+        // chase per center per point
+        val bc = spark.sparkContext.broadcast((cxs, cys))
+        parts.map { case (xs, ys) => maxMinD2(xs, ys, bc.value._1, bc.value._2) }.reduce(math.max)
+      } finally parts.unpersist()
+    }
   }
 
   // --------------------------------------------------- queries for the gate

@@ -375,6 +375,102 @@ class GeometrySpec extends SparkSpec {
     }
   }
 
+  /** R3's plain O(n·k) loop, which [[Geometry.maxMinD2]] replaced: the
+    * oracle its value must equal bit for bit. */
+  private def plainMaxMinD2(xs: Array[Double], ys: Array[Double], cxs: Array[Double], cys: Array[Double]): Double = {
+    var m = 0.0
+    for (p <- xs.indices) {
+      var best = Double.MaxValue
+      for (i <- cxs.indices) {
+        val dx = xs(p) - cxs(i); val dy = ys(p) - cys(i)
+        val d2 = dx * dx + dy * dy
+        if (d2 < best) best = d2
+      }
+      if (best > m) m = best
+    }
+    m
+  }
+
+  test("maxMinD2: the x-sorted kernel equals the plain O(n·k) loop, per point and per set") {
+    val rng = new scala.util.Random(2001)
+    val specials = Array(0.0, -0.0, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    // a coordinate: small integers (tied and duplicate x), ±0.0, NaN, ±Inf,
+    // uniform, far outside the points' range, or squares that overflow
+    def value(far: Boolean): Double = rng.nextInt(10) match {
+      case 0 | 1 | 2 => rng.nextInt(5).toDouble
+      case 3 => specials(rng.nextInt(2))
+      case 4 if rng.nextInt(4) == 0 => specials(2 + rng.nextInt(3))
+      case 5 => rng.nextGaussian() * 1e200
+      case _ => rng.nextDouble() * 10 + (if (far) 1e6 * (if (rng.nextBoolean()) 1 else -1) else 0)
+    }
+    val bits = java.lang.Double.doubleToRawLongBits _
+    for (set <- 0 until 500) {
+      val n = if (set % 5 == 0) 1 else 1 + rng.nextInt(60)
+      val k = if (set % 7 == 0) 1 else 1 + rng.nextInt(40)
+      val far = set % 3 == 0
+      val (xs, ys) = (Array.fill(n)(value(false)), Array.fill(n)(value(false)))
+      val (cxs, cys) = (Array.fill(k)(value(far)), Array.fill(k)(value(far)))
+      val expected = plainMaxMinD2(xs, ys, cxs, cys)
+      assert(bits(Geometry.maxMinD2(xs, ys, cxs, cys)) == bits(expected), s"set $set: n $n, k $k")
+      for (p <- 0 until n) {
+        val (x, y) = (Array(xs(p)), Array(ys(p)))
+        assert(bits(Geometry.maxMinD2(x, y, cxs, cys)) == bits(plainMaxMinD2(x, y, cxs, cys)),
+          s"set $set, point ${(xs(p), ys(p))}, centers ${cxs.zip(cys).toSeq}")
+      }
+    }
+    // clustered points against 200 centers
+    val (xs, ys) = (Array.fill(20000)(rng.nextGaussian() * 5), Array.fill(20000)(rng.nextGaussian() * 5))
+    val (cxs, cys) = (Array.fill(200)(rng.nextGaussian() * 5), Array.fill(200)(rng.nextGaussian() * 5))
+    assert(bits(Geometry.maxMinD2(xs, ys, cxs, cys)) == bits(plainMaxMinD2(xs, ys, cxs, cys)))
+  }
+
+  /** `body` on mrFFT's driver path (`small`, one job of one stage) or its
+    * distributed path (two jobs), chosen by the broadcast threshold. */
+  private def onPath[T](small: Boolean)(body: => T): T = {
+    var out: Option[T] = None
+    val (jobs, stages) = withBroadcastThreshold(if (small) "1g" else "-1") {
+      JobCount.jobsAndStagesOf(spark) { out = Some(body) }
+    }
+    if (small) assert(jobs == 1 && stages == 1, s"driver path ran $jobs jobs, $stages stages")
+    else assert(jobs == 2, s"distributed path ran $jobs jobs")
+    out.get
+  }
+
+  test("mrFFT: the driver path returns the distributed path's radius and centers bit for bit") {
+    import spark.implicits._
+    val rng = new scala.util.Random(2002)
+    val centres = Array.fill(8)((rng.nextDouble() * 50, rng.nextDouble() * 50))
+    val seeded = Seq.tabulate(20000) { i =>
+      val (cx, cy) = centres(i % 8)
+      (i.toLong, cx + rng.nextGaussian(), cy + rng.nextGaussian())
+    }.toDF("id", "x", "y")
+    val clustered = GeometrySpec.clusteredPoints.toDF("id", "x", "y")
+    testN15.count() // fills its cache, so each path's jobs are its own
+    val bits = java.lang.Double.doubleToRawLongBits _
+    for ((name, pts, k, l) <- Seq(("TestN15", testN15, 4, 2), ("clustered", clustered, 30, 4),
+                                  ("seeded 20k", seeded, 50, 8), ("seeded 20k, L = 1", seeded, 50, 1))) {
+      val (rs, cs) = onPath(small = true)(Geometry.mrFFT(pts, k, l))
+      val (rd, cd) = onPath(small = false)(Geometry.mrFFT(pts, k, l))
+      assert(bits(rs) == bits(rd), s"$name: radius $rs vs $rd")
+      assert(cs.toSeq.map { case (x, y) => (bits(x), bits(y)) } == cd.toSeq.map { case (x, y) => (bits(x), bits(y)) },
+        s"$name: centers differ")
+      assert(cs.length == math.min(k, pts.count()))
+    }
+  }
+
+  test("mrFFT: empty input and a null coordinate raise the same errors on both paths") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Double, Double)].toDF("id", "x", "y")
+    val nulls = Seq((1L, Some(0.0), 0.0), (2L, None, 1.0)).toDF("id", "x", "y")
+    def causes(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(c => String.valueOf(c.getMessage)).toSeq
+    for (small <- Seq(true, false)) withBroadcastThreshold(if (small) "1g" else "-1") {
+      val e = intercept[IllegalArgumentException](Geometry.mrFFT(empty, k = 3, l = 2))
+      assert(e.getMessage == "requirement failed: FFT on empty point set", s"small = $small")
+      val n = intercept[Exception](Geometry.mrFFT(nulls, k = 3, l = 2))
+      assert(causes(n).exists(_.contains("requirement failed: mrFFT: null coordinate")), s"small = $small: $n")
+    }
+  }
+
   test("artificial1M anchors: pinned per-L radii, tight cross-L envelope, planted-outlier recall") {
     // the reference's published 1M workload (artificial1M_9_100.csv,
     // 1 000 108 pts, M=10 K=200 — Radius 0.60045445 @16 exec / 0.62610096
@@ -399,6 +495,12 @@ class GeometrySpec extends SparkSpec {
         val (r, _) = Geometry.mrFFT(pts, k = 200, l = l)
         assert(r == golden(l), s"L=$l radius $r != pinned golden ${golden(l)}")
         r
+      }
+      // the driver path (the input's estimate is raised past the threshold
+      // for it) reproduces the same radii
+      for (l <- golden.keys.toSeq.sorted) {
+        val (r, _) = onPath(small = true)(Geometry.mrFFT(pts, k = 200, l = l))
+        assert(r == golden(l), s"driver path, L=$l radius $r != pinned golden ${golden(l)}")
       }
       assert(radii.max / radii.min < 1.01, s"cross-L radius spread too wide: $radii")
       // recall anchor at the L=16 radius (the published config): exactly
@@ -442,4 +544,21 @@ class GeometrySpec extends SparkSpec {
       assert(r <= 2 * rd && rd <= 2 * r, s"round-robin radius $r vs deterministic $rd")
     }
   }
+}
+
+object GeometrySpec {
+
+  /** Three tight clusters of 2000 points each (ids 0 until 6000) plus 20
+    * planted outliers on a far line (ids 6000 until 6020). */
+  val clusteredPoints: Seq[(Long, Double, Double)] = {
+    val rng = new scala.util.Random(11)
+    val centres = Seq((0.0, 0.0), (10.0, 0.0), (0.0, 10.0))
+    val clustered = Seq.tabulate(6000) { i =>
+      val (cx, cy) = centres(i % 3)
+      (i.toLong, cx + rng.nextGaussian() * 0.3, cy + rng.nextGaussian() * 0.3)
+    }
+    clustered ++ Seq.tabulate(20)(i => (6000L + i, 40.0 + 5.0 * i, -40.0))
+  }
+
+  val plantedIds: Set[Long] = (6000L until 6020L).toSet
 }

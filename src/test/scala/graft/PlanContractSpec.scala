@@ -42,19 +42,13 @@ class PlanContractSpec extends SparkSpec {
     // eager-path operators hide their distributed work behind a bare
     // LocalTableScan, so the job count is the contract: the exact outliers
     // run the grid-pass histogram and ONE candidate-point job over the
-    // same planned rows; MRFFT runs R1, in the job of its array shuffle's
-    // map stage, and R3 over one cached array pair per partition; the
-    // approximate outliers run the grid pass only
+    // same planned rows; MRFFT on a broadcast-sized input runs one job with
+    // no shuffle, and above the threshold R1, in the job of its array
+    // shuffle's map stage, and R3 over one cached array pair per
+    // partition; the approximate outliers run the grid pass only
     import graft.ops.Geometry
     import spark.implicits._
-    val rng = new scala.util.Random(11)
-    val centres = Seq((0.0, 0.0), (10.0, 0.0), (0.0, 10.0))
-    val clustered = Seq.tabulate(6000) { i =>
-      val (cx, cy) = centres(i % 3)
-      (i.toLong, cx + rng.nextGaussian() * 0.3, cy + rng.nextGaussian() * 0.3)
-    }
-    val planted = Seq.tabulate(20)(i => (6000L + i, 40.0 + 5.0 * i, -40.0))
-    val pts = (clustered ++ planted).toDF("id", "x", "y").cache()
+    val pts = GeometrySpec.clusteredPoints.toDF("id", "x", "y").cache()
     try {
       pts.count()
       val radius = Geometry.mrFFT(pts, k = 30, l = 4)._1
@@ -63,10 +57,12 @@ class PlanContractSpec extends SparkSpec {
       val p = exact.queryExecution.executedPlan.toString
       assert(p.contains("LocalTableScan") && !p.contains("Exchange"),
         s"exact outliers left the driver path:\n$p")
-      assert(planted.map(_._1).toSet.subsetOf(exact.collect().map(_.getLong(0)).toSet))
+      assert(GeometrySpec.plantedIds.subsetOf(exact.collect().map(_.getLong(0)).toSet))
       assert(exactJobs <= 2, s"exactOutliers ran $exactJobs jobs")
-      val fftJobs = jobsOf(spark)(Geometry.mrFFT(pts, k = 30, l = 4))
-      assert(fftJobs <= 2, s"mrFFT ran $fftJobs jobs")
+      val (fftJobs, fftStages) = JobCount.jobsAndStagesOf(spark)(Geometry.mrFFT(pts, k = 30, l = 4))
+      assert(fftJobs == 1 && fftStages == 1, s"mrFFT ran $fftJobs jobs, $fftStages stages")
+      val bigJobs = withBroadcastThreshold("-1")(jobsOf(spark)(Geometry.mrFFT(pts, k = 30, l = 4)))
+      assert(bigJobs <= 2, s"mrFFT above the threshold ran $bigJobs jobs")
       var approx: org.apache.spark.sql.DataFrame = null
       val approxJobs = jobsOf(spark) { approx = Geometry.approxOutliers(pts, radius, 10) }
       assert(approxJobs <= 1, s"approxOutliers ran $approxJobs jobs")

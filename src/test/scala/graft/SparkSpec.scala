@@ -8,6 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** `body` with `spark.sql.autoBroadcastJoinThreshold` at `v`, then the
+    * previous setting back. */
+  def withBroadcastThreshold[T](v: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, v)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkSpec {
