@@ -28,8 +28,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Sessions are keyed by object identity and stopped sessions are purged
   * on every registration, so the registry retains nothing beyond the live
-  * sessions of the JVM (the same lifecycle scheme as
-  * [[graft.sources.PointSource]]).
+  * sessions of the JVM.
   */
 object InternalCaches {
 

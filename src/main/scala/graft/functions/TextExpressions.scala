@@ -29,14 +29,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * q138) are unchanged at every SF tier. */
 object TextKernels {
 
-  /** Spark's `round(x, scale)` on DOUBLE: java.math.BigDecimal.valueOf
-    * (shortest-decimal representation) → setScale(scale, HALF_UP) →
-    * doubleValue — the exact sequence RoundBase generates, so folds that
-    * interleave rounding with accumulation stay bit-identical. */
-  private def roundHalfUp(x: Double, scale: Int): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** Character-distribution Shannon entropy of a string — the compiled
     * twin of the q154 HOF chain (sorted char array → run lengths →
     * Σ round₉(p·ln p) in sorted-char order → round₆ of the negation).
@@ -59,11 +51,11 @@ object TextKernels {
       var j = i + 1
       while (j < cps.length && cps(j) == cps(i)) j += 1
       val p = (j - i).toDouble / len
-      sum += roundHalfUp(p * math.log(p), 9)
+      sum += EngineMath.round(p * math.log(p), 9)
       distinct += 1L
       i = j
     }
-    new GenericInternalRow(Array[Any](distinct, roundHalfUp(-sum, 6)))
+    new GenericInternalRow(Array[Any](distinct, EngineMath.round(-sum, 6)))
   }
 
   /** 31-ary code-point polynomial hash mod `mod`, reducing at EVERY

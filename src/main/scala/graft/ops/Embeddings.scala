@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
+import graft.functions.EngineMath
 import graft.plans.TopK
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -441,9 +442,8 @@ object Embeddings {
     * BIT-IDENTICAL to the declarative epoch it replaced (kept as
     * [[logregEpochExplode]], asserted equal in spec): the margin is the
     * graft_dot left-to-right double accumulation with the same literal
-    * weights, and every rounding replicates Spark's `round` exactly
-    * (BigDecimal.valueOf(double).setScale(s, HALF_UP) — the documented
-    * Round semantics for DoubleType), so margin round 6 → sigmoid/
+    * weights, and every rounding is Spark's `round` ([[EngineMath.round]],
+    * proven equal to Catalyst by EngineMathSpec), so margin round 6 → sigmoid/
     * gradient terms round 9 → exact order-free sums → update round 9
     * produce the same trained trajectory across engines, runs, and
     * partitionings. The 65-long model is the ONLY driver data (the BPE
@@ -474,10 +474,6 @@ object Embeddings {
         when(col("label") % 2 === 0, lit(1.0)).otherwise(lit(0.0)).as("y")))
     val n = data.count()
     require(n > 0, "logregTrain: empty training corpus")
-    // Spark's Round(DoubleType): BigDecimal.valueOf(v).setScale(s, HALF_UP)
-    def rnd(v: Double, s: Int): Double =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue
     // a round-9 double is an exact 9-place decimal (|v| ≪ 2⁵³·10⁻⁹, so
     // the decimal-double round-trip is lossless): its ×10⁹ long is exact
     def scaled9(v: Double): Long =
@@ -502,12 +498,12 @@ object Embeddings {
             var dot = 0.0
             var j = 0
             while (j < 64) { dot += x(j).toDouble * wCur(j); j += 1 }
-            val margin = rnd(dot + bCur, 6)
-            val p = rnd(1.0 / (1.0 + math.exp(-margin)), 9)
-            val g = rnd(p - y, 9)
-            a(0) += scaled9(rnd(g * 1.0, 9))
+            val margin = EngineMath.round(dot + bCur, 6)
+            val p = EngineMath.round(1.0 / (1.0 + math.exp(-margin)), 9)
+            val g = EngineMath.round(p - y, 9)
+            a(0) += scaled9(EngineMath.round(g * 1.0, 9))
             j = 0
-            while (j < 64) { a(j + 1) += scaled9(rnd(g * x(j).toDouble, 9)); j += 1 }
+            while (j < 64) { a(j + 1) += scaled9(EngineMath.round(g * x(j).toDouble, 9)); j += 1 }
             a
           },
           combOp = { (x, y) =>
@@ -515,9 +511,9 @@ object Embeddings {
             while (k < 65) { x(k) += y(k); k += 1 }
             x
           }, depth = TreeAggDepth)
-      bias = rnd(bias - (lr * sum9ToDouble(acc(0))) / n.toDouble, 9)
+      bias = EngineMath.round(bias - (lr * sum9ToDouble(acc(0))) / n.toDouble, 9)
       w = Array.tabulate(64)(i =>
-        rnd(wCur(i) - (lr * sum9ToDouble(acc(i + 1))) / n.toDouble, 9))
+        EngineMath.round(wCur(i) - (lr * sum9ToDouble(acc(i + 1))) / n.toDouble, 9))
     }
     (w, bias, gradParts, TreeAggDepth)
   }
@@ -1252,11 +1248,10 @@ object Embeddings {
       var k = -1
       for (i <- 0 until dim; j <- i until dim) yield {
         k += 1
-        val cov = BigDecimal.decimal(
-            acc(k).toDouble / 1000000.0 / n
-              - (acc(nPairs + i).toDouble / 1000000.0 / n)
-                * (acc(nPairs + j).toDouble / 1000000.0 / n))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
+        val cov = EngineMath.round(
+          acc(k).toDouble / 1000000.0 / n
+            - (acc(nPairs + i).toDouble / 1000000.0 / n)
+              * (acc(nPairs + j).toDouble / 1000000.0 / n), 6)
         (i.toLong, j.toLong, n, cov)
       }
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
+import graft.functions.EngineMath
 import graft.plans.TopK
 
 /** Text-analysis and deduplication operators for a training-data pipeline,
@@ -45,6 +46,15 @@ object Text {
   private def tokenCounts(docs: DataFrame, keys: Column*)(name: String): DataFrame = {
     val ex = withTokens(docs).select(keys :+ explode(col("t")).as("w"): _*)
     ex.groupBy(ex.columns.map(col): _*).agg(count(lit(1)).as(name))
+  }
+
+  /** The held-out split of the train/eval gates: `op(train, eval)` over
+    * `documents`, trained on the doc_id-even half and evaluated on the
+    * odd half. */
+  private def heldOut(s: SparkSession, dir: String)(
+      op: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    op(docs.filter(expr("doc_id % 2 = 0")), docs.filter(expr("doc_id % 2 = 1")))
   }
 
   private def withShingles(docs: DataFrame): DataFrame =
@@ -411,11 +421,8 @@ object Text {
           .otherwise(lit(0.0)).as("fpr"))
   }
 
-  def qBloomFpr(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    bloomFprReport(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")))
-  }
+  def qBloomFpr(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(bloomFprReport(_, _))
 
   /** Edit-distance verification of near-dup candidates — the final verify
     * stage of a fuzzy-dedup pipeline: the q35 LSH+Jaccard layer proposes
@@ -2121,8 +2128,7 @@ object Text {
       .select(col("w"), round(lit(oneMinusAlpha) *
         (col("prs").cast(DoubleType) / col("etot").cast(DoubleType)), 9).as("qw"))
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    val ow = BigDecimal(alpha / terms.length)
-      .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val ow = EngineMath.round(alpha / terms.length, 9)
     val weights = terms.map(t => (t, ow)) ++ eW
     val mapCol = map(weights.flatMap { case (t, v) => Seq(lit(t), lit(v)) }: _*)
     topDocs(bm25Scored(tok, weights.map(_._1), k1, b)
@@ -2565,7 +2571,7 @@ object Text {
     * is bounded independently of the corpus: symbols ≤ charset + nMerges
     * (each merge adds at most one) and pairs ≤ symbols². The driver picks
     * the merge by (score desc, lhs asc, rhs asc), strings in UTF-8 byte
-    * order ([[utf8Lt]], the engine's STRING order), and applies it as
+    * order ([[EngineMath.utf8Lt]], the engine's STRING order), and applies it as
     * ONE [[mergeSymbols]] replace followed by a LAZY localCheckpoint.
     * Lazy because the checkpoint still cuts lineage at call time (plan
     * depth stays 1 at any merge count and no replace chain re-executes),
@@ -2607,8 +2613,8 @@ object Text {
       if (pairs.isEmpty) exhausted = true
       else {
         val (a, b, cnt, sc) = pairs.reduce { (x, y) =>
-          if (y._4 > x._4 || (y._4 == x._4 &&
-              (utf8Lt(y._1, x._1) || (y._1 == x._1 && utf8Lt(y._2, x._2))))) y else x
+          if (y._4 > x._4 || (y._4 == x._4 && (EngineMath.utf8Lt(y._1, x._1) ||
+              (y._1 == x._1 && EngineMath.utf8Lt(y._2, x._2))))) y else x
         }
         merges += ((it.toLong, a, b, a + b, cnt, sc))
         cur = cur.withColumn("s", mergeSymbols(col("s"), a, b)).localCheckpoint(false)
@@ -2692,12 +2698,11 @@ object Text {
     * doc_id-odd half with the FROZEN table. Symbols unseen in training
     * stay split at character level — exactly the OOV behavior a deployed
     * BPE exhibits. */
-  def qBpeInference(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val merges = bpeTrain(docs.filter(expr("doc_id % 2 = 0"))).collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    bpeApplyMerges(docs.filter(expr("doc_id % 2 = 1")), merges)
-  }
+  def qBpeInference(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir) { (train, eval) =>
+      bpeApplyMerges(eval, bpeTrain(train).collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq)
+    }
 
   /** q123 — BPE training over a NON-ASCII corpus: the byte-safety gate for
     * the lifted ASCII contract. The corpus is the documents table pushed
@@ -2758,11 +2763,8 @@ object Text {
 
   /** q136 — fertility over the q124 corpus split: merges frozen from the
     * doc_id-even half, the odd half segmented and rolled up per source. */
-  def qTokenizerFertility(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    tokenizerFertility(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")))
-  }
+  def qTokenizerFertility(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(tokenizerFertility(_, _))
 
   /** Per-source unigram KL divergence vs the corpus mixture — the
     * distributional diagnostic behind mixture reweighting (a source with
@@ -3368,11 +3370,8 @@ object Text {
       (coalesce(col("c1"), lit(0L)) + col("v")).cast(DoubleType), "n_bigrams")
   }
 
-  def qBigramScore(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    bigramScore(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")))
-  }
+  def qBigramScore(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(bigramScore(_, _))
 
   /** Interpolated Kneser-Ney bigram scoring (Kneser & Ney 1995; Chen &
     * Goodman 1999's benchmark winner) — the smoothing the add-1 gate
@@ -3406,11 +3405,8 @@ object Text {
     perDocMeanLp(scored, col("p"), "n_bigrams")
   }
 
-  def qKneserNey(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    kneserNeyScore(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")))
-  }
+  def qKneserNey(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(kneserNeyScore(_, _))
 
   /** Witten–Bell interpolated bigram scoring (Witten & Bell 1991, "The
     * zero-frequency problem", IEEE Trans. IT 37(4)) — the third classical
@@ -3452,11 +3448,8 @@ object Text {
         expr("(coalesce(cu, 0) + 1.0) / CAST(nn + v AS DOUBLE)"))
   }
 
-  def qWittenBell(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    wittenBellScore(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")))
-  }
+  def qWittenBell(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(wittenBellScore(_, _))
 
   /** Jelinek–Mercer interpolated bigram scoring (Jelinek & Mercer 1980;
     * Chen & Goodman 1999 §2.3) — the FIXED-weight member completing the
@@ -3493,11 +3486,8 @@ object Text {
     perDocMeanLp(scored, col("p"), "n_bigrams")
   }
 
-  def qJelinekMercer(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    jelinekMercerScore(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")))
-  }
+  def qJelinekMercer(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(jelinekMercerScore(_, _))
 
   /** Held-out OOV-rate report — the vocabulary-coverage metric a
     * tokenizer/vocab deployment publishes before freezing: build the
@@ -3690,11 +3680,8 @@ object Text {
           / (col("nn") + col("v")).cast(DoubleType)), "n_trigrams")
   }
 
-  def qTrigramScore(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    trigramScore(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")))
-  }
+  def qTrigramScore(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(trigramScore(_, _))
 
   /** Stupid-backoff FIVE-gram scoring — [[trigramScore]]'s tier chain
     * extended to the KenLM shape the CCNet-style quality gates actually
@@ -3776,11 +3763,8 @@ object Text {
           / (col("nn") + col("v")).cast(DoubleType)), "n_fivegrams")
   }
 
-  def qFivegramScore(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    fivegramScore(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")))
-  }
+  def qFivegramScore(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(fivegramScore(_, _))
 
   /** Asymmetric shingle containment — quote/subset detection: C(A→B) =
     * |sh(A) ∩ sh(B)| / |sh(A)|. A short document embedded verbatim in a
@@ -4348,12 +4332,11 @@ object Text {
     * behavior. Scale shape: training is q187's (one train-half scan +
     * vocab-bounded iterations); apply is one eval-half scan into the
     * vocab-bounded word table + ONE projection. */
-  def qWordpieceInference(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val merges = wordpieceTrain(docs.filter(expr("doc_id % 2 = 0"))).collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    bpeApplyMerges(docs.filter(expr("doc_id % 2 = 1")), merges)
-  }
+  def qWordpieceInference(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir) { (train, eval) =>
+      bpeApplyMerges(eval, wordpieceTrain(train).collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq)
+    }
 
   /** Unigram-LM Viterbi segmentation (Kudo, ACL 2018 — the SentencePiece
     * inference rule) — the FOURTH tokenizer family beside BPE
@@ -4552,38 +4535,16 @@ object Text {
     * localCheckpointed (the q118 BPE-loop lineage cut — the pitfall
     * frame consumed more than once per iteration). The top-V cut is a
     * bounded-frame sort, never a corpus window. */
-  /** Spark `round(x, scale)` on DOUBLE, replicated exactly for the
-    * driver-side EM m-step: scala BigDecimal(double) (decimal-string
-    * construction) → setScale(scale, HALF_UP) → toDouble — the engine's
-    * own RoundBase arithmetic, same JVM, bit-identical by construction. */
-  private def roundDouble(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** lp9 = CAST(round(round(ln(mass/tm), 9) * 1e9) AS BIGINT) — the
     * [[lp9Expr]] pinning evaluated driver-side: Spark's `ln` (the `Log`
     * expression) runs StrictMath.log in both its interpreted and codegen
     * paths, and java.lang.Math.log may differ from it by an ulp — enough
     * to flip a HALF_UP boundary of round(x, 9). The two rounds are
-    * [[roundDouble]], and the final cast truncates an integral double
+    * [[EngineMath.round]], and the final cast truncates an integral double
     * exactly. TextSpec asserts bit equality with [[lp9Expr]]. */
   private[graft] def lp9Of(mass: Long, tm: Long): Long =
-    roundDouble(roundDouble(StrictMath.log(mass.toDouble / tm.toDouble), 9) * 1e9, 0).toLong
-
-  /** UNSIGNED-UTF-8-byte string order — the engine's STRING comparison
-    * (UTF8String binary order = code-point order), NOT java's UTF-16
-    * unit order, so driver-side tie-breaks reproduce `orderBy(p)`. */
-  private def utf8Lt(a: String, b: String): Boolean = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
-  }
+    EngineMath.round(
+      EngineMath.round(StrictMath.log(mass.toDouble / tm.toDouble), 9) * 1e9, 0).toLong
 
   /** The hard-EM loop with a DRIVER-side m-step (round 20, guide §1.2
     * step 1 "fewer passes"/§5 bounded driver work): every frame the old
@@ -4598,7 +4559,7 @@ object Text {
     * per-iteration jobs on map-building aggs, checkpoint materializations
     * and the singles/multi joins over ≤ 90-row frames). Integer
     * arithmetic is exact either way; lp9 and every tie-break replicate
-    * the engine ops bit-for-bit ([[lp9Of]], [[utf8Lt]]; code-point
+    * the engine ops bit-for-bit ([[lp9Of]], [[EngineMath.utf8Lt]]; code-point
     * lengths, not UTF-16 units). Gate evidence: OptLab fingerprints and
     * oracle hashes identical at sf0.001/0.01/0.1 and sf1.
     * The training corpus is the (w, cnt) table of `docs`' words of
@@ -4629,7 +4590,7 @@ object Text {
       val multi = ec.toSeq
         .filter { case (p, _) => p.codePointCount(0, p.length) >= 2 }
         .sortWith { case ((pa, ea), (pb, eb)) =>
-          ea > eb || (ea == eb && utf8Lt(pa, pb)) }
+          ea > eb || (ea == eb && EngineMath.utf8Lt(pa, pb)) }
         .take(vocabV)
       masses = singles ++ multi
     }
@@ -4698,11 +4659,8 @@ object Text {
 
   /** Gate: the q120/q141 even/odd corpus split — train on doc_id-even,
     * segment doc_id-odd under the frozen trained model. */
-  def qUnigramApply(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    unigramApply(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")))
-  }
+  def qUnigramApply(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(unigramApply(_, _))
 
   /** DoReMi-style domain reweighting (Xie et al., NeurIPS 2023 — "DoReMi:
     * Optimizing Data Mixtures Speeds Up Language Model Pretraining"):
@@ -4824,11 +4782,8 @@ object Text {
 
   /** q141 — the q120/q124 corpus split: models trained on the doc_id-even
     * half, the odd half scored per source, η = 1. */
-  def qDoremiWeights(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    doremiWeights(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")))
-  }
+  def qDoremiWeights(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(doremiWeights(_, _))
 
   /** Gopher REPETITION battery (Rae et al. 2021, Appendix A1.2) — the
     * within-document repetition half of the Gopher filter stack, next to
@@ -4977,11 +4932,8 @@ object Text {
   /** q132 — the q122 even/odd train-eval split with a fixed
     * doc_id < 200 calibration sample (≤ 100 eval docs at ANY scale
     * factor — the sample does not grow with the corpus). */
-  def qPerplexityBuckets(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    perplexityBuckets(docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")), col("doc_id") < 200)
-  }
+  def qPerplexityBuckets(s: SparkSession, dir: String): DataFrame =
+    heldOut(s, dir)(perplexityBuckets(_, _, col("doc_id") < 200))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q165_lexical_diversity" -> (qLexicalDiversity _),

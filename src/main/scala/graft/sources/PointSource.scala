@@ -16,53 +16,18 @@ object PointSource {
     StructField("x", FloatType, nullable = false),
     StructField("y", FloatType, nullable = false)))
 
-  // one cached DataFrame per (session, path, L): repeated read() calls in a
-  // long-lived session reuse the same plan+cache entry instead of racking up
-  // CacheManager lookups (Spark dedupes identical cached plans, but the memo
-  // makes the lifecycle explicit). Keyed by session OBJECT IDENTITY — an
-  // identityHashCode key could collide across a stopped and a live session
-  // and hand out a DataFrame bound to a dead SparkContext. Entries for
-  // stopped sessions are purged on every access (weak keys would not work:
-  // the memoized DataFrames reference their session, so the value would pin
-  // the key), bounding retention to the LIVE sessions of the JVM.
-  private val memo = java.util.Collections.synchronizedMap(
-    new java.util.IdentityHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, Int), DataFrame]]())
-
-  private def build(spark: SparkSession, path: String, l: Int): DataFrame =
+  /** Read, add a stable row id, repartition to L (the reference CLI's
+    * explicit parallelism contract), cache for reuse across jobs.
+    *
+    * A second read of the same path and L in one session plans on the
+    * first read's cache: Spark's CacheManager matches the new plan to the
+    * cached one, so the rows and their ids are the cached ones. After an
+    * `unpersist()` the next read caches afresh, which also picks up a
+    * file changed in place. */
+  def read(spark: SparkSession, path: String, l: Int): DataFrame =
     spark.read.schema(schema).option("mode", "FAILFAST").csv(path)
       .withColumn("id", monotonically_increasing_id())
       .select(col("id"), col("x").cast(DoubleType).as("x"), col("y").cast(DoubleType).as("y"))
       .repartition(l)
       .cache()
-
-  /** Read, add a stable row id, repartition to L (the reference CLI's
-    * explicit parallelism contract), cache for reuse across jobs.
-    *
-    * If a caller unpersisted a previously returned DataFrame, the memo
-    * detects it (storageLevel == NONE) and re-reads + re-caches instead of
-    * handing back the cold plan — so `unpersist()` doubles as "drop this
-    * entry" and a changed underlying file is picked up on the next read.
-    * A handle that is still cached is returned as-is; callers that need to
-    * re-read a file changed in place must unpersist first.
-    *
-    * The staleness check and the rebuild run inside ONE atomic
-    * `updateWith` on the per-session TrieMap, so two threads cannot both
-    * observe a cold entry and install different handles. Residual race:
-    * updateWith may re-evaluate its remapping function under CAS
-    * contention, briefly issuing a duplicate build() — benign, Spark's
-    * CacheManager dedupes the cache entry and only one handle wins. */
-  def read(spark: SparkSession, path: String, l: Int): DataFrame = {
-    memo.synchronized {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
-    }
-    val bySession =
-      memo.computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
-    bySession.updateWith((path, l)) {
-      case Some(df) if df.storageLevel != org.apache.spark.storage.StorageLevel.NONE =>
-        Some(df)
-      case _ => Some(build(spark, path, l))
-    }.get
-  }
 }

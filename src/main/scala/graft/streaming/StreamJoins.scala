@@ -77,11 +77,8 @@ object StreamJoins {
       .mapPartitions { it =>
         val sorted = bc.value
         it.map { case (id, text) =>
-          // split with limit -1: identical semantics to Spark's split()
-          // used by the batch tokenizer (trailing empties kept)
-          val toks = text.split(" ", -1)
-          (id, text,
-            graft.functions.ShingleHashes.anyShingleIn(toks, n, sorted))
+          (id, text, graft.functions.ShingleHashes.anyShingleIn(
+            graft.functions.EngineMath.tokens(text), n, sorted))
         }
       }.toDF("doc_id", "text", "contaminated")
   }

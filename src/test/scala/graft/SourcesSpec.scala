@@ -1,31 +1,39 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.ops.Events
-import graft.sources.PartitionedSink
+import graft.sources.{PartitionedSink, PointSource}
 import graft.streaming.StreamJoins
 
 class SourcesSpec extends SparkSpec {
 
-  test("PointSource memo: unpersist drops the entry and re-read re-caches") {
+  test("PointSource: a re-read plans on the cache; a read after unpersist re-caches") {
     val f = Files.createTempFile("graft_pts", ".csv")
-    Files.writeString(f, "1.0,2.0\n3.0,4.0\n")
+    Files.writeString(f, (0 until 50).map(i => s"$i.0,${i * 2}.5\n").mkString)
     val path = f.toString
-    val a = graft.sources.PointSource.read(spark, path, l = 2)
-    assert(a.count() == 2)
-    assert(a.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    // same handle while still cached
-    assert(graft.sources.PointSource.read(spark, path, l = 2) eq a)
-    // unpersist = "drop this entry": the next read must hand back a FRESH
-    // cached frame, not the stale cold plan
-    a.unpersist()
-    val b = graft.sources.PointSource.read(spark, path, l = 2)
-    assert(!(b eq a))
-    assert(b.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    assert(b.count() == 2)
+    def cacheOf(df: DataFrame) = df.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder }
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1).toSeq
+    val a = PointSource.read(spark, path, l = 2)
+    val want = rows(a)
+    assert(want.length == 50 && want.map(_._1).distinct.length == 50)
+    val b = PointSource.read(spark, path, l = 2)
+    assert(cacheOf(a).isDefined)
+    assert(cacheOf(b).exists(_ eq cacheOf(a).get), "the second read must plan on the first's cache")
+    assert(rows(b) == want, "the second read must give the cached rows and ids")
+    a.unpersist(blocking = true)
+    val c = PointSource.read(spark, path, l = 2)
+    assert(c.storageLevel != StorageLevel.NONE)
+    assert(cacheOf(c).exists(cb => !(cb eq cacheOf(a).get)), "a read after unpersist must cache afresh")
+    assert(c.count() == 50)
+    c.unpersist(blocking = true)
   }
 
   test("partitioned sink: filter on partition column prunes partitions") {
